@@ -2,7 +2,7 @@
 
 The reference's three imperative stages (`Extractor` → `Transformer` →
 `Loader` over `S3/{raw,processed,error}/batch_<ts>/`, SURVEY.md §3.1)
-become three declarative DataFrame jobs over a parquet lakehouse:
+become three declarative DataFrame stages over a parquet lakehouse:
 
     bronze    staged raw JSON files, envelope {"data":[entry]}
     silver    validated + imputed entries (reference 'processed' zone)
@@ -24,23 +24,31 @@ Faithful semantics from the reference:
   (`etl/transformer.py:130-136`);
 - incremental 30-day cursor advanced after load (`dags/etl_dag.py:40-46`).
 
-Scale design: files are the unit of validation, so the file-level
-verdict is one groupBy on the lineage column (`input_file_name()`), not
-a driver loop; gold appends are anti-joins on the natural key — at
-100 TB gold would be partitioned by date so the anti-join prunes to the
-incoming date range.
+A batch reads its staged JSON once. `transform` attaches each file's
+verdict to its entries with a window over the lineage column
+(`input_file_name()`) and caches that routed frame; silver, quarantine,
+the transform log and the batch's file and row counts are all narrow
+reads of it. `load` appends the batch's own silver frame to gold with an
+anti-join on the natural key, materialised once, and numbers the new
+rows from per-partition counts, so no step funnels the batch through
+one task. At 100 TB gold would be partitioned by date so the anti-join
+prunes to the incoming date range.
 """
 
 from __future__ import annotations
 
+import datetime as dt
+import glob
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from covid_weather_etl_spark import schemas as S
+from covid_weather_etl_spark.operators.dedup import dedup_on_load
 
 
 @dataclass(frozen=True)
@@ -57,21 +65,36 @@ def _entry_schema(kind: str) -> T.StructType:
     return S.RAW_WEATHER_SCHEMA if kind == "weather" else S.RAW_COVID_SCHEMA
 
 
+def _path_missing(exc: AnalysisException) -> bool:
+    """True when a read failed only because its path does not exist —
+    the one failure that means "nothing written yet". Any other one
+    (corrupt footer, schema drift, I/O error) must fail the caller
+    rather than be read as empty."""
+    return (exc.getCondition() or "") == "PATH_NOT_FOUND"
+
+
 def read_staging(spark: SparkSession, staging_glob: str, kind: str) -> DataFrame:
     """Parse staged raw JSON (bronze) into one row per entry.
 
-    Reads the `{"data": [<entry>]}` envelope with entries kept as raw
-    JSON strings, then parses each entry, normalizing the reference's
+    `staging_glob` is `<dir>/<file-name pattern>`. Reads the
+    `{"data": [<entry>]}` envelope with entries kept as raw JSON
+    strings, then parses each entry, normalizing the reference's
     dict-vs-[dict] ambiguity (`etl/transformer.py:31`): a leading '['
-    means a 1-element array wrapping the object. Carries
-    `src_file` (via `input_file_name()`) as the lineage column that
-    replaces the reference's import_logs bookkeeping.
+    means a 1-element array wrapping the object. Carries `src_file`
+    (via `input_file_name()`) as the lineage column that replaces the
+    reference's import_logs bookkeeping. Runs no Spark job.
     """
     schema = _entry_schema(kind)
+    # One directory plus a name filter, not the glob itself: Spark
+    # expands a glob into one path per file, and past 32 paths
+    # (spark.sql.sources.parallelPartitionDiscovery.threshold) lists
+    # them in a Spark job with a task per file.
+    root, pattern = os.path.split(staging_glob)
     # multiLine: the reference writes indent=2 pretty JSON, one envelope
     # per file (etl/extractor.py:94-95) — not JSON-lines.
     raw = (spark.read.schema(S.ENVELOPE_SCHEMA)
-           .option("multiLine", "true").json(staging_glob)
+           .option("multiLine", "true").option("pathGlobFilter", pattern)
+           .json(root)
            .withColumn("src_file",
                        F.element_at(F.split(F.input_file_name(), "/"), -1)))
     entry_str = F.col("entry_str")
@@ -103,127 +126,118 @@ def _invalid_entry(kind: str) -> F.Column:
 
 
 def transform(spark: SparkSession, bronze: DataFrame, kind: str,
-              batch_ts: int) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Validate + clean bronze entries → (silver, quarantine, transform_log).
+              batch_ts: int) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """Validate + clean bronze entries → (routed, silver, quarantine,
+    transform_log).
 
     File-granular routing: ONE bad entry sends the whole file to
-    quarantine (reference `etl/transformer.py:40,57-60`) — expressed as
-    a groupBy on the lineage column, then a broadcast join of the
-    verdict back onto the entries. No driver loop, no second read.
+    quarantine (reference `etl/transformer.py:40,57-60`). A window over
+    `src_file` gives every entry its file's entry and bad-entry counts
+    and flags one entry per file; `routed` is that frame, cached.
+    Silver (the good files' entries, imputed and with country codes
+    mapped to names), quarantine (the bad files' entries) and the
+    transform log (the flagged entry of each file) are filters and
+    projections of it, so the staged JSON is parsed once however many
+    of them a batch writes. Runs no Spark job: the cache fills on the
+    first action; the caller unpersists `routed` when the batch is done.
     """
-    entries = bronze.withColumn("_bad", _invalid_entry(kind))
-    verdict = (entries.groupBy("src_file")
-               .agg(F.count("*").alias("n_entries"),
-                    F.sum(F.col("_bad").cast("long")).alias("n_bad_entries"))
-               .withColumn("status",
-                           F.when(F.col("n_bad_entries") > 0, "Error")
-                            .otherwise("Processed")))
-    routed = entries.join(F.broadcast(verdict.select("src_file", "status")),
-                          "src_file")
-    quarantine = routed.filter(F.col("status") == "Error").drop("status", "_bad")
-    good = routed.filter(F.col("status") == "Processed").drop("status", "_bad")
+    per_file = W.partitionBy("src_file")
+    routed = (
+        bronze
+        .withColumn("_bad", _invalid_entry(kind).cast("long"))
+        .withColumn("n_entries", F.count("*").over(per_file))
+        .withColumn("n_bad_entries", F.sum("_bad").over(per_file))
+        .withColumn("_first",
+                    F.row_number().over(per_file.orderBy("_bad")) == 1)
+        .withColumn("status", F.when(F.col("n_bad_entries") > 0, "Error")
+                    .otherwise("Processed"))
+        .cache())
+    bronze_cols = bronze.columns
+    quarantine = routed.filter(F.col("status") == "Error").select(*bronze_cols)
+    good = routed.filter(F.col("status") == "Processed").select(*bronze_cols)
 
-    countries = spark.createDataFrame(S.COUNTRIES, schema=S.COUNTRY_SCHEMA)
-    code_to_name = F.broadcast(countries.select(
-        F.col("code").alias("country_code"), F.col("name").alias("country")))
-
+    # S.COUNTRIES as a literal map; an unmapped code is kept as the country
+    names = F.create_map(*[F.lit(v) for _, code, name in S.COUNTRIES
+                           for v in (code, name)])
+    country = F.coalesce(names[F.col("country_code")],
+                         F.col("country_code")).alias("country")
     if kind == "weather":
         silver = (
             good
             # snow/tsun null → 0.0 (reference etl/transformer.py:46-51)
             .fillna(0.0, subset=list(S.WEATHER_IMPUTED))
-            .join(code_to_name, "country_code", "left")
             .select(
                 F.to_timestamp("date").alias("date"),
                 *[F.col(f).cast("float").alias(f) for f in S.WEATHER_FIELDS],
-                F.coalesce("country", "country_code").alias("country"),
-                "src_file",
+                country, "src_file",
                 F.lit(batch_ts).cast("long").alias("batch_ts"))
         )
     else:
-        silver = (
-            good
-            # drop last_update/region (reference etl/transformer.py:42-43)
-            .drop("last_update", "region")
-            .join(code_to_name, "country_code", "left")
-            .select(
-                F.to_date("date").alias("date"),
-                *[F.col(f).cast("int").alias(f) for f in S.COVID_INT_FIELDS],
-                F.col("fatality_rate").cast("float").alias("fatality_rate"),
-                F.coalesce("country", "country_code").alias("country"),
-                "src_file",
-                F.lit(batch_ts).cast("long").alias("batch_ts"))
-        )
-    tlog = verdict.select(
+        # last_update/region are dropped (reference etl/transformer.py:42-43)
+        silver = good.select(
+            F.to_date("date").alias("date"),
+            *[F.col(f).cast("int").alias(f) for f in S.COVID_INT_FIELDS],
+            F.col("fatality_rate").cast("float").alias("fatality_rate"),
+            country, "src_file",
+            F.lit(batch_ts).cast("long").alias("batch_ts"))
+    tlog = routed.filter("_first").select(
         F.lit(batch_ts).cast("long").alias("batch_ts"),
         F.col("src_file").alias("source_file"),
         "status", "n_entries", "n_bad_entries")
-    return silver, quarantine, tlog
+    return routed, silver, quarantine, tlog
 
 
-def load(spark: SparkSession, silver: DataFrame, gold_path: str, kind: str,
-         batch_ts: int) -> DataFrame:
-    """Anti-join dedup append into gold → load_log.
+def load(spark: SparkSession, silver: DataFrame, gold_path: str,
+         kind: str) -> int:
+    """Anti-join dedup append of one batch's silver rows into gold;
+    returns the number of rows appended.
 
     Replaces the reference's per-row existence probe
-    (`database/operations.py:175-206`) with: in-batch dropDuplicates on
-    the natural key, then one left-anti join against gold, then a bulk
-    columnar append. Surrogate ids continue from max(gold.id) via
-    row_number — the set-based get_or_create.
+    (`database/operations.py:175-206`) with `dedup_on_load`: in-batch
+    dropDuplicates on the natural key, one left-anti join against gold,
+    then a bulk columnar append. The deduplicated batch is materialised
+    once before anything else reads it, as `upsert_gold_stream` does:
+    the append must not re-run an anti-join against a gold directory
+    that by then holds the batch itself, and ids follow the partition
+    layout, which must not change between counting and writing.
+
+    Surrogate ids continue densely from max(gold.id), the set-based
+    get_or_create: one collect of per-partition row counts gives each
+    partition its first id, and `monotonically_increasing_id`'s low 33
+    bits (the row's index within its partition) the rest — no window,
+    so no task sees more than its own partition. Which row gets which
+    id follows the partition layout (the reference's SERIAL made no
+    ordering promise either).
     """
     key = S.WEATHER_NATURAL_KEY if kind == "weather" else S.COVID_NATURAL_KEY
     try:
         existing = spark.read.parquet(gold_path)
-        max_id = existing.agg(F.max("id")).collect()[0][0] or 0
-    except Exception:
-        existing, max_id = None, 0
+    except AnalysisException as exc:
+        if not _path_missing(exc):
+            raise
+        batch, max_id = silver.dropDuplicates(key), 0
+    else:
+        batch = dedup_on_load(silver, existing, key)
+        max_id = existing.agg(F.max("id")).first()[0] or 0
+    batch = batch.localCheckpoint(eager=True)
 
-    batch = silver.dropDuplicates(key)
-    if existing is not None:
-        batch = batch.join(existing.select(*key).dropDuplicates(key),
-                           on=key, how="left_anti")
-    # Dense unique ids WITHOUT a global window (a bare
-    # W.orderBy(...) row_number funnels the whole batch through one
-    # task — fatal at 100 TB appends). Two-phase, like
-    # skew_resilient_running_total: partition-local row_number, then a
-    # cumulative offset over the tiny one-row-per-partition count
-    # table, broadcast back. Ids stay dense and continue from
-    # max(gold.id); which row gets which id follows partition layout
-    # (the reference's SERIAL made no ordering promise either).
-    from pyspark.sql import Window as W
-    w_in = (W.partitionBy("_pid")
-            .orderBy(*[F.col(c) for c in ("date", "country")]))
-    local = (batch.withColumn("_pid", F.spark_partition_id())
-             .withColumn("_rn", F.row_number().over(w_in)))
-    w_off = W.orderBy("_pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = (local.groupBy("_pid").agg(F.max("_rn").alias("_cnt"))
-               .withColumn("_off", F.coalesce(
-                   F.sum("_cnt").over(w_off), F.lit(0)).cast("long"))
-               .select("_pid", "_off"))
-    to_append = (local
-                 .join(F.broadcast(offsets), "_pid")
-                 .withColumn("id", (F.col("_rn") + F.col("_off")
-                                    + F.lit(max_id)).cast("long"))
-                 .select("id", *[f.name for f in
-                                 (S.WEATHER_SCHEMA if kind == "weather"
-                                  else S.COVID_SCHEMA).fields if f.name != "id"]))
+    pid = F.spark_partition_id()
+    counts = dict(batch.groupBy(pid).count().collect())
+    first_ids = [max_id + 1]   # first id of partition p at index p
+    for p in range(max(counts, default=-1) + 1):
+        first_ids.append(first_ids[-1] + counts.get(p, 0))
+    row_in_part = F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
+    ids = (F.element_at(F.array(*[F.lit(i).cast("long") for i in first_ids]),
+                        pid + 1) + row_in_part)
+    schema = S.WEATHER_SCHEMA if kind == "weather" else S.COVID_SCHEMA
     # Unpartitioned at test scale so an all-quarantined batch still
     # leaves a readable (empty) gold footer; the at-scale layout adds
     # .partitionBy("country") — the reference's dominant filter (P4) —
     # plus a month component (see SCALE.md §1).
-    # Count BEFORE the append, from a cached frame: re-executing this
-    # lineage after the write would anti-join against a gold directory
-    # that now contains the batch itself (and re-run the whole
-    # non-deterministic spark_partition_id/row_number assignment).
-    to_append = to_append.cache()
-    n_loaded = to_append.count()
-    to_append.write.mode("append").parquet(gold_path)
-    to_append.unpersist()
-
-    n_in = silver.count()
-    return spark.createDataFrame(
-        [(batch_ts, f"{kind}_batch", "Success", n_loaded, n_in - n_loaded)],
-        schema=S.LOAD_LOG_SCHEMA)
+    (batch.select(ids.alias("id"),
+                  *[f.name for f in schema.fields if f.name != "id"])
+     .write.mode("append").parquet(gold_path))
+    return sum(counts.values())
 
 
 @dataclass
@@ -240,9 +254,13 @@ class BatchResult:
 
 def run_batch(spark: SparkSession, staging_glob: str, lake: Lake, kind: str,
               batch_ts: int) -> BatchResult:
-    """One end-to-end batch: bronze → silver/quarantine → gold + logs."""
-    import glob as _glob
-    if not _glob.glob(staging_glob.removeprefix("file:")):
+    """One end-to-end batch: bronze → silver/quarantine → gold + logs.
+
+    The file, error-file and good-row counts come from one aggregate
+    over the transform log; gold gets this batch's silver frame, not a
+    re-read of the silver zone, so a retried batch_ts counts only its
+    own rows."""
+    if not glob.glob(staging_glob.removeprefix("file:")):
         # empty work-list: the reference logs and exits cleanly
         # (tests/test_transformer.py:185-192)
         return BatchResult(kind=kind, batch_ts=batch_ts, n_files=0,
@@ -250,33 +268,36 @@ def run_batch(spark: SparkSession, staging_glob: str, lake: Lake, kind: str,
                            high_error_alert=False, n_loaded=0,
                            n_skipped_duplicates=0)
     bronze = read_staging(spark, staging_glob, kind)
-    silver, quarantine, tlog = transform(spark, bronze, kind, batch_ts)
+    routed, silver, quarantine, tlog = transform(spark, bronze, kind, batch_ts)
+    try:
+        is_error = F.col("status") == "Error"
+        stats = tlog.agg(
+            F.count("*").alias("n_files"),
+            F.sum(is_error.cast("long")).alias("n_err"),
+            F.sum(F.when(~is_error, F.col("n_entries"))).alias("n_good"),
+        ).first()
+        n_files, n_err, n_good = (stats["n_files"], stats["n_err"] or 0,
+                                  stats["n_good"] or 0)
+        silver.write.mode("append").parquet(lake.path("silver", kind))
+        if n_err:
+            quarantine.write.mode("append").parquet(
+                lake.path("quarantine", kind))
+        tlog.coalesce(1).write.mode("append").parquet(
+            lake.path("logs", "transform"))
+        n_loaded = load(spark, silver, lake.path("gold", kind), kind)
+    finally:
+        routed.unpersist()
+    spark.createDataFrame(
+        [(batch_ts, f"{kind}_batch", "Success", n_loaded, n_good - n_loaded)],
+        schema=S.LOAD_LOG_SCHEMA,
+    ).coalesce(1).write.mode("append").parquet(lake.path("logs", "load"))
 
-    silver.write.mode("append").parquet(lake.path("silver", kind))
-    if quarantine.take(1):
-        quarantine.write.mode("append").parquet(lake.path("quarantine", kind))
-    tlog.write.mode("append").parquet(lake.path("logs", "transform"))
-
-    # filter the silver zone to THIS batch's rows by the batch_ts lineage
-    # column — file names repeat across backfill re-runs (reference D4).
-    llog = load(spark, spark.read.parquet(lake.path("silver", kind))
-                .filter(F.col("batch_ts") == batch_ts),
-                lake.path("gold", kind), kind, batch_ts)
-    llog.write.mode("append").parquet(lake.path("logs", "load"))
-
-    stats = tlog.agg(
-        F.count("*").alias("n_files"),
-        F.sum(F.when(F.col("status") == "Error", 1).otherwise(0)).alias("n_err"),
-    ).collect()[0]
-    n_files, n_err = stats["n_files"], stats["n_err"] or 0
     rate = 100.0 * n_err / n_files if n_files else 0.0
-    lrow = llog.collect()[0]
     return BatchResult(
         kind=kind, batch_ts=batch_ts, n_files=n_files, n_error_files=n_err,
         error_rate_pct=round(rate, 2),
         high_error_alert=rate >= 50.0,
-        n_loaded=lrow["n_inserted"],
-        n_skipped_duplicates=lrow["n_skipped_duplicates"])
+        n_loaded=n_loaded, n_skipped_duplicates=n_good - n_loaded)
 
 
 # ---------------------------------------------------------------------------
@@ -291,25 +312,22 @@ WINDOW_DAYS = 30
 
 def get_window(spark: SparkSession, lake: Lake) -> tuple[str, str]:
     """Current [start, end] backfill window (end = start + 29 days)."""
-    path = lake.path("state", "cursor")
     try:
-        start = spark.read.parquet(path).collect()[0]["start_date"]
-    except Exception:
+        start = (spark.read.parquet(lake.path("state", "cursor"))
+                 .first()["start_date"])
+    except AnalysisException as exc:
+        if not _path_missing(exc):
+            raise
         start = CURSOR_DEFAULT
-    end = (spark.range(1)
-           .select(F.date_add(F.lit(start).cast("date"),
-                              WINDOW_DAYS - 1).cast("string"))
-           .collect()[0][0])
-    return start, end
+    end = dt.date.fromisoformat(start) + dt.timedelta(days=WINDOW_DAYS - 1)
+    return start, end.isoformat()
 
 
 def advance_cursor(spark: SparkSession, lake: Lake) -> str:
     """Advance the cursor past the current window (reference
     set_start_date after load, `dags/etl_dag.py:44-46,84`)."""
-    start, end = get_window(spark, lake)
-    new_start = (spark.range(1)
-                 .select(F.date_add(F.lit(end).cast("date"), 1).cast("string"))
-                 .collect()[0][0])
+    _, end = get_window(spark, lake)
+    new_start = (dt.date.fromisoformat(end) + dt.timedelta(days=1)).isoformat()
     (spark.createDataFrame([(new_start,)], "start_date string")
      .write.mode("overwrite").parquet(lake.path("state", "cursor")))
     return new_start

@@ -159,7 +159,6 @@ def test_in_batch_duplicates_collapse(spark, tmp_path, lake):
     assert res.n_loaded == 1 and res.n_skipped_duplicates == 1
 
 
-@pytest.mark.slow
 def test_ids_continue_across_batches(spark, tmp_path, lake):
     """surrogate ids continue from max(gold.id) (get_or_create analog)."""
     d1, d2 = stage_dir(tmp_path), str(tmp_path / "staging" / "batch_2")
@@ -173,6 +172,86 @@ def test_ids_continue_across_batches(spark, tmp_path, lake):
     assert ids == [1, 2]
 
 
+def test_ids_dense_across_partitions(spark, tmp_path, lake):
+    """ids stay dense and unique when the batch spans several partitions
+    (per-partition counts give each partition its first id)."""
+    d = stage_dir(tmp_path)
+    for day in range(1, 13):
+        write_envelope(d, f"MDA_WEATHER_2021-04-{day:02d}",
+                       [weather_entry(date=f"2021-04-{day:02d}")])
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")      # keep the 8 shuffle partitions apart
+    try:
+        res = P.run_batch(spark, f"{d}/*", lake, "weather", 1)
+    finally:
+        spark.conf.set(key, old)
+    gold_dir = lake.path("gold", "weather")
+    assert len([f for f in os.listdir(gold_dir)
+                if f.endswith(".parquet")]) > 1
+    ids = sorted(r["id"] for r in spark.read.parquet(gold_dir).collect())
+    assert res.n_loaded == 12 and ids == list(range(1, 13))
+
+
+def test_retry_counts_only_this_batch(spark, tmp_path, lake):
+    """a retried batch_ts loads nothing and skips exactly its own good
+    entries, however many times the silver zone holds them."""
+    d = stage_dir(tmp_path)
+    write_envelope(d, "MDA_WEATHER_2021-04-01", [weather_entry()])
+    write_envelope(d, "DEU_WEATHER_2021-04-01", [weather_entry()])
+    write_envelope(d, "ITA_WEATHER_2021-04-01", [weather_entry(tmin=None)])
+    r1 = P.run_batch(spark, f"{d}/*", lake, "weather", 1700000000)
+    r2 = P.run_batch(spark, f"{d}/*", lake, "weather", 1700000000)
+    assert (r1.n_loaded, r1.n_skipped_duplicates) == (2, 0)
+    assert (r2.n_loaded, r2.n_skipped_duplicates) == (0, 2)
+
+
+#: Spark jobs of a first two-file batch into an empty lake, in the
+#: batch's job group, measured at 13 (local[4], 8 shuffle partitions):
+#: 4 for the counts aggregate, whose first job is the one scan of the
+#: staged JSON and whose second fills the routed cache; 1 each for the
+#: silver, quarantine and transform-log writes; 2 to materialise the
+#: deduplicated batch, 2 to count its rows per partition; 1 for the
+#: gold append and 1 for the load log. A lineage that runs twice adds
+#: at least the JSON scan again.
+BATCH_JOBS_MAX = 13
+
+
+def test_batch_runs_its_lineage_once(spark, tmp_path, lake):
+    d = stage_dir(tmp_path)
+    write_envelope(d, "MDA_WEATHER_2021-04-01", [weather_entry()])
+    write_envelope(d, "DEU_WEATHER_2021-04-01", [weather_entry(tmin=None)])
+    sc = spark.sparkContext
+    sc.setJobGroup("etl-job-count", "one batch")
+    try:
+        P.run_batch(spark, f"{d}/*", lake, "weather", 1700000000)
+    finally:
+        sc.setJobGroup("", "")
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("etl-job-count"))
+    assert n_jobs <= BATCH_JOBS_MAX
+
+
+def corrupt_parquet(directory: str) -> None:
+    os.makedirs(directory, exist_ok=True)
+    with open(os.path.join(directory, "part-corrupt.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+
+
+def test_unreadable_gold_fails_the_batch(spark, tmp_path, lake):
+    """a gold read that fails for any reason but a missing path fails
+    the batch — it must not restart ids at 1 and append duplicates."""
+    d = stage_dir(tmp_path)
+    write_envelope(d, "MDA_WEATHER_2021-04-01", [weather_entry()])
+    P.run_batch(spark, f"{d}/*", lake, "weather", 1)
+    gold_dir = lake.path("gold", "weather")
+    corrupt_parquet(gold_dir)
+    before = sorted(os.listdir(gold_dir))
+    with pytest.raises(Exception) as exc:
+        P.run_batch(spark, f"{d}/*", lake, "weather", 2)
+    assert "part-corrupt.parquet" in str(exc.value)
+    assert sorted(os.listdir(gold_dir)) == before
+
+
 # --- incremental cursor (reference dags/etl_dag.py) ------------------------
 
 def test_cursor_window_and_advance(spark, lake):
@@ -182,3 +261,11 @@ def test_cursor_window_and_advance(spark, lake):
     assert new_start == "2021-05-01"
     start2, end2 = P.get_window(spark, lake)
     assert (start2, end2) == ("2021-05-01", "2021-05-30")
+
+
+def test_unreadable_cursor_raises(spark, lake):
+    """only a missing cursor means the default window."""
+    corrupt_parquet(lake.path("state", "cursor"))
+    with pytest.raises(Exception) as exc:
+        P.get_window(spark, lake)
+    assert "part-corrupt.parquet" in str(exc.value)

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 
 from covid_weather_etl_spark.queries.registry import all_queries
-from tests.conftest import assert_parity
+from tests.conftest import SF_DIR, assert_parity
 
 QUERIES = all_queries()
 WITH_ORACLE = sorted(n for n, q in QUERIES.items() if q.oracle)
@@ -64,7 +64,7 @@ def test_all_queries_return_rows(spark):
     # executes the query), so the fast twin below only needs the
     # rows-only remainder.
     for name, q in QUERIES.items():
-        df = q.fn(spark, "/root/testdata/sf0.001")
+        df = q.fn(spark, SF_DIR)
         assert df.count() >= 0, name
 
 
@@ -74,7 +74,7 @@ def test_rows_only_queries_return_rows(spark):
     test_query_matches_oracle anyway."""
     for name, q in QUERIES.items():
         if q.oracle is None:
-            df = q.fn(spark, "/root/testdata/sf0.001")
+            df = q.fn(spark, SF_DIR)
             assert df.count() >= 0, name
 
 
