@@ -19,9 +19,7 @@ import time
 
 def warm_session(spark, sf_dir: str, cpus: str) -> None:
     """One-time cluster warmups (classloading, codegen, Arrow worker
-    pool) so first-use costs don't land on whichever query runs first.
-    Shared by the bench harness and scripts/warm_measure.py (§8 warm
-    protocol) so 'warm' means the same thing in both."""
+    pool) so first-use costs don't land on whichever query runs first."""
     # warm the JVM + parquet footers with one cheap action
     spark.read.parquet(f"{sf_dir}/nation.parquet").count()
     # warm Spark ML too (pipeline/tree-ensemble classloading + codegen

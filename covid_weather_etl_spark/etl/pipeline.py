@@ -49,6 +49,7 @@ from pyspark.sql import types as T
 
 from covid_weather_etl_spark import schemas as S
 from covid_weather_etl_spark.operators.dedup import dedup_on_load
+from covid_weather_etl_spark.sources.catalog import path_missing
 
 
 @dataclass(frozen=True)
@@ -63,14 +64,6 @@ class Lake:
 
 def _entry_schema(kind: str) -> T.StructType:
     return S.RAW_WEATHER_SCHEMA if kind == "weather" else S.RAW_COVID_SCHEMA
-
-
-def _path_missing(exc: AnalysisException) -> bool:
-    """True when a read failed only because its path does not exist —
-    the one failure that means "nothing written yet". Any other one
-    (corrupt footer, schema drift, I/O error) must fail the caller
-    rather than be read as empty."""
-    return (exc.getCondition() or "") == "PATH_NOT_FOUND"
 
 
 def read_staging(spark: SparkSession, staging_glob: str, kind: str) -> DataFrame:
@@ -213,7 +206,7 @@ def load(spark: SparkSession, silver: DataFrame, gold_path: str,
     try:
         existing = spark.read.parquet(gold_path)
     except AnalysisException as exc:
-        if not _path_missing(exc):
+        if not path_missing(exc):
             raise
         batch, max_id = silver.dropDuplicates(key), 0
     else:
@@ -316,7 +309,7 @@ def get_window(spark: SparkSession, lake: Lake) -> tuple[str, str]:
         start = (spark.read.parquet(lake.path("state", "cursor"))
                  .first()["start_date"])
     except AnalysisException as exc:
-        if not _path_missing(exc):
+        if not path_missing(exc):
             raise
         start = CURSOR_DEFAULT
     end = dt.date.fromisoformat(start) + dt.timedelta(days=WINDOW_DAYS - 1)

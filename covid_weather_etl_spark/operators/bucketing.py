@@ -28,6 +28,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from covid_weather_etl_spark.functions.artifacts import WAREHOUSE_DIR
 from covid_weather_etl_spark.functions.numeric import (
     dsum, dsum_sql, fround, fround_sql,
 )
@@ -35,13 +36,6 @@ from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
 
 N_BUCKETS = 8
-
-#: bucketed copies live under the repo's warehouse dir regardless of the
-#: calling session's CWD/warehouse conf (the driver builds its own
-#: vanilla session — its default warehouse would land outside the repo).
-WAREHOUSE_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__)))), "spark-warehouse")
 
 
 def _db_for(sf_dir: str) -> str:

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
 from covid_weather_etl_spark.functions.numeric import fround, fround_sql
 from covid_weather_etl_spark.functions.textops import shingled_rows
 from covid_weather_etl_spark.operators import text as TX
@@ -2630,47 +2631,14 @@ def bucketing_efficiency_eval(spark: SparkSession,
 #: (~20% of docs by md5 — the incremental_minhash / CDC convention).
 ICC_INC_CUT = "cc"
 
-#: label-star artifact paths known to exist (memo, keyed by path —
-#: the path already folds in the corpus content fingerprint).
-_STAR_MEMO: set = set()
-
-
-def _docs_fingerprint(sf_dir: str) -> str:
-    """Content key for the documents corpus: parquet-footer row count +
-    file byte size (metadata only — no data scan). Folded into the
-    label-star artifact paths so regenerated data invalidates the
-    artifact instead of silently reusing a stale one — the
-    corpus_fingerprint discipline from similarity.py (advice r5)."""
-    import os
-    p = os.path.join(os.path.abspath(os.path.normpath(sf_dir)),
-                     "documents.parquet")
-    try:
-        import pyarrow.parquet as _pq
-        return f"n{_pq.ParquetFile(p).metadata.num_rows}b{os.path.getsize(p)}"
-    except Exception:
-        return ""
-
 
 def dedup_star_path(sf_dir: str, scope: str) -> str:
-    """Deterministic warehouse location for a corpus' persisted
-    dedup-cluster label star. ``scope`` = 'old' (the already-ingested
-    store's labels, the incremental-maintenance state) or 'full' (the
-    whole corpus' components, the audit state). Keyed by the absolute
-    corpus path + content fingerprint + the algorithm constants
-    (J >= 0.2, 3-gram shingles, and for 'old' the md5 batch cut), so
-    changing any of them retrains instead of reading a stale star."""
-    import hashlib
-    import os
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    abspath = os.path.abspath(os.path.normpath(sf_dir))
-    base = os.path.basename(abspath).replace(".", "_")
-    algo = f"j0.2s3{'|cut' + ICC_INC_CUT if scope == 'old' else ''}"
-    digest = hashlib.md5(
-        f"{abspath}|{_docs_fingerprint(sf_dir)}|{algo}".encode()
-    ).hexdigest()[:10]
-    return os.path.join(repo_root, "spark-warehouse",
-                        f"dedup_star_{scope}_{base}_{digest}")
+    """Warehouse location of one part of a corpus' persisted dedup
+    state: 'full' (the whole corpus' component star), or the
+    already-ingested store's 'old' star (keyed by the md5 batch cut
+    too), 'oldidx' inverted index and 'oldsz' shingle counts."""
+    cut = "|cut" + ICC_INC_CUT if scope == "old" else ""
+    return artifact_path(sf_dir, f"dedup_star_{scope}", f"j0.2s3{cut}")
 
 
 def ensure_dedup_label_star(spark: SparkSession, sf_dir: str,
@@ -2688,24 +2656,20 @@ def ensure_dedup_label_star(spark: SparkSession, sf_dir: str,
     'old'  = the same over the already-ingested ~80% md5 split's
     old×old pairs only — exactly the state a production incremental
     dedup persists between ingests."""
-    import os
-    path = dedup_star_path(sf_dir, scope)
-    if path not in _STAR_MEMO and not os.path.isdir(path):
-        if scope == "full":
-            pairs = (TX.ngram_jaccard_near_dup(spark, sf_dir)
-                     .select(F.least("doc_id_1", "doc_id_2").alias("a"),
-                             F.greatest("doc_id_1", "doc_id_2").alias("b"))
-                     .distinct())
-            lbl = star_components(pairs, op_name="ensure_star.full")
-        else:
-            ensure_dedup_old_state(spark, sf_dir)
-            _STAR_MEMO.add(path)
-            return spark.read.parquet(path)
+    if scope == "old":
+        return ensure_dedup_old_state(spark, sf_dir)[0]
+
+    def build(path: str) -> None:
+        pairs = (TX.ngram_jaccard_near_dup(spark, sf_dir)
+                 .select(F.least("doc_id_1", "doc_id_2").alias("a"),
+                         F.greatest("doc_id_1", "doc_id_2").alias("b"))
+                 .distinct())
+        lbl = star_components(pairs, op_name="ensure_star.full")
         (lbl.select(F.col("lbl").cast("long").alias("lbl"),
                     F.col("node").cast("long").alias("node"))
             .write.mode("overwrite").parquet(path))
-    _STAR_MEMO.add(path)
-    return spark.read.parquet(path)
+
+    return spark.read.parquet(ensure(dedup_star_path(sf_dir, scope), build))
 
 
 def ensure_dedup_old_state(
@@ -2721,22 +2685,18 @@ def ensure_dedup_old_state(
     warehouse thereafter — so incremental_dedup_clusters benches the
     per-ingest path only, with no corpus-sized recompute of any
     kind."""
-    import os
-    paths = {k: dedup_star_path(sf_dir, k)
-             for k in ("old", "oldidx", "oldsz")}
-    if not all(p in _STAR_MEMO for p in paths.values()) and \
-            not all(os.path.isdir(p) for p in paths.values()):
+    def build(star_path: str, idx_path: str, sz_path: str) -> None:
         t = load_tables(spark, sf_dir, ("documents",))
         is_old = (F.substring(F.md5(F.col("doc_id").cast("string")),
                               1, 2) < ICC_INC_CUT)
         old_docs = spread(t["documents"].filter(is_old), "doc_id")
         sh = shingled_rows(old_docs).localCheckpoint(eager=True)
         (sh.select(F.col("doc_id").cast("long").alias("doc_id"), "s")
-           .write.mode("overwrite").parquet(paths["oldidx"]))
+           .write.mode("overwrite").parquet(idx_path))
         sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
         (sizes.select(F.col("doc_id").cast("long").alias("doc_id"),
                       F.col("n").cast("long").alias("n"))
-              .write.mode("overwrite").parquet(paths["oldsz"]))
+              .write.mode("overwrite").parquet(sz_path))
         raw = (sh.select(F.col("doc_id").alias("d1"), "s")
                .join(sh.select(F.col("doc_id").alias("d2"), "s"), "s")
                .filter(F.col("d1") < F.col("d2"))
@@ -2752,11 +2712,11 @@ def ensure_dedup_old_state(
         lbl = star_components(edges, op_name="ensure_star.old")
         (lbl.select(F.col("lbl").cast("long").alias("lbl"),
                     F.col("node").cast("long").alias("node"))
-            .write.mode("overwrite").parquet(paths["old"]))
-    _STAR_MEMO.update(paths.values())
-    return (spark.read.parquet(paths["old"]),
-            spark.read.parquet(paths["oldidx"]),
-            spark.read.parquet(paths["oldsz"]))
+            .write.mode("overwrite").parquet(star_path))
+
+    paths = ensure(tuple(dedup_star_path(sf_dir, k)
+                         for k in ("old", "oldidx", "oldsz")), build)
+    return tuple(spark.read.parquet(p) for p in paths)
 
 
 #: edge cap for the single-task connected-components kernel — above
@@ -3529,16 +3489,14 @@ def ensure_dedup_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     index and persist the result — the APPLY half of the dedup-state
     maintenance seam. Corpus-sized artifact: returned as a DataFrame,
     never collected (the ensure_dedup_old_state discipline)."""
-    import os
-    path = dedup_compacted_idx_path(sf_dir)
-    if path not in _STAR_MEMO and not os.path.isdir(path):
+    def build(path: str) -> None:
         _, old_idx, _ = ensure_dedup_old_state(spark, sf_dir)
         hot = (old_idx.groupBy("s").agg(F.count("*").alias("df"))
                .filter(F.col("df") >= HOT_SHINGLE_DF).select("s"))
         (old_idx.join(hot, "s", "left_anti")
          .write.mode("overwrite").parquet(path))
-    _STAR_MEMO.add(path)
-    return spark.read.parquet(path)
+
+    return spark.read.parquet(ensure(dedup_compacted_idx_path(sf_dir), build))
 
 
 @register(

@@ -29,14 +29,13 @@ once per corpus, read by every search (`ensure_pq_codebook`).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
 from covid_weather_etl_spark.operators.similarity import _vecs
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
@@ -88,50 +87,24 @@ def train_pq_codebook(emb: DataFrame) -> DataFrame:
             .applyInPandas(fit, schema=_PQ_SCHEMA))
 
 
-_PQ_MEMO: dict[str, list] = {}
-
-
 def pq_codebook_path(sf_dir: str) -> str:
-    """Deterministic warehouse location for a corpus' trained codebook,
-    keyed by the FULL absolute corpus path (basename kept for
-    readability, path hash for uniqueness) so two corpora that share a
-    directory name never share an artifact — same keying as the memo.
-    The corpus content fingerprint (footer row count + byte size) is
-    folded in so regenerated data invalidates the artifact instead of
-    silently reusing a stale codebook (advice r5)."""
-    import hashlib
-    from covid_weather_etl_spark.operators.similarity import (
-        corpus_fingerprint,
-    )
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    abspath = os.path.abspath(os.path.normpath(sf_dir))
-    base = os.path.basename(abspath).replace(".", "_")
-    digest = hashlib.md5(
-        f"{abspath}|{corpus_fingerprint(sf_dir)}".encode()).hexdigest()[:10]
-    return os.path.join(repo_root, "spark-warehouse",
-                        f"pq_codebook_{base}_{digest}")
+    """Warehouse location of a corpus' trained PQ codebook."""
+    return artifact_path(sf_dir, "pq_codebook", table="embeddings")
 
 
 def ensure_pq_codebook(spark: SparkSession, sf_dir: str) -> list:
     """Train-once seam (same contract as ensure_ivf_codebook): first
     call per corpus trains + persists; later calls load. The artifact
     is M·C rows of SUB doubles — model-sized, like a PipelineModel."""
-    # memo keyed by artifact path (abspath + content fingerprint) so an
-    # in-process corpus regeneration invalidates the memo (advice r6)
-    path = pq_codebook_path(sf_dir)
-    if path in _PQ_MEMO:
-        return _PQ_MEMO[path]
-    if os.path.isdir(path):
-        rows = spark.read.parquet(path).collect()
-    else:
+    def build(path: str) -> None:
         t = load_tables(spark, sf_dir, ("embeddings",))
         rows = train_pq_codebook(_vecs(t["embeddings"])).collect()
         (spark.createDataFrame(rows, schema=_PQ_SCHEMA)
          .coalesce(1).write.mode("overwrite").parquet(path))
-    rows = sorted(rows, key=lambda r: (r["sub_id"], r["code"]))
-    _PQ_MEMO[path] = rows
-    return rows
+
+    return ensure(pq_codebook_path(sf_dir), build, lambda path: sorted(
+        spark.read.parquet(path).collect(),
+        key=lambda r: (r["sub_id"], r["code"])))
 
 
 def _codebook_tensor(rows: list) -> np.ndarray:

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
 
@@ -344,74 +345,36 @@ def train_ivf_codebook(emb: DataFrame, k: int = KMEANS_K,
 # --- train-once seam -------------------------------------------------------
 # At 100 TB the codebook is a model artifact: trained ONCE (on a sample),
 # persisted, and read by every search query — never retrained in the hot
-# path. `ensure_ivf_codebook` is that seam: first call per corpus trains
-# and writes parquet under the warehouse; later calls (and later
-# processes) load it. The search query is then assign+top-k only.
-
-_CODEBOOK_MEMO: dict[str, list] = {}
-
-
-def corpus_fingerprint(sf_dir: str) -> str:
-    """Cheap CONTENT key for the embeddings corpus: parquet-footer row
-    count + file byte size (metadata + stat only — no data scan, no
-    SparkSession, so oracle SQL builders can call it at import time).
-    Folded into the IVF/PQ artifact paths so a REGENERATED dataset at
-    the same path trains a fresh codebook instead of silently reusing
-    a stale persisted one (advice r5 — same content-keying the
-    schema-evolution snapshots adopted in r4). Empty when the corpus
-    file isn't present (unit tests that never touch the artifact)."""
-    import os
-    p = os.path.join(os.path.abspath(os.path.normpath(sf_dir)),
-                     "embeddings.parquet")
-    try:
-        import pyarrow.parquet as _pq
-        return f"n{_pq.ParquetFile(p).metadata.num_rows}b{os.path.getsize(p)}"
-    except Exception:
-        return ""
+# path. `ensure_ivf_codebook` is that seam (keyed, built and memoised by
+# functions/artifacts.py): first call per corpus trains and writes
+# parquet under the warehouse; later calls (and later processes) load
+# it. The search query is then assign+top-k only.
 
 
 def ivf_codebook_path(sf_dir: str) -> str:
-    """Deterministic warehouse location for a corpus' trained codebook,
-    keyed by the FULL absolute corpus path (basename for readability,
-    path hash for uniqueness) so two corpora sharing a directory name
-    never share — or corrupt — each other's artifact; matches the
-    memo's full-path keying. The corpus content fingerprint is folded
-    into the hash so regenerated data invalidates the artifact."""
-    import hashlib
-    import os
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    abspath = os.path.abspath(os.path.normpath(sf_dir))
-    base = os.path.basename(abspath).replace(".", "_")
-    digest = hashlib.md5(
-        f"{abspath}|{corpus_fingerprint(sf_dir)}".encode()).hexdigest()[:10]
-    return os.path.join(repo_root, "spark-warehouse",
-                        f"ivf_codebook_{base}_{digest}")
+    """Warehouse location of a corpus' trained IVF codebook."""
+    return artifact_path(sf_dir, "ivf_codebook", table="embeddings")
 
 
 def ensure_ivf_codebook(spark: SparkSession, sf_dir: str) -> list:
     """Load the persisted codebook for `sf_dir`, training it first if it
-    does not exist yet. Returns the k (c_id, cv) rows (a model artifact,
-    k×dim doubles — driver-sized by definition, like a PipelineModel).
-    Keyed by the full corpus path; regenerating the test data
-    invalidates the artifact (delete the warehouse dir to retrain)."""
-    import os
-    # memo keyed by the ARTIFACT path (abspath + content fingerprint),
-    # not the raw sf_dir string: regenerating the corpus in-process
-    # changes the fingerprint and must invalidate the memo too
-    path = ivf_codebook_path(sf_dir)
-    if path in _CODEBOOK_MEMO:
-        return _CODEBOOK_MEMO[path]
-    if os.path.isdir(path):
-        rows = spark.read.parquet(path).collect()
-    else:
+    does not exist yet. Returns the k (c_id, cv) rows sorted by c_id (a
+    model artifact, k×dim doubles — driver-sized by definition, like a
+    PipelineModel)."""
+    def build(path: str) -> None:
         t = load_tables(spark, sf_dir, ("embeddings",))
         rows = train_ivf_codebook(_vecs(t["embeddings"])).collect()
         (spark.createDataFrame(rows, schema=_CENTROID_SCHEMA)
          .coalesce(1).write.mode("overwrite").parquet(path))
-    rows = sorted(rows, key=lambda r: r["c_id"])
-    _CODEBOOK_MEMO[path] = rows
-    return rows
+
+    return ensure(ivf_codebook_path(sf_dir), build,
+                  lambda path: _codebook_rows(spark, path))
+
+
+def _codebook_rows(spark: SparkSession, path: str) -> list:
+    """A persisted codebook's rows, sorted by c_id."""
+    return sorted(spark.read.parquet(path).collect(),
+                  key=lambda r: r["c_id"])
 
 
 def _codebook_literal(rows: list) -> Column:
@@ -723,13 +686,7 @@ def ensure_ivf_rebalanced(spark: SparkSession, sf_dir: str) -> list:
     exactly (the ivf_codebook_train convention for non-SQL float
     reductions). Thresholds and bucket membership are exact integer
     arithmetic, replayed bit-for-bit by the pytest numpy twin."""
-    import os
-    path = ivf_rebalanced_path(sf_dir)
-    if path in _CODEBOOK_MEMO:
-        return _CODEBOOK_MEMO[path]
-    if os.path.isdir(path):
-        rows = spark.read.parquet(path).collect()
-    else:
+    def build(path: str) -> None:
         orig = ensure_ivf_codebook(spark, sf_dir)
         k = len(orig)
         t = load_tables(spark, sf_dir, ("embeddings",))
@@ -774,10 +731,9 @@ def ensure_ivf_rebalanced(spark: SparkSession, sf_dir: str) -> list:
         rows.sort()
         (spark.createDataFrame(rows, schema=_CENTROID_SCHEMA)
          .coalesce(1).write.mode("overwrite").parquet(path))
-        rows = spark.read.parquet(path).collect()
-    rows = sorted(rows, key=lambda r: r["c_id"])
-    _CODEBOOK_MEMO[path] = rows
-    return rows
+
+    return ensure(ivf_rebalanced_path(sf_dir), build,
+                  lambda path: _codebook_rows(spark, path))
 
 
 def _ivf_rebalance_apply_oracle(

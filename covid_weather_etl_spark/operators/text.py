@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
 from covid_weather_etl_spark.functions.numeric import (
     dsum, dsum_sql, fround, fround_sql,
 )
@@ -827,8 +828,11 @@ def _bpe_fold(a: str, b: str):
         ).otherwise(F.concat(acc, F.array(s))))
 
 
-#: BPE artifact memo: path -> merges list (the 12-row model header).
-_BPE_MEMO: dict = {}
+def bpe_paths(sf_dir: str) -> "tuple[str, str]":
+    """Warehouse locations of the trained BPE merges and vocab."""
+    algo = f"m{BPE_TRAIN_MERGES}c{BPE_MIN_PAIR_COUNT}"
+    return (artifact_path(sf_dir, "bpe_merges", algo),
+            artifact_path(sf_dir, "bpe_vocab", algo))
 
 
 def ensure_bpe_artifacts(spark: SparkSession, sf_dir: str):
@@ -839,26 +843,24 @@ def ensure_bpe_artifacts(spark: SparkSession, sf_dir: str):
     ever), read from the warehouse thereafter — so the three BPE
     queries (train / encode / fertility) bench artifact reads, not
     three retrainings (the ivf/pq codebook seam, verdict r8 #2).
-    Keyed by corpus content fingerprint + the training constants."""
-    import os
-    from covid_weather_etl_spark.functions.artifacts import artifact_path
-    algo = f"m{BPE_TRAIN_MERGES}c{BPE_MIN_PAIR_COUNT}"
-    mp = artifact_path(sf_dir, "bpe_merges", algo)
-    vp = artifact_path(sf_dir, "bpe_vocab", algo)
-    if mp not in _BPE_MEMO:
-        if not (os.path.isdir(mp) and os.path.isdir(vp)):
-            merges, vocab = _train_bpe(spark, sf_dir)
-            (spark.createDataFrame(
-                merges,
-                "merge_idx int, left string, right string, pair_count long")
-                .coalesce(1).write.mode("overwrite").parquet(mp))
-            vocab.write.mode("overwrite").parquet(vp)
-        _BPE_MEMO[mp] = [
-            (r["merge_idx"], r["left"], r["right"], r["pair_count"])
-            for r in sorted(spark.read.parquet(mp).collect(),
-                            key=lambda r: r["merge_idx"])]
-    return _BPE_MEMO[mp], spark.read.parquet(vp)
+    Keyed by corpus content fingerprint + the training constants.
+    Returns the merges list (the 12-row model header) and the vocab
+    DataFrame."""
+    def build(mp: str, vp: str) -> None:
+        merges, vocab = _train_bpe(spark, sf_dir)
+        (spark.createDataFrame(
+            merges,
+            "merge_idx int, left string, right string, pair_count long")
+            .coalesce(1).write.mode("overwrite").parquet(mp))
+        vocab.write.mode("overwrite").parquet(vp)
 
+    def load(mp: str, vp: str) -> list:
+        return [(r["merge_idx"], r["left"], r["right"], r["pair_count"])
+                for r in sorted(spark.read.parquet(mp).collect(),
+                                key=lambda r: r["merge_idx"])]
+
+    paths = bpe_paths(sf_dir)
+    return ensure(paths, build, load), spark.read.parquet(paths[1])
 
 
 def _bpe_st_ctes(max_rounds: int = BPE_TRAIN_MERGES) -> str:
@@ -1093,17 +1095,17 @@ def bpe_continue_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(corpus), exactly the persisted-seam contract (the corpus is
     touched once, by the verify encode: one scan into (lang, word)
     counts, one broadcast join per segmentation table)."""
-    import os
-    from covid_weather_etl_spark.functions.artifacts import artifact_path
     merges, vocab = ensure_bpe_artifacts(spark, sf_dir)
     algo = (f"m{BPE_TRAIN_MERGES}c{BPE_MIN_PAIR_COUNT}"
             f"x{BPE_EXTEND_MERGES}")
-    vp = artifact_path(sf_dir, "bpe_vocab_ext", algo)
-    if not os.path.isdir(vp):
+
+    def build(vp: str) -> None:
         _, vocab_ext = _bpe_rounds(vocab, len(merges) + 1,
                                    BPE_EXTEND_MERGES)
         vocab_ext.write.mode("overwrite").parquet(vp)
-    vocab_ext = vocab.sparkSession.read.parquet(vp)
+
+    vocab_ext = spark.read.parquet(
+        ensure(artifact_path(sf_dir, "bpe_vocab_ext", algo), build))
 
     base = vocab.select("word", F.size("syms").cast("long").alias("s_base"))
     ext = vocab_ext.select("word",

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
 from covid_weather_etl_spark.functions.numeric import dsum_sql
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
@@ -634,25 +635,6 @@ def compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # schema evolution: mergeSchema read across snapshot generations
 # ---------------------------------------------------------------------------
 
-def _evolution_dir(sf_dir: str, fingerprint: str = "") -> str:
-    """Per-corpus scratch dir for the two snapshot generations (same
-    path-hash keying as the IVF/PQ artifacts: basename for
-    readability, abspath hash for uniqueness). `fingerprint` is a
-    cheap CONTENT key (row count + max custkey) folded into the hash
-    so a regenerated dataset at the same path never reuses stale
-    snapshots (advice r4: path-only keying diverged from the live
-    table after a regen)."""
-    import hashlib
-    import os
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    abspath = os.path.abspath(os.path.normpath(sf_dir))
-    base = os.path.basename(abspath).replace(".", "_")
-    digest = hashlib.md5(f"{abspath}|{fingerprint}".encode()).hexdigest()[:10]
-    return os.path.join(repo_root, "spark-warehouse",
-                        f"schema_evo_{base}_{digest}")
-
-
 @register(
     "schema_evolution_merge",
     survey="ext-lakehouse,S4,P12,A12",
@@ -687,30 +669,29 @@ def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     every gen-2 row keeps its value.
 
     The snapshot files are derived deterministically from the
-    customer dim and written once per corpus under spark-warehouse
-    (path-hash keyed; idempotent re-use, like the IVF/PQ artifacts).
+    customer dim and written once per customer-table content
+    (footer fingerprint) as a train-once warehouse artifact, like the
+    IVF/PQ codebooks.
     Scale: mergeSchema is footer-only work at planning time — the
     data path still prunes columns per file; at 100 TB you cap footer
     sampling via spark.sql.files.* or keep the canonical schema in a
     metastore and pass it explicitly (both shapes read the same)."""
     import os
-    t = load_tables(spark, sf_dir, ("customer",))
-    cust = t["customer"]
-    # content fingerprint from parquet footer stats (count/max are
-    # metadata-only aggregates -- no data scan at any scale)
-    fp = cust.agg(F.count("*").alias("n"),
-                  F.max("c_custkey").alias("mx")).first()
-    out_dir = _evolution_dir(sf_dir, f"n{fp['n']}mx{fp['mx']}")
-    if not os.path.isdir(os.path.join(out_dir, "gen=2")):
+    cust = load_tables(spark, sf_dir, ("customer",))["customer"]
+
+    def build(path: str) -> None:
         (cust.filter(F.col("c_custkey") % 2 == 0)
          .select("c_custkey", "c_mktsegment")
          .coalesce(1)
-         .write.mode("overwrite").parquet(os.path.join(out_dir, "gen=1")))
+         .write.mode("overwrite").parquet(os.path.join(path, "gen=1")))
         (cust.filter(F.col("c_custkey") % 2 == 1)
          .select("c_custkey", "c_mktsegment",
                  F.col("c_acctbal").alias("balance"))
          .coalesce(1)
-         .write.mode("overwrite").parquet(os.path.join(out_dir, "gen=2")))
+         .write.mode("overwrite").parquet(os.path.join(path, "gen=2")))
+
+    out_dir = ensure(artifact_path(sf_dir, "schema_evo", table="customer"),
+                     build)
     merged = (spark.read.option("mergeSchema", "true")
               .option("basePath", out_dir)
               .parquet(os.path.join(out_dir, "gen=1"),

@@ -77,286 +77,14 @@ def _load_modules() -> None:
     _LOADED = True
 
 
-# The correctness driver evaluates the first N=50 queries of the dict
-# order, so the dict leads with whichever cohort most needs a fresh
-# driver row this round (rotated each round; module import order no
-# longer matters).
-#
-# ROUND-START CHECKLIST (permanent — do these before anything else):
-#   1. git add CORRECTNESS_r{N-1}.json BENCH_r{N-1}.json BENCH_FULL.json
-#      if the driver left them untracked (it writes them AFTER the
-#      builder closes, so they are stale-by-construction every round).
-#   2. Regenerate the ledgers: scripts/query_index.py +
-#      scripts/plan_audit.py — `never` rows for last round's new ops
-#      flip to their fresh driver status.
-#   3. Point all_queries() at the new _ROTATION_R{N} tuple; lead with
-#      any never-checked queries (new ops land at the head), then the
-#      documented refresh queue below the previous round's window.
-#
-# Round 6 window (50), per the r5 verdict directive #1: the window is
-# drawn entirely from the never-driver-checked queue plus the two
-# explicit swap-ins. Slot 1 is pricing_summary_q1 (TPC-H Q1, the
-# most-cited query in the corpus); slots 2-10 the tpch_shapes.py pack;
-# 11-14 the round-5 session additions (exact_substring_spans,
-# rrf_hybrid_retrieval, mmr_diverse_topk, regex_token_profile);
-# 15-16 kcore_purchase_network and pagerank_suppliers — the verdict's
-# named swap-ins whose new recursive-CTE oracles upgrade them from
-# rows-only to hash-green (pagerank already has an r4 rows-only row,
-# so it costs one queue slot: 11 oracle-equipped names are held for
-# r7 instead of the directive's 9+2 arithmetic, which had counted
-# kcore as rows-only before its graduation); slot 17
-# longest_increase_streak (displaced from r5); slots 18-50 the rest
-# of the oracle-equipped never-checked queue.
-#
-# R7 queue (all locally sf0.01-parity-green). LEAD with the stale-
-# evidence oracle upgrades whose rows-only driver rows predate their
-# oracles: hll_monthly_rollup, ivf_kmeans_topk, pq_ann_topk,
-# minhash_near_dup, simhash_near_dup, ar_forecast_per_group (the last
-# three graduated to full replay oracles in the r6 session — md5
-# banding for the LSH pair, shared-fragment Cramer normal equations
-# for the AR fit). Then the never-checked
-# oracle-equipped holds: gini_revenue_by_nation,
-# hhi_supplier_concentration, pythagorean_means_prices,
-# price_relative_standing, unpivot_flag_metrics, char_entropy_quality,
-# user_growth_curve, time_decay_engagement, date_spine_fill,
-# repurchase_interval_stats, mad_anomaly_report, time_weighted_average,
-# pinball_quantile_forecast_eval — and the r6-session additions
-# (fpgrowth_type_itemsets, prefixspan_event_patterns,
-# benchmark_decontamination, token_budget_allocation,
-# binary_hamming_topk, context_packing_stats, ngram_novelty_profile,
-# kalman_level_smooth, ann_recall_eval, ivf_cell_balance_profile,
-# corpus_curation_funnel, labeling_function_report,
-# span_corruption_plan, source_interleave_order, plus anything newer;
-# see QUERIES.md "never").
-# Remaining rows-only for weaker rows checks: media_phash_dedup,
-# als_part_recommendations (pca_top_component and both bpe queries
-# graduated to full oracles during r7).
-_ROTATION_R6 = (
-    # TPC-H Q1 first — the verdict's named lead
-    "pricing_summary_q1",
-    # the tpch_shapes.py decision-support pack
-    "forecast_revenue_change", "volume_shipping_pair",
-    "national_market_share", "product_type_profit",
-    "late_shipment_priority", "promo_revenue_share",
-    "top_supplier_quarter", "disjunctive_brand_revenue",
-    "cheapest_supplier_per_part",
-    # round-5 session additions
-    "exact_substring_spans", "rrf_hybrid_retrieval", "mmr_diverse_topk",
-    "regex_token_profile",
-    # verdict swap-ins: recursive-CTE oracles landed in r5, so fresh
-    # rows upgrade both from rows-only to hash-green
-    "kcore_purchase_network", "pagerank_suppliers",
-    # displaced from the r5 window
-    "longest_increase_streak",
-    # remainder of the oracle-equipped never-checked queue
-    "containment_near_dup", "shingle_df_spectrum",
-    "temperature_mix_weights", "order_count_distribution",
-    "small_quantity_revenue", "large_volume_customers",
-    "late_sole_supplier", "prospect_balance_report",
-    "k_anonymity_report", "dp_noisy_counts", "cuped_adjusted_metric",
-    "did_revenue_uplift", "ips_offpolicy_eval", "time_to_convert_stats",
-    "triangle_count", "incremental_minhash_ingest",
-    "order_priority_journey", "priority_mix_except_all",
-    "bitmap_audience_intersection", "name_similarity_pairs",
-    "target_encoding_segment", "distributed_exact_median",
-    "ridge_normal_equations",
-    "rolling_median_revenue", "theilsen_mannkendall_trend",
-    "rfm_segmentation",
-    "basket_affinity", "compaction_plan", "table_checksum_orders",
-    "conformal_forecast_intervals", "unattributed_purchases",
-    # graduated from rows-only THIS round (verdict directive #4) —
-    # their brand-new oracles (recursive-CTE Holt-Winters state,
-    # shared-term-order Cramer) get driver rows immediately;
-    # time_weighted_average and pinball_quantile_forecast_eval move
-    # to the r7 hold (families covered by green twins:
-    # time_decay_engagement-adjacent TWA passed every local sweep,
-    # mase_forecast_eval is hash-green r05)
-    "holt_winters_forecast_eval", "markov_attribution",
-)
-
-# Round 8 window (50), per the r7 verdict directive #2. Slots 1-7:
-# the 7 r7-session additions, the only never-checked queries at round
-# start (all oracle-equipped day one, judge-verified 7/7 PASS); fresh
-# rows take the round-start never-checked queue to 0. Slot 8:
-# media_resize — queued as the oldest rows-only refresh, then
-# GRADUATED to a full oracle during this session, so its row flips
-# hash-green. Slots 9-14: the other six r8-session graduations
-# (approx_* bound gates per directive #4; rp_lsh integer sign-LSH;
-# semantic_dedup recursive-chain replay; media phash/features —
-# every rows-only row that predates its brand-new oracle) —
-# rows-only 15 -> 8, the remainder all iterative-ML-by-nature.
-# Slots 15-26: the 12 r8-session NEW operators, oracle-equipped day
-# one (serving economics, cross-source dedup, ER blocking, ANN
-# ingest, chain audit, batching efficiency, nprobe sweep,
-# incremental CC, held-out perplexity). Slots 27-50: the oldest 24
-# of the r02 hash-row cohort; the other 16 r02 rows lead the r9
-# refresh queue.
-_ROTATION_R8 = (
-    # never-checked at round start: the 7 r7-session additions
-    "sq8_recall_eval", "cdc_chunk_stats", "cdc_incremental_ingest",
-    "domain_mix_kl_report", "bpe_fertility_by_lang",
-    "minhash_banding_calibration", "quantile_sketch_error_eval",
-    # r8-session graduations: rows-only rows predating new oracles
-    "media_resize",
-    "approx_distinct_profile", "approx_quantile_profile",
-    "rp_lsh_near_dup", "semantic_dedup", "media_phash_dedup",
-    "media_features",
-    # r8-session NEW operators, oracle-equipped day one
-    "rp_lsh_band_profile", "prefix_cache_reuse_stats",
-    "speculative_decoding_acceptance", "heaps_law_fit",
-    "cross_source_chunk_duplication", "blocking_quality_eval",
-    "ivf_incremental_ingest", "dedup_chain_audit",
-    "bucketing_efficiency_eval", "ivf_nprobe_recall_sweep",
-    "incremental_dedup_clusters", "ngram_perplexity_eval",
-    # oldest 24 of the r02 hash-row cohort (rest lead the r9 queue)
-    "asof_join_attribution", "backfill_file_counts",
-    "bpe_token_stats", "bucketed_colocated_join",
-    "click_attribution_window", "contamination_check", "corpus_mix",
-    "cosine_topk", "dedup_clusters", "distinct_pairs",
-    "doc_fingerprint", "embedding_near_dup", "etl_time_trend",
-    "extract_logs_table", "hash_stratified_sample",
-    "interpolate_gaps", "interval_join_proximity", "ivf_ann_topk",
-    "knn_join", "lang_id", "load_logs_table",
-    "ngram_jaccard_near_dup", "ols_trend_per_group",
-    "persistence_forecast_eval",
-)
-# Round 9 window (50), per the r8 verdict directive #3 and the queue
-# comment above. Head: any r9-session NEW operators (never-checked,
-# oracle-equipped day one — inserted as they land, displacing the
-# tail to the r10 queue). Then the 16 r02 rows displaced from the r8
-# window (quality_filter_funnel .. winnowing_fingerprint), then the
-# oldest slice of the 44-row r03 cohort (alphabetical within the
-# cohort — all its rows carry identical r03 freshness). Whatever r03
-# rows don't fit lead the r10 refresh queue (see the comment after
-# the tuple).
-_ROTATION_R9 = (
-    # r9-session NEW operators, oracle-equipped day one
-    # (inserted at head as they land)
-    "nelson_aalen_hazard", "l_diversity_report",
-    "abc_pareto_classification", "kneser_ney_bigram_eval",
-    "distinct_ngram_diversity", "epoch_shuffle_plan",
-    "bradley_terry_strengths", "functional_dependency_profile",
-    "cluster_purity_nmi_eval", "shapley_attribution",
-    "late_event_accounting", "term_burstiness_profile",
-    "croston_forecast_eval", "zonemap_pruning_eval",
-    "neyman_allocation_plan", "source_similarity_matrix",
-    "unigram_vocab_seed", "rank_biased_overlap",
-    "encoding_size_estimate", "holm_multiple_tests",
-    "haar_wavelet_energy", "inbatch_negative_collisions", "srm_check",
-    "conversion_path_topk", "bh_fdr_control", "gini_split_scores",
-    "irls_logreg_fit", "truncation_loss_report", "shard_skew_report",
-    "nucleus_sampling_profile", "dpo_pair_construction",
-    "rouge_overlap_eval", "dedup_threshold_sensitivity",
-    "sprt_ab_sequential", "split_leakage_report",
-    "reshard_movement_plan", "bpe_vocab_budget_eval",
-    # the 16 r02 rows displaced from the r8 window
-    "quality_filter_funnel", "quality_score",
-    "rule_classifier_confusion", "salted_join_revenue",
-    "seasonal_decompose", "sequence_packing", "session_windows",
-    "sliding_window_avg", "standard_scaler_transform",
-    "stratified_split_summary", "tfidf_top_terms", "token_stats",
-    "transform_logs_table",
-)
-# The 26 continuation-session new ops displaced the whole r03 slice
-# this window had planned plus the last three r02 refresh slots
-# (tumbling_window_counts, validation_routing, winnowing_fingerprint
-# -> r10 queue head) — never-checked queries outrank refreshes.
-# R10 queue: the three displaced r02 refreshes (tumbling_window_counts,
-# validation_routing, winnowing_fingerprint), then the
-# full 44-row r03 cohort displaced from this window
-# (anti_join_never_ordered, avg_latency_seconds, chrono_split,
-# conditional_labels, correlation_matrix, cube_revenue,
-# cyclical_encoding,
-# daily_activity_trend, date_bounds, date_parts, dim_get_or_create,
-# docs_exact_dedup, epoch_scalar_fns, error_rate_by_type,
-# etl_kpi_cards, first_difference, frame_sample, in_list_filter,
-# join_chain_3way, join_chain_4way_revenue, join_filtered_2way,
-# json_extraction, label_encode_segment, lag_features,
-# latest_event_per_user, left_join_made_inner, media_catalog,
-# monthly_boxplot_stats, null_profile, orders_by_month,
-# pipeline_status, pivot_status_revenue, recent_events_limit,
-# rolling_features, rollup_revenue, running_total,
-# scalar_string_date_fns, semi_join_open_orders,
-# skew_resilient_running_total, summary_stats, topk_orders,
-# union_append, value_histogram, yoy_comparison) lead the refresh
-# queue, then the r04 cohort; never-checked should stay at 0 — any
-# new op added in r10+ sessions leads the next window.
-
-# Round 11 window (50), per the r10 verdict directive #5. Head: the 2
-# r11-session NEW operators (oracle-equipped day one), then the 4 r03
-# rows the r10 window displaced (topk_orders, union_append,
-# value_histogram, yoy_comparison — the oldest evidence left in the
-# ledger), then the full 44-row r04 cohort (identical r04 freshness;
-# alphabetical). 2 + 4 + 44 = exactly 50 — no displacement; after this
-# window the oldest hash row is >= r05 (the directive's done-bar).
-# R12 queue: winsorized_prices + zorder_layout (displaced from this
-# window by the 3rd/4th r11 new ops at the 50-cap — the tuple holds
-# 52 names, the driver takes the first 50), then the 50-row r05
-# cohort (acf_daily_revenue ... zipf_law_fit — see QUERIES.md),
-# minus any r12-session new ops.
-# Round 12 window (50), per the r11 verdict directive #3. Head: any
-# r12-session NEW operators (oracle-equipped day one, inserted as they
-# land — never-checked outranks refreshes, each displacing one tail row
-# to the r13 queue). Then winsorized_prices + zorder_layout (the 2 r04
-# rows displaced at the r11 window's 50-cap — the oldest hash evidence
-# left in the ledger), then the 50-row r05 cohort (identical r05
-# freshness; alphabetical). 2 + 50 = 52 refresh names; the driver takes
-# the first 50; with the 3 r12-session new ops at the head the tuple
-# holds 55 names and the displaced alphabetical tail is exactly
-# (weighted_median_price, weighted_sample_topk, welch_ttest_ab,
-# woe_iv_binning, zipf_law_fit) — those 5 r05 rows lead the r13 queue.
-# After this window the oldest hash evidence is those 5 r05 rows; the
-# bulk moves to r06+. Every window slot is oracle-equipped (verified
-# by test_registry_contract).
-_ROTATION_R12 = (
-    # r12-session NEW operators land here (head), as they register.
-    "stream_fold_compaction_apply", "sarima_hr_forecast_eval",
-    "ivf_fold_state_cells",
-    # the 2 r04 rows displaced at the r11 50-cap
-    "winsorized_prices", "zorder_layout",
-    # the 50-row r05 cohort (oldest evidence in the ledger)
-    "acf_daily_revenue", "adamic_adar_links", "bellman_ford_costs",
-    "benford_digit_profile", "bootstrap_mean_ci",
-    "calibration_ece_report", "count_min_frequency",
-    "decile_lift_table", "dedup_clusters_star", "dedup_keep_longest",
-    "drift_monitor_windows", "embedding_gram_matrix",
-    "er_name_clusters", "exact_auc_mann_whitney",
-    "exact_average_precision", "feature_relevance_ranking",
-    "hard_negative_mining", "hll_audience_overlap",
-    "inclusion_dependency_profile", "isotonic_calibration",
-    "ivf_codebook_train", "kaplan_meier_conversion", "ks_two_sample",
-    "mase_forecast_eval", "minhash_jaccard_audit",
-    "modal_priority_by_nation", "mutual_information_features",
-    "naive_bayes_lang_eval", "ndcg_popularity_baseline",
-    "pareto_front_parts", "pmi_collocations", "pq_codebook_train",
-    "prefix_filter_jaccard_join", "psi_drift_report",
-    "purge_cascade_report", "quantile_normalize_feature",
-    "random_projection_embed", "returned_item_customers",
-    "schema_evolution_merge", "session_stats", "shortest_path_hops",
-    "spearman_correlation", "stratified_exact_k_sample",
-    "stratified_kfold_summary", "topk_orders_per_customer",
+# The correctness check evaluates the first 50 queries of
+# all_queries()'s dict order, so the dict leads with the queries that
+# most need a fresh correctness row; every other registered query
+# follows in registration order. Every window slot is oracle-equipped
+# (pinned by tests/test_registry_contract.py).
+_CHECK_WINDOW = (
     "weighted_median_price", "weighted_sample_topk", "welch_ttest_ab",
     "woe_iv_binning", "zipf_law_fit",
-)
-# R13 queue: the r05 tail displaced at this window's 50-cap (one name
-# per r12-session new op, from zipf_law_fit backwards), then the
-# r06 cohort (see QUERIES.md).
-
-# Round 13 window (50), per the r12 verdict directive #7. Head: the 5
-# r05 rows displaced at the r12 window's 50-cap (the oldest hash
-# evidence left in the ledger), then the full 50-row r06 cohort
-# (identical r06 freshness; alphabetical). 5 + 50 = 55 names; the
-# driver takes the first 50, so the displaced alphabetical tail is
-# exactly (time_to_convert_stats, top_supplier_quarter, triangle_count,
-# unattributed_purchases, volume_shipping_pair) — those 5 r06 rows lead
-# the r14 queue. After this window the oldest hash evidence is those 5
-# r06 rows; the bulk moves to r07+. Every slot is oracle-equipped
-# (verified by test_registry_contract).
-_ROTATION_R13 = (
-    # the 5 r05 rows displaced at the r12 50-cap
-    "weighted_median_price", "weighted_sample_topk", "welch_ttest_ab",
-    "woe_iv_binning", "zipf_law_fit",
-    # the 50-row r06 cohort (oldest evidence in the ledger)
     "basket_affinity", "bitmap_audience_intersection",
     "cheapest_supplier_per_part", "compaction_plan",
     "conformal_forecast_intervals", "containment_near_dup",
@@ -382,267 +110,6 @@ _ROTATION_R13 = (
     "time_to_convert_stats", "top_supplier_quarter", "triangle_count",
     "unattributed_purchases", "volume_shipping_pair",
 )
-# R14 queue: the r06 tail displaced at this window's 50-cap
-# (time_to_convert_stats ... volume_shipping_pair), then the r07
-# cohort (see QUERIES.md).
-
-_ROTATION_R11 = (
-    # r11-session NEW operators (maintain->verify seam closers +
-    # the streaming fold's driver row)
-    "bpe_continue_train", "dedup_fold_state_clusters",
-    "ivf_rebalance_apply", "dedup_state_compaction_apply",
-    # the 4 r03 rows displaced from the r10 window
-    "topk_orders", "union_append", "value_histogram", "yoy_comparison",
-    # the 44-row r04 cohort (oldest evidence in the ledger)
-    "bigram_logprob_score", "bloom_prefilter_join", "bm25_doc_scores",
-    "bpe_merge_step", "chi2_independence", "cohort_retention",
-    "correlated_subquery_orders", "cusum_changepoint",
-    "debounce_events", "decile_rank_customers", "dq_constraint_report",
-    "dsir_importance_weights", "dup_chunk_removal",
-    "embedding_dim_profile", "embedding_int8_quantize",
-    "event_transition_matrix", "ewma_smoothing", "funnel_conversion",
-    "gopher_repetition_signals", "grouping_sets_margins",
-    "hashed_bow_features", "heavy_hitters_twopass",
-    "incremental_agg_maintenance", "iqr_outlier_report",
-    "key_skew_profile", "knn_label_eval", "lapsed_buyers_except",
-    "local_supplier_revenue", "multi_touch_attribution",
-    "pii_redaction", "quantile_binning", "rag_chunking",
-    "range_frame_revenue", "repeat_buyers_intersect", "rolling_cv_gbt",
-    "scd2_dim_history", "scd2_fact_join", "scd2_point_in_time",
-    "seq_length_histogram", "snapshot_diff", "unigram_logprob_score",
-    "vocab_coverage", "winsorized_prices", "zorder_layout",
-)
-
-# Round 10 window (50), per the r9 verdict directive #4 and the queue
-# comment above. Head: any r10-session NEW operators (oracle-equipped
-# day one, inserted as they land — never-checked outranks refreshes,
-# displacing the tail to the r11 queue). Then the 3 r02 refreshes
-# displaced from the r9 window, then the full 44-row r03 cohort (its
-# rows all carry identical r03 freshness; alphabetical). 3+44 = 47
-# refresh slots; at 50-cap, each new r10 op displaces one tail row to
-# the r11 queue head. After this window the oldest hash row is >= r04.
-_ROTATION_R10 = (
-    # r10-session NEW operators land here (head), as they register.
-    "curation_pipeline_run", "pack_efficiency_report",
-    "tokenizer_drift_eval", "dedup_state_compaction_report",
-    "ivf_rebalance_plan", "mix_token_budget_plan",
-    "epoch_repeat_schedule",
-    # the 3 r02 refreshes displaced from the r9 window
-    "tumbling_window_counts", "validation_routing",
-    "winnowing_fingerprint",
-    # the 44-row r03 cohort (oldest evidence in the ledger)
-    "anti_join_never_ordered", "avg_latency_seconds", "chrono_split",
-    "conditional_labels", "correlation_matrix", "cube_revenue",
-    "cyclical_encoding", "daily_activity_trend", "date_bounds",
-    "date_parts", "dim_get_or_create", "docs_exact_dedup",
-    "epoch_scalar_fns", "error_rate_by_type", "etl_kpi_cards",
-    "first_difference", "frame_sample", "in_list_filter",
-    "join_chain_3way", "join_chain_4way_revenue", "join_filtered_2way",
-    "json_extraction", "label_encode_segment", "lag_features",
-    "latest_event_per_user", "left_join_made_inner", "media_catalog",
-    "monthly_boxplot_stats", "null_profile", "orders_by_month",
-    "pipeline_status", "pivot_status_revenue", "recent_events_limit",
-    "rolling_features", "rollup_revenue", "running_total",
-    "scalar_string_date_fns", "semi_join_open_orders",
-    "skew_resilient_running_total", "summary_stats", "topk_orders",
-    "union_append", "value_histogram", "yoy_comparison",
-)
-# R11 queue: the 4 r03 rows displaced from this window by the 7
-# r10-session new ops (topk_orders, union_append, value_histogram,
-# yoy_comparison — the tuple holds 54 names, the driver takes the
-# first 50), then the r04 cohort; never-checked stays at 0.
-# (Comment corrected per r10 ADVICE: 7 new ops landed, not 5.)
-
-# Round 7 window (50), per the r6 verdict directive #1. Slots 1-6: the
-# stale-evidence oracle upgrades — each carries a full replay oracle
-# newer than its last driver row (rows-only r02-r04), so a fresh row
-# flips it rows-only -> hash-green, as r6 did for kcore/pagerank.
-# Slots 7-35: the 29 oracle-equipped never-driver-checked queries
-# (newest parity claims first: the 6 late-r6 additions, then the 14
-# r6-session ops, then the 13 held family twins + the two lattice
-# graduations — order within the cohort follows the registry-comment
-# queue). Slots 36-40: the 5 never-checked rows-only-by-nature queries
-# (weaker rows-only driver evidence is still evidence; reasons per
-# PARITY.md §11). Slots 41-50: the oldest rows-only refreshes — all
-# seven r02 rows (sarima, logreg, both gbt, adf, fourier, rp_lsh) and
-# three of the four r03 rows — so after this round no driver evidence
-# predates r04 except media_resize (queued r8). This window closes the
-# never-checked queue entirely.
-_ROTATION_R7 = (
-    # stale-evidence oracle upgrades (rows-only rows predate oracles)
-    "hll_monthly_rollup", "ivf_kmeans_topk", "pq_ann_topk",
-    "minhash_near_dup", "simhash_near_dup", "ar_forecast_per_group",
-    # oracle-equipped never-checked: late-r6 additions
-    "benchmark_decontamination", "token_budget_allocation",
-    "binary_hamming_topk", "context_packing_stats",
-    "ngram_novelty_profile", "kalman_level_smooth",
-    # oracle-equipped never-checked: r6-session ops
-    "corpus_curation_funnel", "ann_recall_eval",
-    "ivf_cell_balance_profile", "matryoshka_recall_eval",
-    "labeling_function_report", "span_corruption_plan",
-    "source_interleave_order", "join_size_estimate",
-    # oracle-equipped never-checked: lattice graduations + held twins
-    "fpgrowth_type_itemsets", "prefixspan_event_patterns",
-    "gini_revenue_by_nation", "hhi_supplier_concentration",
-    "pythagorean_means_prices", "price_relative_standing",
-    "unpivot_flag_metrics", "char_entropy_quality",
-    "user_growth_curve", "time_decay_engagement", "date_spine_fill",
-    "repurchase_interval_stats", "mad_anomaly_report",
-    "time_weighted_average", "pinball_quantile_forecast_eval",
-    # never-checked, planned rows-only-by-nature (PARITY.md §11) —
-    # but pca_top_component (recursive-CTE power iteration) and both
-    # bpe queries (recursive-CTE merge replay) graduated to FULL
-    # oracles DURING r7 (verdict directive #5), so three of these
-    # five slots yield hash rows instead of the planned rows-only rows
-    "bpe_vocab_train", "bpe_encode_documents", "media_phash_dedup",
-    "pca_top_component", "als_part_recommendations",
-    # oldest rows-only refreshes: all seven r02 rows ...
-    "sarima_forecast_eval", "logreg_classifier_eval",
-    "gbt_classifier_eval", "gbt_regressor_eval", "adf_stationarity",
-    "fourier_trend_forecast_eval", "rp_lsh_near_dup",
-    # ... and three of the four r03 rows (media_resize queued r8)
-    "approx_distinct_profile", "approx_quantile_profile",
-    "media_features",
-)
-# R8 queue: after the r7 driver run the never-checked set is exactly
-# the r7-session additions — sq8_recall_eval, cdc_chunk_stats,
-# domain_mix_kl_report, bpe_fertility_by_lang,
-# minhash_banding_calibration, quantile_sketch_error_eval,
-# cdc_incremental_ingest (all oracle-equipped,
-# all driver-sim green at sf0.01 and spot-verified at sf0.1 on day
-# one) — plus media_resize (rows-only r03 refresh displaced from the
-# r7 window). Lead r8 with those five; the remaining ~45 slots should
-# refresh the oldest evidence rows (the r04 cohort first), and the
-# three r7 oracle graduations whose r7 driver rows will predate their
-# oracles by zero rounds need no special handling (they are in the r7
-# window itself).
-
-# Round 6 window (superseded — kept for the audit trail).
-
-# Round 5 window (superseded — kept for the audit trail): slots 1-2
-# are the two r4-ERR codebook queries,
-# re-shaped to scalar (id, dim, val) rows with DuckDB oracles over the
-# persisted sf0.01 artifact (r4 verdict directive #1); slot 3 is
-# schema_evolution_merge — S4's only registry query, never in a window
-# (directive "What's missing" #3); slots 4-50 are the never-driver-
-# checked queue below in its documented order, oracle-equipped names
-# first (directive #2) plus woe_iv_binning from the session-4 cohort
-# (named in the directive). Never-checked rows-only queries
-# (als_part_recommendations, media_phash_dedup, bpe_encode_documents,
-# pca_top_component, markov_attribution, ...)
-# plus the session-4/5 remainder are next in line for round 6.
-_ROTATION_R5 = (
-    # repaired r4 ERRs — first hash-checkable rows
-    "ivf_codebook_train", "pq_codebook_train",
-    # S4's only query — first driver row
-    "schema_evolution_merge",
-    # session-3 cohort, oracle-equipped, in queue order
-    "count_min_frequency", "psi_drift_report", "ks_two_sample",
-    "mutual_information_features", "pmi_collocations",
-    "shortest_path_hops", "dedup_clusters_star",
-    "random_projection_embed", "weighted_sample_topk", "welch_ttest_ab",
-    "kaplan_meier_conversion", "benford_digit_profile",
-    "isotonic_calibration", "exact_auc_mann_whitney",
-    "spearman_correlation", "decile_lift_table", "bootstrap_mean_ci",
-    "hard_negative_mining", "drift_monitor_windows", "er_name_clusters",
-    "bellman_ford_costs", "quantile_normalize_feature",
-    "feature_relevance_ranking", "purge_cascade_report",
-    "stratified_kfold_summary", "dedup_keep_longest",
-    "minhash_jaccard_audit", "session_stats", "pareto_front_parts",
-    "topk_orders_per_customer", "naive_bayes_lang_eval",
-    "returned_item_customers", "modal_priority_by_nation",
-    "weighted_median_price", "acf_daily_revenue", "zipf_law_fit",
-    "prefix_filter_jaccard_join", "stratified_exact_k_sample",
-    "adamic_adar_links", "exact_average_precision",
-    "mase_forecast_eval", "calibration_ece_report",
-    "inclusion_dependency_profile", "embedding_gram_matrix",
-    "ndcg_popularity_baseline",
-    # never-checked AND newly hash-checkable this round (portable-HLL
-    # rewrite graduated it from rows-only — see sketch_rollup.py)
-    "hll_audience_overlap",
-    # session-4 cohort representative named in the r4 directive
-    "woe_iv_binning",
-)
-
-# Round 4 window (superseded — kept for the audit trail):
-#   1-23: the 23 round-3 additions that have NEVER had a driver
-#         CORRECTNESS row (16 oracle-equipped, 7 rows-only);
-#  24-46: the 23 round-4 additions (incl. debounce + RAG chunking) (first driver rows) — including
-#         the session-2 cohort (incremental MV maintenance, Z-order
-#         layout, hashed BoW, dup-chunk removal, vocab coverage, BPE
-#         merge step, embedding dim profile, event transitions, bloom
-#         pre-filter, quantile binning, IQR fences, chi-square,
-#         SCD2 fact join);
-#  47-50: 4 round-2-verified queries from the modules round 3/4
-#         modified (similarity/text/timeseries + the perf-flagged
-#         dedup_clusters) — last driver-checked on round-2 code,
-#         refresh them. The streaming batch twins and cheapest
-#         similarity/text refreshes yielded their slots to the new
-#         ops: stream==batch pytest equality is driver-independent
-#         evidence, and EVERY oracle query was locally verified at
-#         sf0.01 on current round-4 code (scripts/parity_check.py,
-#         138/138 green) — the displaced refreshes carry that
-#         evidence instead of a driver row this round.
-# Everything else (relational/windows/dedup/multimodal — fresh r3
-# green — plus etl/ml/dashboard/temporal/bucketing/corpus/streams,
-# next in line for round 5) trails in registration order.
-_ROTATION_R4 = (
-    # never driver-checked (all r3 additions)
-    "dq_constraint_report", "cohort_retention", "funnel_conversion",
-    "heavy_hitters_twopass", "pagerank_suppliers", "ivf_codebook_train",
-    "pq_codebook_train", "pq_ann_topk", "gopher_repetition_signals",
-    "pii_redaction", "unigram_logprob_score", "repeat_buyers_intersect",
-    "lapsed_buyers_except", "correlated_subquery_orders",
-    "decile_rank_customers", "range_frame_revenue", "scd2_dim_history",
-    "scd2_point_in_time", "semantic_dedup", "hll_monthly_rollup",
-    "ewma_smoothing", "cusum_changepoint", "rolling_cv_gbt",
-    # r4 additions — first driver rows
-    "bigram_logprob_score", "bm25_doc_scores", "seq_length_histogram",
-    "embedding_int8_quantize", "winsorized_prices", "snapshot_diff",
-    "key_skew_profile",
-    "incremental_agg_maintenance", "zorder_layout", "hashed_bow_features",
-    "dup_chunk_removal", "vocab_coverage", "bpe_merge_step",
-    "embedding_dim_profile", "event_transition_matrix",
-    "bloom_prefilter_join",
-    "quantile_binning", "iqr_outlier_report", "chi2_independence",
-    "scd2_fact_join", "multi_touch_attribution",
-    "debounce_events", "rag_chunking",
-    # late-session r4 additions — first driver rows. These four slots
-    # previously held r2-green refreshes (ivf_kmeans_topk,
-    # ngram_jaccard_near_dup, seasonal_decompose, dedup_clusters);
-    # never-checked queries outrank refreshes, and every displaced
-    # refresh carries the local sf0.01 sweep evidence
-    # (scripts/parity_check.py) on current code instead.
-    "knn_label_eval",
-    "dsir_importance_weights",
-    "grouping_sets_margins",
-    "local_supplier_revenue",
-)
-# Still never driver-checked after the r6 window (queued first for
-# r7; all locally sf0.01-parity-green). Oracle-equipped (13, held
-# because a close hash-green twin already covers each family):
-# gini_revenue_by_nation, hhi_supplier_concentration,
-# pythagorean_means_prices, price_relative_standing,
-# unpivot_flag_metrics, char_entropy_quality, user_growth_curve,
-# time_decay_engagement, date_spine_fill, repurchase_interval_stats,
-# mad_anomaly_report, time_weighted_average,
-# pinball_quantile_forecast_eval; graduated to full oracles in the
-# same r6 session, driver rows pending — fpgrowth_type_itemsets
-# (complete Apriori-lattice twin) and prefixspan_event_patterns
-# (exhaustive candidate-counting twin); and the three r6 session
-# additions, oracle-equipped and driver-sim green on day one —
-# benchmark_decontamination, token_budget_allocation,
-# binary_hamming_topk, context_packing_stats,
-# ngram_novelty_profile, kalman_level_smooth (these eight lead the
-# r7 queue: newest parity claims deserve driver rows first). Rows-only (5):
-# bpe_vocab_train, bpe_encode_documents, media_phash_dedup,
-# pca_top_component, als_part_recommendations.
-# One r7 window of 20 + 30 refresh slots
-# closes the queue entirely. The r7 refresh slots should LEAD with the
-# three remaining stale-evidence oracle upgrades the r5 verdict named
-# (rows-only driver rows predating their oracles):
-# hll_monthly_rollup, ivf_kmeans_topk, pq_ann_topk — a fresh row makes
-# each hash-green, as r6 did for kcore/pagerank.
 
 
 def _resolved(q: Query) -> Query:
@@ -658,10 +125,10 @@ def _resolved(q: Query) -> Query:
 
 def all_queries() -> dict[str, Query]:
     _load_modules()
-    missing = [n for n in _ROTATION_R13 if n not in _REGISTRY]
+    missing = [n for n in _CHECK_WINDOW if n not in _REGISTRY]
     if missing:
-        raise KeyError(f"rotation names not registered: {missing}")
-    ordered = {n: _resolved(_REGISTRY[n]) for n in _ROTATION_R13}
+        raise KeyError(f"check-window names not registered: {missing}")
+    ordered = {n: _resolved(_REGISTRY[n]) for n in _CHECK_WINDOW}
     ordered.update((n, _resolved(q)) for n, q in _REGISTRY.items()
                    if n not in ordered)
     return ordered

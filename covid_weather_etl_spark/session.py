@@ -19,27 +19,38 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: runtime-settable SQL confs every engine session needs: `get_spark`
+#: builds with them and `configure_existing` applies them to a session
+#: built by the caller. UTC keeps parquet timestamps bit-comparable
+#: with the DuckDB oracle; aggregate pushdown lets the single-task
+#: gates (graph.py, corpus.py) answer row-count guards from parquet
+#: footer statistics (exact, plan-only).
+SQL_CONFS = (
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+    ("spark.sql.adaptive.skewJoin.enabled", "true"),
+    ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+    ("spark.sql.parquet.aggregatePushdown", "true"),
+)
+
+
 def get_spark(app_name: str = "covid-weather-etl-spark",
               cpus: int | str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) a local SparkSession with engine defaults."""
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
-    shuffle = shuffle_partitions or int(os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus if str(cpus).isdigit() else 32)))
+    shuffle = shuffle_partitions or (cpus if str(cpus).isdigit() else 32)
     builder = (
         SparkSession.builder
         .master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
+    for k, v in SQL_CONFS:
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
@@ -52,21 +63,9 @@ def configure_existing(spark: SparkSession) -> SparkSession:
     settings that matter for oracle parity (UTC time zone) and for plan
     quality (AQE) are runtime-settable and applied here.
     """
-    for k, v in (
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        # r12: the single-task gates (graph.py, corpus.py) answer their
-        # row-count guard from parquet footer statistics when aggregate
-        # pushdown is on; the engine session always set this but the
-        # driver's vanilla session did not, so gate counts paid a real
-        # scan there. Metadata counts are exact — plan-only change.
-        ("spark.sql.parquet.aggregatePushdown", "true"),
-        # driver testdata events.ts is TIMESTAMP(NANOS); see sources/catalog.py
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-    ):
+    # events.ts may be TIMESTAMP(NANOS); see sources/catalog.py
+    for k, v in SQL_CONFS + (
+            ("spark.sql.legacy.parquet.nanosAsLong", "true"),):
         try:
             spark.conf.set(k, v)
         except Exception:  # pragma: no cover - non-settable on some builds

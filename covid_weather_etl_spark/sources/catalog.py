@@ -14,6 +14,7 @@ free once the layout carries the key.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,6 +47,14 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def path_missing(exc: AnalysisException) -> bool:
+    """True when a read failed only because its path does not exist —
+    the one failure that means "nothing written yet". Any other one
+    (corrupt footer, schema drift, I/O error) must fail the caller
+    rather than be read as empty."""
+    return (exc.getCondition() or "") == "PATH_NOT_FOUND"
 
 
 def load_tables(spark: SparkSession, sf_dir: str,

@@ -42,15 +42,16 @@ from __future__ import annotations
 from typing import Iterable
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.errors import AnalysisException
 
+from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
 from covid_weather_etl_spark.functions.numeric import dsum, dsum_sql
 from covid_weather_etl_spark.queries.registry import register
-from covid_weather_etl_spark.sources.catalog import load_tables
+from covid_weather_etl_spark.sources.catalog import load_tables, path_missing
 
 #: event schema as landed by the ingest stream (ts in microseconds —
 #: the nanos quirk of the driver parquet is batch-read-specific).
@@ -498,7 +499,7 @@ def upsert_gold_stream(stream: DataFrame, gold_dir: str,
             # Only "path does not exist" means first batch; any other
             # failure (corrupt footer, schema drift, IO error) must
             # fail the batch rather than silently append duplicates.
-            if (exc.getCondition() or "") != "PATH_NOT_FOUND":
+            if not path_missing(exc):
                 raise
         batch.write.mode("append").parquet(gold_dir)
 
@@ -549,7 +550,7 @@ def rollup_refresh_stream(stream: DataFrame, rollup_dir: str,
             if old.agg(F.max("batch_hwm")).first()[0] >= batch_id:
                 return  # replayed batch — already folded in
         except AnalysisException as exc:
-            if (exc.getCondition() or "") != "PATH_NOT_FOUND":
+            if not path_missing(exc):
                 raise
         if old is not None:
             b, d = old.alias("b"), part.alias("d")
@@ -617,7 +618,7 @@ def _read_prior_folds(spark: SparkSession, state_dir: str, table: str,
     try:
         return spark.read.parquet(root).filter(F.col("fold") < batch_id)
     except AnalysisException as exc:
-        if (exc.getCondition() or "") != "PATH_NOT_FOUND":
+        if not path_missing(exc):
             raise
         return None
 
@@ -796,9 +797,20 @@ def _ngram_pairs_ctes() -> str:
 #: md5 first-hex-char cut points splitting a corpus into the 3
 #: deterministic ingest folds the registered state query replays.
 FOLD_CUTS = ("6", "b")
+#: the dedup fold states' artifact key: cuts, Jaccard cut, shingle size.
+FOLD_ALGO = f"f3c{''.join(FOLD_CUTS)}j{DEDUP_FOLD_TAU}s3"
 
-#: fold-state memo: state dirs already ensured this session.
-_FOLD_MEMO: set = set()
+
+def _fold_hex(key: str) -> Column:
+    """md5(key)'s first hex char as ``h``, the fold split column."""
+    return F.substring(F.md5(F.col(key).cast("string")), 1, 1).alias("h")
+
+
+def _fold_conds() -> "tuple[Column, Column, Column]":
+    """The three folds' filters on ``h``: [0,6), [6,b), [b,f]."""
+    lo, hi = FOLD_CUTS
+    return (F.col("h") < lo, (F.col("h") >= lo) & (F.col("h") < hi),
+            F.col("h") >= hi)
 
 
 def ensure_dedup_fold_state(spark: SparkSession, sf_dir: str) -> str:
@@ -811,24 +823,14 @@ def ensure_dedup_fold_state(spark: SparkSession, sf_dir: str) -> str:
     precedent: queries over persisted streaming state bench the READ
     path, not a re-ingest). Keyed by corpus fingerprint + the fold
     algorithm constants."""
-    import os
-    from covid_weather_etl_spark.functions.artifacts import artifact_path
-    path = artifact_path(sf_dir, "dedup_fold",
-                         f"f3c{''.join(FOLD_CUTS)}j{DEDUP_FOLD_TAU}s3")
-    if path not in _FOLD_MEMO and not os.path.isdir(path):
+    def build(path: str) -> None:
         docs = (load_tables(spark, sf_dir, ("documents",))["documents"]
-                .select("doc_id", "text",
-                        F.substring(F.md5(F.col("doc_id").cast("string")),
-                                    1, 1).alias("h")))
-        lo, hi = FOLD_CUTS
-        for fold_id, cond in enumerate(
-                (F.col("h") < lo,
-                 (F.col("h") >= lo) & (F.col("h") < hi),
-                 F.col("h") >= hi)):
+                .select("doc_id", "text", _fold_hex("doc_id")))
+        for fold_id, cond in enumerate(_fold_conds()):
             dedup_fold_batch(docs.filter(cond).select("doc_id", "text"),
                              fold_id, path)
-    _FOLD_MEMO.add(path)
-    return path
+
+    return ensure(artifact_path(sf_dir, "dedup_fold", FOLD_ALGO), build)
 
 
 @register(
@@ -960,15 +962,10 @@ def ensure_compacted_fold_state(spark: SparkSession, sf_dir: str) -> str:
     `ensure_dedup_compacted` precedent: the live state stays
     untouched so the registered apply op's before/after accounting is
     deterministic under driver re-runs)."""
-    import os
-    from covid_weather_etl_spark.functions.artifacts import artifact_path
-    path = artifact_path(sf_dir, "dedup_fold_cmp",
-                         f"f3c{''.join(FOLD_CUTS)}j{DEDUP_FOLD_TAU}s3")
-    if path not in _FOLD_MEMO and not os.path.isdir(path):
-        live = ensure_dedup_fold_state(spark, sf_dir)
-        compact_fold_state(spark, live, path)
-    _FOLD_MEMO.add(path)
-    return path
+    def build(path: str) -> None:
+        compact_fold_state(spark, ensure_dedup_fold_state(spark, sf_dir), path)
+
+    return ensure(artifact_path(sf_dir, "dedup_fold_cmp", FOLD_ALGO), build)
 
 
 @register(
@@ -1088,10 +1085,6 @@ VEC_SCHEMA = T.StructType([
     T.StructField("embedding", T.ArrayType(T.FloatType())),
 ])
 
-#: fold-state memo for the IVF ingest state dirs.
-_IVF_FOLD_MEMO: set = set()
-
-
 def ivf_fold_batch(batch_df: DataFrame, batch_id: int, state_dir: str,
                    codebook_rows: list) -> None:
     """Fold ONE micro-batch of vectors into the persisted IVF
@@ -1156,27 +1149,20 @@ def ensure_ivf_fold_state(spark: SparkSession, sf_dir: str) -> str:
     deterministic micro-batches (md5(vec_id) first hex char — the
     dedup fold's split), read from the warehouse thereafter. Keyed by
     the embeddings content fingerprint + the fold constants."""
-    import os
-    from covid_weather_etl_spark.functions.artifacts import artifact_path
     from covid_weather_etl_spark.operators.similarity import (
         ensure_ivf_codebook)
-    path = artifact_path(sf_dir, "ivf_fold", f"f3c{''.join(FOLD_CUTS)}",
-                         table="embeddings")
-    if path not in _IVF_FOLD_MEMO and not os.path.isdir(path):
+
+    def build(path: str) -> None:
         rows = ensure_ivf_codebook(spark, sf_dir)
         emb = (load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-               .select("vec_id", "embedding",
-                       F.substring(F.md5(F.col("vec_id").cast("string")),
-                                   1, 1).alias("h")))
-        lo, hi = FOLD_CUTS
-        for fold_id, cond in enumerate(
-                (F.col("h") < lo,
-                 (F.col("h") >= lo) & (F.col("h") < hi),
-                 F.col("h") >= hi)):
+               .select("vec_id", "embedding", _fold_hex("vec_id")))
+        for fold_id, cond in enumerate(_fold_conds()):
             ivf_fold_batch(emb.filter(cond).select("vec_id", "embedding"),
                            fold_id, path, rows)
-    _IVF_FOLD_MEMO.add(path)
-    return path
+
+    return ensure(artifact_path(sf_dir, "ivf_fold",
+                                f"f3c{''.join(FOLD_CUTS)}",
+                                table="embeddings"), build)
 
 
 def _ivf_fold_oracle(sf_dir: str) -> str:

@@ -86,17 +86,15 @@ def test_planted_clusters_fully_recalled(spark, tmp_path):
             vid += 1
     d = tmp_path / "sfp"
     d.mkdir()
-    # artifact is keyed by full corpus path (unique per tmp_path), so
-    # this cleanup is belt-and-braces only
-    import shutil as _sh
-    from covid_weather_etl_spark.operators.pq import (
-        _PQ_MEMO, pq_codebook_path)
-    _PQ_MEMO.pop(str(d), None)
-    _sh.rmtree(pq_codebook_path(str(d)), ignore_errors=True)
     pdf = [(int(i), [float(x) for x in v], 0) for i, v in zip(ids, vecs)]
     (spark.createDataFrame(pdf, schema="vec_id long, embedding array<float>, "
                                        "label int")
      .coalesce(1).write.parquet(str(d / "embeddings.parquet")))
+    # the artifact is keyed by full corpus path + content (unique per
+    # tmp_path), so this reset is belt-and-braces only
+    from covid_weather_etl_spark.functions.artifacts import discard
+    from covid_weather_etl_spark.operators.pq import pq_codebook_path
+    discard(pq_codebook_path(str(d)))
     top = QUERIES["pq_ann_topk"].fn(spark, str(d)).collect()
     assert len(top) == 5
     # vec_id 0 belongs to cluster 0 = ids 1..24 (0 itself is excluded)

@@ -19,6 +19,7 @@ from types import SimpleNamespace
 import numpy as np
 import pandas as pd
 
+from covid_weather_etl_spark.functions.artifacts import table_fingerprint
 from covid_weather_etl_spark.operators import similarity as S
 from covid_weather_etl_spark.queries.registry import all_queries
 from tests.conftest import SF_DIR, assert_parity
@@ -146,7 +147,7 @@ def test_rebalanced_path_keyed_by_content(spark):
     content-fingerprint keying (same invalidation discipline)."""
     p = S.ivf_rebalanced_path(SF_DIR)
     assert p == S.ivf_codebook_path(SF_DIR) + "_rebal"
-    fp = S.corpus_fingerprint(SF_DIR)
+    fp = table_fingerprint(SF_DIR, "embeddings")
     assert fp and hashlib.md5(
         f"{__import__('os').path.abspath(SF_DIR)}|{fp}".encode()
     ).hexdigest()[:10] in p

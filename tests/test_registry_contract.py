@@ -14,8 +14,8 @@ def test_rotation_window_contract():
     # the driver takes the first 50 dict entries; the rotation tuple
     # may hold more (new ops displace tail refreshes to the next
     # round's queue)
-    assert window == list(R._ROTATION_R13)[:50]
-    assert len(set(R._ROTATION_R13)) == len(R._ROTATION_R13) >= 50
+    assert window == list(R._CHECK_WINDOW)[:50]
+    assert len(set(R._CHECK_WINDOW)) == len(R._CHECK_WINDOW) >= 50
     # every r11 window slot is oracle-equipped (the remaining rows-only
     # queries are all iterative ML with r7/r8 driver rows) — ANY
     # oracle-less slot is a burnt correctness row

@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import pytest
 
-import shutil
-
 import numpy as np
 
 from pyspark.sql import functions as F
@@ -49,8 +47,9 @@ def test_semdedup_drops_planted_duplicates(spark, tmp_path):
     may keep one representative per cell — the documented SemDeDup
     trade-off — so the pin is ≤ one keeper per (group, cell), not
     exactly one per group."""
+    from covid_weather_etl_spark.functions.artifacts import discard
     from covid_weather_etl_spark.operators.similarity import (
-        _CODEBOOK_MEMO, ivf_codebook_path)
+        ivf_codebook_path)
 
     rng = np.random.default_rng(5)
     centers = rng.normal(size=(3, 64)) * 4.0
@@ -61,11 +60,10 @@ def test_semdedup_drops_planted_duplicates(spark, tmp_path):
         rows.append((vid, [float(x) for x in v], 0))
     d = tmp_path / "sfsem"
     d.mkdir()
-    _CODEBOOK_MEMO.pop(str(d), None)
-    shutil.rmtree(ivf_codebook_path(str(d)), ignore_errors=True)
     (spark.createDataFrame(rows, schema="vec_id long, embedding array<float>,"
                                         " label int")
      .coalesce(1).write.parquet(str(d / "embeddings.parquet")))
+    discard(ivf_codebook_path(str(d)))  # train on this corpus, not a memo
     out = QUERIES["semantic_dedup"].fn(spark, str(d)).collect()
     kept = [r for r in out if r["keep"]]
     # massive collapse: at most one keeper per (group, cell) — 8 cells

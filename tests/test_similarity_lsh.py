@@ -395,32 +395,56 @@ def test_mmr_tiny_pool_returns_short_ranking(spark, tmp_path):
 
 
 def test_codebook_paths_are_content_keyed(tmp_path):
-    """Regenerating a corpus at the SAME path must move the IVF/PQ
-    artifact location (content fingerprint in the digest — advice r5),
-    so a stale persisted codebook is never silently reused."""
-    import pandas as pd
+    """Regenerating a corpus at the SAME path must move every artifact
+    location derived from that table (content fingerprint in the
+    digest — advice r5), so a stale persisted artifact is never
+    silently reused: the IVF/PQ codebooks (embeddings) and the dedup
+    stars and BPE tokenizer (documents). A corrupt footer must raise,
+    not alias the "no corpus" location."""
+    import pyarrow as pa
 
+    from covid_weather_etl_spark.functions.artifacts import (
+        table_fingerprint)
+    from covid_weather_etl_spark.operators.corpus import dedup_star_path
     from covid_weather_etl_spark.operators.pq import pq_codebook_path
     from covid_weather_etl_spark.operators.similarity import (
-        corpus_fingerprint, ivf_codebook_path)
+        ivf_codebook_path)
+    from covid_weather_etl_spark.operators.text import bpe_paths
 
     corpus = tmp_path / "sf_tiny"
     corpus.mkdir()
-    assert corpus_fingerprint(str(corpus)) == ""  # no embeddings yet
+    sf = str(corpus)
+    keyed = {
+        "embeddings": (lambda: (ivf_codebook_path(sf), pq_codebook_path(sf)),
+                       lambda n: {"vec_id": range(n),
+                                  "embedding": [[1.0, i / n]
+                                                for i in range(n)]}),
+        "documents": (lambda: (dedup_star_path(sf, "full"),
+                               dedup_star_path(sf, "old"), *bpe_paths(sf)),
+                      lambda n: {"doc_id": range(n),
+                                 "text": [f"doc {i}" for i in range(n)]}),
+    }
+    for table, (paths, rows) in keyed.items():
+        f = corpus / f"{table}.parquet"
+        assert table_fingerprint(sf, table) == ""  # no table yet
+        seen = [paths()]
+        for n in (2, 3):  # write, then regenerate at the same path
+            pd.DataFrame(rows(n)).to_parquet(f)
+            assert table_fingerprint(sf, table)
+            seen.append(paths())
+        for before, after in zip(seen, seen[1:]):
+            assert all(a != b for a, b in zip(before, after))
+        f.write_bytes(b"not a parquet file")
+        with pytest.raises(pa.ArrowInvalid):
+            paths()
+        f.unlink()
 
-    pd.DataFrame({"vec_id": [0, 1], "embedding": [[1.0, 0.0], [0.0, 1.0]]}
-                 ).to_parquet(corpus / "embeddings.parquet")
-    fp1 = corpus_fingerprint(str(corpus))
-    ivf1, pq1 = ivf_codebook_path(str(corpus)), pq_codebook_path(str(corpus))
-    assert fp1
-
-    pd.DataFrame({"vec_id": [0, 1, 2],
-                  "embedding": [[1.0, 0.0], [0.0, 1.0], [0.5, 0.5]]}
-                 ).to_parquet(corpus / "embeddings.parquet")
-    fp2 = corpus_fingerprint(str(corpus))
-    assert fp2 != fp1
-    assert ivf_codebook_path(str(corpus)) != ivf1
-    assert pq_codebook_path(str(corpus)) != pq1
+    # a Spark-written table is a directory of part files: keyed too
+    part = corpus / "embeddings.parquet" / "part-0.parquet"
+    part.parent.mkdir()
+    pd.DataFrame(keyed["embeddings"][1](2)).to_parquet(part)
+    assert table_fingerprint(sf, "embeddings") == (
+        f"n2b{part.stat().st_size}")
 
 
 def test_binary_hamming_topk_matches_numpy(spark):

@@ -720,3 +720,53 @@ def test_dedup_fold_state_clusters_parity_and_truth(spark, duck):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
     again = normalize(q.fn(spark, SF_DIR).toPandas())
     pd.testing.assert_frame_equal(again, got, check_dtype=False)
+
+
+def test_fold_state_build_crash_leaves_no_artifact(spark, tmp_path,
+                                                   monkeypatch):
+    """A fold-state build that raises in fold 1 must leave nothing at
+    the artifact path — a directory there would be served as a
+    complete (one-fold) state by every later call. The next call
+    rebuilds all three folds; once published, the state is served
+    without rebuilding."""
+    import os
+    from covid_weather_etl_spark.functions import artifacts as A
+    corpus = tmp_path / "fold_crash_sf"
+    corpus.mkdir()
+    pd.DataFrame({
+        "doc_id": range(1, 25),
+        "text": [" ".join(f"w{i // 2 * 3 + j}" for j in range(10))
+                 for i in range(1, 25)],
+    }).to_parquet(f"{corpus}/documents.parquet", index=False)
+    sf = str(corpus)
+    path = A.artifact_path(
+        sf, "dedup_fold", f"f3c{''.join(S.FOLD_CUTS)}j{S.DEDUP_FOLD_TAU}s3")
+    real, calls = S.dedup_fold_batch, []
+
+    def fold(batch_df, fold_id, state_dir):
+        calls.append(fold_id)
+        if crash and fold_id == 1:
+            raise RuntimeError("injected crash in fold 1")
+        real(batch_df, fold_id, state_dir)
+
+    monkeypatch.setattr(S, "dedup_fold_batch", fold)
+    crash = True
+    with pytest.raises(RuntimeError, match="injected crash"):
+        S.ensure_dedup_fold_state(spark, sf)
+    assert calls == [0, 1]
+    assert not os.path.exists(path)
+    assert not [n for n in os.listdir(os.path.dirname(path))
+                if n.startswith(os.path.basename(path))]  # no temp left
+
+    crash, calls[:] = False, []
+    assert S.ensure_dedup_fold_state(spark, sf) == path
+    assert calls == [0, 1, 2]
+    for table in ("docs", "idx", "star"):
+        assert sorted(os.listdir(os.path.join(path, table))) == [
+            "fold=0", "fold=1", "fold=2"]
+
+    calls[:] = []
+    assert S.ensure_dedup_fold_state(spark, sf) == path
+    assert calls == []
+    A.discard(path)
+    assert not os.path.exists(path)
