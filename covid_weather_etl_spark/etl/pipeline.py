@@ -42,14 +42,13 @@ import glob
 import os
 from dataclasses import dataclass
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from covid_weather_etl_spark import schemas as S
 from covid_weather_etl_spark.operators.dedup import dedup_on_load
-from covid_weather_etl_spark.sources.catalog import path_missing
+from covid_weather_etl_spark.sources.catalog import read_parquet_or_none
 
 
 @dataclass(frozen=True)
@@ -203,11 +202,8 @@ def load(spark: SparkSession, silver: DataFrame, gold_path: str,
     ordering promise either).
     """
     key = S.WEATHER_NATURAL_KEY if kind == "weather" else S.COVID_NATURAL_KEY
-    try:
-        existing = spark.read.parquet(gold_path)
-    except AnalysisException as exc:
-        if not path_missing(exc):
-            raise
+    existing = read_parquet_or_none(spark, gold_path)
+    if existing is None:
         batch, max_id = silver.dropDuplicates(key), 0
     else:
         batch = dedup_on_load(silver, existing, key)
@@ -305,13 +301,9 @@ WINDOW_DAYS = 30
 
 def get_window(spark: SparkSession, lake: Lake) -> tuple[str, str]:
     """Current [start, end] backfill window (end = start + 29 days)."""
-    try:
-        start = (spark.read.parquet(lake.path("state", "cursor"))
-                 .first()["start_date"])
-    except AnalysisException as exc:
-        if not path_missing(exc):
-            raise
-        start = CURSOR_DEFAULT
+    cursor = read_parquet_or_none(spark, lake.path("state", "cursor"))
+    start = (CURSOR_DEFAULT if cursor is None
+             else cursor.first()["start_date"])
     end = dt.date.fromisoformat(start) + dt.timedelta(days=WINDOW_DAYS - 1)
     return start, end.isoformat()
 

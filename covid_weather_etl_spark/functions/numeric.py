@@ -16,6 +16,14 @@ its oracle. Two strategies, mirrored exactly in the oracle SQL:
   where last-ulp noise is unavoidable; 6 decimals is far above the noise
   floor and far below data resolution.
 
+The portable integer hash ``md5_int`` follows the same twin rule: Spark
+``conv(substring(md5(x), 1, k), 16, 10)`` equals DuckDB
+``('0x' || substr(md5(x), 1, k))::BIGINT`` for any UTF-8 string, and
+the md5 prefix width fixes the integer range: ``k`` hex chars give a
+value in ``[0, 16^k)`` = ``4k`` bits. So k <= 15 fits a signed long
+(60 bits), and k <= 13 (52 bits) also survives a cast to double
+exactly. Every engine-side use of that hash calls ``md5_int``.
+
 Scale note: DECIMAL(25,6) sums hold ~10^19 — at 100 TB (~10^11 rows of
 ~10^5-magnitude values) this still fits with headroom, and decimal
 aggregation stays map-side combinable (partial sums are exact too).
@@ -52,6 +60,14 @@ def exact_avg(col: Column | str, alias: str | None = None) -> Column:
 def exact_avg_sql(expr: str) -> str:
     return (f"CAST(SUM(CAST(({expr}) AS DECIMAL(25,6))) AS DOUBLE)"
             f" / COUNT({expr})")
+
+
+def md5_int(col: Column | str, hex_chars: int) -> Column:
+    """Portable integer hash: the first ``hex_chars`` hex digits of
+    md5(col) as a long in ``[0, 16^hex_chars)``."""
+    c = F.col(col) if isinstance(col, str) else col
+    return (F.conv(F.substring(F.md5(c.cast("binary")), 1, hex_chars),
+                   16, 10).cast("long"))
 
 
 def r6(col: Column, alias: str | None = None) -> Column:

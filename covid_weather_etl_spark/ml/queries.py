@@ -53,7 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from covid_weather_etl_spark.functions.numeric import (
-    cramer_sql, dsum, fround, fround_sql,
+    cramer_sql, dsum, fround, fround_sql, md5_int,
 )
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
@@ -877,6 +877,12 @@ def irls_logreg_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
              [s.s03, s.s13, s.s23, s.s33 + lam]]
         g = [s.g0, s.g1, s.g2, s.g3]
         det_a = det_val(A)
+        if det_a == 0.0:
+            # singular on the driver: fall back to the in-plan solve
+            # for this round rather than dividing by zero
+            beta = tuple(spark.sql(_irls_round_sql(
+                "irls_design_v", _blit(beta))).first())
+            continue
         beta = tuple(
             math.floor((beta[k] + det_val(
                 [[g[r] if c == k else A[r][c] for c in range(4)]
@@ -2224,9 +2230,8 @@ def stratified_kfold_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_ml.py pins fold balance (each stratum's folds within
     ±40% of the stratum mean) and label-rate concentration."""
     t = load_tables(spark, sf_dir, ("customer",))
-    fold = (F.conv(F.substring(F.md5(
-        F.concat(F.lit("fold:"), F.col("c_custkey").cast("string"))),
-        1, 8), 16, 10).cast("long") % KFOLD_K)
+    fold = md5_int(F.concat(F.lit("fold:"), F.col("c_custkey").cast("string")),
+                   8) % KFOLD_K
     y = F.when(F.col("c_acctbal") > 0, 1).otherwise(0)
     return (t["customer"]
             .select(F.col("c_mktsegment").alias("stratum"),

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.functions.artifacts import WAREHOUSE_DIR
 from covid_weather_etl_spark.functions.numeric import (
-    dsum, dsum_sql, fround, fround_sql,
+    dsum, dsum_sql, fround, fround_sql, md5_int,
 )
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
@@ -236,9 +236,7 @@ def shard_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame it rolls up is exactly the heavy-hitter table a salting
     config is generated from."""
     t = load_tables(spark, sf_dir, ("lineitem",))
-    bucket = (F.conv(F.substring(
-        F.md5(F.col("l_suppkey").cast("string")), 1, 8), 16, 10)
-        .cast("long") % SKEW_NBUCKETS)
+    bucket = md5_int(F.col("l_suppkey").cast("string"), 8) % SKEW_NBUCKETS
     pk = (t["lineitem"]
           .groupBy(bucket.alias("bucket"), F.col("l_suppkey").alias("k"))
           .agg(F.count("*").alias("kn")))
@@ -329,16 +327,14 @@ def reshard_movement_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     clockwise argmin is a per-key aggregate over the broadcast ring
     (map-side, no shuffle beyond the census)."""
     t = load_tables(spark, sf_dir, ("lineitem",))
-    h32 = lambda c: (F.conv(F.substring(F.md5(c), 1, 8), 16, 10)  # noqa: E731
-                     .cast("long"))
     keys = (t["lineitem"].select(F.col("l_suppkey").alias("k"))
             .distinct()
-            .select("k", h32(F.col("k").cast("string")).alias("hk")))
+            .select("k", md5_int(F.col("k").cast("string"), 8).alias("hk")))
     ring = spark.createDataFrame(
         [(str(s), str(v)) for s in range(RSP_TO)
          for v in range(RSP_VNODES)], "s string, v string")
     ring = ring.select("s", "v",
-                       h32(F.concat("s", F.lit(":"), "v")).alias("pos"))
+                       md5_int(F.concat("s", F.lit(":"), "v"), 8).alias("pos"))
     dist = F.when(F.col("pos") >= F.col("hk"),
                   F.col("pos") - F.col("hk"))         .otherwise(F.col("pos") - F.col("hk") + F.lit(4294967296))
     scored = (keys.crossJoin(F.broadcast(ring))
@@ -453,16 +449,14 @@ def epoch_shuffle_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     per document."""
     t = load_tables(spark, sf_dir, ("documents",))
     from pyspark.sql import Window as W
-    h32 = lambda c: (F.conv(F.substring(F.md5(c), 1, 8), 16, 10)  # noqa: E731
-                     .cast("long"))
     docs = (spread(t["documents"], "doc_id")
             .select("doc_id",
                     F.size(F.split("text", " ")).alias("n_tok")))
     epochs = docs.sparkSession.createDataFrame(
         [(str(e),) for e in EPOCH_SEEDS], "epoch string")
     keyed = (docs.crossJoin(F.broadcast(epochs))
-             .withColumn("h", h32(F.concat(
-                 "epoch", F.lit(":"), F.col("doc_id").cast("string"))))
+             .withColumn("h", md5_int(F.concat(
+                 "epoch", F.lit(":"), F.col("doc_id").cast("string")), 8))
              .withColumn("shard", F.col("h") % EPOCH_SHARDS))
     w = (W.partitionBy("epoch", "shard")
          .orderBy(F.col("h"), F.col("doc_id")))

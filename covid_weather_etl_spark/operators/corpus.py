@@ -44,8 +44,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
-from covid_weather_etl_spark.functions.numeric import fround, fround_sql
-from covid_weather_etl_spark.functions.textops import shingled_rows
+from covid_weather_etl_spark.functions.numeric import (
+    fround, fround_sql, md5_int,
+)
+from covid_weather_etl_spark.functions.textops import ngrams, shingled_rows
 from covid_weather_etl_spark.operators import text as TX
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
@@ -1215,8 +1217,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.array().cast("array<string>"))
     fb = docs.select("doc_id", "lang",
                      F.explode(F.concat(toks, bigrams)).alias("f"))
-    bucket = (F.conv(F.substring(F.md5("f"), 1, 8), 16, 10)
-              .cast("long") % DSIR_BUCKETS)
+    bucket = md5_int("f", 8) % DSIR_BUCKETS
     # dtf feeds BOTH the bucket-model aggregate and the per-doc scorer;
     # materialize it once (localCheckpoint truncates lineage, same as
     # dedup_clusters' rounds) so the explode-heavy featurize pass runs
@@ -1417,9 +1418,8 @@ def weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded key's 6 decimals significant (ln(u)/w is O(1e-5) at this
     weight scale). Scale: map + top-K — no shuffle of the data at all."""
     t = load_tables(spark, sf_dir, ("orders",))
-    raw = F.conv(F.substring(F.md5(
-        F.concat(F.lit("ws:"), F.col("o_orderkey").cast("string"))),
-        1, 13), 16, 10).cast("double")
+    raw = md5_int(F.concat(F.lit("ws:"), F.col("o_orderkey").cast("string")),
+                  13).cast("double")
     u = (raw + 0.5) / float(1 << 52)
     es_key = F.round(F.log(u) / F.col("o_totalprice") * 1e6, 6)
     return (t["orders"]
@@ -1716,14 +1716,11 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # groupBy+join (two), and per-doc shingle dedup is array_distinct
     # BEFORE the explode (narrow, r12) — the old explode().distinct()
     # paid a full (doc_id, s)-row shuffle for a dedup that is per-doc
-    # by definition. A doc with <3 tokens shingles to nothing
-    # (Spark's descending sequence(0, size-3) would throw) — it can
-    # never be a near-dup candidate; the oracle's
-    # generate_series(1, len-2) is naturally empty for it.
-    sh = (flagged.filter(F.col("s1")).filter(F.size("tk") >= 3)
-          .select("doc_id", F.explode(F.array_distinct(F.expr(
-              "transform(sequence(0, size(tk) - 3), "
-              "i -> concat_ws(' ', slice(tk, i + 1, 3)))"))).alias("s")))
+    # by definition. A doc with <3 tokens shingles to nothing, so it
+    # can never be a near-dup candidate.
+    sh = (flagged.filter(F.col("s1"))
+          .select("doc_id",
+                  F.explode(F.array_distinct(ngrams("tk", 3))).alias("s")))
     docsets = (sh.withColumn("df", F.count("*").over(W.partitionBy("s")))
                .groupBy("doc_id")
                .agg(F.array_sort(F.collect_list(F.struct("df", "s")))
@@ -1776,17 +1773,14 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decontamination on the quality-passing SUPERSET of s3 (near-dup
     # filter deliberately skipped — see docstring); no per-doc gram
     # DISTINCT, the final doc_id distinct absorbs duplicates
-    g8 = (f"transform(sequence(0, size(tk) - {TX.DECON_NGRAM}), "
-          f"i -> concat_ws(' ', slice(tk, i + 1, {TX.DECON_NGRAM})))")
+    g8 = ngrams("tk", TX.DECON_NGRAM)
     ev = (t["documents"]
           .filter(F.col("doc_id") % TX.DECON_EVAL_MOD == 0)
           .select(F.split("text", " ").alias("tk"))
-          .filter(F.size("tk") >= TX.DECON_NGRAM)
-          .select(F.explode(F.expr(g8)).alias("gram")).distinct())
+          .select(F.explode(g8).alias("gram")).distinct())
     contaminated = (flagged
-                    .filter(F.col("s1") & F.col("q")
-                            & (F.size("tk") >= TX.DECON_NGRAM))
-                    .select("doc_id", F.explode(F.expr(g8)).alias("gram"))
+                    .filter(F.col("s1") & F.col("q"))
+                    .select("doc_id", F.explode(g8).alias("gram"))
                     .join(ev, "gram").select("doc_id").distinct()
                     .withColumn("_ct", F.lit(True)))
     staged = (flagged.select("doc_id", "source", "n_tok", "s1", "q")
@@ -1914,12 +1908,9 @@ def span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.sequence(
             F.lit(0),
             F.floor(F.col("n_tok") / b).cast("bigint") - 1)).alias("blk")))
-    off = F.pmod(
-        F.conv(F.substring(F.md5(F.concat(
-            F.col("doc_id").cast("string"), F.lit(":"),
-            F.col("blk").cast("string")).cast("binary")), 1, 15), 16, 10)
-        .cast("bigint"),
-        F.lit(b - s + 1))
+    off = F.pmod(md5_int(F.concat(F.col("doc_id").cast("string"), F.lit(":"),
+                                  F.col("blk").cast("string")), 15),
+                 F.lit(b - s + 1))
     span = F.slice(F.col("tk"),
                    (F.col("blk") * b + F.col("off") + 1).cast("int"), s)
     masked = (blocks.withColumn("off", off)
@@ -2038,13 +2029,11 @@ def _cdc_chunks(docs) -> "DataFrame":
     """(doc_id, source, chunk_no, h, len) chunk table under the CDC
     boundary rule — shared by the stats report and the incremental
     ingest (one definition, one oracle CTE twin)."""
-    from covid_weather_etl_spark.operators.minhash import _md5_int
-
     tok = (spread(docs, "doc_id")
            .select("doc_id", "source",
                    F.posexplode(F.split("text", " ")).alias("p0", "t"))
            .select("doc_id", "source", (F.col("p0") + 1).alias("pos"), "t"))
-    b = F.when(F.pmod(_md5_int(F.col("t")), F.lit(CDC_MOD)) == 0,
+    b = F.when(F.pmod(md5_int("t", 15), F.lit(CDC_MOD)) == 0,
                F.lit(1)).otherwise(F.lit(0))
     wrun = (W.partitionBy("doc_id").orderBy("pos")
             .rowsBetween(W.unboundedPreceding, 0))
@@ -3381,7 +3370,7 @@ def epoch_repeat_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         # DuckDB's generate_series(1, 0) is empty — if a family's
         # target ever floors to 0 symbols the engines would diverge
         # (advice r10). Drop zero-epoch families before the explode,
-        # mirroring the shingled_rows sequence(0,-1) guard.
+        # mirroring the short-document guard of textops.ngrams.
         .where(F.col("ep") >= 1))
     e = F.col("epoch")
     return (sched

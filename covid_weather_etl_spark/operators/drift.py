@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from covid_weather_etl_spark.functions.numeric import fround
+from covid_weather_etl_spark.functions.numeric import fround, md5_int
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
 
@@ -884,9 +884,7 @@ def sprt_ab_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over ~days rows -> 2-row verdict. At 100 TB the walk frame
     is days x variants, microscopic by construction."""
     t = load_tables(spark, sf_dir, ("events",))
-    variant = (F.conv(F.substring(
-        F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-        .cast("long") % 2)
+    variant = md5_int(F.col("user_id").cast("string"), 8) % 2
     daily = (t["events"]
              .groupBy(variant.alias("variant"),
                       F.col("ts").cast("date").alias("d"))
@@ -1323,9 +1321,8 @@ def srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)  # reused per seed
     outs = []
     for seed in SRM_SEEDS:
-        arm = (F.conv(F.substring(F.md5(F.concat(
-            F.lit(f"{seed}:"), F.col("user_id").cast("string"))),
-            1, 8), 16, 10).cast("long") % 2)
+        arm = md5_int(F.concat(F.lit(f"{seed}:"),
+                               F.col("user_id").cast("string")), 8) % 2
         outs.append(users.select(arm.alias("arm")).agg(
             F.lit(seed).alias("seed"),
             F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))

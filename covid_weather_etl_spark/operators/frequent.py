@@ -30,6 +30,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from covid_weather_etl_spark.functions.numeric import md5_int
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
 
@@ -176,9 +177,8 @@ def count_min_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = t["events"].select(bucket.alias("bucket"))
 
     def pos(j, key):
-        raw = F.conv(F.substring(F.md5(
-            F.concat(j.cast("string"), F.lit(":"), key)), 1, 8), 16, 10)
-        return (raw.cast("long") % CMS_W).cast("long")
+        raw = md5_int(F.concat(j.cast("string"), F.lit(":"), key), 8)
+        return (raw % CMS_W).cast("long")
 
     js = F.explode(F.array(*[F.lit(i) for i in range(CMS_D)])).alias("j")
     # sketch build: the ONLY pass over the stream; partial agg bounds
@@ -280,10 +280,8 @@ def minhash_jaccard_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
              .filter(F.col("ns") == 2)
              .agg(F.count("*").alias("n_inter")))
     ii = F.explode(F.array(*[F.lit(i) for i in range(MH_K)])).alias("i")
-    mh = F.conv(F.substring(F.md5(
-        F.concat(F.col("i").cast("string"), F.lit(":"),
-                 F.col("user_id").cast("string"))), 1, 13), 16, 10) \
-        .cast("long")
+    mh = md5_int(F.concat(F.col("i").cast("string"), F.lit(":"),
+                          F.col("user_id").cast("string")), 13)
     sigs = (sets.select("user_id", "s", ii)
             .groupBy("i", "s").agg(F.min(mh).alias("mh")))
     a = sigs.filter(F.col("s") == "a").select("i", F.col("mh").alias("ma"))

@@ -19,11 +19,11 @@ Everything is JVM-side column algebra — no Python UDFs, no mllib
 dependency — so signatures are deterministic across runs and cluster
 layouts (independent plain-Python reimplementation in
 tests/test_minhash.py). The base hash is the PORTABLE md5-derived
-60-bit integer (Spark `conv(substr(md5(x),1,15),16,10)` ==
-DuckDB `('0x'||substr(md5(x),1,15))::BIGINT`, the sketch_rollup.py
-technique), so both minhash_near_dup and simhash_near_dup carry full
-DuckDB replay oracles: the SAME banding runs on both engines and the
-recall of the (identical) candidate stage cancels out of the compare.
+60-bit integer (`functions/numeric.md5_int` at 15 hex chars == DuckDB
+`('0x'||substr(md5(x),1,15))::BIGINT`), so both minhash_near_dup and
+simhash_near_dup carry full DuckDB replay oracles: the SAME banding
+runs on both engines and the recall of the (identical) candidate stage
+cancels out of the compare.
 At 100 TB swap md5 for xxhash64 — identical algebra, engine-local
 hash, ~3× cheaper per token; the oracle then becomes engine-specific,
 which is why the checked-in variant stays portable.
@@ -36,7 +36,8 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from covid_weather_etl_spark.functions.numeric import fround
+from covid_weather_etl_spark.functions.numeric import fround, md5_int
+from covid_weather_etl_spark.functions.textops import shingled_rows
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
 
@@ -74,36 +75,16 @@ def _perm_params(k: int = N_HASHES) -> list[tuple[int, int]]:
 
 
 def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
-    """doc_id → exploded distinct n-word shingles (the dedup unit).
-    Spread across cores first — the explode is the CPU-heavy stage."""
-    return (spread(docs, "doc_id")
-            # split once into a column (inline split re-tokenizes the
-            # document per shingle -- quadratic in doc length)
-            .select("doc_id", F.split("text", " ").alias("tk"))
-            # guard: a doc with < n tokens shingles to nothing; without
-            # this, sequence(0, size-n) goes descending and slice throws
-            .filter(F.size("tk") >= n)
-            .select("doc_id", F.explode(F.expr(
-                f"transform(sequence(0, size(tk) - {n}), "
-                f"i -> concat_ws(' ', slice(tk, i + 1, {n})))"
-            )).alias("token"))
-            .distinct())
-
-
-def _md5_int(col: Column) -> Column:
-    """Portable 60-bit integer hash: first 15 hex chars of md5.
-
-    Cross-engine identity (verified): Spark
-    ``conv(substr(md5(x),1,15),16,10)`` equals DuckDB
-    ``('0x'||substr(md5(x),1,15))::BIGINT`` for any UTF-8 string.
-    """
-    return (F.conv(F.substring(F.md5(col.cast("binary")), 1, 15), 16, 10)
-            .cast("bigint"))
+    """doc_id → exploded distinct n-word shingles as ``token`` (the
+    dedup unit). Spread across cores first — the explode is the
+    CPU-heavy stage."""
+    return (shingled_rows(spread(docs, "doc_id"), n=n)
+            .withColumnRenamed("s", "token"))
 
 
 def _token_hash() -> Column:
     """Non-negative 31-bit base hash of a shingle (portable md5 fold)."""
-    return F.pmod(_md5_int(F.col("token")), F.lit(MERSENNE))
+    return F.pmod(md5_int("token", 15), F.lit(MERSENNE))
 
 
 def minhash_signatures(docs: DataFrame, k: int = N_HASHES,
@@ -267,7 +248,7 @@ def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     tokens = (spread(docs, "doc_id")
               .select("doc_id", F.explode(F.split("text", " ")).alias("token"))
               .distinct()
-              .withColumn("h", _md5_int(F.col("token"))))
+              .withColumn("h", md5_int("token", 15)))
     votes = [
         F.sum(F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1,
                      1).otherwise(-1)).alias(f"v_{i}")
@@ -389,12 +370,6 @@ INC_OLD_CUT = "cc"
 #: exact-Jaccard acceptance threshold for verified pairs.
 INC_TAU = 0.5
 
-#: shingle transform over a pre-split `tk` column (split once — an
-#: inline split(text) in the lambda re-tokenizes per shingle)
-_INC_SHINGLES = (
-    "transform(sequence(0, size(tk) - 3), "
-    "i -> concat_ws(' ', slice(tk, i + 1, 3)))")
-
 
 @register(
     "incremental_minhash_ingest",
@@ -490,11 +465,7 @@ def incremental_minhash_ingest(spark: SparkSession,
     # shingle joins — the candidate frame is collision-bounded, so
     # both docset joins AQE-broadcast. 15 -> ~10 scheduled jobs and
     # the two largest shuffles deleted (SCALE.md §13).
-    sh = (spread(t["documents"], "doc_id")
-          .select("doc_id", F.split("text", " ").alias("tk"))
-          .filter(F.size("tk") >= 3)   # <3-token docs shingle to nothing
-          .select("doc_id", F.explode(F.expr(_INC_SHINGLES)).alias("s"))
-          .distinct())
+    sh = shingled_rows(spread(t["documents"], "doc_id"))
 
     def is_new(col: str):
         return (F.substring(F.md5(F.col(col).cast("string")), 1, 2)

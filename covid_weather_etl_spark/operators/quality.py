@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.functions.numeric import fround, fround_sql
+from covid_weather_etl_spark.functions.textops import bigram_pairs, ngrams
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
 
@@ -102,16 +103,9 @@ def gopher_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # split ONCE into a column: inline split(text) inside the lambdas
     # re-tokenizes the document per element (quadratic in doc length)
     toks = F.col("tk")
-    # bigrams as "tok_i tok_{i+1}" strings, built from one sequence expr.
-    # Guarded for 0/1-token documents: sequence(1, 0) is DESCENDING in
-    # Spark ([1, 0]) and element_at(toks, 0) throws, so short docs take
-    # the empty-array branch instead.
-    bigrams = F.expr(
-        "CASE WHEN size(tk) >= 2 THEN "
-        "transform(sequence(1, size(tk) - 1), "
-        "i -> concat(element_at(tk, i), ' ', "
-        "            element_at(tk, i + 1))) "
-        "ELSE CAST(array() AS ARRAY<STRING>) END")
+    # bigrams as "tok_i tok_{i+1}" strings; 0/1-token documents have
+    # none (an empty array, so the sizes below count 0)
+    bigrams = F.coalesce(ngrams(toks, 2), F.array().cast("array<string>"))
     top_cnt = F.array_max(F.transform(
         F.array_distinct(toks),
         lambda x: F.size(F.filter(toks, lambda t: t == x))))
@@ -324,13 +318,9 @@ def bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.split("text", " ")
     # bigrams over a pre-split tk column (inline split re-tokenizes
     # the document per element)
-    bigrams = F.expr(
-        "transform(sequence(1, size(tk) - 1), "
-        "i -> concat(element_at(tk, i), ' ', "
-        "            element_at(tk, i + 1)))")
-    bg = (spread(t["documents"], "doc_id").filter(F.size(toks) >= 2)
+    bg = (spread(t["documents"], "doc_id")
           .select("doc_id", toks.alias("tk"))
-          .select("doc_id", F.explode(bigrams).alias("bigram"))
+          .select("doc_id", F.explode(ngrams("tk", 2)).alias("bigram"))
           .withColumn("prefix", F.split("bigram", " ")[0]))
     # cached: the bigram-vocabulary frame (Zipf-bounded, model-sized)
     # is used twice — broadcast into the scoring join AND folded into
@@ -641,16 +631,11 @@ def ngram_perplexity_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_eval = (F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
                >= PPLX_EVAL_CUT)
     toks = F.split("text", " ")
-    bigrams = F.expr(
-        "transform(sequence(1, size(tk) - 1), "
-        "i -> struct(element_at(tk, i) AS w1, "
-        "            element_at(tk, i + 1) AS w2))")
     big = (spread(t["documents"], "doc_id")
-           .filter(F.size(toks) >= 2)
            .select("doc_id", "source", is_eval.alias("is_eval"),
                    toks.alias("tk"))
            .select("doc_id", "source", "is_eval",
-                   F.explode(bigrams).alias("b"))
+                   F.explode(bigram_pairs("tk")).alias("b"))
            .select("doc_id", "source", "is_eval",
                    F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2")))
     c12 = (big.filter(~F.col("is_eval"))
@@ -783,16 +768,11 @@ def kneser_ney_bigram_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_eval = (F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
                >= PPLX_EVAL_CUT)
     toks = F.split("text", " ")
-    bigrams = F.expr(
-        "transform(sequence(1, size(tk) - 1), "
-        "i -> struct(element_at(tk, i) AS w1, "
-        "            element_at(tk, i + 1) AS w2))")
     big = (spread(t["documents"], "doc_id")
-           .filter(F.size(toks) >= 2)
            .select("doc_id", "source", is_eval.alias("is_eval"),
                    toks.alias("tk"))
            .select("doc_id", "source", "is_eval",
-                   F.explode(bigrams).alias("b"))
+                   F.explode(bigram_pairs("tk")).alias("b"))
            .select("doc_id", "source", "is_eval",
                    F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2")))
     c12 = (big.filter(~F.col("is_eval"))

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from covid_weather_etl_spark.functions.numeric import dsum, dsum_sql
+from covid_weather_etl_spark.functions.numeric import dsum, dsum_sql, md5_int
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
 
@@ -721,9 +721,7 @@ def join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     def pair(df: DataFrame, key: str) -> DataFrame:
         g = df.groupBy(F.col(key).alias("k")).agg(F.count("*").alias("cnt"))
         sampled = F.when(
-            F.pmod(F.conv(F.substring(F.md5(F.col("k").cast("string")
-                                            .cast("binary")), 1, 15),
-                          16, 10).cast("bigint"),
+            F.pmod(md5_int(F.col("k").cast("string"), 15),
                    F.lit(JOINEST_RATE)) == 0,
             F.col("cnt") * F.col("cnt")).otherwise(F.lit(0))
         return g.agg(

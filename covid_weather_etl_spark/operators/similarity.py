@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
+from covid_weather_etl_spark.functions.numeric import md5_int
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
 
@@ -3092,8 +3093,7 @@ def inbatch_negative_collisions(spark: SparkSession,
     tot = emb.agg(F.count("*").alias("n"))
     lbl = (emb.groupBy("label").agg(F.count("*").alias("nl"))
            .agg(F.sum(F.col("nl") * (F.col("nl") - 1)).alias("s2")))
-    h32 = (F.conv(F.substring(F.md5(F.col("vec_id").cast("string")),
-                              1, 8), 16, 10).cast("long"))
+    h32 = md5_int(F.col("vec_id").cast("string"), 8)
     outs = []
     for bsz in INB_BATCH_SIZES:
         g = (emb.crossJoin(F.broadcast(tot))

@@ -23,7 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from covid_weather_etl_spark.functions.numeric import fround, fround_sql
+from covid_weather_etl_spark.functions.numeric import (
+    fround, fround_sql, md5_int,
+)
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
 
@@ -79,8 +81,7 @@ _HLL_NUM = float(HLL_M) * float(HLL_M) * float(_HLL_EMPTY)  # m^2 * 2^49
 def hll_register_cols(value):
     """(bucket, rho) columns of the portable sketch for one value
     expression — pure JVM-side column algebra, no UDF."""
-    h = (F.conv(F.substring(F.md5(value.cast("string").cast("binary")),
-                            1, 15), 16, 10).cast("long"))
+    h = md5_int(value.cast("string"), 15)
     bucket = F.shiftright(h, HLL_RBITS).cast("int")
     r = h.bitwiseAND(F.lit(_HLL_MASK))
     rho = (F.when(r == 0, F.lit(_HLL_RHO0))

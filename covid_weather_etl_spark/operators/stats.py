@@ -28,7 +28,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from covid_weather_etl_spark.functions.numeric import fround_sql
+from covid_weather_etl_spark.functions.numeric import fround_sql, md5_int
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
 
@@ -699,10 +699,8 @@ def bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = daily.agg(F.count("*").alias("n_days"),
                      F.round(F.avg("rev"), 6).alias("mean_revenue"))
     bs = F.explode(F.array(*[F.lit(i) for i in range(BOOT_B)])).alias("b")
-    raw = F.conv(F.substring(F.md5(
-        F.concat(F.col("b").cast("string"), F.lit(":"),
-                 F.col("day").cast("string"))), 1, 13), 16, 10) \
-        .cast("double")
+    raw = md5_int(F.concat(F.col("b").cast("string"), F.lit(":"),
+                           F.col("day").cast("string")), 13).cast("double")
     u = (raw + 0.5) / float(1 << 52)
     w = F.lit(6)
     for k in range(len(_POIS_CDF) - 1, -1, -1):

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from covid_weather_etl_spark.functions.numeric import md5_int
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
 
@@ -334,9 +335,7 @@ def late_event_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-row broadcast sweep join, one map-combinable aggregate."""
     t = load_tables(spark, sf_dir, ("events",))
     sec = (F.unix_micros("ts") / F.lit(1000000)).cast("long")
-    delay = (F.conv(F.substring(F.md5(F.col("event_id").cast("string")),
-                                1, 8), 16, 10).cast("long")
-             % LATE_MAX_DELAY_SEC)
+    delay = md5_int(F.col("event_id").cast("string"), 8) % LATE_MAX_DELAY_SEC
     win_end = ((sec / LATE_WINDOW_SEC).cast("long") + 1) \
         * LATE_WINDOW_SEC
     lat = (t["events"]

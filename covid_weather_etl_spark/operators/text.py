@@ -22,9 +22,11 @@ from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
 from covid_weather_etl_spark.functions.numeric import (
-    dsum, dsum_sql, fround, fround_sql,
+    dsum, dsum_sql, fround, fround_sql, md5_int,
 )
-from covid_weather_etl_spark.functions.textops import shingled_rows
+from covid_weather_etl_spark.functions.textops import (
+    bigram_pairs, ngrams, shingled_rows,
+)
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
 
@@ -629,8 +631,7 @@ def hashed_bow_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ("documents",))
     tok = (t["documents"]
            .select("doc_id", F.explode(_tokens()).alias("tok")))
-    bucket = (F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10)
-              .cast("long") % HASH_DIM)
+    bucket = md5_int("tok", 8) % HASH_DIM
     return (tok.select("doc_id", bucket.alias("bucket"))
             .groupBy("doc_id", "bucket")
             .agg(F.count("*").alias("tf")))
@@ -781,13 +782,10 @@ def _bpe_rounds(vocab: DataFrame, first_idx: int, max_rounds: int):
     `bpe_continue_train` oracle hash-proves this cross-engine).
     Returns ``(merges, vocab)``; stops early when no pair clears
     BPE_MIN_PAIR_COUNT."""
-    pair_expr = F.expr(
-        "transform(sequence(1, size(syms) - 1), "
-        "i -> struct(syms[i - 1] AS l, syms[i] AS r))")
+    pair_expr = bigram_pairs("syms", "l", "r")
     merges: list[tuple[int, str, str, int]] = []
     for idx in range(first_idx, first_idx + max_rounds):
-        pc = (vocab.filter(F.size("syms") >= 2)   # sequence(1,0) trap
-              .select(F.explode(pair_expr).alias("p"), "cnt")
+        pc = (vocab.select(F.explode(pair_expr).alias("p"), "cnt")
               .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
               .agg(F.sum("cnt").alias("c")))
         top = pc.orderBy(F.col("c").desc(), "l", "r").first()
@@ -1685,13 +1683,7 @@ def shingle_df_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     everywhere. At 100 TB this is the cheapest whole-corpus health
     query in the text pack (one pass, two combine trees)."""
     t = load_tables(spark, sf_dir, ("documents",))
-    sh = (spread(t["documents"], "doc_id")
-          .select("doc_id",
-                  F.explode(F.expr(
-                      "transform(sequence(0, size(split(text, ' ')) - 3), "
-                      "i -> concat_ws(' ', slice(split(text, ' '), i + 1, 3)))"
-                  )).alias("s"))
-          .distinct())
+    sh = shingled_rows(spread(t["documents"], "doc_id"))
     df = sh.groupBy("s").agg(F.count("*").alias("df"))
     return (df.groupBy(F.least("df", F.lit(SPECTRUM_CAP)).cast("int")
                        .alias("df_bucket"))
@@ -1765,14 +1757,10 @@ def exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ("documents",))
     toks = (spread(t["documents"], "doc_id")
             .select("doc_id", F.split("text", " ").alias("tk"))
-            .withColumn("n_tokens", F.size("tk").cast("long"))
-            .filter(F.col("n_tokens") >= SPAN_L))
+            .withColumn("n_tokens", F.size("tk").cast("long")))
     spans = toks.select(
         "doc_id", "n_tokens",
-        F.posexplode(F.expr(
-            f"transform(sequence(0, CAST(n_tokens AS INT) - {SPAN_L}), "
-            f"i -> concat_ws(' ', slice(tk, i + 1, {SPAN_L})))"
-        )).alias("pos", "span"))
+        F.posexplode(ngrams("tk", SPAN_L)).alias("pos", "span"))
     dup = (spans.groupBy("span")
            .agg(F.countDistinct("doc_id").alias("n_docs"))
            .filter(F.col("n_docs") >= 2)
@@ -1870,14 +1858,10 @@ def benchmark_decontamination(spark: SparkSession,
     t = load_tables(spark, sf_dir, ("documents",))
     toks = (spread(t["documents"], "doc_id")
             .select("doc_id", "lang", "source",
-                    F.split("text", " ").alias("tk"))
-            .filter(F.size("tk") >= DECON_NGRAM))
+                    F.split("text", " ").alias("tk")))
     grams = (toks.select(
         "doc_id", "lang", "source",
-        F.explode(F.expr(
-            f"transform(sequence(0, size(tk) - {DECON_NGRAM}), "
-            f"i -> concat_ws(' ', slice(tk, i + 1, {DECON_NGRAM})))"
-        )).alias("gram"))
+        F.explode(ngrams("tk", DECON_NGRAM)).alias("gram"))
         .distinct())
     ev = (grams.filter(F.col("doc_id") % DECON_EVAL_MOD == 0)
           .select("gram").distinct()
@@ -1971,14 +1955,10 @@ def ngram_novelty_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     only merge novelty conservatively) — same plan shape."""
     t = load_tables(spark, sf_dir, ("documents",))
     toks = (spread(t["documents"], "doc_id")
-            .select("doc_id", "source", F.split("text", " ").alias("tk"))
-            .filter(F.size("tk") >= NOVELTY_N))
+            .select("doc_id", "source", F.split("text", " ").alias("tk")))
     grams = (toks.select(
         "doc_id", "source",
-        F.explode(F.expr(
-            f"transform(sequence(0, size(tk) - {NOVELTY_N}), "
-            f"i -> concat_ws(' ', slice(tk, i + 1, {NOVELTY_N})))"
-        )).alias("gram"))
+        F.explode(ngrams("tk", NOVELTY_N)).alias("gram"))
         .distinct())
     owner = grams.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
     doc = (grams.join(owner, "gram")
@@ -2428,15 +2408,7 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ("documents",))
     arr = spread(t["documents"], "doc_id") \
         .select("doc_id", _tokens().alias("t"))
-    # size >= 3 guard: Spark's sequence(1, 0) is the DESCENDING [1, 0]
-    # (text.py:740 trap), which would emit two malformed 'trigrams' for
-    # a <3-token doc while the oracle's generate_series(1, len-2) is
-    # empty — the filter matches the oracle's implicit empty behavior.
-    toks = (arr.filter(F.size("t") >= 3).select(
-        "doc_id",
-        F.explode(F.expr(
-            "transform(sequence(1, size(t) - 2), "
-            "i -> concat_ws(' ', t[i-1], t[i], t[i+1]))")).alias("tok")))
+    toks = arr.select("doc_id", F.explode(ngrams("t", 3)).alias("tok"))
     bounds = t["documents"].agg(F.min("doc_id").alias("lo"),
                                 F.max("doc_id").alias("hi"))
     cps = (spark.range(1, HEAPS_CHECKPOINTS + 1)
@@ -2552,10 +2524,7 @@ def nucleus_sampling_profile(spark: SparkSession,
     t = load_tables(spark, sf_dir, ("documents",))
     bgr = (spread(t["documents"], "doc_id")
            .select(F.split("text", " ").alias("tk"))
-           .filter(F.size("tk") >= 2)
-           .select(F.explode(F.expr(
-               "transform(sequence(1, size(tk) - 1), "
-               "i -> struct(tk[i-1] AS w1, tk[i] AS w2))")).alias("p"))
+           .select(F.explode(bigram_pairs("tk")).alias("p"))
            .select("p.w1", "p.w2")
            .groupBy("w1", "w2").agg(F.count("*").alias("c")))
     win = W.partitionBy("w1").orderBy(F.desc("c"), "w2")
@@ -2805,20 +2774,16 @@ def distinct_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the 1e-6 grid. Plan: per order, explode→(source, gram) →
     one map-combinable count + one distinct-aggregate — the distinct
     runs (source, gram)-keyed, so it is a two-stage hash aggregate
-    with no skew beyond the source key; the three orders union. The
-    size ≥ n guard mirrors the oracle's empty generate_series (the
-    text.py:740 descending-sequence trap)."""
+    with no skew beyond the source key; the three orders union. A
+    doc shorter than n has no n-grams (``textops.ngrams``), as in the
+    oracle's empty generate_series."""
     t = load_tables(spark, sf_dir, ("documents",))
     toks = F.split("text", " ")
     outs = []
     base = spread(t["documents"], "doc_id") \
         .select("source", toks.alias("tk"))
     for n in DIVERSITY_ORDERS:
-        grams = F.expr(
-            f"transform(sequence(1, size(tk) - {n - 1}), "
-            f"i -> concat_ws(' ', slice(tk, i, {n})))")
-        g = (base.filter(F.size("tk") >= n)
-             .select("source", F.explode(grams).alias("gram")))
+        g = base.select("source", F.explode(ngrams("tk", n)).alias("gram"))
         outs.append(g.groupBy("source").agg(
             F.lit(n).cast("long").alias("n"),
             F.count("*").alias("total_ngrams"),
@@ -2985,13 +2950,9 @@ def source_similarity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     never docs²) — the same blocking argument as the prefix-filter
     joins; norms and the final matrix are |sources|-bounded."""
     t = load_tables(spark, sf_dir, ("documents",))
-    grams = F.expr(
-        "transform(sequence(1, size(tk) - 2), "
-        "i -> concat_ws(' ', slice(tk, i, 3)))")
     tc = (spread(t["documents"], "doc_id")
           .select("source", F.split("text", " ").alias("tk"))
-          .filter(F.size("tk") >= 3)
-          .select("source", F.explode(grams).alias("term"))
+          .select("source", F.explode(ngrams("tk", 3)).alias("term"))
           .groupBy("source", "term").agg(F.count("*").alias("c")))
     ns = tc.agg(F.countDistinct("source").alias("n"))
     dfs = tc.groupBy("term").agg(F.count("*").alias("df"))

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
-from covid_weather_etl_spark.functions.numeric import dsum_sql
+from covid_weather_etl_spark.functions.numeric import dsum_sql, md5_int
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
 
@@ -265,10 +265,8 @@ def bloom_prefilter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long").alias("m"))
 
     def bpos(j, key, m):
-        raw = F.conv(F.substring(F.md5(
-            F.concat(j.cast("string"), F.lit(":"), key.cast("string"))),
-            1, 8), 16, 10).cast("long")
-        return raw % m
+        return md5_int(F.concat(j.cast("string"), F.lit(":"),
+                                key.cast("string")), 8) % m
 
     pos = (keys.crossJoin(F.broadcast(mm))
            .select(F.explode(F.array(
@@ -761,7 +759,7 @@ def table_checksum_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").cast("decimal(25,2)").cast("string"), sep,
         F.col("o_orderdate").cast("date").cast("string"), sep,
         F.col("o_orderpriority"))
-    h = F.conv(F.substring(F.md5(row), 1, 15), 16, 10).cast("long")
+    h = md5_int(row, 15)
     return (t["orders"]
             .groupBy("o_orderstatus")
             .agg(F.count("*").alias("n_rows"),

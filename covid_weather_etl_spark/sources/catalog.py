@@ -49,12 +49,18 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def path_missing(exc: AnalysisException) -> bool:
-    """True when a read failed only because its path does not exist —
-    the one failure that means "nothing written yet". Any other one
-    (corrupt footer, schema drift, I/O error) must fail the caller
-    rather than be read as empty."""
-    return (exc.getCondition() or "") == "PATH_NOT_FOUND"
+def read_parquet_or_none(spark: SparkSession,
+                         path: str) -> DataFrame | None:
+    """``spark.read.parquet(path)``, or None when the path does not
+    exist — the one failure that means "nothing written yet". Any
+    other one (corrupt footer, schema drift, I/O error) is re-raised
+    rather than read as empty."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as exc:
+        if (exc.getCondition() or "") != "PATH_NOT_FOUND":
+            raise
+        return None
 
 
 def load_tables(spark: SparkSession, sf_dir: str,

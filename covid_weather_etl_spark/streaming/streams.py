@@ -46,12 +46,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.errors import AnalysisException
 
 from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
 from covid_weather_etl_spark.functions.numeric import dsum, dsum_sql
 from covid_weather_etl_spark.queries.registry import register
-from covid_weather_etl_spark.sources.catalog import load_tables, path_missing
+from covid_weather_etl_spark.sources.catalog import (
+    load_tables, read_parquet_or_none,
+)
 
 #: event schema as landed by the ingest stream (ts in microseconds —
 #: the nanos quirk of the driver parquet is batch-read-specific).
@@ -486,21 +487,17 @@ def upsert_gold_stream(stream: DataFrame, gold_dir: str,
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch = batch_df.dropDuplicates(list(key_cols))
-        try:
-            existing = (spark.read.parquet(gold_dir)
-                        .select(*key_cols).dropDuplicates(list(key_cols)))
+        # None only on the first batch; a corrupt gold read fails the
+        # batch rather than silently appending duplicates.
+        gold = read_parquet_or_none(spark, gold_dir)
+        if gold is not None:
+            existing = gold.select(*key_cols).dropDuplicates(list(key_cols))
             # Materialize the anti-join BEFORE the append job: the gold
             # read and the gold append must not share one job, or the
             # scan's file listing could race the write. localCheckpoint
             # is batch-sized (not gold-sized), so it is scale-safe.
             batch = (batch.join(existing, list(key_cols), "left_anti")
                      .localCheckpoint(eager=True))
-        except AnalysisException as exc:
-            # Only "path does not exist" means first batch; any other
-            # failure (corrupt footer, schema drift, IO error) must
-            # fail the batch rather than silently append duplicates.
-            if not path_missing(exc):
-                raise
         batch.write.mode("append").parquet(gold_dir)
 
     return (stream.writeStream
@@ -544,14 +541,10 @@ def rollup_refresh_stream(stream: DataFrame, rollup_dir: str,
                 .agg(F.count("*").alias("n_events"),
                      F.sum(F.col("value").cast(_ROLLUP_DEC))
                       .alias("sum_dec")))
-        old = None
-        try:
-            old = spark.read.parquet(rollup_dir)
-            if old.agg(F.max("batch_hwm")).first()[0] >= batch_id:
-                return  # replayed batch — already folded in
-        except AnalysisException as exc:
-            if not path_missing(exc):
-                raise
+        old = read_parquet_or_none(spark, rollup_dir)
+        if (old is not None
+                and old.agg(F.max("batch_hwm")).first()[0] >= batch_id):
+            return  # replayed batch — already folded in
         if old is not None:
             b, d = old.alias("b"), part.alias("d")
             zero = F.lit(0).cast(_ROLLUP_DEC)
@@ -615,12 +608,8 @@ def _read_prior_folds(spark: SparkSession, state_dir: str, table: str,
     rewrites the same partitions with the same bytes."""
     import os
     root = os.path.join(state_dir, table)
-    try:
-        return spark.read.parquet(root).filter(F.col("fold") < batch_id)
-    except AnalysisException as exc:
-        if not path_missing(exc):
-            raise
-        return None
+    prior = read_parquet_or_none(spark, root)
+    return None if prior is None else prior.filter(F.col("fold") < batch_id)
 
 
 def dedup_fold_batch(batch_df: DataFrame, batch_id: int,

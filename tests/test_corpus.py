@@ -471,7 +471,12 @@ def test_curation_funnel_short_docs_survive(spark, tmp_path):
 
 def test_minhash_shingles_short_doc_guard(spark):
     """shingles() must not throw on sub-n-token docs and must emit
-    zero shingles for them (they can never be near-dup candidates)."""
+    zero shingles for them (they can never be near-dup candidates).
+    The kernel it is built on, textops.ngrams, gives NULL for a doc
+    shorter than n and the in-order n-grams otherwise, at any n."""
+    from pyspark.sql import functions as F
+
+    from covid_weather_etl_spark.functions.textops import ngrams
     from covid_weather_etl_spark.operators.minhash import shingles
 
     pdf = pd.DataFrame(
@@ -482,6 +487,84 @@ def test_minhash_shingles_short_doc_guard(spark):
     ids = {r["doc_id"] for r in out}
     assert ids == {3}
     assert {r["token"] for r in out} == {"a b c", "b c d"}
+
+    for n in (3, 8):
+        toks = [[f"w{j}" for j in range(k)] for k in (0, 1, n - 1, n, n + 2)]
+        df = spark.createDataFrame(list(enumerate(toks)),
+                                   "id int, tk array<string>")
+        got = {r["id"]: r["g"]
+               for r in df.select("id", ngrams("tk", n).alias("g")).collect()}
+        for i, tk in enumerate(toks):
+            want = ([" ".join(tk[j:j + n]) for j in range(len(tk) - n + 1)]
+                    if len(tk) >= n else None)
+            assert got[i] == want, (n, len(tk))
+        assert df.select(F.explode(ngrams("tk", n))).count() == 1 + 3
+
+
+#: every query that shingles documents into word n-grams
+SHINGLING_QUERIES = (
+    "shingle_df_spectrum", "ngram_jaccard_near_dup",
+    "prefix_filter_jaccard_join", "containment_near_dup",
+    "exact_substring_spans", "benchmark_decontamination",
+    "ngram_novelty_profile", "distinct_ngram_diversity",
+    "source_similarity_matrix", "minhash_near_dup", "simhash_near_dup",
+    "minhash_banding_calibration", "incremental_minhash_ingest",
+    "corpus_curation_funnel",
+)
+
+
+@pytest.fixture(scope="module")
+def short_doc_corpus(tmp_path_factory):
+    """The SF_DIR tables with three short documents planted into
+    `documents`: one 1-token doc and a 2-token doc that appears twice
+    under different lang/source cohorts. Returns (dir, duckdb conn)."""
+    import os
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from covid_weather_etl_spark.sources.catalog import TABLES
+
+    d = tmp_path_factory.mktemp("short_docs")
+    docs = pq.read_table(f"{SF_DIR}/documents.parquet")
+    pdf = docs.to_pandas()
+    top = int(pdf["doc_id"].max())
+    l0, s0 = pdf["lang"].iloc[0], pdf["source"].iloc[0]
+    other = pdf[(pdf["lang"] != l0) & (pdf["source"] != s0)].iloc[0]
+    l1, s1 = other["lang"], other["source"]
+    planted = pd.DataFrame(
+        [(top + 1, "solo", l0, s0), (top + 2, "two words", l0, s0),
+         (top + 3, "two words", l1, s1)],
+        columns=["doc_id", "text", "lang", "source"])
+    planted["n_chars"] = planted["text"].str.len()
+    extra = pa.Table.from_pandas(planted, schema=docs.schema,
+                                 preserve_index=False)
+    pq.write_table(pa.concat_tables([docs, extra]),
+                   f"{d}/documents.parquet")
+    con = duckdb.connect()
+    for t in TABLES:
+        if t != "documents":
+            os.symlink(f"{SF_DIR}/{t}.parquet", f"{d}/{t}.parquet")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"read_parquet('{d}/{t}.parquet')")
+    yield str(d), con
+    con.close()
+
+
+@pytest.mark.parametrize("name", SHINGLING_QUERIES)
+def test_shingling_queries_match_oracle_with_short_docs(spark,
+                                                        short_doc_corpus,
+                                                        name):
+    """A doc with fewer tokens than the shingle width yields no
+    shingles on both engines (DuckDB's generate_series is empty; the
+    Spark side goes through textops.ngrams), so every shingling query
+    still matches its oracle when such docs are present."""
+    from covid_weather_etl_spark.queries.registry import all_queries
+    from tests.conftest import assert_parity
+
+    sf_dir, duck = short_doc_corpus
+    assert_parity(spark, duck, all_queries()[name], sf_dir=sf_dir)
 
 
 def test_cdc_chunk_stats_planted_duplicates(spark, tmp_path):

@@ -273,7 +273,6 @@ def test_survival_driver_path_equals_distributed(spark):
     assert na_d == na_l and len(na_d) >= 2
 
 
-@pytest.mark.slow
 def test_shapley_driver_path_equals_distributed(spark):
     """r13 driver resolution of the Shapley coalition lattice is
     BITWISE identical to the distributed 16-subset joins."""

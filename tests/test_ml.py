@@ -801,3 +801,25 @@ def test_irls_driver_solve_equals_round_sql(spark):
         beta = (row.b0, row.b1, row.b2, row.b3)
     old = rows(spark.sql(M._irls_eval_sql("irls_design_v", _blit(beta))))
     assert new == old and len(new) == 1
+
+
+def test_irls_singular_driver_solve_falls_back_to_round_sql(spark,
+                                                            monkeypatch):
+    """A zero driver-side determinant makes that IRLS round run the
+    in-plan _irls_round_sql solve instead of raising
+    ZeroDivisionError; both solves give the same grid coefficients,
+    so the fit is unchanged."""
+    import covid_weather_etl_spark.functions.numeric as N
+
+    want = ML.irls_logreg_fit(spark, SF_DIR).collect()
+    real = N.det_val
+
+    def det_val(m):
+        # zero only for the (symmetric) 4x4 system matrix, not for
+        # the Cramer numerators with one column replaced
+        sym = all(m[i][j] == m[j][i] for i in range(4) for j in range(4))
+        return 0.0 if sym else real(m)
+
+    monkeypatch.setattr(N, "det_val", det_val)
+    got = ML.irls_logreg_fit(spark, SF_DIR).collect()
+    assert got == want and len(got) == 1
