@@ -50,7 +50,9 @@ from covid_weather_etl_spark.functions.numeric import (
 from covid_weather_etl_spark.functions.textops import ngrams, shingled_rows
 from covid_weather_etl_spark.operators import text as TX
 from covid_weather_etl_spark.queries.registry import register
-from covid_weather_etl_spark.sources.catalog import load_tables, spread
+from covid_weather_etl_spark.sources.catalog import (
+    load_tables, read_parquet, spread,
+)
 
 #: md5-hex prefix cutoffs: first 2 hex chars < '1a' ≈ 26/256 ≈ 10.2%
 #: sample; first char < '4' = 4/16 = 25% test split. String comparison
@@ -2658,7 +2660,7 @@ def ensure_dedup_label_star(spark: SparkSession, sf_dir: str,
                     F.col("node").cast("long").alias("node"))
             .write.mode("overwrite").parquet(path))
 
-    return spark.read.parquet(ensure(dedup_star_path(sf_dir, scope), build))
+    return read_parquet(spark, ensure(dedup_star_path(sf_dir, scope), build))
 
 
 def ensure_dedup_old_state(
@@ -2705,7 +2707,7 @@ def ensure_dedup_old_state(
 
     paths = ensure(tuple(dedup_star_path(sf_dir, k)
                          for k in ("old", "oldidx", "oldsz")), build)
-    return tuple(spark.read.parquet(p) for p in paths)
+    return tuple(read_parquet(spark, p) for p in paths)
 
 
 #: edge cap for the single-task connected-components kernel — above
@@ -3485,7 +3487,7 @@ def ensure_dedup_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         (old_idx.join(hot, "s", "left_anti")
          .write.mode("overwrite").parquet(path))
 
-    return spark.read.parquet(ensure(dedup_compacted_idx_path(sf_dir), build))
+    return read_parquet(spark, ensure(dedup_compacted_idx_path(sf_dir), build))
 
 
 @register(

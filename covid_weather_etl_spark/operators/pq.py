@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
 from covid_weather_etl_spark.operators.similarity import _vecs
 from covid_weather_etl_spark.queries.registry import register
-from covid_weather_etl_spark.sources.catalog import load_tables
+from covid_weather_etl_spark.sources.catalog import load_tables, read_parquet
 
 PQ_M = 8          # subspaces
 PQ_C = 16         # centroids per subspace
@@ -103,7 +103,7 @@ def ensure_pq_codebook(spark: SparkSession, sf_dir: str) -> list:
          .coalesce(1).write.mode("overwrite").parquet(path))
 
     return ensure(pq_codebook_path(sf_dir), build, lambda path: sorted(
-        spark.read.parquet(path).collect(),
+        read_parquet(spark, path).collect(),
         key=lambda r: (r["sub_id"], r["code"])))
 
 

@@ -638,9 +638,10 @@ def daily_activity_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     the very string the oracle runs — demonstrating that the reference's
     13 dashboard SQL strings port verbatim (SURVEY.md §3.2). Catalyst
     expands the multi-distinct aggregate with one `expand` + two-stage
-    agg; the customer dim broadcasts."""
+    agg; the customer dim broadcasts. Only the two views the SQL reads
+    are registered."""
     from covid_weather_etl_spark.sources.catalog import register_views
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("events", "customer"))
     return spark.sql(_TREND_SQL)
 
 

@@ -30,7 +30,9 @@ from pyspark.sql import types as T
 from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
 from covid_weather_etl_spark.functions.numeric import md5_int
 from covid_weather_etl_spark.queries.registry import register
-from covid_weather_etl_spark.sources.catalog import load_tables, spread
+from covid_weather_etl_spark.sources.catalog import (
+    load_tables, read_parquet, spread,
+)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -374,7 +376,7 @@ def ensure_ivf_codebook(spark: SparkSession, sf_dir: str) -> list:
 
 def _codebook_rows(spark: SparkSession, path: str) -> list:
     """A persisted codebook's rows, sorted by c_id."""
-    return sorted(spark.read.parquet(path).collect(),
+    return sorted(read_parquet(spark, path).collect(),
                   key=lambda r: r["c_id"])
 
 

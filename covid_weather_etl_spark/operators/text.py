@@ -28,7 +28,9 @@ from covid_weather_etl_spark.functions.textops import (
     bigram_pairs, ngrams, shingled_rows,
 )
 from covid_weather_etl_spark.queries.registry import register
-from covid_weather_etl_spark.sources.catalog import load_tables, spread
+from covid_weather_etl_spark.sources.catalog import (
+    load_tables, read_parquet, spread,
+)
 
 # language marker words for the n-gram/stopword language-ID heuristic.
 # Priority order (en, de, fr, es, zh) breaks score ties deterministically.
@@ -854,11 +856,11 @@ def ensure_bpe_artifacts(spark: SparkSession, sf_dir: str):
 
     def load(mp: str, vp: str) -> list:
         return [(r["merge_idx"], r["left"], r["right"], r["pair_count"])
-                for r in sorted(spark.read.parquet(mp).collect(),
+                for r in sorted(read_parquet(spark, mp).collect(),
                                 key=lambda r: r["merge_idx"])]
 
     paths = bpe_paths(sf_dir)
-    return ensure(paths, build, load), spark.read.parquet(paths[1])
+    return ensure(paths, build, load), read_parquet(spark, paths[1])
 
 
 def _bpe_st_ctes(max_rounds: int = BPE_TRAIN_MERGES) -> str:
@@ -1102,8 +1104,8 @@ def bpe_continue_train(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    BPE_EXTEND_MERGES)
         vocab_ext.write.mode("overwrite").parquet(vp)
 
-    vocab_ext = spark.read.parquet(
-        ensure(artifact_path(sf_dir, "bpe_vocab_ext", algo), build))
+    vocab_ext = read_parquet(
+        spark, ensure(artifact_path(sf_dir, "bpe_vocab_ext", algo), build))
 
     base = vocab.select("word", F.size("syms").cast("long").alias("s_base"))
     ext = vocab_ext.select("word",

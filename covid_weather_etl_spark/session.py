@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 
@@ -56,6 +57,11 @@ def get_spark(app_name: str = "covid-weather-etl-spark",
     return spark
 
 
+#: the conditions `spark.conf.set` raises for a conf the session does
+#: not let the caller change at runtime
+_UNSETTABLE = ("CANNOT_MODIFY_STATIC_CONFIG", "CANNOT_MODIFY_CONFIG")
+
+
 def configure_existing(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine defaults to a session we did not build.
 
@@ -68,6 +74,9 @@ def configure_existing(spark: SparkSession) -> SparkSession:
             ("spark.sql.legacy.parquet.nanosAsLong", "true"),):
         try:
             spark.conf.set(k, v)
-        except Exception:  # pragma: no cover - non-settable on some builds
-            pass
+        except AnalysisException as exc:
+            # a build where the conf is static or reserved keeps its
+            # own value; a rejected value is an error
+            if exc.getCondition() not in _UNSETTABLE:
+                raise
     return spark

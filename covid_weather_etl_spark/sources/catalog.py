@@ -7,12 +7,30 @@ table is a columnar scan that Catalyst can prune and push filters into
 SELECT-list + WHERE-splicing the reference hand-writes per query
 (reference `streamlit/etl_logs.py:104-117`).
 
+Every parquet read in the engine goes through `read_parquet` (tables via
+`load_tables`). Schema rule: the first read of a path infers its schema
+(one Spark job, as `spark.read.parquet` always does) and records the
+`StructType`; a later read with the same key passes it as
+`.schema(...)` and runs no job, as a catalog keeps a table's schema
+instead of rediscovering it per query. Each session keeps its own
+cache. The key is the absolute path, a stamp of what is on disk there
+— `(size, mtime_ns, inode)` of a file, or the sorted `(relpath, size,
+mtime_ns)` of every file under a directory, recursively — and the
+session values of the confs that change what inference returns
+(`_INFER_CONFS`). One entry is kept per path: a rewrite or an appended
+part file changes the stamp, so the next read infers again and
+replaces the entry.
+
 At 100 TB the same call works against a partitioned table root
 (`.../lineitem/shipdate_month=.../*.parquet`) — partition pruning is
 free once the layout carries the key.
 """
 
 from __future__ import annotations
+
+import os
+import stat
+import weakref
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -29,8 +47,58 @@ TABLES = (
 DIM_TABLES = ("region", "nation", "customer", "supplier", "part")
 
 
+#: session confs whose values change the schema parquet inference
+#: returns; their values are part of every schema-cache key.
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+#: session -> {absolute path: (key, schema of its last inferred read)}
+_SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+    weakref.WeakKeyDictionary())
+
+
+def _stamp(path: str) -> tuple | None:
+    """What a rewrite of `path` changes, or None when it is absent."""
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return None
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_size, st.st_mtime_ns, st.st_ino)
+    files = []
+    for d, _, names in os.walk(path):
+        for n in names:
+            f = os.path.join(d, n)
+            fs = os.stat(f)
+            files.append((os.path.relpath(f, path), fs.st_size,
+                          fs.st_mtime_ns))
+    return tuple(sorted(files))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema only when
+    the path's cache key (module docstring) is new. An absent path
+    is read as is, so it raises ``PATH_NOT_FOUND`` as before."""
+    stamp = _stamp(path)
+    if stamp is None:
+        return spark.read.parquet(path)
+    key = (stamp, tuple(spark.conf.get(k) for k in _INFER_CONFS))
+    schemas = _SCHEMAS.setdefault(spark, {})
+    full = os.path.abspath(path)
+    hit = schemas.get(full)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    schemas[full] = (key, df.schema)
+    return df
+
+
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         # events.ts has shipped as parquet TIMESTAMP(NANOS) (rejected by
         # the vectorized reader — read as raw int64 via the legacy conf
@@ -51,12 +119,12 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def read_parquet_or_none(spark: SparkSession,
                          path: str) -> DataFrame | None:
-    """``spark.read.parquet(path)``, or None when the path does not
+    """`read_parquet(spark, path)`, or None when the path does not
     exist — the one failure that means "nothing written yet". Any
     other one (corrupt footer, schema drift, I/O error) is re-raised
     rather than read as empty."""
     try:
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     except AnalysisException as exc:
         if (exc.getCondition() or "") != "PATH_NOT_FOUND":
             raise
@@ -70,9 +138,10 @@ def load_tables(spark: SparkSession, sf_dir: str,
     return {t: _read(spark, sf_dir, t) for t in names}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register each table as a temp view for the SQL API path."""
-    dfs = load_tables(spark, sf_dir)
+def register_views(spark: SparkSession, sf_dir: str,
+                   names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
+    """Register each of `names` as a temp view for the SQL API path."""
+    dfs = load_tables(spark, sf_dir, names)
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
     return dfs

@@ -51,7 +51,7 @@ from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
 from covid_weather_etl_spark.functions.numeric import dsum, dsum_sql
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import (
-    load_tables, read_parquet_or_none,
+    load_tables, read_parquet, read_parquet_or_none,
 )
 
 #: event schema as landed by the ingest stream (ts in microseconds —
@@ -572,7 +572,7 @@ def rollup_refresh_stream(stream: DataFrame, rollup_dir: str,
 
 def read_rollup(spark: SparkSession, rollup_dir: str) -> DataFrame:
     """The maintained rollup, exact decimal state exposed as DOUBLE."""
-    return (spark.read.parquet(rollup_dir)
+    return (read_parquet(spark, rollup_dir)
             .select("day", "event_type", "n_events",
                     F.col("sum_dec").cast("double").alias("sum_value")))
 
@@ -876,9 +876,9 @@ def read_dedup_fold_state(spark: SparkSession, state_dir: str) -> DataFrame:
     `dedup_state_compaction_apply` pass rewrites the deltas into a
     single fold so this read stays O(non-singleton nodes)."""
     import os
-    docs = (spark.read.parquet(os.path.join(state_dir, "docs"))
+    docs = (read_parquet(spark, os.path.join(state_dir, "docs"))
             .select("doc_id").distinct())
-    star = spark.read.parquet(os.path.join(state_dir, "star"))
+    star = read_parquet(spark, os.path.join(state_dir, "star"))
     labels = (star.groupBy("node")
               .agg(F.max_by("lbl", "fold").alias("lbl")))
     return (docs.join(labels, docs["doc_id"] == labels["node"], "left")
@@ -928,14 +928,14 @@ def compact_fold_state(spark: SparkSession, src_dir: str,
     O(state), nothing corpus-quadratic, nothing collected but the
     fold-id scalar. Returns M."""
     import os
-    docs = spark.read.parquet(os.path.join(src_dir, "docs"))
+    docs = read_parquet(spark, os.path.join(src_dir, "docs"))
     m = int(docs.agg(F.max("fold")).first()[0])
     (docs.select("doc_id", "n").write.mode("overwrite")
      .parquet(_fold_part(dst_dir, "docs", m)))
-    idx = spark.read.parquet(os.path.join(src_dir, "idx"))
+    idx = read_parquet(spark, os.path.join(src_dir, "idx"))
     (idx.select("doc_id", "s", "n").write.mode("overwrite")
      .parquet(_fold_part(dst_dir, "idx", m)))
-    star = spark.read.parquet(os.path.join(src_dir, "star"))
+    star = read_parquet(spark, os.path.join(src_dir, "star"))
     resolved = (star.groupBy("node")
                 .agg(F.max_by("lbl", "fold").alias("lbl"))
                 .filter(F.col("lbl") != F.col("node")))
@@ -1027,11 +1027,11 @@ def stream_fold_compaction_apply(spark: SparkSession,
     import os
     live = ensure_dedup_fold_state(spark, sf_dir)
     comp = ensure_compacted_fold_state(spark, sf_dir)
-    docs_live = spark.read.parquet(os.path.join(live, "docs"))
-    docs_comp = spark.read.parquet(os.path.join(comp, "docs"))
-    idx_live = spark.read.parquet(os.path.join(live, "idx"))
-    idx_comp = spark.read.parquet(os.path.join(comp, "idx"))
-    star_comp = spark.read.parquet(os.path.join(comp, "star"))
+    docs_live = read_parquet(spark, os.path.join(live, "docs"))
+    docs_comp = read_parquet(spark, os.path.join(comp, "docs"))
+    idx_live = read_parquet(spark, os.path.join(live, "idx"))
+    idx_comp = read_parquet(spark, os.path.join(comp, "idx"))
+    star_comp = read_parquet(spark, os.path.join(comp, "star"))
     pre = read_dedup_fold_state(spark, live)
     post = read_dedup_fold_state(spark, comp)
 
@@ -1216,7 +1216,7 @@ def ivf_fold_state_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         ensure_ivf_codebook)
     rows = ensure_ivf_codebook(spark, sf_dir)
     state = ensure_ivf_fold_state(spark, sf_dir)
-    asg = spark.read.parquet(os.path.join(state, "asg"))
+    asg = read_parquet(spark, os.path.join(state, "asg"))
     counts = (asg.groupBy("c_id")
               .agg(F.count("*").cast("long").alias("n_vectors")))
     tot = counts.agg(F.sum("n_vectors").cast("long").alias("t"))
