@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
 from covid_weather_etl_spark.functions.numeric import (
     fround, fround_sql, md5_int,
@@ -380,7 +381,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (TX.ngram_jaccard_near_dup(spark, sf_dir)
              .select("doc_id_1", "doc_id_2")
              .localCheckpoint(eager=False))
-    if pairs.count() <= CC_SINGLE_TASK_MAX:
+    if driver.fits(pairs.count(), CC_SINGLE_TASK_MAX):
         lbl = cc_single_task(pairs.select(F.col("doc_id_1").alias("a"),
                                           F.col("doc_id_2").alias("b")))
         return (t["documents"].select("doc_id")
@@ -1330,7 +1331,7 @@ def star_components(pairs: DataFrame, op_name: str = "star_components",
     jobs; the distributed contraction below remains the above-cap
     scale path."""
     E = pairs.localCheckpoint(eager=False)
-    if E.count() <= CC_SINGLE_TASK_MAX:
+    if driver.fits(E.count(), CC_SINGLE_TASK_MAX):
         return cc_single_task(E)
 
     def star(E: DataFrame, large: bool) -> DataFrame:
@@ -2913,9 +2914,9 @@ def incremental_dedup_clusters(spark: SparkSession,
     # can create at most |batch candidate pairs| merges, so the
     # single-task union-find kernel applies; the star contraction is
     # the fallback if an ingest ever exceeds the cap
-    if rep_edges.count() <= CC_SINGLE_TASK_MAX:
+    if driver.fits(rep_edges.count(), CC_SINGLE_TASK_MAX):
         merge_lbl = cc_single_task(rep_edges)
-    else:  # pragma: no cover - requires a >1M-merge ingest
+    else:
         merge_lbl = star_components(
             rep_edges, op_name="incremental_dedup_clusters.merge")
     # compose: doc -> old representative -> merged label

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.numeric import fround, md5_int
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
@@ -1058,19 +1059,15 @@ _NATION_Z_CTES = """
     )"""
 
 
-#: single-task collapse gate for the two multiple-testing procedures
-#: (r12): the shared z frame is ≤ HOLM_M rows BY DOMAIN (one row per
-#: nation), so the post-z algebra — triangular rank join, critical-
-#: value join, step decision — runs in ONE mapInPandas task instead of
-#: ~10 one-task broadcast/aggregate jobs apiece (SCALE.md §13 tax).
-#: The kernels introduce NO new float ops: z doubles pass through,
-#: ranks are |z| comparisons with byte-order name tie-breaks (the
-#: cc_single_task UTF-8 convention), thresholds are the same module
-#: literals, verdicts are integer comparisons. The flag exists so
-#: tests can force the distributed path for the equality pins.
-MT_SINGLE_TASK_MAX = HOLM_M
-
-
+# Driver resolution of the two multiple-testing procedures (r12): the
+# shared z frame is ≤ HOLM_M rows BY DOMAIN (one row per nation), so
+# the post-z algebra — triangular rank join, critical-value join, step
+# decision — runs on the driver instead of ~10 one-task broadcast/
+# aggregate jobs apiece (SCALE.md §13 tax). It introduces NO new float
+# ops: z doubles pass through, ranks are |z| comparisons with
+# byte-order name tie-breaks (the cc_single_task UTF-8 convention),
+# thresholds are the same module literals, verdicts are integer
+# comparisons.
 def _mt_rank(rows) -> list:
     """Shared rank step: 1 + |{b : |z_b| > |z_a| or (= and name_b <
     name_a byte-order)}| — the triangular-join text replayed on ints/
@@ -1090,12 +1087,12 @@ def _mt_rank(rows) -> list:
 
 def _holm_from_rows(spark: SparkSession, rows) -> DataFrame:
     """Holm step-down resolved on the driver from the collected
-    ≤MT_SINGLE_TASK_MAX-row z frame (callers gate on the ACTUAL row
+    ≤HOLM_M-row z frame (callers gate on the ACTUAL row
     count and on NULL-free z — ADVICE r12 hardening; NULL z or an
     over-cap frame falls through to the distributed path, whose
     NULL-propagation is the pinned shape). Bit-exact: replays the
     rank/threshold/step algebra on the unchanged z doubles (pinned
-    driver-vs-distributed in tests/test_drift.py)."""
+    driver-vs-distributed in tests/test_driver_paths.py)."""
     tup = [(r["n_name"], int(r["n"]), float(r["z"])) for r in rows]
     ranked = _mt_rank(tup)
     pass_k = {rk: int(abs(zz) >= HOLM_ZCRIT[rk - 1])
@@ -1213,12 +1210,10 @@ def holm_multiple_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hardening): gate on the ACTUAL row count and NULL-free z — an
     # over-cap universe or a NULL z (zero pooled variance) falls
     # through to the distributed path, whose NULL-propagation is the
-    # pinned shape. -1 forces the distributed path (tests).
-    if MT_SINGLE_TASK_MAX >= 0:
-        rows = z.limit(MT_SINGLE_TASK_MAX + 1).collect()
-        if (len(rows) <= MT_SINGLE_TASK_MAX
-                and all(r["z"] is not None for r in rows)):
-            return _holm_from_rows(spark, rows)
+    # pinned shape.
+    rows = driver.bounded_collect(z, HOLM_M)
+    if rows is not None and all(r["z"] is not None for r in rows):
+        return _holm_from_rows(spark, rows)
     a, b = z.alias("a"), z.alias("b")
     beats = (F.abs(F.col("b.z")) > F.abs(F.col("a.z"))) | \
         ((F.abs(F.col("b.z")) == F.abs(F.col("a.z")))
@@ -1402,11 +1397,9 @@ def bh_fdr_control(spark: SparkSession, sf_dir: str) -> DataFrame:
     {HOLM_M}-row algebra."""
     z = _nation_welch_z(spark, sf_dir)
     # driver resolution — same gate/hardening as holm_multiple_tests.
-    if MT_SINGLE_TASK_MAX >= 0:
-        rows = z.limit(MT_SINGLE_TASK_MAX + 1).collect()
-        if (len(rows) <= MT_SINGLE_TASK_MAX
-                and all(r["z"] is not None for r in rows)):
-            return _bh_from_rows(spark, rows)
+    rows = driver.bounded_collect(z, HOLM_M)
+    if rows is not None and all(r["z"] is not None for r in rows):
+        return _bh_from_rows(spark, rows)
     a, b = z.alias("a"), z.alias("b")
     beats = (F.abs(F.col("b.z")) > F.abs(F.col("a.z"))) | \
         ((F.abs(F.col("b.z")) == F.abs(F.col("a.z")))

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
 
@@ -392,8 +393,7 @@ def user_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: driver-resolution cap on the day-grain risk table (rows). The table
 #: is horizon-bounded (one row per observed duration day), so the cap
-#: never binds on real data at any corpus scale; -1 forces the
-#: distributed triangular-join path (tests).
+#: never binds on real data at any corpus scale.
 SURV_COLLECT_MAX = 100_000
 
 
@@ -565,12 +565,10 @@ def kaplan_meier_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
                .localCheckpoint(eager=False))  # horizon-sized; reused 3×
     # driver resolution (r13): the risk table is horizon-bounded —
     # resolve at-risk counts + the log-space product on the driver
-    # (see _km_from_day_tab; -1 forces the distributed path, pinned
-    # driver-vs-distributed bitwise in tests).
-    if SURV_COLLECT_MAX >= 0:
-        tab = day_tab.limit(SURV_COLLECT_MAX + 1).collect()
-        if len(tab) <= SURV_COLLECT_MAX:
-            return _km_from_day_tab(spark, tab)
+    # (see _km_from_day_tab).
+    tab = driver.bounded_collect(day_tab, SURV_COLLECT_MAX)
+    if tab is not None:
+        return _km_from_day_tab(spark, tab)
     tot = day_tab.agg(F.sum(F.col("d") + F.col("c")).alias("n_total"))
     a, b = day_tab.alias("a"), day_tab.alias("b")
     at_risk = (a.crossJoin(F.broadcast(tot))
@@ -1162,10 +1160,9 @@ def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
                .localCheckpoint(eager=False))  # horizon-sized; reused 3x
     # driver resolution (r13): same gate/discipline as
     # kaplan_meier_conversion above (see _na_from_day_tab).
-    if SURV_COLLECT_MAX >= 0:
-        tab = day_tab.limit(SURV_COLLECT_MAX + 1).collect()
-        if len(tab) <= SURV_COLLECT_MAX:
-            return _na_from_day_tab(spark, tab)
+    tab = driver.bounded_collect(day_tab, SURV_COLLECT_MAX)
+    if tab is not None:
+        return _na_from_day_tab(spark, tab)
     tot = day_tab.agg(F.sum(F.col("d") + F.col("c")).alias("n_total"))
     a, b = day_tab.alias("a"), day_tab.alias("b")
     at_risk = (a.crossJoin(F.broadcast(tot))
@@ -1429,7 +1426,7 @@ def bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole 3-round MM fit runs in ONE task — kernel-vs-loop equality
     # pinned in tests, oracle unchanged (hash-identical by the
     # bit-exactness contract in _bt_single_task's docstring).
-    if 0 <= directed.count() <= BT_SINGLE_TASK_MAX:
+    if driver.fits(directed.count(), BT_SINGLE_TASK_MAX):
         return _bt_single_task(directed)
     wins = (directed.groupBy(F.col("i").alias("item"))
             .agg(F.sum("w_ij").cast("long").alias("n_wins"),
@@ -1525,12 +1522,6 @@ def _shapley_oracle() -> str:
     """
 
 
-#: driver-resolution flag for the Shapley lattice (the census is
-#: domain-bounded at ≤15 rows, so no size cap is needed; False forces
-#: the distributed path for tests).
-_SHAP_DRIVER = True
-
-
 def _shapley_from_cnt(spark: SparkSession, rows) -> DataFrame:
     """shapley_attribution's coalition-lattice algebra resolved on the
     driver from the collected mask census (≤15 rows BY DOMAIN — masks
@@ -1606,11 +1597,10 @@ def shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # non-zero masks) — the one collect doubles as the checkpoint
     # materialization; empty census (no conversions) falls through to
     # the distributed lattice, whose NaN/NULL shape is the pinned
-    # degenerate behavior. SHAP_DRIVER=False forces the loop (tests).
-    if _SHAP_DRIVER:
-        tab = cnt.collect()
-        if tab:
-            return _shapley_from_cnt(spark, tab)
+    # degenerate behavior.
+    tab = driver.bounded_collect(cnt, 15)
+    if tab:
+        return _shapley_from_cnt(spark, tab)
     subsets = spark.range(16).select(F.col("id").alias("s"))
     v = (subsets.join(F.broadcast(cnt),
                       (F.col("m").bitwiseAND(F.col("s")) == F.col("m")),

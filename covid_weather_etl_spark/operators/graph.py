@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
 
@@ -524,7 +525,7 @@ def shortest_path_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # kernel may take the loop path near the cap, never the reverse.
     # This keeps the gated path ONE action (no checkpoint job, no
     # exact-count job): measured 9 -> 6 jobs at sf0.1 (SCALE.md §13).
-    if t["lineitem"].count() * 2 <= BFS_SINGLE_TASK_MAX:
+    if driver.fits(t["lineitem"].count() * 2, BFS_SINGLE_TASK_MAX):
         return _bfs_single_task(pairs)
 
     pairs = pairs.localCheckpoint(eager=False)  # loop path: reused every round
@@ -694,7 +695,7 @@ def bellman_ford_costs(spark: SparkSession, sf_dir: str) -> DataFrame:
     built, no explode stage, no checkpoint/exact-count jobs); the
     loop above the cap is the scale path."""
     t = load_tables(spark, sf_dir, ("lineitem", "orders"))
-    if t["lineitem"].count() * 2 <= BFS_SINGLE_TASK_MAX:
+    if driver.fits(t["lineitem"].count() * 2, BFS_SINGLE_TASK_MAX):
         pairs = (spread(t["lineitem"], "l_orderkey")
                  .join(t["orders"],
                        F.col("l_orderkey") == F.col("o_orderkey"))
@@ -1031,7 +1032,7 @@ def kcore_purchase_network(spark: SparkSession, sf_dir: str) -> DataFrame:
     built, no per-round deg-aggregate/violator-count/semi-join jobs);
     the kcore() loop above the cap is the scale path."""
     t = load_tables(spark, sf_dir, ("lineitem", "orders"))
-    if t["lineitem"].count() * 2 <= BFS_SINGLE_TASK_MAX:
+    if driver.fits(t["lineitem"].count() * 2, BFS_SINGLE_TASK_MAX):
         pairs = (spread(t["lineitem"], "l_orderkey")
                  .join(t["orders"],
                        F.col("l_orderkey") == F.col("o_orderkey"))

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
 
@@ -157,8 +158,8 @@ def rank_table(df: DataFrame, col: str, n_blocks: int = 32) -> DataFrame:
 
 #: driver-resolution cap on the (a, b) joint tie-census (rows). Joint
 #: distinct (chars, tokens) pairs are length-domain-bounded in
-#: practice; -1 forces the distributed path (tests). The row-count
-#: bound keeps the replay inside the engine's long-multiply range.
+#: practice. The row-count bound keeps the replay inside the engine's
+#: long-multiply range.
 SPEAR_COLLECT_MAX = 100_000
 _SPEAR_N_MAX = 10**9
 
@@ -284,15 +285,14 @@ def spearman_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # replaces the two rank_table side frames (each with its own
     # min/max first() job + broadcast build) — below the cap the rank
     # and moment algebra is exact integer arithmetic on the driver
-    # (see _spearman_from_cells; -1 forces the distributed path).
-    if SPEAR_COLLECT_MAX >= 0:
-        cells = (base.groupBy("a", "b").agg(F.count("*").alias("c"))
-                 .limit(SPEAR_COLLECT_MAX + 1).collect())
-        if (len(cells) <= SPEAR_COLLECT_MAX
-                and sum(int(r["c"]) for r in cells) <= _SPEAR_N_MAX):
-            out = _spearman_from_cells(spark, cells)
-            if out is not None:
-                return out
+    # (see _spearman_from_cells).
+    cells = driver.bounded_collect(
+        base.groupBy("a", "b").agg(F.count("*").alias("c")),
+        SPEAR_COLLECT_MAX)
+    if cells is not None and sum(int(r["c"]) for r in cells) <= _SPEAR_N_MAX:
+        out = _spearman_from_cells(spark, cells)
+        if out is not None:
+            return out
     ranked = (base
               .join(F.broadcast(rank_table(base, "a")), "a")
               .join(F.broadcast(rank_table(base, "b")), "b"))
@@ -529,8 +529,7 @@ def pareto_front_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: driver-resolution cap on the band frame (rows). The frame is
 #: domain-bounded (price-range/100 bands × |return flags|), so the cap
-#: never binds on real data; it exists as the scale guard and so tests
-#: can force the distributed refinement (-1).
+#: never binds on real data; it exists as the scale guard.
 WM_COLLECT_MAX = 100_000
 
 
@@ -662,12 +661,10 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DECIMAL arithmetic end to end), replacing the triangular
     # broadcast join + crossing + cross_info joins (~6 one-task jobs,
     # SCALE.md §13 tax) with literal predicates on the pass-2 scan.
-    # limit(cap+1) bounds the fetch: if more rows come back, fall
-    # through to the distributed refinement (the above-cap scale path).
-    if WM_COLLECT_MAX >= 0:
-        rows = band.limit(WM_COLLECT_MAX + 1).collect()
-        if len(rows) <= WM_COLLECT_MAX:
-            return _wm_from_bands(li, rows)
+    # Past the cap, the distributed refinement is the scale path.
+    rows = driver.bounded_collect(band, WM_COLLECT_MAX)
+    if rows is not None:
+        return _wm_from_bands(li, rows)
     tot = band.groupBy("l_returnflag").agg(F.sum("bw").alias("tot"))
     ba, bb = band.alias("ba"), band.alias("bb")
     below = (ba.join(F.broadcast(bb),
@@ -906,19 +903,16 @@ def ndcg_popularity_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
 RBO_P = 0.9
 RBO_DEPTH = 50
 
-#: single-task collapse gate (r12): everything after the two
-#: TakeOrdered heads is RBO_DEPTH-bounded BY CONSTRUCTION (limit D),
-#: so the rank/overlap/term algebra — two triangular self-joins, the
-#: depth fan-out join and the truncated-sum join, ~9 one-task jobs of
-#: ≤50-row work (SCALE.md §13 tax) — runs in ONE mapInPandas task.
-#: Exactness: the DECIMAL totals cross Arrow as exact decimal.Decimal
-#: (rank comparisons unchanged); the only float replays are
-#: pow/round-9dp/g6, pinned bit-identical to the JVM in
-#: tests/test_ranking.py (data-INDEPENDENT inputs: p^(d-1), d ≤ 50).
-#: The flag exists so tests can force the distributed path.
-RBO_SINGLE_TASK_MAX = RBO_DEPTH
 
-
+# single-task collapse (r12): everything after the two
+# TakeOrdered heads is RBO_DEPTH-bounded BY CONSTRUCTION (limit D),
+# so the rank/overlap/term algebra — two triangular self-joins, the
+# depth fan-out join and the truncated-sum join, ~9 one-task jobs of
+# ≤50-row work (SCALE.md §13 tax) — runs in ONE mapInPandas task.
+# Exactness: the DECIMAL totals cross Arrow as exact decimal.Decimal
+# (rank comparisons unchanged); the only float replays are
+# pow/round-9dp/g6, pinned bit-identical to the JVM in
+# tests/test_ranking.py (data-INDEPENDENT inputs: p^(d-1), d ≤ 50).
 def _rbo_single_task(heads: DataFrame) -> DataFrame:
     """Whole-RBO-in-one-task kernel over the tagged union of the two
     top-D heads (side 'a' = revenue ranking, 'b' = quantity ranking;
@@ -926,7 +920,7 @@ def _rbo_single_task(heads: DataFrame) -> DataFrame:
     pk asc ties), m = max(rank_a, rank_b), prefix overlaps o_d, the
     9dp-snapped RBO terms (Double.toString/HALF_UP semantics via
     Decimal(repr(x))) and the 1e-6 grid finals — see
-    RBO_SINGLE_TASK_MAX for the bit-exactness argument."""
+    the comment above it for the bit-exactness argument."""
     import math
     from decimal import ROUND_HALF_UP, Decimal
 
@@ -1079,8 +1073,8 @@ def rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("v")))
     # single-task collapse (r12): the two heads are ≤RBO_DEPTH rows by
     # construction — run all post-head algebra in one kernel task
-    # (kernel-vs-loop pinned in tests; flag only exists for tests).
-    if RBO_DEPTH <= RBO_SINGLE_TASK_MAX:
+    # (kernel-vs-loop pinned in tests).
+    if not driver.FORCE_DISTRIBUTED:
         heads = (rev.orderBy(F.col("v").desc(), F.col("pk"))
                  .limit(RBO_DEPTH)
                  .select(F.lit("a").alias("side"), "pk", "v")

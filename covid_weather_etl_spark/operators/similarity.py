@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
 from covid_weather_etl_spark.functions.numeric import md5_int
 from covid_weather_etl_spark.queries.registry import register
@@ -2360,13 +2361,6 @@ def matryoshka_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: SQ8 evaluation: candidates kept by the quantized score and the
 #: exact-baseline list depth (recall@SQ8_K).
 SQ8_K = 10
-#: driver-resolution flag for the post-head algebra (both heads are
-#: SQ8_K-bounded by construction). Default FALSE (r13): the driver
-#: path A/B'd as a warm wash but read +0.35 s cold-in-session across
-#: all four close bench passes (1.81 vs the 1.44 baseline min) — the
-#: distributed tail stays the default; the driver path and its bitwise
-#: pin remain for the record.
-_SQ8_DRIVER = False
 
 
 @register(
@@ -2477,35 +2471,6 @@ def sq8_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                           "vec_id")
                  .limit(SQ8_K)
                  .select("vec_id"))
-    # driver resolution (r13, the rank_biased_overlap precedent): both
-    # heads are ≤SQ8_K rows BY CONSTRUCTION (TakeOrdered limits) — the
-    # post-head rank/hit/recall algebra is integer arithmetic plus ONE
-    # division (n_hits·1.0/SQ8_K, the identical IEEE op), so it
-    # resolves on the driver from the two collected heads instead of a
-    # triangular broadcast join + hit join + count + crossJoin (each a
-    # broadcast-build job). _SQ8_DRIVER=False forces the distributed
-    # path (tests; pinned bitwise either way).
-    if _SQ8_DRIVER:
-        # ONE tagged-union collect so the two head pipelines stay
-        # concurrent inside a single action (two sequential collects
-        # serialized them — measured +0.35 s)
-        both = (topk.select(F.lit(0).alias("side"), "vec_id", "sq8_score")
-                .unionByName(exact_top.select(
-                    F.lit(1).alias("side"), "vec_id",
-                    F.lit(0).cast("long").alias("sq8_score")))
-                .collect())
-        head = [(int(r["vec_id"]), int(r["sq8_score"]))
-                for r in both if r["side"] == 0]
-        exact_ids = {int(r["vec_id"]) for r in both if r["side"] == 1}
-        n_hits = sum(1 for v, _ in head if v in exact_ids)
-        recall = n_hits * 1.0 / SQ8_K
-        out = [(1 + sum(1 for u, us in head
-                        if us > s or (us == s and u < v)),
-                v, s, v in exact_ids, recall) for v, s in head]
-        out.sort()
-        return spark.createDataFrame(
-            out, "rank int, vec_id long, sq8_score long, "
-                 "in_exact_topk boolean, recall_at_k double")
     topk = topk.localCheckpoint(eager=False)
     # rank without a global window (the registry pins zero): a
     # broadcast triangular count over the k-row frame, as
@@ -2878,7 +2843,7 @@ def _cluster_purity_oracle() -> str:
 
 #: driver-resolution cap on the contingency table (rows). k×labels-
 #: bounded by construction (IVF cell count × label vocabulary), so the
-#: cap never binds on real data; -1 forces the distributed path (tests).
+#: cap never binds on real data.
 CPN_COLLECT_MAX = 100_000
 
 
@@ -2985,13 +2950,12 @@ def cluster_purity_nmi_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver resolution (r12): the contingency table is k×labels rows
     # by construction — resolve purity/NMI/majorities on the driver
     # with exact JVM-log arithmetic (see _cpn_from_cells; pinned
-    # driver-vs-distributed in tests; -1 forces the distributed path).
-    if CPN_COLLECT_MAX >= 0:
-        tab = ncl.limit(CPN_COLLECT_MAX + 1).collect()
-        if len(tab) <= CPN_COLLECT_MAX:
-            out = _cpn_from_cells(spark, tab)
-            if out is not None:
-                return out
+    # driver-vs-distributed in tests).
+    tab = driver.bounded_collect(ncl, CPN_COLLECT_MAX)
+    if tab is not None:
+        out = _cpn_from_cells(spark, tab)
+        if out is not None:
+            return out
     nc = ncl.groupBy("cell").agg(F.sum("n").alias("n_c"))
     nl = ncl.groupBy("label").agg(F.sum("n").alias("n_l"))
     tot = ncl.agg(F.sum("n").alias("nn"))

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.numeric import (
     fround, fround_sql, md5_int,
 )
@@ -200,12 +201,6 @@ def hll_monthly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: audience-overlap pair: the two behavioral cohorts to intersect.
 OVERLAP_TYPES = ("signup", "purchase")
 
-#: driver-resolution flag for the overlap's sketch algebra (the
-#: register census is ≤ 2·HLL_M rows by construction; False forces
-#: the distributed path for tests).
-_HLL_OVL_DRIVER = True
-
-
 def _hll_est_driver(jm, pairs) -> float:
     """hll_estimate's scalar algebra replayed on the driver for ONE
     group's collected (bucket, mx) registers: the Z-sum is the exact
@@ -312,13 +307,13 @@ def hll_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Σ has_type over distinct users; the semi-join intersection ==
     # Σ (has_a AND has_b)). A type with no registers falls through to
     # the distributed path, whose empty-frame crossJoin shape is the
-    # pinned degenerate behavior. _HLL_OVL_DRIVER=False forces the
-    # distributed path (tests; pinned bitwise either way).
-    if _HLL_OVL_DRIVER:
+    # pinned degenerate behavior.
+    tab = driver.bounded_collect(regs, 2 * HLL_M)
+    if tab is not None:
         import math
 
         reg_rows = [(r["event_type"], int(r["bucket"]), int(r["mx"]))
-                    for r in regs.collect()]
+                    for r in tab]
         per_type: dict = {}
         for et, bucket, mx in reg_rows:
             per_type.setdefault(et, []).append((bucket, mx))

@@ -28,6 +28,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.numeric import fround_sql, md5_int
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
@@ -453,8 +454,8 @@ ISO_TOK_CUT = 56
 
 #: driver-resolution cap on the binned point frame (rows). Bins are
 #: length-domain-bounded (n_chars // ISO_BIN); the cap also bounds the
-#: driver's (B+1)² float64 segment matrix (4001² ≈ 128 MB/matrix).
-#: -1 forces the distributed triangular-join path (tests).
+#: driver's (B+1)² float64 segment matrices (4001² ≈ 128 MB each, at
+#: most two live at once plus the triangle index: ~272 MB peak).
 ISO_COLLECT_MAX = 4000
 
 
@@ -469,7 +470,7 @@ def _iso_from_pts(spark: SparkSession, rows) -> DataFrame:
     is pure comparison/selection (no arithmetic), so min/max pick the
     identical doubles; finals replay Spark ROUND via Decimal(repr)
     HALF_UP. Pinned driver-vs-distributed bitwise in
-    tests/test_warehouse.py."""
+    tests/test_driver_paths.py."""
     from decimal import ROUND_HALF_UP, Decimal
 
     import numpy as np
@@ -485,15 +486,20 @@ def _iso_from_pts(spark: SparkSession, rows) -> DataFrame:
     B = len(pts)
     cw0 = np.concatenate(([0], np.cumsum(ws)))       # pre0 prefix sums
     cp0 = np.concatenate(([0], np.cumsum(pos)))
-    num = (cp0[None, :] - cp0[:, None]).astype(np.float64) * 1.0
-    den = (cw0[None, :] - cw0[:, None]).astype(np.float64)
+    # prefix sums are exact integers < 2**53, so subtracting in float64
+    # equals the int64 difference cast to double; one matrix is built
+    # in place and each is freed as soon as the next exists
+    A = np.subtract(cp0[None, :], cp0[:, None], dtype=np.float64)
+    den = np.subtract(cw0[None, :], cw0[:, None], dtype=np.float64)
     with np.errstate(divide="ignore", invalid="ignore"):
-        A = num / den                                # A[lo, hi], hi > lo
+        np.divide(A, den, out=A)                     # A[lo, hi], hi > lo
+    del den
     A[np.tril_indices(B + 1)] = np.inf               # hi <= lo: no seg
     # S[lo, i] = min_{hi >= i} A[lo, hi]; fit(i) = max_{lo < i} S[lo, i]
     S = np.minimum.accumulate(A[:, ::-1], axis=1)[:, ::-1]
-    M = np.maximum.accumulate(S, axis=0)
-    fit = M[np.arange(B), np.arange(1, B + 1)]
+    del A
+    np.maximum.accumulate(S, axis=0, out=S)
+    fit = S[np.arange(B), np.arange(1, B + 1)]
     q6 = Decimal("1e-6")
 
     def r6(v: float) -> float:
@@ -579,12 +585,10 @@ def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
            .agg(F.count("*").alias("w"), F.sum("y").alias("pos"))
            .localCheckpoint(eager=False))  # B rows; reused by 4 joins
     # driver resolution (r13): the bin frame is length-domain-bounded
-    # — resolve the O(B²) minimax on the driver (see _iso_from_pts;
-    # -1 forces the distributed triangular joins).
-    if ISO_COLLECT_MAX >= 0:
-        tab = pts.limit(ISO_COLLECT_MAX + 1).collect()
-        if len(tab) <= ISO_COLLECT_MAX:
-            return _iso_from_pts(spark, tab)
+    # — resolve the O(B²) minimax on the driver (see _iso_from_pts).
+    tab = driver.bounded_collect(pts, ISO_COLLECT_MAX)
+    if tab is not None:
+        return _iso_from_pts(spark, tab)
     lo0 = pts.agg((F.min("x") - 1).alias("x"),
                   F.lit(0).cast("long").alias("cw"),
                   F.lit(0).cast("long").alias("cpos"))

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.numeric import dsum
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
@@ -1096,18 +1097,14 @@ def croston_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 HAAR_N = 64
 HAAR_LEVELS = 6
 
-#: single-task collapse gate for the cascade (r12): the post-aggregate
-#: frame is ALWAYS HAAR_N rows by construction (a constant dyadic
-#: window, not a data-sized frame), so the whole 6-level cascade —
-#: previously 6 chained groupBys + 6 energy aggregates + union + total
-#: = 21 scheduled jobs / 85 stages of ≤64-row algebra, pure per-job
-#: scheduler tax (SCALE.md §13) — runs in ONE mapInPandas task. The
-#: flag exists only so tests can force the distributed cascade for the
-#: kernel-vs-loop equality pin; at any data scale the kernel input
-#: stays HAAR_N rows.
-HAAR_SINGLE_TASK_MAX = HAAR_N
 
-
+# single-task collapse of the cascade (r12): the post-aggregate
+# frame is ALWAYS HAAR_N rows by construction (a constant dyadic
+# window, not a data-sized frame), so the whole 6-level cascade —
+# previously 6 chained groupBys + 6 energy aggregates + union + total
+# = 21 scheduled jobs / 85 stages of ≤64-row algebra, pure per-job
+# scheduler tax (SCALE.md §13) — runs in ONE mapInPandas task. At any
+# data scale the kernel input stays HAAR_N rows.
 def _haar_single_task(cur) -> "DataFrame":
     """Whole-cascade-in-one-task kernel over the zero-filled dyadic
     frame (idx 0..HAAR_N-1, x = daily revenue as DOUBLE). Bit-exactness
@@ -1243,9 +1240,8 @@ def haar_wavelet_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
                    .alias("x")))
     # single-task collapse (r12): the cascade input is HAAR_N rows by
     # construction at ANY data scale — run the whole 6-level cascade in
-    # one kernel task (21 jobs → 1; kernel-vs-loop pinned in tests; the
-    # flag only exists so tests can force the distributed cascade).
-    if HAAR_N <= HAAR_SINGLE_TASK_MAX:
+    # one kernel task (21 jobs → 1; kernel-vs-loop pinned in tests).
+    if not driver.FORCE_DISTRIBUTED:
         return _haar_single_task(cur)
     out_parts = []
     for lv in range(1, HAAR_LEVELS + 1):

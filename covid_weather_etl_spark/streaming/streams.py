@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
 from covid_weather_etl_spark.functions.numeric import dsum, dsum_sql
 from covid_weather_etl_spark.queries.registry import register
@@ -722,7 +723,7 @@ def dedup_fold_batch(batch_df: DataFrame, batch_id: int,
         labels = None
         contracted = edges
     contracted = contracted.localCheckpoint(eager=True)
-    if contracted.count() <= CC_SINGLE_TASK_MAX:
+    if driver.fits(contracted.count(), CC_SINGLE_TASK_MAX):
         relabel = cc_single_task(contracted)
     else:
         relabel = star_components(contracted, op_name="dedup_fold")

@@ -6,6 +6,7 @@ plus the oracle-parity comparator that mimics the driver's check
 from __future__ import annotations
 
 import os
+import struct
 
 import duckdb
 import numpy as np
@@ -50,6 +51,14 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     if len(df):
         df = df.sort_values(by=list(df.columns), kind="mergesort")
     return df.reset_index(drop=True)
+
+
+def bitrows(df) -> list:
+    """A frame's rows, sorted, with every float as its 8 IEEE bytes, so
+    comparing two results is bitwise (-0.0 differs from 0.0)."""
+    return sorted(tuple(struct.pack("d", v) if isinstance(v, float) else v
+                        for v in r.asDict().values())
+                  for r in df.collect())
 
 
 def _type_kind(s: pd.Series) -> str:

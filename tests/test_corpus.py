@@ -838,16 +838,15 @@ def test_incremental_dedup_clusters_equals_full_rebuild(spark):
 
 
 @pytest.mark.slow
-def test_cc_single_task_equals_star_components(spark):
+def test_cc_single_task_equals_star_components(spark, monkeypatch):
     """The single-task union-find kernel (the batch-merge fast path in
     incremental_dedup_clusters) must return EXACTLY star_components'
     (node, lbl) rows — same component minima, same canonical-node
     omission — on a graph with chains, a star, a cycle, singleton
     absence, and out-of-order edge arrival."""
+    from covid_weather_etl_spark.functions import driver
     from covid_weather_etl_spark.operators.corpus import (
         cc_single_task, star_components)
-
-    import covid_weather_etl_spark.operators.corpus as C
 
     edges = [(5, 9), (1, 5), (9, 12),          # chain merged out of order
              (20, 21), (20, 22), (20, 23),     # star
@@ -857,15 +856,11 @@ def test_cc_single_task_equals_star_components(spark):
     a = {(r["node"], r["lbl"])
          for r in cc_single_task(df).collect()}
     # force the distributed contraction (star_components is itself
-    # gated onto cc_single_task since r12 — without the flip this
+    # gated onto cc_single_task since r12 — without the switch this
     # test would compare the kernel to itself)
-    cap = C.CC_SINGLE_TASK_MAX
-    try:
-        C.CC_SINGLE_TASK_MAX = -1
-        b = {(r["node"], r["lbl"])
-             for r in star_components(df, op_name="test").collect()}
-    finally:
-        C.CC_SINGLE_TASK_MAX = cap
+    monkeypatch.setattr(driver, "FORCE_DISTRIBUTED", True)
+    b = {(r["node"], r["lbl"])
+         for r in star_components(df, op_name="test").collect()}
     assert a == b
     assert (12, 1) in a and (23, 20) in a and (32, 30) in a
     # canonical nodes omitted, exactly like star_components
@@ -873,7 +868,7 @@ def test_cc_single_task_equals_star_components(spark):
 
 
 @pytest.mark.slow
-def test_cc_kernels_agree_on_random_graphs(spark):
+def test_cc_kernels_agree_on_random_graphs(spark, monkeypatch):
     """Property pin for the gated CC pair: on arbitrary random graphs
     (not just corpus- or fixture-shaped ones) the single-task
     union-find kernel and the distributed star contraction return the
@@ -881,8 +876,13 @@ def test_cc_kernels_agree_on_random_graphs(spark):
     pure-python union-find is the third, independent referee."""
     from hypothesis import given, settings, strategies as st
 
+    from covid_weather_etl_spark.functions import driver
     from covid_weather_etl_spark.operators.corpus import (
         cc_single_task, star_components)
+
+    # star_components takes its distributed loop; cc_single_task is
+    # called directly
+    monkeypatch.setattr(driver, "FORCE_DISTRIBUTED", True)
 
     @settings(max_examples=6, deadline=None)
     @given(st.lists(
@@ -895,15 +895,8 @@ def test_cc_kernels_agree_on_random_graphs(spark):
         df = spark.createDataFrame(edges, "a long, b long")
         got_one = {(r["node"], r["lbl"])
                    for r in cc_single_task(df).collect()}
-        import covid_weather_etl_spark.operators.corpus as C
-        cap = C.CC_SINGLE_TASK_MAX
-        try:
-            C.CC_SINGLE_TASK_MAX = -1  # force the distributed loop
-            got_star = {(r["node"], r["lbl"])
-                        for r in star_components(df,
-                                                 op_name="prop").collect()}
-        finally:
-            C.CC_SINGLE_TASK_MAX = cap
+        got_star = {(r["node"], r["lbl"])
+                    for r in star_components(df, op_name="prop").collect()}
         parent: dict = {}
 
         def find(x):
@@ -925,13 +918,13 @@ def test_cc_kernels_agree_on_random_graphs(spark):
 
 
 @pytest.mark.slow
-def test_cc_single_task_string_keys_equal_loop(spark):
+def test_cc_single_task_string_keys_equal_loop(spark, monkeypatch):
     """r12: the key-type-generic union-find kernel on STRING node ids
     (the er_name_clusters shape) returns exactly the distributed
     contraction's rows — minima compared as UTF-8 bytes, matching the
     engines' binary string order; includes a non-ASCII pair to pin
     the encode/decode roundtrip on the kernel path."""
-    import covid_weather_etl_spark.operators.corpus as C
+    from covid_weather_etl_spark.functions import driver
     from covid_weather_etl_spark.operators.corpus import (
         cc_single_task, star_components)
 
@@ -940,12 +933,8 @@ def test_cc_single_task_string_keys_equal_loop(spark):
              ("é", "Ａ")]             # non-ASCII pair
     df = spark.createDataFrame(edges, "a string, b string")
     got = {(r["node"], r["lbl"]) for r in cc_single_task(df).collect()}
-    cap = C.CC_SINGLE_TASK_MAX
-    try:
-        C.CC_SINGLE_TASK_MAX = -1  # force the distributed loop
-        want = {(r["node"], r["lbl"])
-                for r in star_components(df, op_name="s").collect()}
-    finally:
-        C.CC_SINGLE_TASK_MAX = cap
+    monkeypatch.setattr(driver, "FORCE_DISTRIBUTED", True)
+    want = {(r["node"], r["lbl"])
+            for r in star_components(df, op_name="s").collect()}
     assert got == want
     assert ("z", "a") in got and ("m", "a") in got

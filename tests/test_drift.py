@@ -4,8 +4,6 @@ covered by test_oracle_parity)."""
 
 from __future__ import annotations
 
-import pytest
-
 import math
 
 import numpy as np
@@ -171,34 +169,3 @@ def test_feature_ranking_mi_values_and_rank_contract(spark):
     order = rows.sort_values(["mi_nats", "feature"],
                              ascending=[False, True])
     assert list(order.mi_rank) == [1, 2, 3, 4]
-
-
-@pytest.mark.slow
-def test_multiple_testing_kernels_equal_loop(spark):
-    """The r12 single-task collapses of Holm and BH are BIT-identical
-    to the distributed triangular-join paths: force both paths via the
-    gate flag (the graph-kernel test pattern)."""
-    import struct
-
-    import covid_weather_etl_spark.operators.drift as D
-
-    def rows(df):
-        out = []
-        for r in df.collect():
-            out.append(tuple(
-                struct.pack("d", v) if isinstance(v, float) else v
-                for v in r.asDict().values()))
-        return sorted(out)
-
-    cap = D.MT_SINGLE_TASK_MAX
-    try:
-        D.MT_SINGLE_TASK_MAX = D.HOLM_M
-        holm_k = rows(D.holm_multiple_tests(spark, SF_DIR))
-        bh_k = rows(D.bh_fdr_control(spark, SF_DIR))
-        D.MT_SINGLE_TASK_MAX = -1  # force the distributed path
-        holm_l = rows(D.holm_multiple_tests(spark, SF_DIR))
-        bh_l = rows(D.bh_fdr_control(spark, SF_DIR))
-    finally:
-        D.MT_SINGLE_TASK_MAX = cap
-    assert holm_k == holm_l and len(holm_k) >= 2
-    assert bh_k == bh_l and len(bh_k) >= 2

@@ -6,8 +6,6 @@ per-user recomputation and a crafted out-of-order stream.
 
 from __future__ import annotations
 
-import pytest
-
 import pandas as pd
 
 from pyspark.sql import functions as F
@@ -245,44 +243,3 @@ def test_session_stats_agrees_with_native_session_window(spark, tmp_path):
     n_stats = QUERIES["session_stats"].fn(spark, str(tmp_path)).count()
     n_native = QUERIES["session_windows"].fn(spark, str(tmp_path)).count()
     assert n_stats == 1 and n_native == 1
-
-
-def _bitrows(df):
-    import struct
-    return sorted(tuple(struct.pack("d", v) if isinstance(v, float)
-                        else v for v in r.asDict().values())
-                  for r in df.collect())
-
-
-@pytest.mark.slow
-def test_survival_driver_path_equals_distributed(spark):
-    """r13 driver resolution of the KM/NA post-day_tab algebra is
-    BITWISE identical to the triangular-join path (flip the gate)."""
-    import covid_weather_etl_spark.operators.eventstats as E
-    cap = E.SURV_COLLECT_MAX
-    try:
-        E.SURV_COLLECT_MAX = 100_000
-        km_d = _bitrows(QUERIES["kaplan_meier_conversion"].fn(spark, SF_DIR))
-        na_d = _bitrows(QUERIES["nelson_aalen_hazard"].fn(spark, SF_DIR))
-        E.SURV_COLLECT_MAX = -1  # force the distributed path
-        km_l = _bitrows(QUERIES["kaplan_meier_conversion"].fn(spark, SF_DIR))
-        na_l = _bitrows(QUERIES["nelson_aalen_hazard"].fn(spark, SF_DIR))
-    finally:
-        E.SURV_COLLECT_MAX = cap
-    assert km_d == km_l and len(km_d) >= 2
-    assert na_d == na_l and len(na_d) >= 2
-
-
-def test_shapley_driver_path_equals_distributed(spark):
-    """r13 driver resolution of the Shapley coalition lattice is
-    BITWISE identical to the distributed 16-subset joins."""
-    import covid_weather_etl_spark.operators.eventstats as E
-    flag = E._SHAP_DRIVER
-    try:
-        E._SHAP_DRIVER = True
-        drv = _bitrows(QUERIES["shapley_attribution"].fn(spark, SF_DIR))
-        E._SHAP_DRIVER = False
-        dist = _bitrows(QUERIES["shapley_attribution"].fn(spark, SF_DIR))
-    finally:
-        E._SHAP_DRIVER = flag
-    assert drv == dist and len(drv) == 4

@@ -249,27 +249,3 @@ def test_kcore_raises_when_round_cap_exhausted(spark):
         G.kcore(edges, k=2, max_rounds=1)
     # with room to converge the same graph peels to the empty core
     assert G.kcore(edges, k=2, max_rounds=10).count() == 0
-
-
-@pytest.mark.slow
-def test_bfs_single_task_equals_loop(spark):
-    """The r10 single-task collapse is hash-identical to the
-    level-synchronous loop: force BOTH paths by flipping the gate."""
-    import covid_weather_etl_spark.operators.graph as G
-    cap = G.BFS_SINGLE_TASK_MAX
-    try:
-        G.BFS_SINGLE_TASK_MAX = 10**9
-        single = {(r.dist, r.n_nodes) for r in
-                  G.shortest_path_hops(spark, SF_DIR).collect()}
-        sbf = {(r.dist, r.n_nodes) for r in
-               G.bellman_ford_costs(spark, SF_DIR).collect()}
-        G.BFS_SINGLE_TASK_MAX = -1
-        loop = {(r.dist, r.n_nodes) for r in
-                G.shortest_path_hops(spark, SF_DIR).collect()}
-        lbf = {(r.dist, r.n_nodes) for r in
-               G.bellman_ford_costs(spark, SF_DIR).collect()}
-    finally:
-        G.BFS_SINGLE_TASK_MAX = cap
-    assert single == loop and len(single) > 1
-    assert sbf == lbf and len(sbf) > 1
-

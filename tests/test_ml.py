@@ -12,7 +12,7 @@ import numpy as np
 import pandas as pd
 
 from covid_weather_etl_spark.ml import queries as ML
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, bitrows
 
 
 @pytest.fixture(scope="module")
@@ -775,8 +775,6 @@ def test_holt_winters_short_series_guard_parity(spark, tmp_path):
 def test_irls_driver_solve_equals_round_sql(spark):
     """The r13 driver-side det_val replay of the IRLS round solve is
     BITWISE identical to the old chained _irls_round_sql loop."""
-    import struct
-
     import covid_weather_etl_spark.ml.queries as M
     from covid_weather_etl_spark.queries.registry import all_queries
 
@@ -786,12 +784,7 @@ def test_irls_driver_solve_equals_round_sql(spark):
             f"CAST({k}e-6 AS DOUBLE) AS b{i}" for i, k in enumerate(ks))
             + ")")
 
-    def rows(df):
-        return sorted(tuple(struct.pack("d", v) if isinstance(v, float)
-                            else v for v in r.asDict().values())
-                      for r in df.collect())
-
-    new = rows(all_queries()["irls_logreg_fit"].fn(spark, SF_DIR))
+    new = bitrows(all_queries()["irls_logreg_fit"].fn(spark, SF_DIR))
     # old loop: full round SQL (aggregate + in-plan Cramer) per round,
     # reusing the design view the query registered
     beta = (0.0, 0.0, 0.0, 0.0)
@@ -799,7 +792,7 @@ def test_irls_driver_solve_equals_round_sql(spark):
         row = spark.sql(
             M._irls_round_sql("irls_design_v", _blit(beta))).first()
         beta = (row.b0, row.b1, row.b2, row.b3)
-    old = rows(spark.sql(M._irls_eval_sql("irls_design_v", _blit(beta))))
+    old = bitrows(spark.sql(M._irls_eval_sql("irls_design_v", _blit(beta))))
     assert new == old and len(new) == 1
 
 

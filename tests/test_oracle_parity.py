@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 
 from covid_weather_etl_spark.queries.registry import all_queries
-from tests.conftest import SF_DIR, assert_parity
+from tests.conftest import SF_DIR, SF_DIR_MED, assert_parity
 
 QUERIES = all_queries()
 WITH_ORACLE = sorted(n for n, q in QUERIES.items() if q.oracle)
@@ -16,7 +16,7 @@ WITH_ORACLE = sorted(n for n, q in QUERIES.items() if q.oracle)
 #: queries whose oracle reads the PERSISTED sf0.01 model artifact
 #: (codebook parquet) — their static oracle SQL is only meaningful at
 #: the driver's correctness SF, so parity runs there.
-SF001 = "/root/testdata/sf0.01"
+SF001 = SF_DIR_MED
 
 
 @pytest.fixture(scope="session")

@@ -179,23 +179,6 @@ def test_ivf_rebalance_plan_consistency(spark):
                      "planned_partitions"] >= 2).all()
 
 
-def test_dedup_clusters_single_task_equals_loop(spark):
-    """The gated cc_single_task contraction equals the min-label
-    propagation loop row for row (both resolve to component minima)."""
-    import covid_weather_etl_spark.operators.corpus as C
-    cap = C.CC_SINGLE_TASK_MAX
-    try:
-        C.CC_SINGLE_TASK_MAX = 10**9
-        single = {(r.doc_id, r.cluster_id, r.is_canonical) for r in
-                  C.dedup_clusters(spark, SF_DIR).collect()}
-        C.CC_SINGLE_TASK_MAX = -1
-        loop = {(r.doc_id, r.cluster_id, r.is_canonical) for r in
-                C.dedup_clusters(spark, SF_DIR).collect()}
-    finally:
-        C.CC_SINGLE_TASK_MAX = cap
-    assert single == loop and len(single) > 0
-
-
 def test_mix_token_budget_plan_replay(spark):
     """Replay from bpe_encode_documents + the documents table: family
     symbol mass, targets, epochs, shortfall and the no-repeat cap."""

@@ -269,31 +269,6 @@ def test_bradley_terry_pandas_replay(spark):
 
 
 @pytest.mark.slow
-def test_bradley_terry_kernel_equals_loop(spark):
-    """The r12 single-task MM collapse is BIT-identical to the
-    temp-view round loop: force both paths by flipping the gate
-    (the graph-kernel test pattern)."""
-    import struct
-
-    import covid_weather_etl_spark.operators.eventstats as E
-
-    def rows(df):
-        return sorted((r["event_type"], r["n_wins"], r["n_comparisons"],
-                       struct.pack("d", r["strength"]))
-                      for r in df.collect())
-
-    cap = E.BT_SINGLE_TASK_MAX
-    try:
-        E.BT_SINGLE_TASK_MAX = 10 ** 9
-        single = rows(E.bradley_terry_strengths(spark, SF_DIR))
-        E.BT_SINGLE_TASK_MAX = -1  # force the temp-view loop
-        loop = rows(E.bradley_terry_strengths(spark, SF_DIR))
-    finally:
-        E.BT_SINGLE_TASK_MAX = cap
-    assert single == loop and len(single) >= 2
-
-
-@pytest.mark.slow
 def test_fd_profile_pandas_replay(spark):
     from covid_weather_etl_spark.operators.dq import FD_CANDIDATES
     df = (_q("functional_dependency_profile").fn(spark, SF_DIR)
@@ -681,30 +656,6 @@ def test_holm_stepdown_properties(spark):
         expected = all(
             abs(df["z"].iloc[j]) >= HOLM_ZCRIT[j] for j in range(i + 1))
         assert r["reject_holm"] == int(expected)
-
-
-def test_haar_kernel_equals_loop(spark):
-    """The r12 single-task cascade collapse is BIT-identical to the
-    distributed 6-level cascade: force both paths via the gate flag."""
-    import struct
-
-    import covid_weather_etl_spark.operators.timeseries as T
-
-    def rows(df):
-        return sorted((r["level"], r["n_coeffs"],
-                       struct.pack("d", r["energy"]),
-                       struct.pack("d", r["energy_share"]))
-                      for r in df.collect())
-
-    cap = T.HAAR_SINGLE_TASK_MAX
-    try:
-        T.HAAR_SINGLE_TASK_MAX = T.HAAR_N
-        single = rows(T.haar_wavelet_energy(spark, SF_DIR))
-        T.HAAR_SINGLE_TASK_MAX = -1  # force the distributed cascade
-        loop = rows(T.haar_wavelet_energy(spark, SF_DIR))
-    finally:
-        T.HAAR_SINGLE_TASK_MAX = cap
-    assert single == loop and len(single) == T.HAAR_LEVELS
 
 
 def test_haar_energy_numpy_replay(spark):

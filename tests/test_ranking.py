@@ -4,14 +4,12 @@ engine/oracle pair."""
 
 from __future__ import annotations
 
-import pytest
-
 import numpy as np
 import pandas as pd
 
 from covid_weather_etl_spark.operators.ranking import AUC_TOK_CUT
 from covid_weather_etl_spark.queries.registry import all_queries
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, bitrows
 
 QUERIES = all_queries()
 
@@ -123,30 +121,8 @@ def test_average_precision_matches_stepwise_definition(spark):
     assert 0.0 < row.ap <= 1.0
 
 
-def test_weighted_median_literal_path_equals_distributed(spark):
-    """The r12 driver-resolved crossing-band path is BIT-identical to
-    the distributed triangular refinement: force both via the cap."""
-    import struct
-
-    import covid_weather_etl_spark.operators.ranking as R
-
-    def rows(df):
-        return sorted(tuple(struct.pack("d", v) if isinstance(v, float)
-                            else v for v in r.asDict().values())
-                      for r in df.collect())
-
-    cap = R.WM_COLLECT_MAX
-    try:
-        R.WM_COLLECT_MAX = 100_000
-        lit = rows(R.weighted_median_price(spark, SF_DIR))
-        R.WM_COLLECT_MAX = -1  # force the distributed refinement
-        dist = rows(R.weighted_median_price(spark, SF_DIR))
-    finally:
-        R.WM_COLLECT_MAX = cap
-    assert lit == dist and len(lit) >= 2
-
-
-def test_rbo_kernel_equals_loop_and_term_algebra_exhaustive(spark):
+def test_rbo_kernel_equals_loop_and_term_algebra_exhaustive(spark,
+                                                           monkeypatch):
     """r12 RBO single-task collapse: (1) the kernel's StrictMath pow
     table matches F.pow bitwise (Spark 4 uses StrictMath; the HotSpot
     Math.pow intrinsic and C libm differ by 1 ulp at exponent 4);
@@ -161,6 +137,7 @@ def test_rbo_kernel_equals_loop_and_term_algebra_exhaustive(spark):
     from pyspark.sql import functions as F
 
     import covid_weather_etl_spark.operators.ranking as R
+    from covid_weather_etl_spark.functions import driver
 
     sm = spark._jvm.java.lang.StrictMath
     powv = [sm.pow(R.RBO_P, float(e)) for e in range(R.RBO_DEPTH)]
@@ -184,41 +161,7 @@ def test_rbo_kernel_equals_loop_and_term_algebra_exhaustive(spark):
             / float(r["d"])
         assert Decimal(repr(raw)).quantize(q9, ROUND_HALF_UP) == r["t"]
 
-    def rows(df):
-        return sorted(tuple(struct.pack("d", v) if isinstance(v, float)
-                            else v for v in r.asDict().values())
-                      for r in df.collect())
-
-    cap = R.RBO_SINGLE_TASK_MAX
-    try:
-        R.RBO_SINGLE_TASK_MAX = R.RBO_DEPTH
-        single = rows(R.rank_biased_overlap(spark, SF_DIR))
-        R.RBO_SINGLE_TASK_MAX = -1  # force the distributed path
-        loop = rows(R.rank_biased_overlap(spark, SF_DIR))
-    finally:
-        R.RBO_SINGLE_TASK_MAX = cap
+    single = bitrows(R.rank_biased_overlap(spark, SF_DIR))
+    monkeypatch.setattr(driver, "FORCE_DISTRIBUTED", True)
+    loop = bitrows(R.rank_biased_overlap(spark, SF_DIR))
     assert single == loop and len(single) == len(R.RBO_REPORT_DEPTHS)
-
-
-@pytest.mark.slow
-def test_spearman_driver_path_equals_distributed(spark):
-    """r13 driver resolution of the rank/moment algebra is BITWISE
-    identical to the rank_table + moment-aggregate path."""
-    import struct
-
-    import covid_weather_etl_spark.operators.ranking as R
-
-    def rows(df):
-        return sorted(tuple(struct.pack("d", v) if isinstance(v, float)
-                            else v for v in r.asDict().values())
-                      for r in df.collect())
-
-    cap = R.SPEAR_COLLECT_MAX
-    try:
-        R.SPEAR_COLLECT_MAX = 100_000
-        drv = rows(QUERIES["spearman_correlation"].fn(spark, SF_DIR))
-        R.SPEAR_COLLECT_MAX = -1  # force the distributed path
-        dist = rows(QUERIES["spearman_correlation"].fn(spark, SF_DIR))
-    finally:
-        R.SPEAR_COLLECT_MAX = cap
-    assert drv == dist and len(drv) == 1

@@ -15,7 +15,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.operators import similarity as S
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, bitrows
 
 
 @pytest.fixture(scope="module")
@@ -681,7 +681,7 @@ def test_ivf_nprobe_sweep_monotone(spark):
 
 
 @pytest.mark.slow
-def test_cluster_purity_driver_path_equals_distributed(spark):
+def test_cluster_purity_driver_path_equals_distributed(spark, monkeypatch):
     """r12 driver resolution of the purity/NMI algebra: (1) Spark's
     F.log is bitwise StrictMath.log (the py4j replay's source — C libm
     differs by 1 ulp on ~7% of inputs, measured); (2) the driver path
@@ -692,6 +692,7 @@ def test_cluster_purity_driver_path_equals_distributed(spark):
     from pyspark.sql import functions as F
 
     import covid_weather_etl_spark.operators.similarity as S
+    from covid_weather_etl_spark.functions import driver
 
     sm = spark._jvm.java.lang.StrictMath
     xs = [0.1 * k + 0.0001 for k in range(1, 200)]
@@ -700,41 +701,7 @@ def test_cluster_purity_driver_path_equals_distributed(spark):
     assert all(struct.pack("d", r["l"]) == struct.pack("d", sm.log(x))
                for r, x in zip(jv, xs))
 
-    def rows(df):
-        return sorted(tuple(struct.pack("d", v) if isinstance(v, float)
-                            else v for v in r.asDict().values())
-                      for r in df.collect())
-
-    cap = S.CPN_COLLECT_MAX
-    try:
-        S.CPN_COLLECT_MAX = 100_000
-        drv = rows(S.cluster_purity_nmi_eval(spark, SF_DIR))
-        S.CPN_COLLECT_MAX = -1  # force the distributed path
-        dist = rows(S.cluster_purity_nmi_eval(spark, SF_DIR))
-    finally:
-        S.CPN_COLLECT_MAX = cap
+    drv = bitrows(S.cluster_purity_nmi_eval(spark, SF_DIR))
+    monkeypatch.setattr(driver, "FORCE_DISTRIBUTED", True)
+    dist = bitrows(S.cluster_purity_nmi_eval(spark, SF_DIR))
     assert drv == dist and len(drv) >= 2
-
-
-@pytest.mark.slow
-def test_sq8_driver_path_equals_distributed(spark):
-    """r13 driver resolution of the SQ8 post-head rank/hit algebra is
-    BITWISE identical to the triangular-join path (flip the flag)."""
-    import struct
-
-    import covid_weather_etl_spark.operators.similarity as S
-
-    def rows(df):
-        return sorted(tuple(struct.pack("d", v) if isinstance(v, float)
-                            else v for v in r.asDict().values())
-                      for r in df.collect())
-
-    flag = S._SQ8_DRIVER
-    try:
-        S._SQ8_DRIVER = True
-        drv = rows(S.sq8_recall_eval(spark, SF_DIR))
-        S._SQ8_DRIVER = False
-        dist = rows(S.sq8_recall_eval(spark, SF_DIR))
-    finally:
-        S._SQ8_DRIVER = flag
-    assert drv == dist and len(drv) == S.SQ8_K

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
-
 import math
 
 from covid_weather_etl_spark.queries.registry import all_queries
@@ -266,30 +264,3 @@ def test_quantile_sketch_error_within_bound(spark):
         # exact order statistic at the ceiling rank
         xc = sorted(cents)[(k * n + 999) // 1000 - 1]
         assert r["exact_price"] == xc / 1e2
-
-
-@pytest.mark.slow
-def test_hll_overlap_driver_path_equals_distributed(spark):
-    """r13 driver resolution of the overlap's sketch algebra (incl.
-    the folded single-pass exact counts) is BITWISE identical to the
-    distributed estimate/crossJoin path (flip the flag)."""
-    import struct
-
-    import covid_weather_etl_spark.operators.sketch_rollup as SR
-    from covid_weather_etl_spark.queries.registry import all_queries
-
-    def rows(df):
-        return sorted(tuple(struct.pack("d", v) if isinstance(v, float)
-                            else v for v in r.asDict().values())
-                      for r in df.collect())
-
-    fn = all_queries()["hll_audience_overlap"].fn
-    flag = SR._HLL_OVL_DRIVER
-    try:
-        SR._HLL_OVL_DRIVER = True
-        drv = rows(fn(spark, SF_DIR))
-        SR._HLL_OVL_DRIVER = False
-        dist = rows(fn(spark, SF_DIR))
-    finally:
-        SR._HLL_OVL_DRIVER = flag
-    assert drv == dist and len(drv) == 1

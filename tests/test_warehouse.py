@@ -7,8 +7,6 @@ dup-chunk reconstruction, and vocabulary coverage bounds.
 
 from __future__ import annotations
 
-import pytest
-
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -581,6 +579,37 @@ def test_isotonic_agrees_with_spark_ml(spark):
         assert abs(mine - ml) < 1e-6, (mine, ml)
 
 
+def test_isotonic_driver_fit_memory_at_the_cap():
+    """At ISO_COLLECT_MAX bins the driver fit keeps under three (B+1)²
+    float64 matrices alive at once: the segment matrix, its running
+    minimum and the triangle index."""
+    import tracemalloc
+
+    import numpy as np
+
+    from covid_weather_etl_spark.operators.stats import (
+        ISO_COLLECT_MAX, _iso_from_pts)
+
+    class Session:
+        def createDataFrame(self, data, schema):
+            return data
+
+    B = ISO_COLLECT_MAX
+    rng = np.random.default_rng(0)
+    w = rng.integers(1, 50, B)
+    pos = rng.integers(0, w + 1)
+    rows = [{"x": i, "w": int(w[i]), "pos": int(pos[i])} for i in range(B)]
+    tracemalloc.start()
+    try:
+        out = _iso_from_pts(Session(), rows)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert len(out) == B
+    fit = [r[4] for r in out]
+    assert fit == sorted(fit)
+    assert peak < 3 * (B + 1) ** 2 * 8
+
 def test_bootstrap_ci_matches_numpy_and_brackets_mean(spark):
     """The Poisson-bootstrap CI must equal a numpy recomputation with
     the same md5-derived weights, bracket the plain mean, and have
@@ -651,28 +680,3 @@ def test_schema_evolution_null_fill_contract(spark):
     assert out[2].n_rows == n_odd
     assert out[2].n_balance_present == n_odd
     assert out[2].n_balance_null == 0
-
-
-@pytest.mark.slow
-def test_isotonic_driver_path_equals_distributed(spark):
-    """r13 driver resolution of the PAV minimax (numpy over the
-    collected bin frame) is BITWISE identical to the triangular-join
-    path (flip the gate)."""
-    import struct
-
-    import covid_weather_etl_spark.operators.stats as ST
-
-    def rows(df):
-        return sorted(tuple(struct.pack("d", v) if isinstance(v, float)
-                            else v for v in r.asDict().values())
-                      for r in df.collect())
-
-    cap = ST.ISO_COLLECT_MAX
-    try:
-        ST.ISO_COLLECT_MAX = 4000
-        drv = rows(ST.isotonic_calibration(spark, SF_DIR))
-        ST.ISO_COLLECT_MAX = -1  # force the distributed path
-        dist = rows(ST.isotonic_calibration(spark, SF_DIR))
-    finally:
-        ST.ISO_COLLECT_MAX = cap
-    assert drv == dist and len(drv) >= 3
