@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from covid_weather_etl_spark import schemas as S
+from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.operators.dedup import dedup_on_load
 from covid_weather_etl_spark.sources.catalog import read_parquet_or_none
 
@@ -276,9 +277,10 @@ def run_batch(spark: SparkSession, staging_glob: str, lake: Lake, kind: str,
         n_loaded = load(spark, silver, lake.path("gold", kind), kind)
     finally:
         routed.unpersist()
-    spark.createDataFrame(
+    driver.local_frame(
+        spark,
         [(batch_ts, f"{kind}_batch", "Success", n_loaded, n_good - n_loaded)],
-        schema=S.LOAD_LOG_SCHEMA,
+        S.LOAD_LOG_SCHEMA,
     ).coalesce(1).write.mode("append").parquet(lake.path("logs", "load"))
 
     rate = 100.0 * n_err / n_files if n_files else 0.0
@@ -313,6 +315,6 @@ def advance_cursor(spark: SparkSession, lake: Lake) -> str:
     set_start_date after load, `dags/etl_dag.py:44-46,84`)."""
     _, end = get_window(spark, lake)
     new_start = (dt.date.fromisoformat(end) + dt.timedelta(days=1)).isoformat()
-    (spark.createDataFrame([(new_start,)], "start_date string")
+    (driver.local_frame(spark, [(new_start,)], "start_date string")
      .write.mode("overwrite").parquet(lake.path("state", "cursor")))
     return new_start

@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.numeric import (
     cramer_sql, dsum, fround, fround_sql, md5_int,
 )
@@ -653,9 +654,9 @@ def logreg_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     fn = counts.get((1, 0), 0)
     tn = counts.get((0, 0), 0)
     n = tp + fp + fn + tn
-    return spark.createDataFrame(
-        [(tp, fp, fn, tn,
-          round((tp + tn) / n, 4), round(auc, 3))],
+    return driver.local_frame(
+        spark, [(tp, fp, fn, tn,
+                 round((tp + tn) / n, 4), round(auc, 3))],
         "tp long, fp long, fn long, tn long, accuracy double, auc double")
 
 
@@ -1510,7 +1511,7 @@ def gbt_regressor_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = out.collect()
     scored.unpersist()
     feats.unpersist()
-    return spark.createDataFrame(rows, out.schema)
+    return driver.local_frame(spark, rows, out.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1607,9 +1608,9 @@ def gbt_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     df.unpersist()
     tp, fp, fn, tn = cm["tp"], cm["fp"], cm["fn"], cm["tn"]
     n = tp + fp + fn + tn
-    return spark.createDataFrame(
-        [(tp, fp, fn, tn,
-          round((tp + tn) / n, 4), round(auc, 3))],
+    return driver.local_frame(
+        spark, [(tp, fp, fn, tn,
+                 round((tp + tn) / n, 4), round(auc, 3))],
         "tp long, fp long, fn long, tn long, accuracy double, auc double")
 
 

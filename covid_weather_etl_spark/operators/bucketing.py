@@ -28,6 +28,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.artifacts import WAREHOUSE_DIR
 from covid_weather_etl_spark.functions.numeric import (
     dsum, dsum_sql, fround, fround_sql, md5_int,
@@ -330,9 +331,9 @@ def reshard_movement_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys = (t["lineitem"].select(F.col("l_suppkey").alias("k"))
             .distinct()
             .select("k", md5_int(F.col("k").cast("string"), 8).alias("hk")))
-    ring = spark.createDataFrame(
-        [(str(s), str(v)) for s in range(RSP_TO)
-         for v in range(RSP_VNODES)], "s string, v string")
+    ring = driver.local_frame(
+        spark, [(str(s), str(v)) for s in range(RSP_TO)
+                for v in range(RSP_VNODES)], "s string, v string")
     ring = ring.select("s", "v",
                        md5_int(F.concat("s", F.lit(":"), "v"), 8).alias("pos"))
     dist = F.when(F.col("pos") >= F.col("hk"),
@@ -452,8 +453,8 @@ def epoch_shuffle_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = (spread(t["documents"], "doc_id")
             .select("doc_id",
                     F.size(F.split("text", " ")).alias("n_tok")))
-    epochs = docs.sparkSession.createDataFrame(
-        [(str(e),) for e in EPOCH_SEEDS], "epoch string")
+    epochs = driver.local_frame(
+        docs.sparkSession, [(str(e),) for e in EPOCH_SEEDS], "epoch string")
     keyed = (docs.crossJoin(F.broadcast(epochs))
              .withColumn("h", md5_int(F.concat(
                  "epoch", F.lit(":"), F.col("doc_id").cast("string")), 8))

@@ -1034,10 +1034,10 @@ def token_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.append((d["lang"], d["n_docs"], d["avail"], d["w_d"],
                     d["cap_d"], alloc, fr6(alloc / d["avail"]),
                     capped, fr6(lam)))
-    return spark.createDataFrame(
-        out, "lang string, n_docs bigint, avail_tokens bigint, "
-             "weight double, cap_tokens double, alloc_tokens double, "
-             "epochs double, capped int, fill_level double")
+    return driver.local_frame(
+        spark, out, "lang string, n_docs bigint, avail_tokens bigint, "
+                    "weight double, cap_tokens double, alloc_tokens double, "
+                    "epochs double, capped int, fill_level double")
 
 
 # ---------------------------------------------------------------------------
@@ -2590,7 +2590,7 @@ def bucketing_efficiency_eval(spark: SparkSession,
     fround ratio. At 100 TB batching is per (lang, shard) with
     shard-local order — same shape, embarrassingly parallel."""
     t = load_tables(spark, sf_dir, ("documents",))
-    ws = spark.createDataFrame([(w,) for w in BKT_WIDTHS], "w int")
+    ws = driver.local_frame(spark, [(w,) for w in BKT_WIDTHS], "w int")
     lens = (spread(t["documents"], "doc_id")
             .select("doc_id", "lang",
                     F.size(F.split("text", " ")).cast("long")
@@ -3701,7 +3701,7 @@ def truncation_loss_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer aggregate; the single float op is the final fround
     ratio. Embarrassingly parallel at any scale."""
     t = load_tables(spark, sf_dir, ("documents",))
-    ls = spark.createDataFrame([(w,) for w in TRUNC_LIMITS], "l int")
+    ls = driver.local_frame(spark, [(w,) for w in TRUNC_LIMITS], "l int")
     lens = (spread(t["documents"], "doc_id")
             .select("lang", F.size(F.split("text", " ")).cast("long")
                     .alias("n_tok")))
@@ -3831,8 +3831,8 @@ def dedup_threshold_sensitivity(spark: SparkSession,
         for i, s in enumerate(DTS_THRESHOLDS)]).first()
     for i, thr_txt in enumerate(DTS_THRESHOLDS):
         edge_counts[i] = (float(thr_txt), ec_row[f"e{i}"])
-    meta = spark.createDataFrame(
-        [(i, thr, ne) for i, (thr, ne) in edge_counts.items()],
+    meta = driver.local_frame(
+        spark, [(i, thr, ne) for i, (thr, ne) in edge_counts.items()],
         "ti int, threshold double, n_edges long")
     return (meta.join(stats, "ti", "left")
             .select("threshold", "n_edges",

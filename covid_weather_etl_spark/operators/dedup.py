@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
 
@@ -234,7 +235,7 @@ def approx_quantile_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     wr = W.partitionBy("flag").orderBy("cents")
     ranked = (v.withColumn("rn", F.row_number().over(wr))
               .withColumn("n", F.count("*").over(W.partitionBy("flag"))))
-    qs = spark.createDataFrame([(q,) for q in AQP_QS_BP], "q_bp int")
+    qs = driver.local_frame(spark, [(q,) for q in AQP_QS_BP], "q_bp int")
     bounds = (ranked.select("flag", "n").distinct()
               .crossJoin(F.broadcast(qs))
               .select(

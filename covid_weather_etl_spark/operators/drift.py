@@ -210,8 +210,8 @@ def ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     if lo is None:
         # empty pooled sample (e.g. a filtered-out type): a 0-row frame
         # with the contract schema beats a driver-side crash
-        return spark.createDataFrame(
-            [], "n_a bigint, n_b bigint, ks_stat double")
+        return driver.local_frame(
+            spark, [], "n_a bigint, n_b bigint, ks_stat double")
     width = max((hi - lo) / KS_BLOCKS, 1e-12)
     blk = F.least(F.floor((F.col("v") - F.lit(lo)) / F.lit(width)),
                   F.lit(KS_BLOCKS - 1)).cast("int")
@@ -1101,10 +1101,10 @@ def _holm_from_rows(spark: SparkSession, rows) -> DataFrame:
              int(abs(zz) >= _RAW_Z), int(abs(zz) >= _BONF_Z),
              min(pass_k[r] for r in pass_k if r <= rk))
             for nm, n, zz, rk in ranked]
-    return spark.createDataFrame(
-        recs, "n_name string, n long, z double, holm_rank long, "
-              "reject_unadjusted int, reject_bonferroni int, "
-              "reject_holm int")
+    return driver.local_frame(
+        spark, recs, "n_name string, n long, z double, holm_rank long, "
+                     "reject_unadjusted int, reject_bonferroni int, "
+                     "reject_holm int")
 
 
 def _bh_from_rows(spark: SparkSession, rows) -> DataFrame:
@@ -1116,9 +1116,9 @@ def _bh_from_rows(spark: SparkSession, rows) -> DataFrame:
               if abs(zz) >= BH_ZCRIT[rk - 1]), default=0)
     recs = [(nm, n, zz, rk, BH_ZCRIT[rk - 1], int(rk <= ks))
             for nm, n, zz, rk in ranked]
-    return spark.createDataFrame(
-        recs, "n_name string, n long, z double, bh_rank long, "
-              "bh_threshold_z double, reject_bh int")
+    return driver.local_frame(
+        spark, recs, "n_name string, n long, z double, bh_rank long, "
+                     "bh_threshold_z double, reject_bh int")
 
 
 def _holm_oracle() -> str:
@@ -1225,8 +1225,8 @@ def holm_multiple_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.col("a.z").alias("z"))
               .agg((F.count(F.when(beats, 1)) + 1).cast("long")
                    .alias("rk")))
-    crit = spark.createDataFrame(
-        [(k + 1, zc) for k, zc in enumerate(HOLM_ZCRIT)],
+    crit = driver.local_frame(
+        spark, [(k + 1, zc) for k, zc in enumerate(HOLM_ZCRIT)],
         "rk long, zcrit double")
     dec_df = (ranked.join(F.broadcast(crit), "rk")
               .select("n_name", "n", "z", "rk",
@@ -1411,8 +1411,8 @@ def bh_fdr_control(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.col("a.z").alias("z"))
               .agg((F.count(F.when(beats, 1)) + 1).cast("long")
                    .alias("rk")))
-    crit = spark.createDataFrame(
-        [(k + 1, zc) for k, zc in enumerate(BH_ZCRIT)],
+    crit = driver.local_frame(
+        spark, [(k + 1, zc) for k, zc in enumerate(BH_ZCRIT)],
         "rk long, zcrit double")
     dec_df = (ranked.join(F.broadcast(crit), "rk")
               .select("n_name", "n", "z", "rk", "zcrit",

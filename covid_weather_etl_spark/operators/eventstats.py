@@ -438,9 +438,9 @@ def _km_from_day_tab(spark: SparkSession, rows) -> DataFrame:
             Decimal(repr(jm.exp(float(logsum)))).quantize(
                 q6, ROUND_HALF_UP))
         out.append((day, n, d, c, surv))
-    return spark.createDataFrame(
-        out, "day bigint, n_at_risk bigint, n_events bigint, "
-             "n_censored bigint, survival double")
+    return driver.local_frame(
+        spark, out, "day bigint, n_at_risk bigint, n_events bigint, "
+                    "n_censored bigint, survival double")
 
 
 def _na_from_day_tab(spark: SparkSession, rows) -> DataFrame:
@@ -461,9 +461,9 @@ def _na_from_day_tab(spark: SparkSession, rows) -> DataFrame:
         h += r9(d * 1.0 / n)
         v += r9(d * 1.0 / (n * 1.0 * n))
         out.append((day, n, d, c, g6(float(h)), g6(float(v))))
-    return spark.createDataFrame(
-        out, "day long, n_at_risk long, n_events long, "
-             "n_censored long, cum_hazard double, hazard_var double")
+    return driver.local_frame(
+        spark, out, "day long, n_at_risk long, n_events long, "
+                    "n_censored long, cum_hazard double, hazard_var double")
 
 
 @register(
@@ -913,9 +913,10 @@ def markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = [(ch, fr9(p_all), fr9(e), fr9(e / total) if total > 0 else 0.0)
            for ch, e in zip(MARKOV_CHANNELS, effects)]
-    return spark.createDataFrame(
-        out, "channel string, p_conversion double, removal_effect double, "
-             "attribution double")
+    return driver.local_frame(
+        spark, out,
+        "channel string, p_conversion double, removal_effect double, "
+        "attribution double")
 
 
 # ---------------------------------------------------------------------------
@@ -1547,9 +1548,9 @@ def _shapley_from_cnt(spark: SparkSession, rows) -> DataFrame:
                                           * attributable)
                            * 1e6 + 0.5) / 1e6
         out.append((channel, touched, phi24, phi, share))
-    return spark.createDataFrame(
-        out, "channel string, n_users_touched long, phi24 long, "
-             "phi double, share double")
+    return driver.local_frame(
+        spark, out, "channel string, n_users_touched long, phi24 long, "
+                    "phi double, share double")
 
 
 @register(
@@ -1608,8 +1609,8 @@ def shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
          .groupBy("s")
          .agg(F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("v"))
          .localCheckpoint(eager=False))  # 16 rows, joined twice
-    chan = spark.createDataFrame(list(SHAPLEY_CHANNELS),
-                                 "channel string, bit long")
+    chan = driver.local_frame(spark, list(SHAPLEY_CHANNELS),
+                              "channel string, bit long")
     w_expr = F.element_at(
         F.array(*[F.lit(w) for w in _SHAP_W]),
         F.bit_count(F.col("v0.s")).cast("int") + 1).cast("long")

@@ -540,8 +540,8 @@ def shortest_path_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = edges.filter(F.col("src").startswith("s:")) \
                 .agg(F.min("src")).first()[0]
-    frontiers = [spark.createDataFrame([(root, 0)],
-                                       "node string, dist int")]
+    frontiers = [driver.local_frame(spark, [(root, 0)],
+                                    "node string, dist int")]
     for hop in range(1, BFS_MAX_HOPS + 1):
         nxt = (frontiers[-1]
                .join(edges, frontiers[-1]["node"] == edges["src"])
@@ -720,7 +720,7 @@ def bellman_ford_costs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = edges.filter(F.col("src").startswith("s:")) \
                 .agg(F.min("src")).first()[0]
-    dist = spark.createDataFrame([(root, 0)], "node string, dist long") \
+    dist = driver.local_frame(spark, [(root, 0)], "node string, dist long") \
                 .localCheckpoint(eager=False)
     for _ in range(BF_ROUNDS):
         relaxed = (dist.join(edges, dist["node"] == edges["src"])

@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
 from covid_weather_etl_spark.operators.similarity import _vecs
 from covid_weather_etl_spark.queries.registry import register
@@ -99,7 +100,7 @@ def ensure_pq_codebook(spark: SparkSession, sf_dir: str) -> list:
     def build(path: str) -> None:
         t = load_tables(spark, sf_dir, ("embeddings",))
         rows = train_pq_codebook(_vecs(t["embeddings"])).collect()
-        (spark.createDataFrame(rows, schema=_PQ_SCHEMA)
+        (driver.local_frame(spark, rows, _PQ_SCHEMA)
          .coalesce(1).write.mode("overwrite").parquet(path))
 
     return ensure(pq_codebook_path(sf_dir), build, lambda path: sorted(
@@ -166,8 +167,8 @@ def pq_codebook_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = ensure_pq_codebook(spark, sf_dir)
     flat = [(int(r["sub_id"]), int(r["code"]), d, float(x))
             for r in rows for d, x in enumerate(r["cv"])]
-    return spark.createDataFrame(
-        flat, schema="sub_id int, code int, dim int, val double")
+    return driver.local_frame(
+        spark, flat, "sub_id int, code int, dim int, val double")
 
 
 def _pq_ann_topk_oracle() -> str:
@@ -261,9 +262,10 @@ def pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         dtype=np.float64).reshape(PQ_M, SUB)
     CB = _codebook_tensor(rows)
     d2 = ((q[:, None, :] - CB) ** 2).sum(-1)  # (M, C)
-    dtable = spark.createDataFrame(
+    dtable = driver.local_frame(
+        spark,
         [(s, c, float(d2[s, c])) for s in range(PQ_M) for c in range(PQ_C)],
-        schema="sub_id int, code int, d double")
+        "sub_id int, code int, d double")
 
     exploded = (coded.filter(F.col("vec_id") != 0)
                 .select("vec_id", F.posexplode("codes")

@@ -91,8 +91,8 @@ def exact_auc_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     lo, hi = d.agg(F.min("score"), F.max("score")).first()
     if lo is None:
-        return spark.createDataFrame(
-            [], "n_pos bigint, n_neg bigint, auc double")
+        return driver.local_frame(
+            spark, [], "n_pos bigint, n_neg bigint, auc double")
     n_blocks = 32
     width = max((hi - lo) / n_blocks, 1e-9)
     blk = F.least(F.floor((F.col("score") - F.lit(lo)) / F.lit(width)),
@@ -183,8 +183,8 @@ def _spearman_from_cells(spark: SparkSession, rows):
 
     cells = [(int(r["a"]), int(r["b"]), int(r["c"])) for r in rows]
     if not cells:
-        return spark.createDataFrame(
-            [(0, None)], "n long, spearman_rho double")
+        return driver.local_frame(
+            spark, [(0, None)], "n long, spearman_rho double")
     ca: dict = {}
     cb: dict = {}
     for a, b, c in cells:
@@ -219,8 +219,8 @@ def _spearman_from_cells(spark: SparkSession, rows):
         return None
     rho = float(Decimal(repr((n * fsab - fsa * fsb) / den)).quantize(
         Decimal("1e-6"), ROUND_HALF_UP))
-    return spark.createDataFrame(
-        [(n, rho)], "n long, spearman_rho double")
+    return driver.local_frame(
+        spark, [(n, rho)], "n long, spearman_rho double")
 
 
 @register(
@@ -760,8 +760,8 @@ def exact_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
          .localCheckpoint(eager=False))
     lo, hi = d.agg(F.min("score"), F.max("score")).first()
     if lo is None:
-        return spark.createDataFrame(
-            [], "n_pos bigint, n_neg bigint, ap double")
+        return driver.local_frame(
+            spark, [], "n_pos bigint, n_neg bigint, ap double")
     n_blocks = 32
     width = max((hi - lo) / n_blocks, 1e-9)
     blk = F.least(F.floor((F.col("score") - F.lit(lo)) / F.lit(width)),

@@ -368,7 +368,7 @@ def ensure_ivf_codebook(spark: SparkSession, sf_dir: str) -> list:
     def build(path: str) -> None:
         t = load_tables(spark, sf_dir, ("embeddings",))
         rows = train_ivf_codebook(_vecs(t["embeddings"])).collect()
-        (spark.createDataFrame(rows, schema=_CENTROID_SCHEMA)
+        (driver.local_frame(spark, rows, _CENTROID_SCHEMA)
          .coalesce(1).write.mode("overwrite").parquet(path))
 
     return ensure(ivf_codebook_path(sf_dir), build,
@@ -435,7 +435,7 @@ def ivf_codebook_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = ensure_ivf_codebook(spark, sf_dir)
     flat = [(int(r["c_id"]), d, float(x))
             for r in rows for d, x in enumerate(r["cv"])]
-    return spark.createDataFrame(flat, schema="c_id int, dim int, val double")
+    return driver.local_frame(spark, flat, "c_id int, dim int, val double")
 
 
 def _ivf_kmeans_topk_oracle() -> str:
@@ -549,8 +549,8 @@ def ivf_cell_balance_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _vecs(t["embeddings"])
     assigned = assign_cells_literal(emb, rows)
     counts = assigned.groupBy("c_id").agg(F.count("*").alias("n"))
-    cells = spark.createDataFrame(
-        [(int(r["c_id"]),) for r in rows], "c_id int")
+    cells = driver.local_frame(
+        spark, [(int(r["c_id"]),) for r in rows], "c_id int")
     total = assigned.agg(F.count("*").alias("total"))
     n = F.coalesce(F.col("n"), F.lit(0)).cast("bigint")
     return (cells.join(counts, "c_id", "left")
@@ -620,8 +620,8 @@ def ivf_rebalance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ("embeddings",))
     assigned = assign_cells_literal(_vecs(t["embeddings"]), rows)
     counts = assigned.groupBy("c_id").agg(F.count("*").alias("n"))
-    cells = spark.createDataFrame(
-        [(int(r["c_id"]),) for r in rows], "c_id int")
+    cells = driver.local_frame(
+        spark, [(int(r["c_id"]),) for r in rows], "c_id int")
     total = assigned.agg(F.count("*").cast("long").alias("total"))
     n = F.coalesce(F.col("n"), F.lit(0)).cast("long")
     action = (F.when(n * KMEANS_K > 2 * F.col("total"), "split")
@@ -733,7 +733,7 @@ def ensure_ivf_rebalanced(spark: SparkSession, sf_dir: str) -> list:
             rows += [(int(r["c_id"]), list(r["cv"]))
                      for r in children.collect()]   # bounded: ≤ Σ planned
         rows.sort()
-        (spark.createDataFrame(rows, schema=_CENTROID_SCHEMA)
+        (driver.local_frame(spark, rows, _CENTROID_SCHEMA)
          .coalesce(1).write.mode("overwrite").parquet(path))
 
     return ensure(ivf_rebalanced_path(sf_dir), build,
@@ -1532,7 +1532,7 @@ def random_projection_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     signs = [(i, j, 1.0 if int(hashlib.md5(f"{i}:{j}".encode())
                                .hexdigest()[0], 16) % 2 == 0 else -1.0)
              for i in range(64) for j in range(RP_K)]
-    sign_df = spark.createDataFrame(signs, "i int, j int, s double")
+    sign_df = driver.local_frame(spark, signs, "i int, j int, s double")
 
     ex = (t["embeddings"]
           .select("vec_id", "label",
@@ -1884,8 +1884,8 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
         i, j = int(r["i"]), int(r["j"])
         M[(i, j)] = M[(j, i)] = n * int(r["gp"]) - su[i] * su[j]
     loadings, evr = _pca_power_solve(M, d)
-    return ev.sparkSession.createDataFrame(
-        [(k, loadings[k], evr) for k in range(d)],
+    return driver.local_frame(
+        ev.sparkSession, [(k, loadings[k], evr) for k in range(d)],
         "dim int, loading double, explained_var_ratio double")
 
 
@@ -1983,9 +1983,9 @@ def rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tests/test_plans.py)
     def ranked(df_ordered, alias: str) -> DataFrame:
         rows = df_ordered.collect()          # ≤ RRF_POOL rows by LIMIT
-        return spark.createDataFrame(
-            [(r["doc_id"], i + 1) for i, r in enumerate(rows)],
-            schema=f"doc_id bigint, {alias} int")
+        return driver.local_frame(
+            spark, [(r["doc_id"], i + 1) for i, r in enumerate(rows)],
+            f"doc_id bigint, {alias} int")
 
     sp = ranked(
         bm25_doc_scores(spark, sf_dir)
@@ -2152,8 +2152,8 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         del remaining[d]
         out.append((step, d, r, float(div),
                     __import__("math").floor(score * 1e6 + 0.5) / 1e6))
-    return spark.createDataFrame(
-        out, schema="step int, doc_id bigint, rel double, div double, "
+    return driver.local_frame(
+        spark, out, "step int, doc_id bigint, rel double, div double, "
                     "mmr_score double")
 
 
@@ -2594,8 +2594,8 @@ def ivf_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = counts.agg(F.sum("n_old").cast("long").alias("t_old"),
                      F.sum(F.col("n_old") + F.col("n_new")).cast("long")
                      .alias("t_all"))
-    cells = spark.createDataFrame(
-        [(int(r["c_id"]),) for r in rows], "c_id int")
+    cells = driver.local_frame(
+        spark, [(int(r["c_id"]),) for r in rows], "c_id int")
     n_old = F.coalesce(F.col("n_old"), F.lit(0)).cast("long")
     n_new = F.coalesce(F.col("n_new"), F.lit(0)).cast("long")
     share_before = fround(n_old * F.lit(1.0) / F.col("t_old"))
@@ -2726,8 +2726,8 @@ def ivf_nprobe_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ("embeddings",))
     emb = _vecs(t["embeddings"])
     assigned = assign_cells_literal(emb, rows)
-    cb = spark.createDataFrame(
-        [(int(r["c_id"]), [float(x) for x in r["cv"]]) for r in rows],
+    cb = driver.local_frame(
+        spark, [(int(r["c_id"]), [float(x) for x in r["cv"]]) for r in rows],
         "c_id int, cv array<double>")
     queries = (emb.filter(F.col("vec_id") < NPROBE_QUERIES)
                .select(F.col("vec_id").alias("q_id"),
@@ -2745,7 +2745,7 @@ def ivf_nprobe_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     cellrank = (queries.crossJoin(F.broadcast(cb))
                 .select("q_id", "qv", "c_id", sim_c.alias("cs"))
                 .withColumn("crn", F.row_number().over(wq)))
-    ns = spark.createDataFrame([(p,) for p in NPROBE_GRID], "np int")
+    ns = driver.local_frame(spark, [(p,) for p in NPROBE_GRID], "np int")
     probes = (cellrank.join(F.broadcast(ns),
                             F.col("crn") <= F.col("np"))
               .select("np", "q_id", "qv", "c_id"))
@@ -2882,9 +2882,9 @@ def _cpn_from_cells(spark: SparkSession, cells) -> DataFrame:
     # or single label -> H=0) falls through to the distributed path,
     # whose NULL-on-divide-by-zero nmi is the pinned shape.
     if not tab:
-        return spark.createDataFrame(
-            [], "cell int, n_vecs long, majority_label int, "
-                "majority_share double, purity double, nmi double")
+        return driver.local_frame(
+            spark, [], "cell int, n_vecs long, majority_label int, "
+                       "majority_share double, purity double, nmi double")
     nn = float(sum(n for _, _, n in tab))
     nc, nl, per_cell = {}, {}, {}
     for c, l, n in tab:
@@ -2910,9 +2910,9 @@ def _cpn_from_cells(spark: SparkSession, cells) -> DataFrame:
     purity = g6(hits * 1.0 / nn)
     out = [(c, n_vecs, lbl, g6(n_maj * 1.0 / n_vecs), purity, nmi)
            for c, n_vecs, n_maj, lbl in recs]
-    return spark.createDataFrame(
-        out, "cell int, n_vecs long, majority_label int, "
-             "majority_share double, purity double, nmi double")
+    return driver.local_frame(
+        spark, out, "cell int, n_vecs long, majority_label int, "
+                    "majority_share double, purity double, nmi double")
 
 
 @register("cluster_purity_nmi_eval", survey="ext-sim,A6,A8,F10,U5",

@@ -583,7 +583,7 @@ def quantile_sketch_error_eval(spark: SparkSession,
     wn = W.partitionBy("pri")
     cum = (hist.withColumn("cc", F.sum("c").over(wc))
            .withColumn("n", F.sum("c").over(wn)))
-    qs = spark.createDataFrame([(q,) for q in QSK_QS], "q int")
+    qs = driver.local_frame(spark, [(q,) for q in QSK_QS], "q int")
     est = (cum.crossJoin(F.broadcast(qs))
            .filter(F.col("cc") * 1000 >= F.col("q") * F.col("n"))
            .groupBy("pri", "q")

@@ -443,8 +443,8 @@ def distributed_exact_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         n, med = _exact_quantile_distributed(li, "l_extendedprice", 0.5)
     finally:
         li.unpersist()
-    return spark.createDataFrame(
-        [(n, round(med, 6))], "n_rows long, median_price double")
+    return driver.local_frame(
+        spark, [(n, round(med, 6))], "n_rows long, median_price double")
 
 
 #: isotonic calibration: char-bin width and the token-count label cut.
@@ -476,9 +476,9 @@ def _iso_from_pts(spark: SparkSession, rows) -> DataFrame:
     import numpy as np
 
     if not rows:
-        return spark.createDataFrame(
-            [], "char_bin long, n_docs long, n_pos long, "
-                "emp_rate double, iso_rate double")
+        return driver.local_frame(
+            spark, [], "char_bin long, n_docs long, n_pos long, "
+                       "emp_rate double, iso_rate double")
     pts = sorted((int(r["x"]), int(r["w"]), int(r["pos"])) for r in rows)
     xs = [p[0] for p in pts]
     ws = np.array([p[1] for p in pts], dtype=np.int64)
@@ -508,9 +508,9 @@ def _iso_from_pts(spark: SparkSession, rows) -> DataFrame:
     out = [(xs[i], int(ws[i]), int(pos[i]),
             r6(int(pos[i]) * 1.0 / int(ws[i])), r6(float(fit[i])))
            for i in range(B)]
-    return spark.createDataFrame(
-        out, "char_bin long, n_docs long, n_pos long, "
-             "emp_rate double, iso_rate double")
+    return driver.local_frame(
+        spark, out, "char_bin long, n_docs long, n_pos long, "
+                    "emp_rate double, iso_rate double")
 
 
 @register(

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.numeric import md5_int
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
@@ -341,8 +342,8 @@ def late_event_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     lat = (t["events"]
            .select(F.col("event_id"),
                    ((sec + delay) - win_end).alias("lateness")))
-    wm = spark.createDataFrame([(m,) for m in LATE_WATERMARKS_MIN],
-                               "watermark_min long")
+    wm = driver.local_frame(spark, [(m,) for m in LATE_WATERMARKS_MIN],
+                            "watermark_min long")
     dropped = (F.col("lateness") > F.col("watermark_min") * 60) \
         .cast("long")
     return (lat.crossJoin(F.broadcast(wm))

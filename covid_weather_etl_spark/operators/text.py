@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
 from covid_weather_etl_spark.functions.numeric import (
     dsum, dsum_sql, fround, fround_sql, md5_int,
@@ -848,8 +849,8 @@ def ensure_bpe_artifacts(spark: SparkSession, sf_dir: str):
     DataFrame."""
     def build(mp: str, vp: str) -> None:
         merges, vocab = _train_bpe(spark, sf_dir)
-        (spark.createDataFrame(
-            merges,
+        (driver.local_frame(
+            spark, merges,
             "merge_idx int, left string, right string, pair_count long")
             .coalesce(1).write.mode("overwrite").parquet(mp))
         vocab.write.mode("overwrite").parquet(vp)
@@ -982,8 +983,9 @@ def bpe_vocab_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-segmentation trick. The merge sequence is additionally pinned
     against a pure-python BPE trainer in tests/test_text.py."""
     merges, _ = ensure_bpe_artifacts(spark, sf_dir)
-    return spark.createDataFrame(
-        merges, "merge_idx int, left string, right string, pair_count long")
+    return driver.local_frame(
+        spark, merges,
+        "merge_idx int, left string, right string, pair_count long")
 
 
 @register("bpe_encode_documents", survey="LLM-text,U1,J1,A6",
@@ -2184,7 +2186,7 @@ def prefix_cache_reuse_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     one ratio is fround-snapped. At 100 TB: group cardinality is
     bounded by doc count, no stage is corpus-cross-product."""
     t = load_tables(spark, sf_dir, ("documents",))
-    ks = spark.createDataFrame([(k,) for k in PCR_KS], "k int")
+    ks = driver.local_frame(spark, [(k,) for k in PCR_KS], "k int")
     pref = (spread(t["documents"], "doc_id")
             .select("doc_id", _tokens().alias("t"))
             .select("doc_id", F.size("t").alias("n_tok"), "t")

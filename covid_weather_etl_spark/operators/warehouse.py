@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
 from covid_weather_etl_spark.functions.numeric import dsum_sql, md5_int
 from covid_weather_etl_spark.queries.registry import register
@@ -867,8 +868,8 @@ def zonemap_pruning_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     zone = (blocks.groupBy("layout", "block")
             .agg(F.min("d").alias("lo"), F.max("d").alias("hi"),
                  F.count("*").alias("n_rows")))
-    q = spark.createDataFrame([(m,) for m in ZM_QUERY_MONTHS],
-                              "q_start string") \
+    q = driver.local_frame(spark, [(m,) for m in ZM_QUERY_MONTHS],
+                           "q_start string") \
         .select(F.col("q_start").cast("date").alias("q_start")) \
         .withColumn("q_end", F.add_months("q_start", 1))
     hit = (F.col("lo") < F.col("q_end")) & (F.col("hi") >= F.col("q_start"))

@@ -25,6 +25,7 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.numeric import exact_avg_sql
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
@@ -427,8 +428,8 @@ def label_encode_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = t["customer"]
     vocab = sorted(r[0] for r in
                    cust.select("c_mktsegment").distinct().collect())
-    mapping = spark.createDataFrame(
-        [(s, i) for i, s in enumerate(vocab)],
+    mapping = driver.local_frame(
+        spark, [(s, i) for i, s in enumerate(vocab)],
         "c_mktsegment string, segment_id long")
     return (cust.join(F.broadcast(mapping), "c_mktsegment")
             .select("c_custkey", "c_mktsegment", "segment_id"))

@@ -6,6 +6,15 @@ job: adaptive execution for runtime re-planning (skew joins, partition
 coalescing), UTC session time so parquet timestamps compare bit-for-bit
 with the DuckDB oracle, and Arrow enabled for the Pandas-UDF slow path.
 
+The session also keeps the engine's generated code. Catalyst compiles
+every whole-stage plan to a Java class and caches the class by its
+source; Spark's default cache of 100 classes is smaller than what one
+ETL cycle or one registry round compiles, so those plans were compiled
+again on every batch. `get_spark` sizes the cache to 2000 classes.
+That is a static conf, fixed when the JVM's first session starts:
+`configure_existing` cannot set it, so a session built by the caller
+(the driver's own vanilla session) keeps Spark's default of 100.
+
 At 100 TB these settings change meaning but not shape: shuffle
 partitions scale with cluster cores (AQE coalesces down), and
 `maxPartitionBytes` keeps scan tasks ~128 MB so a 1000-executor cluster
@@ -49,6 +58,16 @@ def get_spark(app_name: str = "covid-weather-etl-spark",
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # generated classes, keyed by their source. Measured with
+        # perfbench on local[4]: an etl_ingest op (a weather and a
+        # covid batch, then the monitor read) compiled 161-164 classes
+        # at Spark's default of 100 and 24 at 2000, 8 of them the
+        # projections that inline the batch's batch_ts literal;
+        # registry_mix's two timed rounds compiled 14 and 6 classes at
+        # 100, 6 and 0 at 2000. Guava splits the cache into 4 LRU
+        # segments of a quarter of the size each, so a working set
+        # near 100 classes already thrashes at the default.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     for k, v in SQL_CONFS:
         builder = builder.config(k, v)
@@ -67,7 +86,9 @@ def configure_existing(spark: SparkSession) -> SparkSession:
 
     The driver hands `queries()` callables an externally built session; the
     settings that matter for oracle parity (UTC time zone) and for plan
-    quality (AQE) are runtime-settable and applied here.
+    quality (AQE) are runtime-settable and applied here. The codegen
+    cache size is static, so such a session keeps its own (Spark's
+    default 100 classes unless its builder set it).
     """
     # events.ts may be TIMESTAMP(NANOS); see sources/catalog.py
     for k, v in SQL_CONFS + (

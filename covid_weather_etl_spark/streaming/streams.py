@@ -1221,8 +1221,8 @@ def ivf_fold_state_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = (asg.groupBy("c_id")
               .agg(F.count("*").cast("long").alias("n_vectors")))
     tot = counts.agg(F.sum("n_vectors").cast("long").alias("t"))
-    cells = spark.createDataFrame(
-        [(int(r["c_id"]),) for r in rows], "c_id int")
+    cells = driver.local_frame(
+        spark, [(int(r["c_id"]),) for r in rows], "c_id int")
     n = F.coalesce(F.col("n_vectors"), F.lit(0)).cast("long")
     return (cells.join(counts, "c_id", "left")
             .crossJoin(F.broadcast(tot))

@@ -12,8 +12,8 @@ import shutil
 from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.queries.registry import all_queries
+from tests.conftest import SF_DIR
 
-SF_DIR = "/root/testdata/sf0.001"
 QUERIES = all_queries()
 
 
@@ -109,7 +109,6 @@ def test_benford_profile_shares_sum_to_one(spark, duck):
     closed form; deviation = observed - benford."""
     import math
     from covid_weather_etl_spark.queries.registry import all_queries
-    from tests.conftest import SF_DIR
     pdf = all_queries()["benford_digit_profile"].fn(spark, SF_DIR).toPandas()
     assert set(pdf.digit) <= set(range(1, 10))
     n_orders = duck.execute(

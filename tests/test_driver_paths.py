@@ -5,6 +5,11 @@ site, `test_gate` runs its query with the switch off (the shortcut's
 kernel must run) and with `driver.FORCE_DISTRIBUTED` on (the kernel
 must not run), and asserts both sides return the same non-empty rows
 bit for bit.
+
+`driver.local_frame`, the one way driver-side rows go back to Spark, must
+store every schema shape the engine uses exactly as
+`spark.createDataFrame(rows, schema)` does, as a `LocalRelation`; a lint
+test keeps `createDataFrame` out of every other engine module.
 """
 
 from __future__ import annotations
@@ -14,6 +19,7 @@ import pathlib
 import re
 
 import pytest
+from pyspark.sql import types as T
 
 from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.queries.registry import all_queries
@@ -120,3 +126,70 @@ def test_no_gate_outside_driver_module():
     hand = [str(p.relative_to(ENGINE)) for p in ENGINE.rglob("*.py")
             if p.resolve() != own and HAND_GATE.search(p.read_text())]
     assert hand == []
+
+
+#: every shape the engine hands `local_frame`: (schema, rows). A
+#: `StructType`, NULLs, NaN, signed zeros and infinities, float32
+#: rounding, arrays, longs past 2**31, non-ASCII text and no rows. The
+#: first field is a distinct key, so `bitrows` sorts without comparing
+#: a NULL.
+NAN, INF = float("nan"), float("inf")
+FRAMES = {
+    "scalars": ("k int, i int, l bigint, d double, s string",
+                [(0, 1, 2 ** 40, 0.5, "Zürich, 東京"),
+                 (1, None, -2 ** 63, NAN, None),
+                 (2, -2 ** 31, 2 ** 63 - 1, -0.0, ""),
+                 (3, 0, 2 ** 31, INF, "x"),
+                 (4, 2 ** 31 - 1, None, -INF, "ß")]),
+    "float32": ("k int, f float, d double",
+                [(0, 0.1, 0.1), (1, 1e39, 1e-46), (2, -0.0, NAN),
+                 (3, NAN, -0.0), (4, 3.4028235e38, None), (5, 1e-46, 2.5),
+                 (6, None, -INF), (7, -1e39, 0.0)]),
+    "array": ("c_id int, cv array<double>",
+              [(0, [1.0, -0.0, None, INF, 1e-300]), (1, []), (2, None)]),
+    "empty": ("n_a bigint, n_b bigint, ks_stat double", []),
+    "struct_type": (T.StructType([
+        T.StructField("batch_ts", T.LongType(), False),
+        T.StructField("source_file", T.StringType(), False),
+        T.StructField("n_inserted", T.LongType(), False),
+        T.StructField("rate", T.DoubleType(), True)]),
+        [(1700000000, "weather_batch", 3, None),
+         (1700000001, "covid_batch", 0, 1.5)]),
+}
+
+
+def _frame_case(spark, name: str):
+    if name == "rows":
+        # collected `Row`s handed back under their own schema, as
+        # ml/queries.gbt_regressor_eval does
+        df = spark.range(4).selectExpr(
+            "count(*) AS n_test", "round(sum(id) / 3.0, 4) AS mae",
+            "CAST(NULL AS double) AS r2")
+        return df.collect(), df.schema
+    schema, rows = FRAMES[name]
+    return rows, schema
+
+
+def _reprs(df) -> list:
+    """Row reprs, sorted: catch -0.0 and NaN inside arrays too."""
+    return sorted(repr(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("name", [*FRAMES, "rows"])
+def test_local_frame_equals_create_dataframe(spark, name):
+    rows, schema = _frame_case(spark, name)
+    got = driver.local_frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema
+    assert bitrows(got) == bitrows(want)
+    assert _reprs(got) == _reprs(want)
+    plan = got._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+
+
+def test_no_create_dataframe_outside_driver_module():
+    """Driver-side rows reach Spark only through `driver.local_frame`."""
+    own = pathlib.Path(driver.__file__).resolve()
+    raw = [str(p.relative_to(ENGINE)) for p in ENGINE.rglob("*.py")
+           if p.resolve() != own and "createDataFrame(" in p.read_text()]
+    assert raw == []

@@ -11,8 +11,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.queries.registry import all_queries
+from tests.conftest import SF_DIR
 
-SF_DIR = "/root/testdata/sf0.001"
 QUERIES = all_queries()
 
 
@@ -221,7 +221,6 @@ def test_session_stats_agrees_with_native_session_window(spark, tmp_path):
     from covid_weather_etl_spark.queries.registry import all_queries
 
     QUERIES = all_queries()
-    from tests.conftest import SF_DIR
     stats = (QUERIES["session_stats"].fn(spark, SF_DIR)
              .select("user_id", "session_start", "n_events"))
     native = (QUERIES["session_windows"].fn(spark, SF_DIR)

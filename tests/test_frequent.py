@@ -14,8 +14,8 @@ from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.operators.frequent import K, mg_summarize
 from covid_weather_etl_spark.queries.registry import all_queries
+from tests.conftest import SF_DIR
 
-SF_DIR = "/root/testdata/sf0.001"
 QUERIES = all_queries()
 
 

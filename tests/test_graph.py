@@ -17,8 +17,8 @@ from covid_weather_etl_spark.operators.graph import (
 )
 from covid_weather_etl_spark.queries.registry import all_queries
 from covid_weather_etl_spark.sources.catalog import load_tables
+from tests.conftest import SF_DIR
 
-SF_DIR = "/root/testdata/sf0.001"
 QUERIES = all_queries()
 
 

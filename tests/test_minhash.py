@@ -128,11 +128,11 @@ def test_incremental_ingest_matches_bruteforce_and_skips_old_pairs(spark):
         incremental_minhash_ingest,
     )
 
-    out = incremental_minhash_ingest(spark, "/root/testdata/sf0.001")
+    out = incremental_minhash_ingest(spark, SF_DIR)
     got = {(r.doc_id_1, r.doc_id_2): (round(r.jaccard, 9), r.pair_kind)
            for r in out.collect()}
 
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = (spark.read.parquet(f"{SF_DIR}/documents.parquet")
             .select("doc_id", "text").toPandas())
 
     def md5(s):

@@ -20,8 +20,8 @@ from covid_weather_etl_spark.operators.pq import (
 )
 from covid_weather_etl_spark.operators.similarity import _vecs
 from covid_weather_etl_spark.queries.registry import all_queries
+from tests.conftest import SF_DIR
 
-SF_DIR = "/root/testdata/sf0.001"
 QUERIES = all_queries()
 
 

@@ -12,8 +12,8 @@ from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.operators import quality as Q
 from covid_weather_etl_spark.queries.registry import all_queries
+from tests.conftest import SF_DIR
 
-SF_DIR = "/root/testdata/sf0.001"
 QUERIES = all_queries()
 
 
@@ -65,7 +65,6 @@ def test_labeling_function_report_matches_python(spark):
 
     from covid_weather_etl_spark.operators import quality as Q
     from covid_weather_etl_spark.queries.registry import all_queries
-    from tests.conftest import SF_DIR
 
     got = {r["rule"]: r.asDict() for r in
            all_queries()["labeling_function_report"].fn(spark, SF_DIR)
@@ -114,7 +113,6 @@ def test_ngram_perplexity_eval_recount(spark):
 
     from covid_weather_etl_spark.operators.quality import PPLX_EVAL_CUT
     from covid_weather_etl_spark.queries.registry import all_queries
-    from tests.conftest import SF_DIR
 
     got = {r["source"]: r for r in
            all_queries()["ngram_perplexity_eval"].fn(spark, SF_DIR)

@@ -12,8 +12,8 @@ from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.queries.registry import all_queries
 from covid_weather_etl_spark.sources.catalog import load_tables
+from tests.conftest import SF_DIR
 
-SF_DIR = "/root/testdata/sf0.001"
 QUERIES = all_queries()
 
 
@@ -101,7 +101,6 @@ def test_join_size_estimate_matches_python_and_is_unbiased_shape(spark):
     from covid_weather_etl_spark.operators.relational_ext import (
         JOINEST_RATE, join_size_estimate,
     )
-    from tests.conftest import SF_DIR
 
     got = {r["join_key"]: r.asDict()
            for r in join_size_estimate(spark, SF_DIR).collect()}

@@ -30,3 +30,9 @@ def test_configure_existing_raises_on_rejected_value(spark, monkeypatch):
     with pytest.raises(Exception, match="INVALID_CONF_VALUE"):
         session.configure_existing(spark)
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_get_spark_sizes_the_codegen_cache(spark):
+    """The static codegen cache holds the engine's working set; Spark's
+    default of 100 classes recompiled every ETL batch."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2000"

@@ -13,8 +13,8 @@ from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.operators.timeseries import ALPHA
 from covid_weather_etl_spark.queries.registry import all_queries
+from tests.conftest import SF_DIR
 
-SF_DIR = "/root/testdata/sf0.001"
 QUERIES = all_queries()
 
 
@@ -137,7 +137,6 @@ def test_kalman_gain_converges_and_tracks(spark):
     from covid_weather_etl_spark.operators.timeseries import (
         KAL_Q, KAL_R)
     from covid_weather_etl_spark.queries.registry import all_queries
-    from tests.conftest import SF_DIR
 
     pdf = (all_queries()["kalman_level_smooth"].fn(spark, SF_DIR)
            .toPandas())

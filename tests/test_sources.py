@@ -7,6 +7,7 @@ from pyspark.sql import types as T
 
 from covid_weather_etl_spark.sources import io as SIO
 from covid_weather_etl_spark.sources import rest as R
+from tests.conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")
@@ -172,7 +173,7 @@ def test_orc_roundtrip_preserves_schema_and_pushdown(spark, tmp_path):
 
     from covid_weather_etl_spark.sources.io import read_orc, write_orc
 
-    df = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+    df = spark.read.parquet(f"{SF_DIR}/orders.parquet")
     path = str(tmp_path / "orders_orc")
     write_orc(df, path)
     back = read_orc(spark, path)

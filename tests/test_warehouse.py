@@ -579,10 +579,11 @@ def test_isotonic_agrees_with_spark_ml(spark):
         assert abs(mine - ml) < 1e-6, (mine, ml)
 
 
-def test_isotonic_driver_fit_memory_at_the_cap():
+def test_isotonic_driver_fit_memory_at_the_cap(spark):
     """At ISO_COLLECT_MAX bins the driver fit keeps under three (B+1)²
     float64 matrices alive at once: the segment matrix, its running
-    minimum and the triangle index."""
+    minimum and the triangle index. (`spark` is only for the JVM that
+    parses the output schema.)"""
     import tracemalloc
 
     import numpy as np
@@ -592,7 +593,7 @@ def test_isotonic_driver_fit_memory_at_the_cap():
 
     class Session:
         def createDataFrame(self, data, schema):
-            return data
+            return data     # the Arrow table `driver.local_frame` built
 
     B = ISO_COLLECT_MAX
     rng = np.random.default_rng(0)
@@ -605,8 +606,8 @@ def test_isotonic_driver_fit_memory_at_the_cap():
         peak = tracemalloc.get_traced_memory()[1]
     finally:
         tracemalloc.stop()
-    assert len(out) == B
-    fit = [r[4] for r in out]
+    assert out.num_rows == B
+    fit = out.column("iso_rate").to_pylist()
     assert fit == sorted(fit)
     assert peak < 3 * (B + 1) ** 2 * 8
 
