@@ -24,12 +24,44 @@ value in ``[0, 16^k)`` = ``4k`` bits. So k <= 15 fits a signed long
 (60 bits), and k <= 13 (52 bits) also survives a cast to double
 exactly. Every engine-side use of that hash calls ``md5_int``.
 
+The grid snap ``floor(x·10^s + 0.5) / 10^s`` is the engine's one
+cross-engine rounding rule, and this module is its only spelling, with
+one twin per context. Each twin runs the same IEEE operations
+(multiply, add, floor, divide), so bit-identical inputs give
+bit-identical outputs on Spark, DuckDB and the Python driver:
+
+- ``fround(col, s)`` for a ``Column``;
+- ``fround_sql(expr, s)`` for SQL text, run by DuckDB oracles and by
+  ``spark.sql`` alike;
+- ``fround_val(x, s)`` for a Python double on a driver fast path;
+- ``grid_sum(col, s)`` / ``grid_sum_sql(expr, s)``: the exact sum on
+  the same grid. Each addend snaps to an integer count of ``10^-s``
+  units, the BIGINT counts add exactly as DECIMAL(38,0) in any order,
+  and one cast to DOUBLE and one division by ``10^s`` finish. It is
+  for terms where a double→DECIMAL(p,6) cast is engine-divergent
+  (magnitudes above ~2^53·10^-6, PARITY.md §3b).
+
+The SQL twins write every literal in exponent form (``1e6``, ``5e-1``).
+Spark SQL parses ``1000000.0`` and ``0.5`` as DECIMAL literals, so
+``FLOOR(x * 1000000.0 + 0.5) / 1000000.0`` is typed ``decimal(30,9)``
+there, while ``FLOOR(x * 1e6 + 5e-1) / 1e6`` is DOUBLE on both engines
+(DuckDB types either form DOUBLE for a DOUBLE ``x``). So one text
+serves an oracle and a fragment that both engines run.
+
+Domain: finite doubles with ``|x|·10^s < 2^63``, because Spark's
+``FLOOR`` returns BIGINT (DuckDB's returns DOUBLE; inside that bound
+both hold the same integral value). NULL passes through the Column and
+SQL twins as NULL. Never spell the snap or the grid sum out elsewhere;
+``tests/test_numeric.py`` fails on an inline copy.
+
 Scale note: DECIMAL(25,6) sums hold ~10^19 — at 100 TB (~10^11 rows of
 ~10^5-magnitude values) this still fits with headroom, and decimal
 aggregation stays map-side combinable (partial sums are exact too).
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -84,17 +116,36 @@ def fround(col: Column, scale: int = 6) -> Column:
     DuckDB rounds in binary — a value whose repr ends in "…5" can round
     differently even from bit-identical inputs. This formulation is
     three IEEE ops both engines execute identically, so bit-identical
-    inputs give bit-identical outputs, always. (Spark's FLOOR returns
-    LONG, so |x·10^s| must stay under 2^63 — true for every stat here.)
+    inputs give bit-identical outputs, always.
     """
     p = float(10 ** scale)
     return F.floor(col * p + F.lit(0.5)) / F.lit(p)
 
 
 def fround_sql(expr: str, scale: int = 6) -> str:
-    """Oracle-side twin of ``fround``."""
+    """SQL text twin of ``fround``: DOUBLE on Spark SQL and DuckDB."""
+    return f"FLOOR(({expr}) * 1e{scale} + 5e-1) / 1e{scale}"
+
+
+def fround_val(x: float, scale: int = 6) -> float:
+    """Python value twin of ``fround`` for driver fast paths."""
     p = float(10 ** scale)
-    return f"FLOOR(({expr}) * {p!r} + 0.5) / {p!r}"
+    return math.floor(x * p + 0.5) / p
+
+
+def grid_sum(col: Column, scale: int) -> Column:
+    """Exact order-independent sum on the ``10^-s`` grid (see the
+    module docstring). Spark's FLOOR already yields BIGINT."""
+    p = float(10 ** scale)
+    return (F.sum(F.floor(col * F.lit(p) + F.lit(0.5)).cast("decimal(38,0)"))
+            .cast("double") / F.lit(p))
+
+
+def grid_sum_sql(expr: str, scale: int) -> str:
+    """SQL text twin of ``grid_sum``; the BIGINT cast turns DuckDB's
+    DOUBLE ``FLOOR`` into the integer that the DECIMAL sum adds."""
+    return (f"CAST(SUM(CAST(CAST(FLOOR(({expr}) * 1e{scale} + 5e-1)"
+            f" AS BIGINT) AS DECIMAL(38,0))) AS DOUBLE) / 1e{scale}")
 
 
 # ---------------------------------------------------------------------------

@@ -54,7 +54,8 @@ from pyspark.sql import types as T
 
 from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.numeric import (
-    cramer_sql, dsum, fround, fround_sql, md5_int,
+    cramer_sql, dsum, fround, fround_sql, fround_val, grid_sum,
+    grid_sum_sql, md5_int,
 )
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
@@ -320,27 +321,16 @@ _AR_B = ["sy", "s1y", "s2y", "s3y"]
 #: DECIMAL(38,6) holds 1e32 with headroom and stays map-combinable.
 _D38 = "CAST(SUM(CAST(({e}) AS DECIMAL(38,6))) AS DOUBLE)"
 
-#: PRODUCT terms accumulate as exact centi-unit INTEGERS, not as a
-#: double→DECIMAL(p,6) cast. Reason (measured at sf0.001: 61 of 350
-#: Gram sums off in the last digits): casting a ~1e12-magnitude
-#: double to DECIMAL(38,6) is engine-divergent — Spark goes through
-#: exact shortest-repr BigDecimal, DuckDB multiplies by 10^6 in
-#: double (ulp ≈ 512 at 1e18) before rounding to integer. The
-#: portable form: FLOOR(x·1e2 + 0.5) is three IEEE ops both engines
-#: execute identically and yields an integral double < 2^63 that
-#: casts to BIGINT exactly on both (truncation == rounding on
-#: integral values); BIGINTs widen to DECIMAL(38,0) losslessly and
-#: sum exactly; ONE cast-to-double of the (< 2^63) integer sum is
-#: correctly rounded on both engines; ONE division by 1e2 finishes.
-#: Bounds: per-term |x|·1e2 ≲ 1.6e15 and group sums ≲ 4e18 < 2^63 up
-#: to sf 1 — far above the checked-in SFs; the 1e-2 grid is 1e-15
-#: relative resolution on ~1e13 terms.
-_D38G = ("CAST(SUM(CAST(CAST(FLOOR(({e}) * 1e2 + 5e-1) AS BIGINT) "
-         "AS DECIMAL(38,0))) AS DOUBLE) / 1e2")
-
-
-def _d38_snap(e: str) -> str:
-    return _D38G.format(e=e)
+#: PRODUCT terms accumulate as exact centi-unit integers
+#: (``grid_sum_sql(e, 2)``), not as a double→DECIMAL(p,6) cast.
+#: Reason (measured at sf0.001: 61 of 350 Gram sums off in the last
+#: digits): casting a ~1e12-magnitude double to DECIMAL(38,6) is
+#: engine-divergent — Spark goes through exact shortest-repr
+#: BigDecimal, DuckDB multiplies by 10^6 in double (ulp ≈ 512 at
+#: 1e18) before rounding to integer. Bounds: per-term |x|·1e2 ≲
+#: 1.6e15 and group sums ≲ 4e18 < 2^63 up to sf 1 — far above the
+#: checked-in SFs; the 1e-2 grid is 1e-15 relative resolution on
+#: ~1e13 terms.
 
 
 # The fit+forecast is built from SHARED SQL TEXT FRAGMENTS that parse
@@ -368,16 +358,20 @@ def _ar_design_sql(src: str) -> str:
 
 
 def _ar_sums_sql(design_src: str) -> str:
-    d, p = _D38.format, _d38_snap
+    d = _D38.format
     return f"""
     SELECT n_name, CAST(COUNT(*) AS DOUBLE) AS n,
            {d(e='y1')} AS s1, {d(e='y2')} AS s2, {d(e='y3')} AS s3,
            {d(e='y')} AS sy,
-           {p('y1 * y1')} AS s11, {p('y1 * y2')} AS s12,
-           {p('y1 * y3')} AS s13, {p('y2 * y2')} AS s22,
-           {p('y2 * y3')} AS s23, {p('y3 * y3')} AS s33,
-           {p('y1 * y')} AS s1y, {p('y2 * y')} AS s2y,
-           {p('y3 * y')} AS s3y
+           {grid_sum_sql('y1 * y1', 2)} AS s11,
+           {grid_sum_sql('y1 * y2', 2)} AS s12,
+           {grid_sum_sql('y1 * y3', 2)} AS s13,
+           {grid_sum_sql('y2 * y2', 2)} AS s22,
+           {grid_sum_sql('y2 * y3', 2)} AS s23,
+           {grid_sum_sql('y3 * y3', 2)} AS s33,
+           {grid_sum_sql('y1 * y', 2)} AS s1y,
+           {grid_sum_sql('y2 * y', 2)} AS s2y,
+           {grid_sum_sql('y3 * y', 2)} AS s3y
     FROM {design_src} GROUP BY n_name
     HAVING COUNT(*) >= 5
     """
@@ -393,12 +387,11 @@ def _ar_coef_sql(sums_src: str) -> str:
 
 
 def _ar_final_sql(src: str, design_src: str, coef_src: str) -> str:
-    g = "FLOOR(({e}) * 1e6 + 5e-1) / 1e6".format
     return f"""
     mae AS (
         SELECT dd.n_name,
-               {_d38_snap('ABS(dd.y - (c.c0 + c.c1 * dd.y1'
-                          ' + c.c2 * dd.y2 + c.c3 * dd.y3))')}
+               {grid_sum_sql('ABS(dd.y - (c.c0 + c.c1 * dd.y1'
+                             ' + c.c2 * dd.y2 + c.c3 * dd.y3))', 2)}
                    / COUNT(*) AS mae_raw
         FROM {design_src} dd JOIN {coef_src} c ON c.n_name = dd.n_name
         GROUP BY dd.n_name
@@ -433,8 +426,8 @@ def _ar_final_sql(src: str, design_src: str, coef_src: str) -> str:
         UNION ALL SELECT n_name, 7 AS step, f7 AS fc FROM f7t
     )
     SELECT s.n_name, CAST(s.step AS INT) AS step,
-           {g(e='s.fc')} AS forecast,
-           {g(e='m.mae_raw')} AS mae_insample
+           {fround_sql('s.fc')} AS forecast,
+           {fround_sql('m.mae_raw')} AS mae_insample
     FROM steps s JOIN mae m ON m.n_name = s.n_name
     """
 
@@ -671,24 +664,12 @@ IRLS_ROUNDS = 4
 #: keeps it non-singular even if a round saturates the sigmoid.
 _IRLS_RIDGE = "1e-3"
 
-#: IRLS sufficient statistics accumulate as exact NANO-unit integers
-#: (the _D38G technique at 1e-9 instead of 1e-2: every addend here is
-#: O(1) — w = mu(1-mu) <= 0.25, |x_j| <= 1.04 — so the fine grid
-#: costs nothing and group sums stay far under 2^63 through sf 1+).
-_D9G = ("CAST(SUM(CAST(CAST(FLOOR(({e}) * 1e9 + 5e-1) AS BIGINT) "
-        "AS DECIMAL(38,0))) AS DOUBLE) / 1e9")
-
-
-def _d9_snap(e: str) -> str:
-    return _D9G.format(e=e)
-
-
-#: 1e-6 grid snap in EXPONENT-LITERAL form — Spark parses `1000000.0`
-#: (fround_sql's repr) as DECIMAL, DuckDB as DOUBLE; this text is run
-#: on BOTH engines, so every literal must be exponent-form (the
-#: ar_forecast discipline).
-def _g6(e: str) -> str:
-    return f"FLOOR(({e}) * 1e6 + 5e-1) / 1e6"
+#: IRLS sufficient statistics accumulate as exact nano-unit integers
+#: (``grid_sum_sql(e, 9)``: every addend here is O(1) — w = mu(1-mu)
+#: <= 0.25, |x_j| <= 1.04 — so the fine grid costs nothing and group
+#: sums stay far under 2^63 through sf 1+). The per-row sigmoid and
+#: the coefficients snap with ``fround_sql``, whose exponent-form text
+#: both engines run.
 
 
 def _irls_eta(d: str = "d", b: str = "b") -> str:
@@ -705,7 +686,7 @@ def _irls_sums_sql(design_src: str, beta_src: str) -> str:
     just the aggregate and replay the 4x4 Cramer solve on the driver
     (functions/numeric.det_val is the documented exact op-sequence
     twin of det_sql)."""
-    mu = _g6(f"1e0 / (1e0 + EXP(0e0 - {_irls_eta()}))")
+    mu = fround_sql(f"1e0 / (1e0 + EXP(0e0 - {_irls_eta()}))")
     mrows = (f"SELECT d.y, d.x1, d.x2, d.x3, "
              f"b.b0, b.b1, b.b2, b.b3, {mu} AS mu "
              f"FROM {design_src} d CROSS JOIN {beta_src} b "
@@ -722,7 +703,8 @@ def _irls_sums_sql(design_src: str, beta_src: str) -> str:
         "g1": f"({r} * x1)", "g2": f"({r} * x2)", "g3": f"({r} * x3)",
     }
     return (f"SELECT b0, b1, b2, b3, "
-            + ", ".join(f"{_d9_snap(e)} AS {k}" for k, e in terms.items())
+            + ", ".join(f"{grid_sum_sql(e, 9)} AS {k}"
+                        for k, e in terms.items())
             + f" FROM ({mrows}) mm GROUP BY b0, b1, b2, b3")
 
 
@@ -740,7 +722,7 @@ def _irls_round_sql(design_src: str, beta_src: str) -> str:
          ["s.s03", "s.s13", "s.s23", f"(s.s33 + {lam})"]]
     g = ["s.g0", "s.g1", "s.g2", "s.g3"]
     newb = ", ".join(
-        _g6(f"(s.b{k} + {cramer_sql(A, g, k)})") + f" AS b{k}"
+        fround_sql(f"(s.b{k} + {cramer_sql(A, g, k)})") + f" AS b{k}"
         for k in range(4))
     return f"SELECT {newb} FROM ({sums}) s"
 
@@ -762,7 +744,8 @@ def _irls_eval_sql(design_src: str, beta_src: str) -> str:
                 AS BIGINT) AS fn,
            CAST(SUM(CASE WHEN NOT ({y1}) AND {pred} = 0 THEN 1 ELSE 0 END)
                 AS BIGINT) AS tn,
-           {_g6("SUM(CASE WHEN (CASE WHEN " + y1 + " THEN 1 ELSE 0 END) = " + pred + " THEN 1e0 ELSE 0e0 END) / COUNT(*)")}
+           {fround_sql("SUM(CASE WHEN (CASE WHEN " + y1 + " THEN 1 ELSE 0 END)"
+                       " = " + pred + " THEN 1e0 ELSE 0e0 END) / COUNT(*)")}
                AS accuracy
     FROM {design_src} d CROSS JOIN {beta_src} b
     WHERE NOT d.is_train
@@ -864,8 +847,6 @@ def irls_logreg_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bit-identical to the old in-plan solve (pinned in tests/test_ml)
     # while Catalyst no longer analyzes ~800 determinant ops per round
     # (the dominant per-round cost: planning, not the aggregate).
-    import math
-
     from covid_weather_etl_spark.functions.numeric import det_val
     lam = float(_IRLS_RIDGE)
     beta = (0.0, 0.0, 0.0, 0.0)
@@ -885,9 +866,9 @@ def irls_logreg_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "irls_design_v", _blit(beta))).first())
             continue
         beta = tuple(
-            math.floor((beta[k] + det_val(
+            fround_val(beta[k] + det_val(
                 [[g[r] if c == k else A[r][c] for c in range(4)]
-                 for r in range(4)]) / det_a) * 1e6 + 0.5) / 1e6
+                 for r in range(4)]) / det_a)
             for k in range(4))
     return spark.sql(_irls_eval_sql("irls_design_v", _blit(beta)))
 
@@ -1055,13 +1036,6 @@ _HR_A = [["n2", "t1", "t2"],
          ["t2", "t12", "t22"]]
 _HR_B = ["ty", "t1y", "t2y"]
 
-_HR_G = "FLOOR(({e}) * 1e6 + 5e-1) / 1e6"
-
-
-def _hr_g(e: str) -> str:
-    return _HR_G.format(e=e)
-
-
 def _hr_series_sql(src: str) -> str:
     """rn/cnt indexing, the 80/20 cut, and the (D=1,s=7)(d=1) double
     difference w = Δ1 Δ7 y — pure window algebra, shared text."""
@@ -1101,7 +1075,7 @@ def _hr_resid_sql(design_src: str, coef_src: str) -> str:
     eta = "(c.c0 + c.c1 * d.y1 + c.c2 * d.y2 + c.c3 * d.y3)"
     return f"""
     SELECT d.n_name, d.d, d.y, d.y1,
-           {_hr_g(f'd.y - {eta}')} AS e
+           {fround_sql(f'd.y - {eta}')} AS e
     FROM {design_src} d JOIN {coef_src} c ON c.n_name = d.n_name
     """
 
@@ -1119,14 +1093,16 @@ def _hr_design2_sql(resid_src: str) -> str:
 def _hr_sums2_sql(d2_src: str) -> str:
     """Stage-2 sufficient statistics over [1, w_{{t-1}}, e_{{t-1}}] —
     all nine accumulate on the exact centi-unit integer grid
-    (order-free, map-combinable; the _D38G discipline)."""
-    p = _d38_snap
+    (order-free, map-combinable)."""
     return f"""
     SELECT n_name, CAST(COUNT(*) AS DOUBLE) AS n2,
-           {p('w1')} AS t1, {p('e1')} AS t2, {p('wv')} AS ty,
-           {p('w1 * w1')} AS t11, {p('w1 * e1')} AS t12,
-           {p('e1 * e1')} AS t22, {p('w1 * wv')} AS t1y,
-           {p('e1 * wv')} AS t2y
+           {grid_sum_sql('w1', 2)} AS t1, {grid_sum_sql('e1', 2)} AS t2,
+           {grid_sum_sql('wv', 2)} AS ty,
+           {grid_sum_sql('w1 * w1', 2)} AS t11,
+           {grid_sum_sql('w1 * e1', 2)} AS t12,
+           {grid_sum_sql('e1 * e1', 2)} AS t22,
+           {grid_sum_sql('w1 * wv', 2)} AS t1y,
+           {grid_sum_sql('e1 * wv', 2)} AS t2y
     FROM {d2_src} GROUP BY n_name
     HAVING COUNT(*) >= 4
     """
@@ -1147,7 +1123,6 @@ def _hr_final_sql(series_src: str, resid_src: str, coef2_src: str) -> str:
     forecast feedback — and the d=1 inversion is the chained partial
     sum zc_h = zc_{{h-1}} + f_h; theta enters step 1 only (future
     innovations are zero)."""
-    g = _hr_g
     bcols = ", ".join(
         f"MAX(CASE WHEN rn = ntr - {6 - h} THEN y END) AS b{h + 1}"
         for h in range(_HR_H))
@@ -1188,8 +1163,8 @@ def _hr_final_sql(series_src: str, resid_src: str, coef2_src: str) -> str:
     yh AS (SELECT *, {ycols} FROM z{_HR_H}c),
     steps AS ({steps})
     SELECT n_name, CAST(step AS INT) AS step, CAST(ntr AS INT) AS n_train,
-           {g('fc')} AS forecast, {g('actual')} AS actual,
-           {g('ABS(fc - actual)')} AS abs_err
+           {fround_sql('fc')} AS forecast, {fround_sql('actual')} AS actual,
+           {fround_sql('ABS(fc - actual)')} AS abs_err
     FROM steps
     """
 
@@ -2058,13 +2033,9 @@ def _hw_oracle() -> str:
                CAST(COUNT(*) AS INT) AS n_test,
                CAST(SUM(CAST(ABS(y - fc) AS DECIMAL(38,6)))
                     AS DOUBLE) AS sae,
-               CAST(SUM(CAST(CAST(FLOOR((y - fc) * (y - fc) * 1e4 + 5e-1)
-                                  AS BIGINT) AS DECIMAL(38,0)))
-                    AS DOUBLE) / 1e4 AS sse,
+               {grid_sum_sql('(y - fc) * (y - fc)', 4)} AS sse,
                CAST(SUM(CAST(y AS DECIMAL(25,6))) AS DOUBLE) AS sy,
-               CAST(SUM(CAST(CAST(FLOOR(y * y * 1e4 + 5e-1)
-                                  AS BIGINT) AS DECIMAL(38,0)))
-                    AS DOUBLE) / 1e4 AS syy
+               {grid_sum_sql('y * y', 4)} AS syy
         FROM joined GROUP BY n_name, n_train
     )
     SELECT n_name, n_train, n_test,
@@ -2111,18 +2082,14 @@ def holt_winters_forecast_eval(spark: SparkSession,
     # cast is engine-divergent above ~2^53·10^-6 (PARITY.md §3b).
     # ABS(err) stays under the safe-cast bound and keeps the exact
     # decimal path.
-    def isum(col):
-        return (F.sum(F.floor(col * F.lit(1e4) + F.lit(0.5))
-                      .cast("decimal(38,0)")).cast("double") / F.lit(1e4))
-
     agg = (rows.groupBy("n_name", "n_train")
            .agg(F.count("*").cast("int").alias("n_test"),
                 F.sum(F.abs(err).cast("decimal(38,6)")).cast("double")
                 .alias("sae"),
-                isum(err * err).alias("sse"),
+                grid_sum(err * err, 4).alias("sse"),
                 F.sum(F.col("y").cast("decimal(25,6)")).cast("double")
                 .alias("sy"),
-                isum(F.col("y") * F.col("y")).alias("syy")))
+                grid_sum(F.col("y") * F.col("y"), 4).alias("syy")))
     sst = F.col("syy") - F.col("sy") * F.col("sy") / F.col("n_test")
     return (agg.select(
         "n_name", "n_train", "n_test",
@@ -2379,8 +2346,8 @@ CONF_ALPHA = 0.1
            CAST(COUNT(*) AS BIGINT) AS n_test,
            CAST(SUM(CASE WHEN t.abs_e <= q.q_alpha THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_covered,
-           FLOOR(SUM(CASE WHEN t.abs_e <= q.q_alpha THEN 1 ELSE 0 END)
-                 * 1.0 / COUNT(*) * 1e6 + 0.5) / 1e6 AS coverage
+           {fround_sql("SUM(CASE WHEN t.abs_e <= q.q_alpha THEN 1 ELSE 0 END)"
+                       " * 1.0 / COUNT(*)")} AS coverage
     FROM test t JOIN q ON t.n_name = q.n_name
     GROUP BY 1, 2, 3
     """,
@@ -2440,8 +2407,7 @@ def conformal_forecast_intervals(spark: SparkSession,
             .groupBy("n_name", "n_cal", "q_alpha")
             .agg(F.count("*").alias("n_test"),
                  covered.alias("n_covered"),
-                 (F.floor(covered * 1.0 / F.count("*") * 1e6 + 0.5)
-                  / 1e6).alias("coverage")))
+                 fround(covered * 1.0 / F.count("*")).alias("coverage")))
 
 
 # ---------------------------------------------------------------------------

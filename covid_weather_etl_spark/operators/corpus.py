@@ -20,21 +20,18 @@ and oracle-checkable:
   windows.skew_resilient_running_total) is the drop-in replacement
   when one stream outgrows a task.
 - **near-dup cluster resolution**: connected components over the
-  3-gram-Jaccard near-dup pair set via iterative min-label
-  propagation, then keep the minimum doc id as each cluster's
+  3-gram-Jaccard near-dup pair set (`star_components`), then keep
+  the minimum doc id as each cluster's
   canonical representative — turning pairwise dedup output into an
   actual keep/drop decision.
 
 Scale notes (100 TB): sampling/packing/contamination are single-window
-or single-join plans partitioned by natural keys. Label propagation
-converges in O(diameter) rounds of one join + one min-aggregate each
-(near-dup cluster diameters are tiny in practice); each round shuffles
-only (doc_id, label) pairs, and the loop carries a single scalar per
-round to the driver for the convergence test. For adversarial graph
-shapes the same loop upgrades to the large-star/small-star algorithm
-(Kiveris et al., "Connected Components in MapReduce"), which bounds
-rounds at O(log² n) — the structure here (symmetric edges, min-label
-join, fixpoint test) is exactly that algorithm's inner step.
+or single-join plans partitioned by natural keys. Connected
+components run in one union-find task while the pair set fits
+CC_SINGLE_TASK_MAX, and above it as the large-star/small-star
+contraction (Kiveris et al., "Connected Components in MapReduce"):
+O(log² n) rounds of groupBy(min) + join on any graph shape, with a
+two-scalar checksum per round on the driver for the fixpoint test.
 """
 
 from __future__ import annotations
@@ -46,7 +43,7 @@ from pyspark.sql.window import Window as W
 from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
 from covid_weather_etl_spark.functions.numeric import (
-    fround, fround_sql, md5_int,
+    fround, fround_sql, fround_val, md5_int,
 )
 from covid_weather_etl_spark.functions.textops import ngrams, shingled_rows
 from covid_weather_etl_spark.operators import text as TX
@@ -64,8 +61,8 @@ TEST_CUT = "4"
 #: token budget per packed training batch (whitespace tokens).
 PACK_BUDGET = 2048
 
-#: label-propagation round cap — near-dup clusters are shallow; the
-#: cap only guards against adversarial chain graphs.
+#: star-contraction round cap — O(log² n) rounds suffice on any graph
+#: shape; the cap only guards against a contraction that never settles.
 MAX_CC_ROUNDS = 20
 
 
@@ -359,83 +356,27 @@ def tokenizer_drift_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup cluster resolution: connected components over the
-    3-gram-Jaccard pair set (ngram_jaccard_near_dup's edges) by
-    iterative min-label propagation — each round every node adopts the
-    minimum label among itself and its neighbors; at the fixpoint the
-    label is the component's minimum doc id, which becomes the
-    canonical document (is_canonical = keep, rest = drop). Singleton
-    documents keep their own id. Convergence is detected by the global
-    label sum (strictly decreasing until fixpoint), one scalar per
-    round on the driver. The oracle is an independent formulation:
-    DuckDB recursive-CTE label reachability + MIN.
-
-    Gated like the BFS/Bellman-Ford pair (r10): when the canonical
-    pair set fits CC_SINGLE_TASK_MAX, the contraction runs in the one
-    union-find task (cc_single_task — proven hash-identical to the
-    min-label fixpoint: both resolve every node to its component
-    minimum), composed with the corpus by one left join; the
-    propagation loop below is the above-cap scale path. The expensive
-    part either way is building the pair set, which stays fully
-    distributed."""
+    3-gram-Jaccard pair set (ngram_jaccard_near_dup's edges, already
+    canonical: doc_id_1 < doc_id_2). Every node is labelled with its
+    component's minimum doc id, which becomes the canonical document
+    (is_canonical = keep, rest = drop); singleton documents keep their
+    own id. The components come from `star_components`, which owns the
+    single-task union-find gate (cc_single_task) and the
+    large-star/small-star scale path; one left join composes them with
+    the corpus. The expensive part is building the pair set, which
+    stays fully distributed. The oracle is an independent formulation:
+    DuckDB recursive-CTE label reachability + MIN."""
     t = load_tables(spark, sf_dir, ("documents",))
     pairs = (TX.ngram_jaccard_near_dup(spark, sf_dir)
-             .select("doc_id_1", "doc_id_2")
-             .localCheckpoint(eager=False))
-    if driver.fits(pairs.count(), CC_SINGLE_TASK_MAX):
-        lbl = cc_single_task(pairs.select(F.col("doc_id_1").alias("a"),
-                                          F.col("doc_id_2").alias("b")))
-        return (t["documents"].select("doc_id")
-                .join(lbl.withColumnRenamed("node", "doc_id"),
-                      "doc_id", "left")
-                .select("doc_id",
-                        F.coalesce("lbl", "doc_id").alias("cluster_id"),
-                        (F.coalesce("lbl", "doc_id") == F.col("doc_id"))
-                        .alias("is_canonical")))
-    edges = (pairs.select(F.col("doc_id_1").alias("src"),
-                          F.col("doc_id_2").alias("dst"))
-             .unionByName(pairs.select(
-                 F.col("doc_id_2").alias("src"),
-                 F.col("doc_id_1").alias("dst")))
-             .persist())
-    labels = t["documents"].select(
-        "doc_id", F.col("doc_id").alias("label"))
-    prev_sum, prev_frame, converged = None, None, False
-    for _ in range(MAX_CC_ROUNDS):
-        neighbor = (labels
-                    .join(edges, labels["doc_id"] == edges["src"])
-                    .select(F.col("dst").alias("doc_id"), "label"))
-        labels = (labels.unionByName(neighbor)
-                  .groupBy("doc_id")
-                  .agg(F.min("label").alias("label"))
-                  .persist())
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if prev_frame is not None:
-            prev_frame.unpersist()   # round N-1's cache is dead weight
-        prev_frame = labels
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    edges.unpersist()
-    if not converged:
-        # A component with diameter > MAX_CC_ROUNDS would exit the loop
-        # with WRONG (unconverged) labels — fail loudly instead of
-        # returning them. Real near-dup graphs are shallow (clusters of
-        # copies, not long chains); hitting this means the cap, or the
-        # propagation scheme (large-star/small-star), needs revisiting.
-        prev_frame.unpersist()
-        raise RuntimeError(
-            f"dedup_clusters: min-label propagation did not converge "
-            f"within {MAX_CC_ROUNDS} rounds (component diameter exceeds "
-            f"the cap)")
-    # Materialize the fixpoint, then drop the loop's cache entry —
-    # persist() entries live in the CacheManager until explicitly
-    # unpersisted and would accumulate across a multi-query run.
-    final = labels.localCheckpoint(eager=True)
-    prev_frame.unpersist()
-    return final.select(
-        "doc_id", F.col("label").alias("cluster_id"),
-        (F.col("doc_id") == F.col("label")).alias("is_canonical"))
+             .select(F.col("doc_id_1").alias("a"),
+                     F.col("doc_id_2").alias("b")))
+    lbl = star_components(pairs, op_name="dedup_clusters")
+    return (t["documents"].select("doc_id")
+            .join(lbl.withColumnRenamed("node", "doc_id"), "doc_id", "left")
+            .select("doc_id",
+                    F.coalesce("lbl", "doc_id").alias("cluster_id"),
+                    (F.coalesce("lbl", "doc_id") == F.col("doc_id"))
+                    .alias("is_canonical")))
 
 
 # ---------------------------------------------------------------------------
@@ -864,6 +805,8 @@ def _token_budget_oracle() -> str:
     discrete capped-set selection and every emitted double match the
     driver-side Python solve bit-for-bit."""
     fl = "1000000.0"
+    alloc = ("CASE WHEN r.rk <= c.k THEN r.cap_d"
+             f" ELSE {fround_sql('c.lam * r.w_d')} END")
     return f"""
     WITH counts AS (
         SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -929,14 +872,10 @@ def _token_budget_oracle() -> str:
     )
     SELECT r.lang, r.n_docs, r.avail AS avail_tokens,
            r.w_d AS weight, r.cap_d AS cap_tokens,
-           CASE WHEN r.rk <= c.k THEN r.cap_d
-                ELSE FLOOR(c.lam * r.w_d * {fl} + 0.5) / {fl}
-           END AS alloc_tokens,
-           FLOOR(CASE WHEN r.rk <= c.k THEN r.cap_d
-                      ELSE FLOOR(c.lam * r.w_d * {fl} + 0.5) / {fl}
-                 END / r.avail * {fl} + 0.5) / {fl} AS epochs,
+           {alloc} AS alloc_tokens,
+           {fround_sql(alloc + ' / r.avail')} AS epochs,
            CAST(CASE WHEN r.rk <= c.k THEN 1 ELSE 0 END AS INT) AS capped,
-           FLOOR(c.lam * {fl} + 0.5) / {fl} AS fill_level
+           {fround_sql('c.lam')} AS fill_level
     FROM ranked r CROSS JOIN chosen c
     """
 
@@ -1024,16 +963,13 @@ def token_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError("token_budget_allocation: no valid water "
                            "level found despite a feasible budget")
 
-    def fr6(x: float) -> float:
-        return math.floor(x * 1e6 + 0.5) / 1e6
-
     out = []
     for rk, d in enumerate(items, start=1):
         capped = 1 if rk <= chosen_k else 0
-        alloc = d["cap_d"] if capped else fr6(lam * d["w_d"])
+        alloc = d["cap_d"] if capped else fround_val(lam * d["w_d"])
         out.append((d["lang"], d["n_docs"], d["avail"], d["w_d"],
-                    d["cap_d"], alloc, fr6(alloc / d["avail"]),
-                    capped, fr6(lam)))
+                    d["cap_d"], alloc, fround_val(alloc / d["avail"]),
+                    capped, fround_val(lam)))
     return driver.local_frame(
         spark, out, "lang string, n_docs bigint, avail_tokens bigint, "
                     "weight double, cap_tokens double, alloc_tokens double, "
@@ -1071,11 +1007,10 @@ CTX_LEN = 512  #: training context window, in whitespace tokens
                AS n_windows,
            CAST((SUM(n_tok) + {CTX_LEN - 1}) // {CTX_LEN} * {CTX_LEN}
                 - SUM(n_tok) AS BIGINT) AS pad_tokens,
-           FLOOR(CAST((SUM(n_tok) + {CTX_LEN - 1}) // {CTX_LEN}
-                      * {CTX_LEN} - SUM(n_tok) AS DOUBLE)
-                 / CAST((SUM(n_tok) + {CTX_LEN - 1}) // {CTX_LEN}
-                        * {CTX_LEN} AS DOUBLE)
-                 * 1000000.0 + 0.5) / 1000000.0 AS pad_fraction,
+           {fround_sql(f"CAST((SUM(n_tok) + {CTX_LEN - 1}) // {CTX_LEN}"
+                       f" * {CTX_LEN} - SUM(n_tok) AS DOUBLE)"
+                       f" / CAST((SUM(n_tok) + {CTX_LEN - 1}) // {CTX_LEN}"
+                       f" * {CTX_LEN} AS DOUBLE)")} AS pad_fraction,
            CAST(SUM(CASE WHEN tok_start // {CTX_LEN}
                               <> (tok_end - 1) // {CTX_LEN}
                          THEN 1 ELSE 0 END) AS BIGINT) AS docs_split
@@ -1122,9 +1057,8 @@ def context_packing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                  total.cast("long").alias("total_tokens"),
                  n_win.cast("long").alias("n_windows"),
                  pad.cast("long").alias("pad_tokens"),
-                 (F.floor(pad.cast("double")
-                          / (n_win * CTX_LEN).cast("double")
-                          * 1e6 + F.lit(0.5)) / F.lit(1e6))
+                 fround(pad.cast("double")
+                        / (n_win * CTX_LEN).cast("double"))
                  .alias("pad_fraction"),
                  split.cast("long").alias("docs_split")))
 
@@ -1277,11 +1211,10 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components by alternating large-star / small-star
-    contraction (Kiveris et al. 2014) — the O(log² n)-round twin of
-    `dedup_clusters`' min-label propagation, and the form SCALE.md
-    prescribes once a component's DIAMETER outgrows the round budget
-    (min-label needs O(diameter) rounds; star contraction collapses
-    long chains exponentially).
+    contraction (Kiveris et al. 2014), over the pair set canonicalized
+    here with least/greatest + distinct (`dedup_clusters` feeds the
+    already-canonical pairs straight in). Star contraction collapses
+    long chains exponentially: O(log² n) rounds, not O(diameter).
 
     One round = two halved-neighborhood star operations over the
     canonical (a < b) edge frame:
@@ -1295,8 +1228,7 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     xxhash64(a,b)) per round on the driver; at the fixpoint the frame
     IS the component star {{(min, v)}}, read off as labels with one
     left join for singletons. The oracle (recursive-CTE reachability +
-    MIN) and the pinned equality against `dedup_clusters` in
-    tests/test_corpus.py verify the outputs coincide."""
+    MIN) verifies the labels."""
     t = load_tables(spark, sf_dir, ("documents",))
     pairs = TX.ngram_jaccard_near_dup(spark, sf_dir) \
         .select(F.least("doc_id_1", "doc_id_2").alias("a"),
@@ -1312,8 +1244,8 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("is_canonical")))
 
 
-def star_components(pairs: DataFrame, op_name: str = "star_components",
-                    max_rounds: int = MAX_CC_ROUNDS) -> DataFrame:
+def star_components(pairs: DataFrame,
+                    op_name: str = "star_components") -> DataFrame:
     """Reusable large-star/small-star connected components over a
     canonical (a < b) undirected pair frame: returns (node, lbl) for
     every NON-singleton node, where lbl is the component minimum —
@@ -1322,9 +1254,10 @@ def star_components(pairs: DataFrame, op_name: str = "star_components",
     one key-projected join); fixpoint detected by a (count, DECIMAL
     xxhash sum) checksum — O(log² n) rounds on any graph shape.
 
-    Gated (r12) like dedup_clusters/BFS/Bellman-Ford: when the
-    materialized pair set fits CC_SINGLE_TASK_MAX, the whole
-    resolution runs in the one union-find task (cc_single_task —
+    The engine's one connected-components entry point, gated like
+    BFS/Bellman-Ford: when the materialized pair set fits
+    CC_SINGLE_TASK_MAX, the whole resolution runs in the one
+    union-find task (cc_single_task —
     hash-identical because components are unique and both paths
     label every node with the component minimum), deleting the
     contraction loop's per-round shuffle + checkpoint + checksum
@@ -1361,7 +1294,7 @@ def star_components(pairs: DataFrame, op_name: str = "star_components",
         return (row.n, row.h)
 
     prev, converged = checksum(E), False
-    for _ in range(max_rounds):
+    for _ in range(MAX_CC_ROUNDS):
         E = star(star(E, large=True), large=False).localCheckpoint(eager=False)
         cur = checksum(E)
         if cur == prev:
@@ -1371,7 +1304,7 @@ def star_components(pairs: DataFrame, op_name: str = "star_components",
     if not converged:
         raise RuntimeError(
             f"{op_name}: star contraction did not reach a fixpoint "
-            f"within {max_rounds} rounds")
+            f"within {MAX_CC_ROUNDS} rounds")
     return E.groupBy(F.col("b").alias("node")).agg(F.min("a").alias("lbl"))
 
 
@@ -1467,7 +1400,7 @@ def weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup survivorship with a QUALITY criterion: resolve the
-    3-gram-Jaccard near-dup graph into clusters (min-label CC, same
+    3-gram-Jaccard near-dup graph into clusters (the same
     components as `dedup_clusters`) and keep each cluster's LONGEST
     member (token count, tie → lowest doc id) instead of the arbitrary
     minimum id — the keep/drop policy production dedup actually ships
@@ -2102,14 +2035,14 @@ CDC_CHUNK_CTES = f"""
     SELECT source,
            CAST(COUNT(*) AS BIGINT) AS n_chunks,
            CAST(SUM(len) AS BIGINT) AS n_tokens,
-           FLOOR(SUM(len) * 1e0 / COUNT(*) * 1e6 + 0.5) / 1e6
+           {fround_sql("SUM(len) * 1e0 / COUNT(*)")}
                AS avg_chunk_tokens,
            CAST(SUM(CASE WHEN dup THEN 1 ELSE 0 END) AS BIGINT)
                AS dup_chunks,
            CAST(SUM(CASE WHEN dup THEN len ELSE 0 END) AS BIGINT)
                AS tokens_savable,
-           FLOOR(SUM(CASE WHEN dup THEN len ELSE 0 END) * 1e0
-                 / SUM(len) * 1e6 + 0.5) / 1e6 AS savable_share
+           {fround_sql("SUM(CASE WHEN dup THEN len ELSE 0 END) * 1e0"
+                       " / SUM(len)")} AS savable_share
     FROM marked
     GROUP BY source
     """,
@@ -2164,7 +2097,7 @@ def cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "domain_mix_kl_report",
     survey="corpus-mix,A5,A6,F10",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
         SELECT source, unnest(string_split(text, ' ')) AS t
         FROM documents
@@ -2188,7 +2121,7 @@ def cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         CROSS JOIN gt
     )
     SELECT t2.source, t2.ts AS n_tokens, t2.nd AS n_distinct_tokens,
-           FLOOR(CAST(SUM(u) AS DOUBLE) / 1e12 * 1e9 + 0.5) / 1e9 + 0.0
+           {fround_sql("CAST(SUM(u) AS DOUBLE) / 1e12", 9)} + 0.0
                AS kl_nats
     FROM terms JOIN st t2 ON t2.source = terms.source
     GROUP BY 1, 2, 3
@@ -2229,8 +2162,8 @@ def domain_mix_kl_report(spark: SparkSession, sf_dir: str) -> DataFrame:
              .crossJoin(F.broadcast(gt))
              .select("source", u.alias("u")))
     agg = terms.groupBy("source").agg(
-        (F.floor(F.sum("u").cast("double") / F.lit(1e12) * F.lit(1e9)
-                 + F.lit(0.5)) / F.lit(1e9) + F.lit(0.0)).alias("kl_nats"))
+        (fround(F.sum("u").cast("double") / F.lit(1e12), 9)
+         + F.lit(0.0)).alias("kl_nats"))
     return (agg.join(st, "source")
             .select("source", F.col("ts").alias("n_tokens"),
                     F.col("nd").alias("n_distinct_tokens"), "kl_nats"))
@@ -2289,9 +2222,9 @@ CDC_INC_CUT = "cc"
                 AS BIGINT) AS chunks_written,
            CAST(SUM(CASE WHEN hit_store OR hit_batch THEN 0 ELSE len END)
                 AS BIGINT) AS tokens_written,
-           FLOOR((1e0 - SUM(CASE WHEN hit_store OR hit_batch
-                                 THEN 0 ELSE len END) * 1e0 / SUM(len))
-                 * 1e6 + 0.5) / 1e6 AS dedup_ratio
+           {fround_sql("(1e0 - SUM(CASE WHEN hit_store OR hit_batch"
+                       " THEN 0 ELSE len END) * 1e0 / SUM(len))")}
+               AS dedup_ratio
     FROM cls GROUP BY doc_id
     """.format(CDC_CHUNK_CTES=CDC_CHUNK_CTES),
 )
@@ -2908,17 +2841,12 @@ def incremental_dedup_clusters(spark: SparkSession,
                  .filter(F.col("x") != F.col("y"))
                  .select(F.least("x", "y").alias("a"),
                          F.greatest("x", "y").alias("b"))
-                 .distinct()
-                 .localCheckpoint(eager=False))
+                 .distinct())
     # batch-merge graphs are edge-bounded by construction: one ingest
-    # can create at most |batch candidate pairs| merges, so the
-    # single-task union-find kernel applies; the star contraction is
-    # the fallback if an ingest ever exceeds the cap
-    if driver.fits(rep_edges.count(), CC_SINGLE_TASK_MAX):
-        merge_lbl = cc_single_task(rep_edges)
-    else:
-        merge_lbl = star_components(
-            rep_edges, op_name="incremental_dedup_clusters.merge")
+    # can create at most |batch candidate pairs| merges, so
+    # star_components' single-task union-find gate applies
+    merge_lbl = star_components(
+        rep_edges, op_name="incremental_dedup_clusters.merge")
     # compose: doc -> old representative -> merged label
     base = (t["documents"].select("doc_id")
             .join(old_star_t.withColumnRenamed("node", "doc_id"),

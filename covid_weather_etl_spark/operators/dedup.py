@@ -75,7 +75,8 @@ def dedup_on_load(new: DataFrame, existing: DataFrame, keys: list[str]) -> DataF
     """Reusable anti-join load dedup (reference loader existence probe,
     `etl/loader.py:36-57`): drop in-batch duplicates on the natural key,
     then anti-join against the target table. Returns only rows safe to
-    append. Used by `etl.pipeline`."""
+    append. Used by `etl.pipeline.load` and
+    `streaming.streams.upsert_gold_stream`."""
     return (
         new.dropDuplicates(keys)
         .join(existing.select(*keys).dropDuplicates(keys), on=keys, how="left_anti")

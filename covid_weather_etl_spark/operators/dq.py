@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from covid_weather_etl_spark.functions.numeric import fround, fround_sql
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
 
@@ -302,8 +303,8 @@ K_ANON_BAND = 1000.0
                AS n_violating_groups,
            CAST(SUM(CASE WHEN cnt < {K_ANON} THEN cnt ELSE 0 END) AS BIGINT)
                AS rows_at_risk,
-           FLOOR(SUM(CASE WHEN cnt < {K_ANON} THEN cnt ELSE 0 END) * 1.0
-                 / SUM(cnt) * 1e6 + 0.5) / 1e6 AS pct_at_risk
+           {fround_sql(f"SUM(CASE WHEN cnt < {K_ANON} THEN cnt ELSE 0 END)"
+                       " * 1.0 / SUM(cnt)")} AS pct_at_risk
     FROM g
     """,
 )
@@ -339,7 +340,7 @@ def k_anonymity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(cnt < K_ANON, 1).otherwise(0)).cast("long")
          .alias("n_violating_groups"),
         F.sum(viol).alias("rows_at_risk"),
-        (F.floor(F.sum(viol) * 1.0 / F.sum(cnt) * 1e6 + 0.5) / 1e6)
+        fround(F.sum(viol) * 1.0 / F.sum(cnt))
         .alias("pct_at_risk"))
 
 
@@ -376,11 +377,9 @@ def _md5_uniform_sql(key_expr: str) -> str:
     )
     SELECT segment,
            {DP_EPSILON} AS epsilon,
-           FLOOR((true_count
-                  - (1.0 / {DP_EPSILON})
-                    * CASE WHEN u >= 0.5 THEN 1.0 ELSE -1.0 END
-                    * ln(1.0 - 2.0 * ABS(u - 0.5)))
-                 * 1e6 + 0.5) / 1e6 AS noisy_count
+           {fround_sql(f"true_count - (1.0 / {DP_EPSILON})"
+                       " * CASE WHEN u >= 0.5 THEN 1.0 ELSE -1.0 END"
+                       " * ln(1.0 - 2.0 * ABS(u - 0.5))")} AS noisy_count
     FROM noised
     """,
 )
@@ -424,7 +423,7 @@ def dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return counts.select(
         "segment",
         F.lit(DP_EPSILON).alias("epsilon"),
-        (F.floor((F.col("true_count") + lap) * 1e6 + 0.5) / 1e6)
+        fround(F.col("true_count") + lap)
         .alias("noisy_count"))
 
 
@@ -466,7 +465,7 @@ L_DIV_BAND = 1000.0
            CAST(COUNT(*) AS BIGINT) AS n_groups,
            CAST(SUM(n) AS BIGINT) AS n_rows,
            CASE WHEN l >= {L_DIV} THEN 1 ELSE 0 END AS meets_l,
-           FLOOR(MIN(EXP(CAST(ent AS DOUBLE))) * 1e6 + 0.5) / 1e6
+           {fround_sql("MIN(EXP(CAST(ent AS DOUBLE)))")}
                AS min_entropy_l
     FROM grp GROUP BY l
     """,
@@ -507,8 +506,7 @@ def l_diversity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum("n").cast("long").alias("n_rows"),
                  F.max(F.when(F.col("l") >= L_DIV, 1).otherwise(0))
                  .cast("int").alias("meets_l"),
-                 (F.floor(F.min(F.exp(F.col("ent").cast("double")))
-                          * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
+                 fround(F.min(F.exp(F.col("ent").cast("double"))))
                  .alias("min_entropy_l"))
             .select("l", "n_groups", "n_rows", "meets_l",
                     "min_entropy_l"))
@@ -538,8 +536,8 @@ def _fd_oracle_sql() -> str:
            CAST(SUM(CASE WHEN n_rhs > 1 THEN 1 ELSE 0 END) AS BIGINT)
                AS n_violating_groups,
            CAST(SUM(cnt) - SUM(max_cnt) AS BIGINT) AS g3_rows,
-           FLOOR((SUM(cnt) - SUM(max_cnt)) * 1e0 / SUM(cnt)
-                 * 1e6 + 0.5) / 1e6 AS g3_error
+           {fround_sql("(SUM(cnt) - SUM(max_cnt)) * 1e0 / SUM(cnt)")}
+               AS g3_error
     FROM (
         SELECT {lhs}, CAST(COUNT(*) AS BIGINT) AS n_rhs,
                CAST(SUM(c) AS BIGINT) AS cnt,
@@ -594,9 +592,8 @@ def functional_dependency_profile(spark: SparkSession,
             .alias("n_violating_groups"),
             (F.sum("cnt") - F.sum("max_cnt")).cast("long")
             .alias("g3_rows"),
-            (F.floor((F.sum("cnt") - F.sum("max_cnt")) * F.lit(1.0)
-                     / F.sum("cnt") * F.lit(1e6) + F.lit(0.5))
-             / F.lit(1e6)).alias("g3_error")))
+            fround((F.sum("cnt") - F.sum("max_cnt")) * F.lit(1.0)
+                     / F.sum("cnt")).alias("g3_error")))
     out = outs[0]
     for o in outs[1:]:
         out = out.unionByName(o)

@@ -20,7 +20,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.functions import driver
-from covid_weather_etl_spark.functions.numeric import fround, md5_int
+from covid_weather_etl_spark.functions.numeric import (
+    fround, fround_sql, md5_int,
+)
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
 
@@ -537,16 +539,16 @@ CUPED_SPLIT = "2024-01-16"
     oracle=f"""
     WITH per_user AS (
         SELECT user_id,
-               CAST(FLOOR(
-                 CAST(SUM(CASE WHEN ts < TIMESTAMP '{CUPED_SPLIT}'
-                          THEN CAST(value AS DECIMAL(25,6)) END) AS DOUBLE)
-                 / COUNT(CASE WHEN ts < TIMESTAMP '{CUPED_SPLIT}' THEN 1 END)
-                 * 1e6 + 0.5) / 1e6 AS DECIMAL(14,6)) AS x,
-               CAST(FLOOR(
-                 CAST(SUM(CASE WHEN ts >= TIMESTAMP '{CUPED_SPLIT}'
-                          THEN CAST(value AS DECIMAL(25,6)) END) AS DOUBLE)
-                 / COUNT(CASE WHEN ts >= TIMESTAMP '{CUPED_SPLIT}' THEN 1 END)
-                 * 1e6 + 0.5) / 1e6 AS DECIMAL(14,6)) AS y
+               CAST({fround_sql(
+                 f"CAST(SUM(CASE WHEN ts < TIMESTAMP '{CUPED_SPLIT}'"
+                 " THEN CAST(value AS DECIMAL(25,6)) END) AS DOUBLE)"
+                 f" / COUNT(CASE WHEN ts < TIMESTAMP '{CUPED_SPLIT}'"
+                 " THEN 1 END)")} AS DECIMAL(14,6)) AS x,
+               CAST({fround_sql(
+                 f"CAST(SUM(CASE WHEN ts >= TIMESTAMP '{CUPED_SPLIT}'"
+                 " THEN CAST(value AS DECIMAL(25,6)) END) AS DOUBLE)"
+                 f" / COUNT(CASE WHEN ts >= TIMESTAMP '{CUPED_SPLIT}'"
+                 " THEN 1 END)")} AS DECIMAL(14,6)) AS y
         FROM events GROUP BY user_id
         HAVING COUNT(CASE WHEN ts < TIMESTAMP '{CUPED_SPLIT}' THEN 1 END) > 0
            AND COUNT(CASE WHEN ts >= TIMESTAMP '{CUPED_SPLIT}' THEN 1 END) > 0
@@ -561,12 +563,11 @@ CUPED_SPLIT = "2024-01-16"
     SELECT user_id,
            CAST(x AS DOUBLE) AS pre_mean,
            CAST(y AS DOUBLE) AS post_mean,
-           FLOOR((CAST(y AS DOUBLE)
-                  - ((n * sxy - sx * sy) / (n * sxx - sx * sx))
-                    * (CAST(x AS DOUBLE) - sx / n)) * 1e6 + 0.5) / 1e6
+           {fround_sql("(CAST(y AS DOUBLE)"
+                       " - ((n * sxy - sx * sy) / (n * sxx - sx * sx))"
+                       " * (CAST(x AS DOUBLE) - sx / n))")}
                AS post_adj,
-           FLOOR(((n * sxy - sx * sy) / (n * sxx - sx * sx)) * 1e6 + 0.5)
-               / 1e6 AS theta
+           {fround_sql("((n * sxy - sx * sy) / (n * sxx - sx * sx))")} AS theta
     FROM per_user CROSS JOIN stats
     """,
 )
@@ -649,19 +650,19 @@ DID_TREAT_MOD = 2
         MAX(CASE WHEN treated AND post THEN n END)          AS n_treat_post,
         MAX(CASE WHEN NOT treated AND NOT post THEN n END)  AS n_ctrl_pre,
         MAX(CASE WHEN NOT treated AND post THEN n END)      AS n_ctrl_post,
-        FLOOR(MAX(CASE WHEN treated AND NOT post THEN m END)
-              * 1e6 + 0.5) / 1e6                            AS m_treat_pre,
-        FLOOR(MAX(CASE WHEN treated AND post THEN m END)
-              * 1e6 + 0.5) / 1e6                            AS m_treat_post,
-        FLOOR(MAX(CASE WHEN NOT treated AND NOT post THEN m END)
-              * 1e6 + 0.5) / 1e6                            AS m_ctrl_pre,
-        FLOOR(MAX(CASE WHEN NOT treated AND post THEN m END)
-              * 1e6 + 0.5) / 1e6                            AS m_ctrl_post,
-        FLOOR(((MAX(CASE WHEN treated AND post THEN m END)
-                - MAX(CASE WHEN treated AND NOT post THEN m END))
-               - (MAX(CASE WHEN NOT treated AND post THEN m END)
-                  - MAX(CASE WHEN NOT treated AND NOT post THEN m END)))
-              * 1e6 + 0.5) / 1e6                            AS did
+        {fround_sql("MAX(CASE WHEN treated AND NOT post THEN m END)")}
+                                                            AS m_treat_pre,
+        {fround_sql("MAX(CASE WHEN treated AND post THEN m END)")}
+                                                            AS m_treat_post,
+        {fround_sql("MAX(CASE WHEN NOT treated AND NOT post THEN m END)")}
+                                                            AS m_ctrl_pre,
+        {fround_sql("MAX(CASE WHEN NOT treated AND post THEN m END)")}
+                                                            AS m_ctrl_post,
+        {fround_sql("(MAX(CASE WHEN treated AND post THEN m END)"
+                    " - MAX(CASE WHEN treated AND NOT post THEN m END))"
+                    " - (MAX(CASE WHEN NOT treated AND post THEN m END)"
+                    " - MAX(CASE WHEN NOT treated AND NOT post THEN m END))")}
+                                                            AS did
     FROM cells
     """,
 )
@@ -742,12 +743,12 @@ _OPE_PI_SQL = ("CASE event_type "
         FROM weighted
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n_logged,
-           FLOOR(CAST(SUM(wv9) AS DOUBLE) / COUNT(*) * 1e6 + 0.5) / 1e6
+           {fround_sql("CAST(SUM(wv9) AS DOUBLE) / COUNT(*)")}
                AS ips_value,
-           FLOOR(CAST(SUM(wv9) AS DOUBLE) / CAST(SUM(w9) AS DOUBLE)
-                 * 1e6 + 0.5) / 1e6 AS snips_value,
-           FLOOR(CAST(SUM(w9) AS DOUBLE) * CAST(SUM(w9) AS DOUBLE)
-                 / CAST(SUM(ww9) AS DOUBLE) * 1e6 + 0.5) / 1e6
+           {fround_sql("CAST(SUM(wv9) AS DOUBLE) / CAST(SUM(w9) AS DOUBLE)")}
+               AS snips_value,
+           {fround_sql("CAST(SUM(w9) AS DOUBLE) * CAST(SUM(w9) AS DOUBLE)"
+                       " / CAST(SUM(ww9) AS DOUBLE)")}
                AS effective_sample_size
     FROM terms
     """,
@@ -795,10 +796,9 @@ def ips_offpolicy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = F.count("*")
     return terms.agg(
         cnt.alias("n_logged"),
-        (F.floor(swv / cnt * 1e6 + 0.5) / 1e6).alias("ips_value"),
-        (F.floor(swv / sw * 1e6 + 0.5) / 1e6).alias("snips_value"),
-        (F.floor(sw * sw / sww * 1e6 + 0.5) / 1e6)
-        .alias("effective_sample_size"))
+        fround(swv / cnt).alias("ips_value"),
+        fround(swv / sw).alias("snips_value"),
+        fround(sw * sw / sww).alias("effective_sample_size"))
 
 
 # ---------------------------------------------------------------------------
@@ -1008,10 +1008,9 @@ def _nation_welch_z(spark: SparkSession, sf_dir: str) -> DataFrame:
              * (F.col("sx_g") - F.col("sx"))
              / (F.col("n_g") - F.col("n"))) \
         / (F.col("n_g") - F.col("n") - 1)
-    zexpr = F.floor((mean_a - mean_r)
-                    / F.sqrt(var_a / F.col("n")
-                             + var_r / (F.col("n_g") - F.col("n")))
-                    * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+    zexpr = fround((mean_a - mean_r)
+                   / F.sqrt(var_a / F.col("n")
+                            + var_r / (F.col("n_g") - F.col("n"))))
     return (s.crossJoin(F.broadcast(g))
             .filter(F.col("n") >= 2)
             .select("n_name", "n", zexpr.alias("z"))
@@ -1020,7 +1019,7 @@ def _nation_welch_z(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: shared CTE text: the 25-nation Welch-z test frame (s -> g -> z ->
 #: ranked) used by BOTH multiple-testing procedures below.
-_NATION_Z_CTES = """
+_NATION_Z_CTES = f"""
     s AS (
         SELECT n.n_name,
                CAST(COUNT(*) AS BIGINT) AS n,
@@ -1038,14 +1037,13 @@ _NATION_Z_CTES = """
         FROM s
     ), z AS (
         SELECT s.n_name, s.n,
-               FLOOR(((s.sx / s.n) - ((g.sx_g - s.sx) / (g.n_g - s.n)))
-                     / SQRT(((s.sxx - s.sx * s.sx / s.n) / (s.n - 1))
-                                / s.n
-                            + (((g.sxx_g - s.sxx)
-                                - (g.sx_g - s.sx) * (g.sx_g - s.sx)
-                                  / (g.n_g - s.n)) / (g.n_g - s.n - 1))
-                              / (g.n_g - s.n))
-                     * 1e6 + 0.5) / 1e6 AS z
+               {fround_sql("((s.sx / s.n) - ((g.sx_g - s.sx) / (g.n_g - s.n)))"
+                           " / SQRT(((s.sxx - s.sx * s.sx / s.n) / (s.n - 1))"
+                           " / s.n"
+                           " + (((g.sxx_g - s.sxx)"
+                           " - (g.sx_g - s.sx) * (g.sx_g - s.sx)"
+                           " / (g.n_g - s.n)) / (g.n_g - s.n - 1))"
+                           " / (g.n_g - s.n))")} AS z
         FROM s CROSS JOIN g
         WHERE s.n >= 2
     ), ranked AS (
@@ -1142,14 +1140,13 @@ def _holm_oracle() -> str:
         FROM s
     ), z AS (
         SELECT s.n_name, s.n,
-               FLOOR(((s.sx / s.n) - ((g.sx_g - s.sx) / (g.n_g - s.n)))
-                     / SQRT(((s.sxx - s.sx * s.sx / s.n) / (s.n - 1))
-                                / s.n
-                            + (((g.sxx_g - s.sxx)
-                                - (g.sx_g - s.sx) * (g.sx_g - s.sx)
-                                  / (g.n_g - s.n)) / (g.n_g - s.n - 1))
-                              / (g.n_g - s.n))
-                     * 1e6 + 0.5) / 1e6 AS z
+               {fround_sql("((s.sx / s.n) - ((g.sx_g - s.sx) / (g.n_g - s.n)))"
+                           " / SQRT(((s.sxx - s.sx * s.sx / s.n) / (s.n - 1))"
+                           " / s.n"
+                           " + (((g.sxx_g - s.sxx)"
+                           " - (g.sx_g - s.sx) * (g.sx_g - s.sx)"
+                           " / (g.n_g - s.n)) / (g.n_g - s.n - 1))"
+                           " / (g.n_g - s.n))")} AS z
         FROM s CROSS JOIN g
         WHERE s.n >= 2
     ), ranked AS (
@@ -1278,8 +1275,8 @@ def _srm_oracle() -> str:
     return f"""
     WITH counts AS ({body})
     SELECT seed, n_a, n_b,
-           FLOOR((n_a - n_b) * (n_a - n_b) * 1e0 / (n_a + n_b)
-                 * 1e6 + 0.5) / 1e6 AS chi2,
+           {fround_sql("(n_a - n_b) * (n_a - n_b) * 1e0 / (n_a + n_b)")}
+               AS chi2,
            CASE WHEN (n_a - n_b) * (n_a - n_b) * 1e0 / (n_a + n_b)
                      > {_SRM_CHI2_95!r} THEN 1 ELSE 0 END AS srm_95,
            CASE WHEN (n_a - n_b) * (n_a - n_b) * 1e0 / (n_a + n_b)
@@ -1332,8 +1329,7 @@ def srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("n_a") + F.col("n_b")))
     return counts.select(
         "seed", "n_a", "n_b",
-        (F.floor(chi2 * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
-        .alias("chi2"),
+        fround(chi2).alias("chi2"),
         F.when(chi2 > _SRM_CHI2_95, 1).otherwise(0).alias("srm_95"),
         F.when(chi2 > _SRM_CHI2_99, 1).otherwise(0).alias("srm_99"))
 

@@ -26,6 +26,9 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.functions import driver
+from covid_weather_etl_spark.functions.numeric import (
+    fround, fround_sql, fround_val,
+)
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
 
@@ -448,19 +451,19 @@ def _na_from_day_tab(spark: SparkSession, rows) -> DataFrame:
     driver (same gate/discipline as _km_from_day_tab; no
     transcendentals at all — each hazard term is one IEEE divide
     snapped 9dp via the Decimal(repr) replay of Spark ROUND,
-    DECIMAL-summed, finals g6-floored like the engine's fround)."""
-    import math
+    DECIMAL-summed, finals snapped with fround_val like the engine's
+    fround)."""
     from decimal import ROUND_HALF_UP, Decimal
 
     q9 = Decimal("1e-9")
-    g6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
     r9 = lambda x: Decimal(repr(x)).quantize(q9, ROUND_HALF_UP)  # noqa: E731
     out = []
     h, v = Decimal(0), Decimal(0)
     for day, d, c, n in _surv_at_risk(rows):
         h += r9(d * 1.0 / n)
         v += r9(d * 1.0 / (n * 1.0 * n))
-        out.append((day, n, d, c, g6(float(h)), g6(float(v))))
+        out.append((day, n, d, c, fround_val(float(h)),
+                    fround_val(float(v))))
     return driver.local_frame(
         spark, out, "day long, n_at_risk long, n_events long, "
                     "n_censored long, cum_hazard double, hazard_var double")
@@ -743,7 +746,6 @@ def _markov_oracle() -> str:
     whose term order matches the Python value twin exactly — the
     ridge_normal_equations identical-Cramer technique scaled up to the
     5×5 base chain and the four 4×4 removal chains."""
-    from covid_weather_etl_spark.functions.numeric import fround_sql
     states = ["START", *MARKOV_CHANNELS]
     dstname = {j: states[j] for j in range(5)}
     dstname[5], dstname[6] = "purchase", "END"
@@ -872,7 +874,6 @@ def markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
              .groupBy("src", "dst").agg(F.count("*").alias("n")))
     rows = trans.collect()                   # model-sized: ≤7×7 cells
 
-    import math
     states = ["START", *MARKOV_CHANNELS]
     idx = {s: i for i, s in enumerate(states)}
     counts = [[0] * 7 for _ in range(5)]
@@ -908,10 +909,8 @@ def markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     for e in effects:
         total += e
 
-    def fr9(x: float) -> float:
-        return math.floor(x * 1e9 + 0.5) / 1e9
-
-    out = [(ch, fr9(p_all), fr9(e), fr9(e / total) if total > 0 else 0.0)
+    out = [(ch, fround_val(p_all, 9), fround_val(e, 9),
+            fround_val(e / total, 9) if total > 0 else 0.0)
            for ch, e in zip(MARKOV_CHANNELS, effects)]
     return driver.local_frame(
         spark, out,
@@ -942,7 +941,7 @@ DECAY_HALF_LIFE_DAYS = 30.0
     )
     SELECT user_id,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           FLOOR(CAST(SUM(term) AS DOUBLE) * 1e6 + 5e-1) / 1e6
+           {fround_sql("CAST(SUM(term) AS DOUBLE)")}
                AS decayed_score
     FROM weighted GROUP BY user_id
     """,
@@ -980,8 +979,7 @@ def time_decay_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("user_id", term.alias("term"))
             .groupBy("user_id")
             .agg(F.count("*").alias("n_events"),
-                 (F.floor(F.sum("term").cast("double") * F.lit(1e6)
-                          + F.lit(0.5)) / F.lit(1e6))
+                 fround(F.sum("term").cast("double"))
                  .alias("decayed_score")))
 
 
@@ -1068,7 +1066,7 @@ def dpo_pair_construction(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "nelson_aalen_hazard",
     survey="ext-events,A6,J1,W1,F10",
-    oracle="""
+    oracle=f"""
     WITH su AS (
         SELECT user_id, MIN(ts) AS s FROM events
         WHERE event_type = 'signup' GROUP BY 1
@@ -1113,8 +1111,8 @@ def dpo_pair_construction(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(day AS BIGINT) AS day,
            CAST(n AS BIGINT) AS n_at_risk,
            d AS n_events, c AS n_censored,
-           FLOOR(CAST(h AS DOUBLE) * 1e6 + 0.5) / 1e6 AS cum_hazard,
-           FLOOR(CAST(v AS DOUBLE) * 1e6 + 0.5) / 1e6 AS hazard_var
+           {fround_sql("CAST(h AS DOUBLE)")} AS cum_hazard,
+           {fround_sql("CAST(v AS DOUBLE)")} AS hazard_var
     FROM haz
     """,
 )
@@ -1190,15 +1188,13 @@ def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("ra.c").alias("n_censored"),
                     F.col("ra.n").alias("n_at_risk"))
            .agg(F.sum(hterm).alias("h"), F.sum(vterm).alias("v")))
-    g6 = lambda c: F.floor(c.cast("double") * F.lit(1e6)  # noqa: E731
-                           + F.lit(0.5)) / F.lit(1e6)
     return haz.select(
         F.col("day").cast("long").alias("day"),
         F.col("n_at_risk").cast("long").alias("n_at_risk"),
         F.col("n_events").cast("long").alias("n_events"),
         F.col("n_censored").cast("long").alias("n_censored"),
-        g6(F.col("h")).alias("cum_hazard"),
-        g6(F.col("v")).alias("hazard_var"))
+        fround(F.col("h").cast("double")).alias("cum_hazard"),
+        fround(F.col("v").cast("double")).alias("hazard_var"))
 
 
 # ---------------------------------------------------------------------------
@@ -1232,9 +1228,9 @@ def _bt_single_task(directed: DataFrame) -> DataFrame:
     a double equals SQL FLOOR(DOUBLE), and the DECIMAL(25,0) per-item
     term sums are exact Python int sums. Per round, per item:
     denom_i = Σ_j floor(n_ij·1e9/(π_i+π_j) + 0.5)   (int sum),
-    pr_i    = floor(((w_i/denom_i)·1e9)·1e6 + 0.5)/1e6,
+    pr_i    = fround_val((w_i/denom_i)·1e9),
     tot     = float(Σ_i floor(pr_i·1e6 + 0.5))/1e6,
-    π_i     = floor(((pr_i·n)/tot)·1e6 + 0.5)/1e6
+    π_i     = fround_val((pr_i·n)/tot)
     — exactly the grid-snap sequence the SQL loop and the DuckDB
     oracle execute, so the result is hash-identical to both (pinned
     kernel-vs-loop in tests/test_eventstats.py)."""
@@ -1270,12 +1266,12 @@ def _bt_single_task(directed: DataFrame) -> DataFrame:
             for i, j, nij in pairs:
                 denom[i] += int(math.floor(nij * 1e9 / (pi[i] + pi[j])
                                            + 0.5))
-            pr = {it: math.floor(float(wins[it][0]) / float(denom[it])
-                                 * 1e9 * 1e6 + 0.5) / 1e6
+            pr = {it: fround_val(float(wins[it][0]) / float(denom[it])
+                                  * 1e9)
                   for it in wins}
             tot = float(sum(int(math.floor(v * 1e6 + 0.5))
                             for v in pr.values())) / 1e6
-            pi = {it: math.floor(pr[it] * n / tot * 1e6 + 0.5) / 1e6
+            pi = {it: fround_val(pr[it] * n / tot)
                   for it in wins}
         yield pd.DataFrame({
             "event_type": list(wins),
@@ -1291,10 +1287,6 @@ def _bt_single_task(directed: DataFrame) -> DataFrame:
            "strength double")
 
 
-def _bt_g6(e: str) -> str:
-    return f"FLOOR(({e}) * 1e6 + 5e-1) / 1e6"
-
-
 def _bt_round_sql(pairs: str, pi: str, wins: str, k_items: str) -> str:
     """One Bradley-Terry MM round (Hunter 2004) as shared SQL text:
     per-pair terms n_ij/(pi_i+pi_j) snapped to 1e-9 and decimal-
@@ -1303,9 +1295,9 @@ def _bt_round_sql(pairs: str, pi: str, wins: str, k_items: str) -> str:
     grid numbers on both engines."""
     raw = f"""
         SELECT w.item,
-               {_bt_g6("w.n_wins * 1e0 / CAST(SUM(CAST(FLOOR("
-                       "p.n_ij * 1e9 / (pa.pi + pb.pi) + 5e-1) "
-                       "AS DECIMAL(25,0))) AS DOUBLE) * 1e9")} AS pr
+               {fround_sql("w.n_wins * 1e0 / CAST(SUM(CAST(FLOOR("
+                           "p.n_ij * 1e9 / (pa.pi + pb.pi) + 5e-1) "
+                           "AS DECIMAL(25,0))) AS DOUBLE) * 1e9")} AS pr
         FROM {wins} w
         JOIN {pairs} p ON p.i = w.item
         JOIN {pi} pa ON pa.item = p.i
@@ -1314,8 +1306,8 @@ def _bt_round_sql(pairs: str, pi: str, wins: str, k_items: str) -> str:
     """
     return f"""
         SELECT r.item,
-               {_bt_g6("r.pr * (SELECT n FROM " + k_items + ") / "
-                       "t.tot")} AS pi
+               {fround_sql("r.pr * (SELECT n FROM " + k_items + ") / "
+                           "t.tot")} AS pi
         FROM ({raw}) r
         CROSS JOIN (SELECT CAST(SUM(CAST(FLOOR(pr * 1e6 + 5e-1)
                          AS DECIMAL(25,0))) AS DOUBLE) / 1e6 AS tot
@@ -1516,8 +1508,8 @@ def _shapley_oracle() -> str:
     )
     SELECT m.channel, t.n_users_touched, m.phi24,
            m.phi24 / {_SHAP_NFACT}e0 AS phi,
-           FLOOR(m.phi24 * 1e0 / ({_SHAP_NFACT}e0 * tot.attributable)
-                 * 1e6 + 0.5) / 1e6 AS share
+           {fround_sql(f"m.phi24 * 1e0 / ({_SHAP_NFACT}e0"
+                       " * tot.attributable)")} AS share
     FROM marg m JOIN touched t ON t.channel = m.channel
     CROSS JOIN tot
     """
@@ -1528,12 +1520,9 @@ def _shapley_from_cnt(spark: SparkSession, rows) -> DataFrame:
     driver from the collected mask census (≤15 rows BY DOMAIN — masks
     are non-zero 4-bit ints). Everything up to the two final divides
     is exact integer arithmetic (order-free); phi replays
-    phi24 / 24.0 and share replays FLOOR(phi24·1.0/(24.0·attributable)
-    ·1e6 + 0.5)/1e6 — the identical IEEE op sequence the Spark
-    expressions execute. Pinned driver-vs-distributed bitwise in
-    tests/test_eventstats.py."""
-    import math
-
+    phi24 / 24.0 and share is fround_val(phi24·1.0/(24.0·attributable))
+    — the identical IEEE op sequence the Spark expressions execute.
+    Pinned driver-vs-distributed bitwise in tests/test_eventstats.py."""
     cnt = {int(r["m"]): int(r["c"]) for r in rows}
     v = {s: sum(c for m, c in cnt.items() if (m & s) == m)
          for s in range(16)}
@@ -1544,9 +1533,8 @@ def _shapley_from_cnt(spark: SparkSession, rows) -> DataFrame:
                     for s in range(16) if (s & bit) == 0)
         touched = sum(c for m, c in cnt.items() if (m & bit) != 0)
         phi = phi24 / float(_SHAP_NFACT)
-        share = math.floor(phi24 * 1.0 / (float(_SHAP_NFACT)
-                                          * attributable)
-                           * 1e6 + 0.5) / 1e6
+        share = fround_val(phi24 * 1.0 / (float(_SHAP_NFACT)
+                                          * attributable))
         out.append((channel, touched, phi24, phi, share))
     return driver.local_frame(
         spark, out, "channel string, n_users_touched long, phi24 long, "
@@ -1634,10 +1622,9 @@ def shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("channel", "n_users_touched", "phi24",
                     (F.col("phi24") / F.lit(float(_SHAP_NFACT)))
                     .alias("phi"),
-                    (F.floor(F.col("phi24") * F.lit(1.0)
-                             / (F.lit(float(_SHAP_NFACT))
-                                * F.col("attributable"))
-                             * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
+                    fround(F.col("phi24") * F.lit(1.0)
+                           / (F.lit(float(_SHAP_NFACT))
+                              * F.col("attributable")))
                     .alias("share")))
 
 
@@ -1676,7 +1663,7 @@ PATH_MAX_STEPS = 8
     ), tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM paths)
     SELECT p.path, p.n_steps,
            CAST(COUNT(*) AS BIGINT) AS n_users,
-           FLOOR(COUNT(*) * 1e0 / MAX(t.n) * 1e6 + 0.5) / 1e6
+           {fround_sql("COUNT(*) * 1e0 / MAX(t.n)")}
                AS user_share
     FROM paths p CROSS JOIN tot t
     GROUP BY p.path, p.n_steps
@@ -1728,8 +1715,7 @@ def conversion_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (paths.crossJoin(F.broadcast(tot))
             .groupBy("path", "n_steps")
             .agg(F.count("*").alias("n_users"),
-                 (F.floor(F.count("*") * F.lit(1.0) / F.max("n")
-                          * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
+                 fround(F.count("*") * F.lit(1.0) / F.max("n"))
                  .alias("user_share"))
             .orderBy(F.col("n_users").desc(), "path")
             .limit(PATH_TOPK))

@@ -1,7 +1,7 @@
 """Graph analytics over the purchase network: weighted PageRank.
 
-Together with the min-label-propagation connected components in
-operators/corpus.py (dedup_clusters), this gives the engine the two
+Together with the connected components in operators/corpus.py
+(star_components), this gives the engine the two
 canonical iterative-graph primitives. The graph is the bipartite
 purchase network — customer ↔ supplier edges weighted by how many
 lineitems connect them (orders ⋈ lineitem) — and the query ranks
@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.functions import driver
+from covid_weather_etl_spark.functions.numeric import fround, fround_sql
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
 
@@ -231,7 +232,7 @@ _PR_ORACLE = f"""
         )
     )
     SELECT s.s_suppkey, s.s_name,
-           FLOOR(p.est * 1e9 + 0.5) / 1e9 AS rank
+           {fround_sql("p.est", 9)} AS rank
     FROM pr p JOIN supplier s ON p.node = 's:' || s.s_suppkey
     WHERE p.it = (SELECT MAX(it) FROM pr)
 """
@@ -253,7 +254,6 @@ def pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_graph.py additionally pins rank-mass conservation,
     parity with a numpy power iteration running the identical
     extrapolation/stopping rule, and determinism."""
-    from covid_weather_etl_spark.functions.numeric import fround
     t = load_tables(spark, sf_dir, ("lineitem", "orders", "supplier"))
     ranks = pagerank(purchase_edges(t))
     supp = (ranks.filter(F.col("node").startswith("s:"))

@@ -31,12 +31,12 @@ which is why the checked-in variant stays portable.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from covid_weather_etl_spark.functions.numeric import fround, md5_int
+from covid_weather_etl_spark.functions.numeric import (
+    fround, fround_sql, fround_val, md5_int,
+)
 from covid_weather_etl_spark.functions.textops import shingled_rows
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
@@ -542,7 +542,7 @@ def _calib_theory() -> dict[int, float]:
     for bkt in range(10):
         s = (bkt + 0.5) / 10.0
         p = 1.0 - (1.0 - s ** ROWS_PER_BAND) ** N_BANDS
-        out[bkt] = math.floor(p * 1e6 + 0.5) / 1e6
+        out[bkt] = fround_val(p)
     return out
 
 
@@ -593,8 +593,8 @@ def _calib_oracle() -> str:
            CAST(COUNT(*) AS BIGINT) AS n_pairs,
            CAST(SUM(CASE WHEN is_cand THEN 1 ELSE 0 END) AS BIGINT)
                AS n_candidates,
-           FLOOR(SUM(CASE WHEN is_cand THEN 1 ELSE 0 END) * 1e0
-                 / COUNT(*) * 1e6 + 0.5) / 1e6 AS observed_rate,
+           {fround_sql("SUM(CASE WHEN is_cand THEN 1 ELSE 0 END) * 1e0"
+                       " / COUNT(*)")} AS observed_rate,
            CASE bucket {theory} END AS theoretical_rate
     FROM bucketed
     GROUP BY bucket

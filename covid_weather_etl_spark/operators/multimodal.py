@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from covid_weather_etl_spark.functions.numeric import fround, fround_sql
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
 
@@ -586,7 +587,7 @@ def featurize_assets(assets: DataFrame, batch_rows: int = 256) -> DataFrame:
             .mapInPandas(extract, schema=FEATURE_SCHEMA))
 
 
-_FEAT_ORACLE = """
+_FEAT_ORACLE = f"""
     WITH chars AS MATERIALIZED (
         SELECT doc_id AS asset_id,
                ascii(unnest(split(text, ''))) AS byte
@@ -610,14 +611,13 @@ _FEAT_ORACLE = """
         FROM chars GROUP BY asset_id
     )
     SELECT asset_id, CAST(n AS INT) AS n_bytes,
-           FLOOR(CAST(s AS DOUBLE) / n * 1e5 + 0.5) / 1e5 AS f0,
-           FLOOR(sqrt(CAST(n * s2 - s * s AS DOUBLE)) / n
-                 * 1e5 + 0.5) / 1e5 AS f1,
+           {fround_sql("CAST(s AS DOUBLE) / n", 5)} AS f0,
+           {fround_sql("sqrt(CAST(n * s2 - s * s AS DOUBLE)) / n", 5)} AS f1,
            CAST(mn AS DOUBLE) AS f2, CAST(mx AS DOUBLE) AS f3,
-           FLOOR(CAST(h0 AS DOUBLE) / n * 1e5 + 0.5) / 1e5 AS f4,
-           FLOOR(CAST(h1 AS DOUBLE) / n * 1e5 + 0.5) / 1e5 AS f5,
-           FLOOR(CAST(h2 AS DOUBLE) / n * 1e5 + 0.5) / 1e5 AS f6,
-           FLOOR(CAST(h3 AS DOUBLE) / n * 1e5 + 0.5) / 1e5 AS f7
+           {fround_sql("CAST(h0 AS DOUBLE) / n", 5)} AS f4,
+           {fround_sql("CAST(h1 AS DOUBLE) / n", 5)} AS f5,
+           {fround_sql("CAST(h2 AS DOUBLE) / n", 5)} AS f6,
+           {fround_sql("CAST(h3 AS DOUBLE) / n", 5)} AS f7
     FROM m
 """
 
@@ -634,7 +634,6 @@ def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE chains; outputs snap to the 1e-5 grid with the portable
     floor-round on both sides. The REAL decoders stay pinned by
     planted-asset tests."""
-    from covid_weather_etl_spark.functions.numeric import fround
     t = load_tables(spark, sf_dir, ("documents",))
     feats = featurize_assets(media_assets(t["documents"]))
     return feats.select(

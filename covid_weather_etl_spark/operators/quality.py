@@ -355,7 +355,7 @@ def bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "char_entropy_quality",
     survey="ext-quality,A6,F10,P10",
-    oracle="""
+    oracle=f"""
     WITH chars AS (
         SELECT doc_id, n_chars,
                substring(text, CAST(unnest(range(1, length(text) + 1))
@@ -367,11 +367,11 @@ def bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_distinct_chars,
-           FLOOR(-CAST(SUM(CAST(
-               (cnt / CAST(n_chars AS DOUBLE))
-               * log2(cnt / CAST(n_chars AS DOUBLE))
-               AS DECIMAL(25,12))) AS DOUBLE) * 1000000.0 + 0.5)
-               / 1000000.0 AS char_entropy_bits
+           {fround_sql("-CAST(SUM(CAST("
+                       "(cnt / CAST(n_chars AS DOUBLE))"
+                       " * log2(cnt / CAST(n_chars AS DOUBLE))"
+                       " AS DECIMAL(25,12))) AS DOUBLE)")}
+               AS char_entropy_bits
     FROM freq
     GROUP BY doc_id, n_chars
     """,
@@ -555,6 +555,9 @@ def labeling_function_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: held-out split for the perplexity eval (~20% eval docs by md5 —
 #: the incremental-ingest convention).
 PPLX_EVAL_CUT = "cc"
+#: mean negative log-probability on the 1e-6 grid; perplexity is
+#: EXP of this snapped value, snapped again (both bigram evals).
+_AVG_NEG_LP_SQL = fround_sql("-CAST(SUM(k * lp) AS DOUBLE) / SUM(k)")
 
 
 @register(
@@ -589,9 +592,9 @@ PPLX_EVAL_CUT = "cc"
     ),
     terms AS (
         SELECT e.source, e.k,
-               CAST(FLOOR(LN((COALESCE(c12.c12, 0) + 1e0)
-                             / (COALESCE(c1.c1, 0) + vv.v))
-                          * 1e6 + 0.5) / 1e6 AS DECIMAL(25,6)) AS lp
+               CAST({fround_sql("LN((COALESCE(c12.c12, 0) + 1e0)"
+                                " / (COALESCE(c1.c1, 0) + vv.v))")}
+                    AS DECIMAL(25,6)) AS lp
         FROM ev e
         LEFT JOIN c12 ON c12.w1 = e.w1 AND c12.w2 = e.w2
         LEFT JOIN c1 ON c1.w1 = e.w1
@@ -599,11 +602,8 @@ PPLX_EVAL_CUT = "cc"
     )
     SELECT source,
            CAST(SUM(k) AS BIGINT) AS n_eval_bigrams,
-           FLOOR(-CAST(SUM(k * lp) AS DOUBLE) / SUM(k) * 1e6 + 0.5)
-               / 1e6 AS avg_neg_logprob,
-           FLOOR(EXP(FLOOR(-CAST(SUM(k * lp) AS DOUBLE) / SUM(k)
-                           * 1e6 + 0.5) / 1e6) * 1e6 + 0.5) / 1e6
-               AS perplexity
+           {_AVG_NEG_LP_SQL} AS avg_neg_logprob,
+           {fround_sql(f"EXP({_AVG_NEG_LP_SQL})")} AS perplexity
     FROM terms GROUP BY source
     """,
 )
@@ -711,16 +711,14 @@ KN_DISCOUNT = 0.75
     terms AS (
         SELECT e.source, e.k,
                CASE WHEN ctx.c1 IS NULL THEN 1 ELSE 0 END AS oov_ctx,
-               CAST(FLOOR(LN(
-                   CASE WHEN ctx.c1 IS NULL THEN
-                       (COALESCE(bw.n1b, 0) + 1e0) / (nbv.nb + nbv.v)
-                   ELSE
-                       GREATEST(COALESCE(c12.c12, 0) - {KN_DISCOUNT},
-                                0e0) / ctx.c1
-                       + (({KN_DISCOUNT} * ctx.n1f) / ctx.c1)
-                         * ((COALESCE(bw.n1b, 0) + 1e0)
-                            / (nbv.nb + nbv.v))
-                   END) * 1e6 + 0.5) / 1e6 AS DECIMAL(25,6)) AS lp
+               CAST({fround_sql(
+                   "LN(CASE WHEN ctx.c1 IS NULL THEN"
+                   " (COALESCE(bw.n1b, 0) + 1e0) / (nbv.nb + nbv.v)"
+                   f" ELSE GREATEST(COALESCE(c12.c12, 0) - {KN_DISCOUNT},"
+                   " 0e0) / ctx.c1"
+                   f" + (({KN_DISCOUNT} * ctx.n1f) / ctx.c1)"
+                   " * ((COALESCE(bw.n1b, 0) + 1e0) / (nbv.nb + nbv.v))"
+                   " END)")} AS DECIMAL(25,6)) AS lp
         FROM ev e
         LEFT JOIN c12 ON c12.w1 = e.w1 AND c12.w2 = e.w2
         LEFT JOIN ctx ON ctx.w1 = e.w1
@@ -731,11 +729,8 @@ KN_DISCOUNT = 0.75
            CAST(SUM(k) AS BIGINT) AS n_eval_bigrams,
            {fround_sql("SUM(k * oov_ctx) * 1e0 / SUM(k)")}
                AS oov_context_share,
-           FLOOR(-CAST(SUM(k * lp) AS DOUBLE) / SUM(k) * 1e6 + 0.5)
-               / 1e6 AS avg_neg_logprob,
-           FLOOR(EXP(FLOOR(-CAST(SUM(k * lp) AS DOUBLE) / SUM(k)
-                           * 1e6 + 0.5) / 1e6) * 1e6 + 0.5) / 1e6
-               AS perplexity
+           {_AVG_NEG_LP_SQL} AS avg_neg_logprob,
+           {fround_sql(f"EXP({_AVG_NEG_LP_SQL})")} AS perplexity
     FROM terms GROUP BY source
     """,
 )
@@ -794,8 +789,7 @@ def kneser_ney_bigram_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("c1")
             + ((d * F.col("n1f")) / F.col("c1")) * pc)
     p = F.when(F.col("c1").isNull(), pc).otherwise(seen)
-    lp = (F.floor(F.log(p) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)) \
-        .cast("decimal(25,6)")
+    lp = fround(F.log(p)).cast("decimal(25,6)")
     oov = F.when(F.col("c1").isNull(), 1).otherwise(0)
     terms = (ev.join(c12, ["w1", "w2"], "left")
              .join(ctx, "w1", "left")
@@ -804,13 +798,11 @@ def kneser_ney_bigram_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
              .crossJoin(F.broadcast(vv))
              .select("source", "k", oov.alias("oov_ctx"),
                      lp.alias("lp")))
-    avg_neg = (F.floor(-F.sum(F.col("k") * F.col("lp")).cast("double")
-                       / F.sum("k") * F.lit(1e6) + F.lit(0.5))
-               / F.lit(1e6))
+    avg_neg = fround(-F.sum(F.col("k") * F.col("lp")).cast("double")
+                     / F.sum("k"))
     return (terms.groupBy("source")
             .agg(F.sum("k").cast("long").alias("n_eval_bigrams"),
                  fround(F.sum(F.col("k") * F.col("oov_ctx")) * F.lit(1.0)
                         / F.sum("k")).alias("oov_context_share"),
                  avg_neg.alias("avg_neg_logprob"),
-                 (F.floor(F.exp(avg_neg) * F.lit(1e6) + F.lit(0.5))
-                  / F.lit(1e6)).alias("perplexity")))
+                 fround(F.exp(avg_neg)).alias("perplexity")))

@@ -24,6 +24,9 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.functions import driver
+from covid_weather_etl_spark.functions.numeric import (
+    fround, fround_sql, fround_val,
+)
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
 
@@ -837,7 +840,7 @@ NDCG_K = 10
         FROM dcg JOIN idcg ON dcg.c = idcg.c
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n_customers,
-           FLOOR(CAST(SUM(ndcg) AS DOUBLE) / COUNT(*) * 1e6 + 0.5) / 1e6
+           {fround_sql("CAST(SUM(ndcg) AS DOUBLE) / COUNT(*)")}
              AS mean_ndcg
     FROM per_cust
     """,
@@ -891,8 +894,8 @@ def ndcg_popularity_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
                         .cast("decimal(20,9)").alias("ndcg")))
     return (per_cust.agg(
         F.count("*").alias("n_customers"),
-        (F.floor(F.sum("ndcg").cast("double") / F.count("*")
-                 * 1e6 + 0.5) / 1e6).alias("mean_ndcg")))
+        fround(F.sum("ndcg").cast("double") / F.count("*"))
+        .alias("mean_ndcg")))
 
 
 # ---------------------------------------------------------------------------
@@ -911,7 +914,7 @@ RBO_DEPTH = 50
 # ≤50-row work (SCALE.md §13 tax) — runs in ONE mapInPandas task.
 # Exactness: the DECIMAL totals cross Arrow as exact decimal.Decimal
 # (rank comparisons unchanged); the only float replays are
-# pow/round-9dp/g6, pinned bit-identical to the JVM in
+# pow/round-9dp/fround_val, pinned bit-identical to the JVM in
 # tests/test_ranking.py (data-INDEPENDENT inputs: p^(d-1), d ≤ 50).
 def _rbo_single_task(heads: DataFrame) -> DataFrame:
     """Whole-RBO-in-one-task kernel over the tagged union of the two
@@ -921,7 +924,6 @@ def _rbo_single_task(heads: DataFrame) -> DataFrame:
     9dp-snapped RBO terms (Double.toString/HALF_UP semantics via
     Decimal(repr(x))) and the 1e-6 grid finals — see
     the comment above it for the bit-exactness argument."""
-    import math
     from decimal import ROUND_HALF_UP, Decimal
 
     import pandas as pd
@@ -966,9 +968,8 @@ def _rbo_single_task(heads: DataFrame) -> DataFrame:
             raw = (1.0 - RBO_P) * powv[d - 1] * float(o) / float(d)
             terms.append(Decimal(repr(raw)).quantize(q9, ROUND_HALF_UP))
             if d in RBO_REPORT_DEPTHS:
-                g6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa
-                recs.append((d, o, g6(float(o) * 1.0 / float(d)),
-                             g6(float(sum(terms)))))
+                recs.append((d, o, fround_val(float(o) * 1.0 / float(d)),
+                             fround_val(float(sum(terms)))))
         yield pd.DataFrame({c: pd.Series([r[i] for r in recs], dtype=t)
                             for i, (c, t) in enumerate(cols.items())})
 
@@ -1018,8 +1019,8 @@ RBO_REPORT_DEPTHS = (10, 25, 50)
     )
     SELECT a.d AS depth,
            a.o AS n_overlap,
-           FLOOR(a.o * 1e0 / a.d * 1e6 + 0.5) / 1e6 AS agreement,
-           FLOOR(CAST(SUM(b.term) AS DOUBLE) * 1e6 + 0.5) / 1e6
+           {fround_sql("a.o * 1e0 / a.d")} AS agreement,
+           {fround_sql("CAST(SUM(b.term) AS DOUBLE)")}
                AS rbo_truncated
     FROM terms a JOIN terms b ON b.d <= a.d
     WHERE a.d IN ({", ".join(str(d) for d in RBO_REPORT_DEPTHS)})
@@ -1095,14 +1096,13 @@ def rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                    * F.col("o") / F.col("d"), 9).cast("decimal(25,9)")
     terms = od.select("d", "o", term.alias("term"))
     a, b = terms.alias("a"), terms.alias("b")
-    g6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return (a.join(F.broadcast(b), F.col("b.d") <= F.col("a.d"))
             .filter(F.col("a.d").isin(*RBO_REPORT_DEPTHS))
             .groupBy(F.col("a.d").alias("depth"),
                      F.col("a.o").alias("n_overlap"))
-            .agg(g6(F.col("n_overlap") * F.lit(1.0) / F.col("depth"))
+            .agg(fround(F.col("n_overlap") * F.lit(1.0) / F.col("depth"))
                  .alias("agreement"),
-                 g6(F.sum("b.term").cast("double"))
+                 fround(F.sum("b.term").cast("double"))
                  .alias("rbo_truncated"))
             .select("depth", F.col("n_overlap").cast("long")
                     .alias("n_overlap"), "agreement", "rbo_truncated"))

@@ -690,6 +690,7 @@ def _joinest_pair_sql(table: str, key: str) -> str:
     oracle=f"""
     SELECT join_key, actual_pairs, estimated_pairs,
            FLOOR((estimated_pairs - actual_pairs) * 1e6 * 1e0
+                 -- not the kernel: scaled before the division
                  / actual_pairs + 5e-1) / 1e6 AS rel_err
     FROM (
         {_joinest_pair_sql('lineitem', 'l_partkey')}
@@ -737,6 +738,7 @@ def join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     rel = ((F.col("estimated_pairs") - F.col("actual_pairs"))
            * F.lit(1e6) * F.lit(1.0) / F.col("actual_pairs"))
     return (out.select("join_key", "actual_pairs", "estimated_pairs",
+                       # not the kernel: scaled before the division
                        (F.floor(rel + F.lit(0.5)) / F.lit(1e6))
                        .alias("rel_err"))
             .orderBy("join_key"))

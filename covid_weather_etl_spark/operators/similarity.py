@@ -29,7 +29,9 @@ from pyspark.sql import types as T
 
 from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
-from covid_weather_etl_spark.functions.numeric import md5_int
+from covid_weather_etl_spark.functions.numeric import (
+    fround, fround_sql, fround_val, md5_int,
+)
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import (
     load_tables, read_parquet, spread,
@@ -1306,7 +1308,7 @@ def embedding_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "embedding_dim_profile",
     survey="LLM-sim,A6,A8,A12",
-    oracle="""
+    oracle=f"""
     WITH dims AS (
         SELECT label,
                generate_subscripts(embedding, 1) - 1 AS pos,
@@ -1315,8 +1317,8 @@ def embedding_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT label, pos,
            COUNT(*) AS n_vecs,
-           FLOOR(CAST(SUM(CAST(val AS DECIMAL(25,6))) AS DOUBLE)
-                 / COUNT(*) * 1000000.0 + 0.5) / 1000000.0 AS mean_val,
+           {fround_sql("CAST(SUM(CAST(val AS DECIMAL(25,6))) AS DOUBLE)"
+                       " / COUNT(*)")} AS mean_val,
            MIN(val) AS min_val,
            MAX(val) AS max_val
     FROM dims
@@ -1339,7 +1341,6 @@ def embedding_dim_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     original float32 values are exact in both engines. At 100 TB this
     is the standard one-pass profile: D×L output rows regardless of
     corpus size."""
-    from covid_weather_etl_spark.functions.numeric import fround
     from covid_weather_etl_spark.sources.catalog import spread
 
     t = load_tables(spark, sf_dir, ("embeddings",))
@@ -1430,6 +1431,7 @@ def knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             a = a / np.linalg.norm(a, axis=1, keepdims=True)
             s = a @ xn_b.T
             # 6dp half-away-from-zero, same as DuckDB/Spark ROUND
+            # (not the kernel: sign-symmetric, snaps |s| then re-signs)
             s = np.sign(s) * np.floor(np.abs(s) * 1e6 + 0.5) / 1e6
             a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             s[a_ids[:, None] == ids_b[None, :]] = -np.inf  # leave-one-out
@@ -1713,15 +1715,15 @@ def _pca_power_solve(M: dict, d: int) -> tuple:
                  for j in range(d)) / 1e12 for i in range(d)]
         s2 = sum(math.floor(wi * wi * 1e9 + 0.5) for wi in w) / 1e9
         nrm = math.sqrt(s2)
-        v = [math.floor(wi / nrm * 1e12 + 0.5) / 1e12 for wi in w]
+        v = [fround_val(wi / nrm, 12) for wi in w]
     ks = max(range(d), key=lambda i: (abs(v[i]), -i))
     sgn = -1.0 if v[ks] < 0 else 1.0
     num = sum(math.floor((v[i] * A[i][j]) * v[j] * 1e12 + 0.5)
               for i in range(d) for j in range(d)) / 1e12
     den = sum(math.floor(v[i] * v[i] * 1e12 + 0.5) for i in range(d)) / 1e12
     tr = sum(math.floor(A[i][i] * 1e6 + 0.5) for i in range(d)) / 1e6
-    evr = math.floor((num / den) / tr * 1e9 + 0.5) / 1e9
-    return [math.floor(sgn * v[k] * 1e9 + 0.5) / 1e9 for k in range(d)], evr
+    evr = fround_val((num / den) / tr, 9)
+    return [fround_val(sgn * v[k], 9) for k in range(d)], evr
 
 
 def _pca_oracle() -> str:
@@ -1793,7 +1795,7 @@ def _pca_oracle() -> str:
                              AS DOUBLE) / 1e9) AS s
             FROM w
          )
-         SELECT c0.t + 1, w.k, FLOOR(w.w / nrm.s * 1e12 + 0.5) / 1e12
+         SELECT c0.t + 1, w.k, {fround_sql("w.w / nrm.s", 12)}
          FROM w, nrm, (SELECT DISTINCT t FROM cur) c0
          WHERE c0.t < {T})
     ),
@@ -1818,8 +1820,8 @@ def _pca_oracle() -> str:
         FROM ah WHERE i = j
     )
     SELECT CAST(f.k AS INT) AS dim,
-           FLOOR(sgn.s * f.v * 1e9 + 0.5) / 1e9 + 0.0 AS loading,
-           FLOOR((ray.num / den.den) / trd.tr * 1e9 + 0.5) / 1e9 + 0.0
+           {fround_sql("sgn.s * f.v", 9)} + 0.0 AS loading,
+           {fround_sql("(ray.num / den.den) / trd.tr", 9)} + 0.0
                AS explained_var_ratio
     FROM fin f, sgn, ray, den, trd
     ORDER BY dim
@@ -1950,7 +1952,7 @@ def _rrf_oracle() -> str:
         FROM sparse s FULL OUTER JOIN dense d USING (doc_id)
     )
     SELECT doc_id, sparse_rank, dense_rank,
-           FLOOR(rrf * 1000000.0 + 0.5) / 1000000.0 AS rrf_score
+           {fround_sql("rrf")} AS rrf_score
     FROM fused ORDER BY rrf DESC, doc_id LIMIT {RRF_TOP}
     """
 
@@ -2014,7 +2016,6 @@ def rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.coalesce("dense_rank", F.lit(0)).cast("long")
                      .alias("dense_rank"),
                      rrf.alias("rrf")))
-    from covid_weather_etl_spark.functions.numeric import fround
     return (fused.orderBy(F.col("rrf").desc(), F.col("doc_id"))
             .limit(RRF_TOP)
             .select("doc_id", "sparse_rank", "dense_rank",
@@ -2084,7 +2085,7 @@ def _mmr_oracle() -> str:
     SELECT step, doc_id,
            rel + 0.0 AS rel,
            div + 0.0 AS div,
-           FLOOR(mmr * 1000000.0 + 0.5) / 1000000.0 AS mmr_score
+           {fround_sql("mmr")} AS mmr_score
     FROM ({union_all})
     """
 
@@ -2151,7 +2152,7 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         selected.append((d, r))
         del remaining[d]
         out.append((step, d, r, float(div),
-                    __import__("math").floor(score * 1e6 + 0.5) / 1e6))
+                    fround_val(score)))
     return driver.local_frame(
         spark, out, "step int, doc_id bigint, rel double, div double, "
                     "mmr_score double")
@@ -2546,14 +2547,13 @@ def _ivf_incremental_oracle() -> str:
     FROM cb LEFT JOIN counts c ON c.c_id = cb.c_id
     CROSS JOIN tot t
     """.format(
-        share_before=("FLOOR(COALESCE(c.n_old, 0) * 1e0 / t.t_old"
-                      " * 1e6 + 0.5) / 1e6"),
-        share_after=("FLOOR((COALESCE(c.n_old, 0) + COALESCE(c.n_new, 0))"
-                     " * 1e0 / t.t_all * 1e6 + 0.5) / 1e6"),
-        drift=("FLOOR(((COALESCE(c.n_old, 0) + COALESCE(c.n_new, 0))"
-               " * 1e0 / t.t_all"
-               " - COALESCE(c.n_old, 0) * 1e0 / t.t_old)"
-               " * 1e6 + 0.5) / 1e6 + 0.0"))
+        share_before=fround_sql("COALESCE(c.n_old, 0) * 1e0 / t.t_old"),
+        share_after=fround_sql("(COALESCE(c.n_old, 0) + COALESCE(c.n_new, 0))"
+                               " * 1e0 / t.t_all"),
+        drift=fround_sql("(COALESCE(c.n_old, 0) + COALESCE(c.n_new, 0))"
+                         " * 1e0 / t.t_all"
+                         " - COALESCE(c.n_old, 0) * 1e0 / t.t_old")
+        + " + 0.0")
 
 
 @register("ivf_incremental_ingest", survey="LLM-sim,A6,J4,U2",
@@ -2579,7 +2579,6 @@ def ivf_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals join. Zero wide shuffles at any corpus size. Exactness:
     integer counts + fround-snapped single divisions (and a trailing
     +0.0 on the signed drift to normalize −0.0 across engines)."""
-    from covid_weather_etl_spark.functions.numeric import fround
     rows = ensure_ivf_codebook(spark, sf_dir)
     t = load_tables(spark, sf_dir, ("embeddings",))
     emb = _vecs(t["embeddings"])
@@ -2623,7 +2622,6 @@ def _ivf_nprobe_oracle() -> str:
     assignment, per-query cell ranking, per-nprobe candidate sets,
     exact in-candidate top-k, and the recall/scan-share aggregates."""
     path = ivf_codebook_path("/root/testdata/sf0.01")
-    from covid_weather_etl_spark.functions.numeric import fround_sql
     return f"""
     WITH cb AS (
         SELECT c_id, cv FROM read_parquet('{path}/*.parquet')
@@ -2721,7 +2719,6 @@ def ivf_nprobe_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid); rankings use per-(nprobe, query) windows, never global.
     Oracle replays everything from the persisted artifact; recall and
     scan-share are integer-sum ratios on the fround grid."""
-    from covid_weather_etl_spark.functions.numeric import fround
     rows = ensure_ivf_codebook(spark, sf_dir)
     t = load_tables(spark, sf_dir, ("embeddings",))
     emb = _vecs(t["embeddings"])
@@ -2830,12 +2827,12 @@ def _cluster_purity_oracle() -> str:
     SELECT maj.cell,
            maj.n_vecs,
            CAST(-(maj.m[2]) AS INT) AS majority_label,
-           FLOOR(maj.m[1] * 1e0 / maj.n_vecs * 1e6 + 0.5) / 1e6
+           {fround_sql("maj.m[1] * 1e0 / maj.n_vecs")}
                AS majority_share,
-           FLOOR(pur.hits * 1e0 / tot.nn * 1e6 + 0.5) / 1e6 AS purity,
-           FLOOR(CAST(mi.mi AS DOUBLE)
-                 / SQRT(CAST(hc.h AS DOUBLE) * CAST(hl.h AS DOUBLE))
-                 * 1e6 + 0.5) / 1e6 AS nmi
+           {fround_sql("pur.hits * 1e0 / tot.nn")} AS purity,
+           {fround_sql("CAST(mi.mi AS DOUBLE)"
+                       " / SQRT(CAST(hc.h AS DOUBLE) * CAST(hl.h AS DOUBLE))")}
+               AS nmi
     FROM maj CROSS JOIN pur CROSS JOIN tot
     CROSS JOIN mi CROSS JOIN hc CROSS JOIN hl
     """
@@ -2874,8 +2871,6 @@ def _cpn_from_cells(spark: SparkSession, cells) -> DataFrame:
     def r9(x: float) -> Decimal:
         return Decimal(repr(x)).quantize(q9, ROUND_HALF_UP)
 
-    g6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
-
     tab = [(int(r["cell"]), int(r["label"]), int(r["n"])) for r in cells]
     # ADVICE r12 hardening: empty corpus -> the distributed path's
     # empty frame (no 0/0 purity); degenerate entropy (single cluster
@@ -2906,9 +2901,9 @@ def _cpn_from_cells(spark: SparkSession, cells) -> DataFrame:
         n_maj, neg = max((n, -l) for l, n in pairs)
         hits += n_maj
         recs.append((c, nc[c], n_maj, -neg))
-    nmi = g6(float(mi) / math.sqrt(float(hc) * float(hl)))
-    purity = g6(hits * 1.0 / nn)
-    out = [(c, n_vecs, lbl, g6(n_maj * 1.0 / n_vecs), purity, nmi)
+    nmi = fround_val(float(mi) / math.sqrt(float(hc) * float(hl)))
+    purity = fround_val(hits * 1.0 / nn)
+    out = [(c, n_vecs, lbl, fround_val(n_maj * 1.0 / n_vecs), purity, nmi)
            for c, n_vecs, n_maj, lbl in recs]
     return driver.local_frame(
         spark, out, "cell int, n_vecs long, majority_label int, "
@@ -2976,7 +2971,6 @@ def cluster_purity_nmi_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                                .alias("neg"))).alias("m"),
                 F.sum("n").alias("n_vecs")))
     pur = maj.agg(F.sum(F.col("m.n")).alias("hits"))
-    g6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return (maj.crossJoin(F.broadcast(pur))
             .crossJoin(F.broadcast(tot))
             .crossJoin(F.broadcast(mi))
@@ -2985,13 +2979,13 @@ def cluster_purity_nmi_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("cell"),
                     F.col("n_vecs").cast("long").alias("n_vecs"),
                     (-F.col("m.neg")).cast("int").alias("majority_label"),
-                    g6(F.col("m.n") * F.lit(1.0) / F.col("n_vecs"))
+                    fround(F.col("m.n") * F.lit(1.0) / F.col("n_vecs"))
                     .alias("majority_share"),
-                    g6(F.col("hits") * F.lit(1.0) / F.col("nn"))
+                    fround(F.col("hits") * F.lit(1.0) / F.col("nn"))
                     .alias("purity"),
-                    g6(F.col("mi").cast("double")
-                       / F.sqrt(F.col("hc").cast("double")
-                                * F.col("hl").cast("double")))
+                    fround(F.col("mi").cast("double")
+                           / F.sqrt(F.col("hc").cast("double")
+                                    * F.col("hl").cast("double")))
                     .alias("nmi")))
 
 
@@ -3029,8 +3023,8 @@ INB_BATCH_SIZES = (8, 32, 128)
         ) g''' for bsz in INB_BATCH_SIZES)}
     )
     SELECT sw.batch_size, sw.n_batches, sw.n_rows, sw.colliding_pairs,
-           FLOOR(lbl.s2 * 1e0 / (tot.n * (tot.n - 1)) * 1e6 + 0.5)
-               / 1e6 AS random_pair_rate
+           {fround_sql("lbl.s2 * 1e0 / (tot.n * (tot.n - 1))")}
+               AS random_pair_rate
     FROM sw CROSS JOIN tot CROSS JOIN lbl
     """,
 )
@@ -3078,7 +3072,6 @@ def inbatch_negative_collisions(spark: SparkSession,
     return (sw.crossJoin(F.broadcast(tot)).crossJoin(F.broadcast(lbl))
             .select("batch_size", "n_batches", "n_rows",
                     "colliding_pairs",
-                    (F.floor(F.col("s2") * F.lit(1.0)
-                             / (F.col("n") * (F.col("n") - 1))
-                             * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
+                    fround(F.col("s2") * F.lit(1.0)
+                           / (F.col("n") * (F.col("n") - 1)))
                     .alias("random_pair_rate")))

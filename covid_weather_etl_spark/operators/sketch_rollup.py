@@ -25,7 +25,7 @@ from pyspark.sql.window import Window as W
 
 from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.numeric import (
-    fround, fround_sql, md5_int,
+    fround, fround_sql, fround_val, md5_int,
 )
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
@@ -301,7 +301,7 @@ def hll_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver resolution (r13): the register census is ≤ 2·HLL_M rows
     # BY CONSTRUCTION — the three estimates (per-type + union) resolve
     # on the driver (_hll_est_driver: exact integer Z-sums, StrictMath
-    # LN, fround replayed with math.floor) and the THREE exact
+    # LN, fround replayed with fround_val) and the THREE exact
     # fact-sized aggregates fold into ONE distinct + per-user-flag
     # pass (identical counts: countDistinct(user | type) ==
     # Σ has_type over distinct users; the semi-join intersection ==
@@ -310,8 +310,6 @@ def hll_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned degenerate behavior.
     tab = driver.bounded_collect(regs, 2 * HLL_M)
     if tab is not None:
-        import math
-
         reg_rows = [(r["event_type"], int(r["bucket"]), int(r["mx"]))
                     for r in tab]
         per_type: dict = {}
@@ -322,10 +320,9 @@ def hll_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             uni_regs: dict = {}
             for _, bucket, mx in reg_rows:
                 uni_regs[bucket] = max(uni_regs.get(bucket, 0), mx)
-            g6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
-            asu = g6(_hll_est_driver(jm, per_type[a]))
-            apu = g6(_hll_est_driver(jm, per_type[b]))
-            aun = g6(_hll_est_driver(jm, list(uni_regs.items())))
+            asu = fround_val(_hll_est_driver(jm, per_type[a]))
+            apu = fround_val(_hll_est_driver(jm, per_type[b]))
+            aun = fround_val(_hll_est_driver(jm, list(uni_regs.items())))
             overlap = asu + apu - aun
             flags = (ev.select("event_type", "user_id").distinct()
                      .groupBy("user_id")
@@ -340,7 +337,7 @@ def hll_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(asu).alias("approx_signup"),
                 F.lit(apu).alias("approx_purchase"),
                 F.lit(aun).alias("approx_union"),
-                F.lit(g6(overlap)).alias("approx_overlap"),
+                F.lit(fround_val(overlap)).alias("approx_overlap"),
                 "exact_signup", "exact_purchase", "exact_overlap",
                 fround(F.lit(overlap) - F.col("exact_overlap"))
                 .alias("overlap_err"))

@@ -29,7 +29,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.functions import driver
-from covid_weather_etl_spark.functions.numeric import fround_sql, md5_int
+from covid_weather_etl_spark.functions.numeric import (
+    fround, fround_sql, md5_int,
+)
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
 
@@ -819,9 +821,9 @@ ECE_BINS = 10
         FROM conf GROUP BY 1
     ), terms AS (
         SELECT bin, n_rows, n_pos,
-               FLOOR(CAST(sc AS DOUBLE) / n_rows * 1e6 + 0.5) / 1e6
+               {fround_sql("CAST(sc AS DOUBLE) / n_rows")}
                  AS avg_conf,
-               FLOOR(n_pos * 1.0 / n_rows * 1e6 + 0.5) / 1e6 AS frac_pos,
+               {fround_sql("n_pos * 1.0 / n_rows")} AS frac_pos,
                CAST(ROUND(ABS(CAST(sc AS DOUBLE) / n_rows
                               - n_pos * 1.0 / n_rows), 9)
                     AS DECIMAL(20,9)) AS gap9
@@ -832,7 +834,7 @@ ECE_BINS = 10
         FROM terms
     )
     SELECT bin, n_rows, n_pos, avg_conf, frac_pos,
-           FLOOR(CAST(wgap AS DOUBLE) / n * 1e6 + 0.5) / 1e6 AS ece
+           {fround_sql("CAST(wgap AS DOUBLE) / n")} AS ece
     FROM terms CROSS JOIN tot
     """,
 )
@@ -870,10 +872,8 @@ def calibration_ece_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_rows"),
              F.sum("c").alias("sc"),
              F.sum("y").alias("n_pos")))
-    avg_conf = F.floor(F.col("sc").cast("double") / F.col("n_rows")
-                       * 1e6 + 0.5) / 1e6
-    frac_pos = F.floor(F.col("n_pos") * 1.0 / F.col("n_rows")
-                       * 1e6 + 0.5) / 1e6
+    avg_conf = fround(F.col("sc").cast("double") / F.col("n_rows"))
+    frac_pos = fround(F.col("n_pos") * 1.0 / F.col("n_rows"))
     gap9 = (F.round(F.abs(F.col("sc").cast("double") / F.col("n_rows")
                           - F.col("n_pos") * 1.0 / F.col("n_rows")), 9)
             .cast("decimal(20,9)"))
@@ -884,8 +884,7 @@ def calibration_ece_report(spark: SparkSession, sf_dir: str) -> DataFrame:
              .localCheckpoint(eager=False))   # 10 rows; reused
     tot = terms.agg(F.sum("n_rows").alias("n"),
                     F.sum(F.col("n_rows") * F.col("gap9")).alias("wgap"))
-    ece = F.floor(F.col("wgap").cast("double") / F.col("n")
-                  * 1e6 + 0.5) / 1e6
+    ece = fround(F.col("wgap").cast("double") / F.col("n"))
     return (terms.crossJoin(F.broadcast(tot))
             .select("bin", "n_rows", "n_pos", "avg_conf", "frac_pos",
                     ece.alias("ece")))
@@ -927,8 +926,8 @@ WOE_BAD_CUT = 0.05
         FROM counts
     ), woe AS (
         SELECT bin, n_bad, n_good,
-               FLOOR(ln(CAST(n_bad * g AS DOUBLE)
-                        / CAST(n_good * b AS DOUBLE)) * 1e6 + 0.5) / 1e6
+               {fround_sql("ln(CAST(n_bad * g AS DOUBLE)"
+                           " / CAST(n_good * b AS DOUBLE))")}
                    AS woe
         FROM counts CROSS JOIN tot
     ), terms AS (
@@ -938,7 +937,7 @@ WOE_BAD_CUT = 0.05
         FROM woe CROSS JOIN tot
     )
     , ivagg AS (
-        SELECT FLOOR(CAST(SUM(term9) AS DOUBLE) * 1e6 + 0.5) / 1e6 AS iv
+        SELECT {fround_sql("CAST(SUM(term9) AS DOUBLE)")} AS iv
         FROM terms
     )
     SELECT bin, n_bad, n_good, woe, iv
@@ -991,9 +990,8 @@ def woe_iv_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
                    (F.count("*") - F.sum("bad")).cast("long")
                    .alias("n_good")))
     tot = counts.agg(F.sum("n_bad").alias("b"), F.sum("n_good").alias("g"))
-    woe = (F.floor(F.log((F.col("n_bad") * F.col("g")).cast("double")
-                         / (F.col("n_good") * F.col("b")).cast("double"))
-                   * 1e6 + 0.5) / 1e6)
+    woe = fround(F.log((F.col("n_bad") * F.col("g")).cast("double")
+                       / (F.col("n_good") * F.col("b")).cast("double")))
     scored = (counts.crossJoin(F.broadcast(tot))
               .select("bin", "n_bad", "n_good", woe.alias("woe"),
                       F.round((F.col("n_bad") * 1.0 / F.col("b")
@@ -1001,8 +999,7 @@ def woe_iv_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
                               * woe, 9)
                       .cast("decimal(20,9)").alias("term9")))
     scored = scored.localCheckpoint(eager=False)  # 4 rows; reused twice
-    ivf = scored.agg((F.floor(F.sum("term9").cast("double") * 1e6 + 0.5)
-                      / 1e6).alias("iv"))
+    ivf = scored.agg(fround(F.sum("term9").cast("double")).alias("iv"))
     return (scored.crossJoin(F.broadcast(ivf))
             .select("bin", "n_bad", "n_good", "woe", "iv"))
 
@@ -1018,26 +1015,23 @@ RIDGE_LAMBDA = 1.0
 #: The SAME expression text runs on both engines (Spark SQL and
 #: DuckDB parse identical precedence), so given bit-identical inputs
 #: the determinant arithmetic is bit-identical too.
-_RIDGE_SOLVE_SQL = """
+_RIDGE_SOLVE_SQL = f"""
     SELECT CAST(n AS BIGINT) AS n_rows,
-           FLOOR((b0*(a11*a22 - a12*a21) - a01*(b1*a22 - a12*b2)
-                  + a02*(b1*a21 - a11*b2)) / det * 1e6 + 5e-1)
-               / 1e6 AS beta_intercept,
-           FLOOR((a00*(b1*a22 - a12*b2) - b0*(a10*a22 - a12*a20)
-                  + a02*(a10*b2 - b1*a20)) / det * 1e6 + 5e-1)
-               / 1e6 AS beta_quantity,
-           FLOOR((a00*(a11*b2 - b1*a21) - a01*(a10*b2 - b1*a20)
-                  + b0*(a10*a21 - a11*a20)) / det * 1e6 + 5e-1)
-               / 1e6 AS beta_discount
+           {fround_sql("(b0*(a11*a22 - a12*a21) - a01*(b1*a22 - a12*b2)"
+                       " + a02*(b1*a21 - a11*b2)) / det")} AS beta_intercept,
+           {fround_sql("(a00*(b1*a22 - a12*b2) - b0*(a10*a22 - a12*a20)"
+                       " + a02*(a10*b2 - b1*a20)) / det")} AS beta_quantity,
+           {fround_sql("(a00*(a11*b2 - b1*a21) - a01*(a10*b2 - b1*a20)"
+                       " + b0*(a10*a21 - a11*a20)) / det")} AS beta_discount
     FROM (
         SELECT n, sq, sd, sy,
-               n + {lam} AS a00, sq AS a01, sd AS a02,
-               sq AS a10, sqq + {lam} AS a11, sqd AS a12,
-               sd AS a20, sqd AS a21, sdd + {lam} AS a22,
+               n + {{lam}} AS a00, sq AS a01, sd AS a02,
+               sq AS a10, sqq + {{lam}} AS a11, sqd AS a12,
+               sd AS a20, sqd AS a21, sdd + {{lam}} AS a22,
                sy AS b0, sqy AS b1, sdy AS b2,
-               (n + {lam})*((sqq + {lam})*(sdd + {lam}) - sqd*sqd)
-                 - sq*(sq*(sdd + {lam}) - sqd*sd)
-                 + sd*(sq*sqd - (sqq + {lam})*sd) AS det
+               (n + {{lam}})*((sqq + {{lam}})*(sdd + {{lam}}) - sqd*sqd)
+                 - sq*(sq*(sdd + {{lam}}) - sqd*sd)
+                 + sd*(sq*sqd - (sqq + {{lam}})*sd) AS det
         FROM sums
     )
 """
@@ -1113,18 +1107,17 @@ def ridge_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "pythagorean_means_prices",
     survey="ext-stats,A4,A6,F10",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
-           FLOOR(CAST(SUM(CAST(l_extendedprice AS DECIMAL(25,6)))
-                      AS DOUBLE) / COUNT(*) * 1e6 + 5e-1) / 1e6
+           {fround_sql("CAST(SUM(CAST(l_extendedprice AS DECIMAL(25,6)))"
+                       " AS DOUBLE) / COUNT(*)")}
                AS arith_mean,
-           FLOOR(EXP(CAST(SUM(CAST(LN(l_extendedprice)
-                                   AS DECIMAL(25,12))) AS DOUBLE)
-                     / COUNT(*)) * 1e6 + 5e-1) / 1e6 AS geom_mean,
-           FLOOR(COUNT(*) / CAST(SUM(CAST(1e0 / l_extendedprice
-                                          AS DECIMAL(25,18))) AS DOUBLE)
-                 * 1e6 + 5e-1) / 1e6 AS harm_mean
+           {fround_sql("EXP(CAST(SUM(CAST(LN(l_extendedprice)"
+                       " AS DECIMAL(25,12))) AS DOUBLE)"
+                       " / COUNT(*))")} AS geom_mean,
+           {fround_sql("COUNT(*) / CAST(SUM(CAST(1e0 / l_extendedprice"
+                       " AS DECIMAL(25,18))) AS DOUBLE)")} AS harm_mean
     FROM lineitem
     WHERE l_extendedprice > 0
     GROUP BY l_returnflag
@@ -1150,22 +1143,18 @@ def pythagorean_means_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     the documented domain of both means."""
     t = load_tables(spark, sf_dir, ("lineitem",))
     x = F.col("l_extendedprice")
-
-    def grid(c):
-        return F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-
     return (t["lineitem"]
             .filter(x > 0)
             .groupBy("l_returnflag")
             .agg(F.count("*").alias("n_rows"),
-                 grid(F.sum(x.cast("decimal(25,6)")).cast("double")
-                      / F.count("*")).alias("arith_mean"),
-                 grid(F.exp(F.sum(F.log(x).cast("decimal(25,12)"))
-                            .cast("double") / F.count("*")))
+                 fround(F.sum(x.cast("decimal(25,6)")).cast("double")
+                        / F.count("*")).alias("arith_mean"),
+                 fround(F.exp(F.sum(F.log(x).cast("decimal(25,12)"))
+                              .cast("double") / F.count("*")))
                  .alias("geom_mean"),
-                 grid(F.count("*")
-                      / F.sum((F.lit(1.0) / x).cast("decimal(25,18)"))
-                      .cast("double")).alias("harm_mean")))
+                 fround(F.count("*")
+                        / F.sum((F.lit(1.0) / x).cast("decimal(25,18)"))
+                        .cast("double")).alias("harm_mean")))
 
 
 #: blocking-key length band width (characters) for the ER blocking eval.
@@ -1249,7 +1238,6 @@ def blocking_quality_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     completeness is a key-equality predicate evaluated ON the truth
     pairs (vocabulary-sized, the distinct-first discipline). Pure
     integer counts + two fround ratios."""
-    from covid_weather_etl_spark.functions.numeric import fround
     t = load_tables(spark, sf_dir, ("part",))
     names = t["part"].select(F.col("p_name").alias("name")).distinct()
     keyed = names.select(
@@ -1330,8 +1318,8 @@ NEYMAN_BUDGET = 1000
         GROUP BY 1
     ), st AS (
         SELECT n_name, n_rows,
-               FLOOR(SQRT((sxx - (sx / n_rows) * sx)
-                          / (n_rows - 1)) * 1e6 + 0.5) / 1e6 AS sd
+               {fround_sql("SQRT((sxx - (sx / n_rows) * sx)"
+                           " / (n_rows - 1))")} AS sd
         FROM s
     ), tot AS (
         SELECT CAST(SUM(n_rows) AS BIGINT) AS n_total,
@@ -1381,11 +1369,10 @@ def neyman_allocation_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
               .cast("double").alias("sx"),
               F.sum((F.col("o_totalprice") * F.col("o_totalprice"))
                     .cast("decimal(25,6)")).cast("double").alias("sxx")))
-    g6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     st = s.select(
         "n_name", "n_rows",
-        g6(F.sqrt((F.col("sxx") - (F.col("sx") / F.col("n_rows"))
-                   * F.col("sx")) / (F.col("n_rows") - 1))).alias("sd"))
+        fround(F.sqrt((F.col("sxx") - (F.col("sx") / F.col("n_rows"))
+                       * F.col("sx")) / (F.col("n_rows") - 1))).alias("sd"))
     st = st.localCheckpoint(eager=False)  # ~25 rows, reused as both sides
     tot = st.agg(
         F.sum("n_rows").cast("long").alias("n_total"),
@@ -1403,7 +1390,7 @@ def neyman_allocation_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
                             * (F.col("n_rows") * F.col("sd"))
                             / F.col("w") + F.lit(0.5))
                     .cast("long").alias("neyman_alloc"),
-                    g6((F.col("n_rows") * F.col("sd")) / F.col("w"))
+                    fround((F.col("n_rows") * F.col("sd")) / F.col("w"))
                     .alias("neyman_share")))
 
 
@@ -1434,20 +1421,20 @@ def _gini_oracle() -> str:
         parts.append(f"""
     SELECT '{name}' AS feature,
            CAST(COUNT(*) AS BIGINT) AS n_values,
-           FLOOR(MAX(parent) * 1e6 + 0.5) / 1e6 AS parent_gini,
-           FLOOR(CAST(SUM(CAST(FLOOR((nv * 1e0 / nt)
-                 * (1e0 - (n1 * 1e0 / nv) * (n1 * 1e0 / nv)
-                        - ((nv - n1) * 1e0 / nv)
-                          * ((nv - n1) * 1e0 / nv)) * 1e9 + 0.5)
-                 AS DECIMAL(25,0))) AS DOUBLE) / 1e9 * 1e6 + 0.5) / 1e6
+           {fround_sql("MAX(parent)")} AS parent_gini,
+           {fround_sql("CAST(SUM(CAST(FLOOR((nv * 1e0 / nt)"
+                       " * (1e0 - (n1 * 1e0 / nv) * (n1 * 1e0 / nv)"
+                       " - ((nv - n1) * 1e0 / nv)"
+                       " * ((nv - n1) * 1e0 / nv)) * 1e9 + 0.5)"
+                       " AS DECIMAL(25,0))) AS DOUBLE) / 1e9")}
                AS weighted_gini,
-           FLOOR((MAX(parent)
-                  - CAST(SUM(CAST(FLOOR((nv * 1e0 / nt)
-                    * (1e0 - (n1 * 1e0 / nv) * (n1 * 1e0 / nv)
-                           - ((nv - n1) * 1e0 / nv)
-                             * ((nv - n1) * 1e0 / nv)) * 1e9 + 0.5)
-                    AS DECIMAL(25,0))) AS DOUBLE) / 1e9)
-                 * 1e6 + 0.5) / 1e6 AS gini_gain
+           {fround_sql("(MAX(parent)"
+                       " - CAST(SUM(CAST(FLOOR((nv * 1e0 / nt)"
+                       " * (1e0 - (n1 * 1e0 / nv) * (n1 * 1e0 / nv)"
+                       " - ((nv - n1) * 1e0 / nv)"
+                       " * ((nv - n1) * 1e0 / nv)) * 1e9 + 0.5)"
+                       " AS DECIMAL(25,0))) AS DOUBLE) / 1e9)")}
+               AS gini_gain
     FROM (
         SELECT v, CAST(COUNT(*) AS BIGINT) AS nv,
                CAST(SUM(y) AS BIGINT) AS n1,
@@ -1510,15 +1497,13 @@ def gini_split_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         q1 = F.col("t1") * F.lit(1.0) / F.col("nt")
         q0 = (F.col("nt") - F.col("t1")) * F.lit(1.0) / F.col("nt")
         parent = F.lit(1.0) - q1 * q1 - q0 * q0
-        g6 = lambda c: (F.floor(c * F.lit(1e6) + F.lit(0.5))  # noqa: E731
-                        / F.lit(1e6))
         wg = F.sum(term).cast("double") / F.lit(1e9)
         outs.append(per_v.crossJoin(F.broadcast(tot)).agg(
             F.lit(name).alias("feature"),
             F.count("*").alias("n_values"),
-            g6(F.max(parent)).alias("parent_gini"),
-            g6(wg).alias("weighted_gini"),
-            g6(F.max(parent) - wg).alias("gini_gain")))
+            fround(F.max(parent)).alias("parent_gini"),
+            fround(wg).alias("weighted_gini"),
+            fround(F.max(parent) - wg).alias("gini_gain")))
     out = outs[0]
     for o in outs[1:]:
         out = out.unionByName(o)

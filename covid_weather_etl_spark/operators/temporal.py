@@ -35,7 +35,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from covid_weather_etl_spark.functions import driver
-from covid_weather_etl_spark.functions.numeric import md5_int
+from covid_weather_etl_spark.functions.numeric import (
+    fround, fround_sql, grid_sum, grid_sum_sql, md5_int,
+)
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
 
@@ -204,7 +206,7 @@ def interval_proximity(events: DataFrame) -> DataFrame:
 @register(
     "time_weighted_average",
     survey="ext-timeseries,W1,W2,A9",
-    oracle="""
+    oracle=f"""
     WITH seg AS (
         SELECT user_id, value,
                epoch_us(LEAD(ts) OVER (PARTITION BY user_id
@@ -214,11 +216,8 @@ def interval_proximity(events: DataFrame) -> DataFrame:
     )
     SELECT user_id,
            CAST(COUNT(dt_us) AS BIGINT) AS n_segments,
-           FLOOR(CAST(SUM(CAST(CAST(FLOOR(value * dt_us * 1e2 + 5e-1)
-                                    AS BIGINT) AS DECIMAL(38,0)))
-                      AS DOUBLE) / 1e2
-                 / CAST(SUM(dt_us) AS DOUBLE) * 1000000.0 + 0.5)
-               / 1000000.0 AS twa_value
+           {fround_sql(grid_sum_sql("value * dt_us", 2)
+                       + " / CAST(SUM(dt_us) AS DOUBLE)")} AS twa_value
     FROM seg
     WHERE dt_us IS NOT NULL
     GROUP BY user_id
@@ -257,15 +256,11 @@ def time_weighted_average(spark: SparkSession, sf_dir: str) -> DataFrame:
     # value·Δt reaches ~1.7e14 — a double→DECIMAL(38,6) cast there is
     # engine-divergent (PARITY.md §3b), so the weighted sum
     # accumulates as exact centi-unit integers instead.
-    wsum = (F.sum(F.floor(F.col("value") * F.col("dt_us") * F.lit(1e2)
-                          + F.lit(0.5)).cast("decimal(38,0)"))
-            .cast("double") / F.lit(1e2))
+    wsum = grid_sum(F.col("value") * F.col("dt_us"), 2)
     return (seg.groupBy("user_id")
             .agg(F.count("dt_us").alias("n_segments"),
-                 (F.floor(wsum
-                          / F.sum("dt_us").cast("double")
-                          * F.lit(1_000_000.0) + F.lit(0.5))
-                  / F.lit(1_000_000.0)).alias("twa_value")))
+                 fround(wsum / F.sum("dt_us").cast("double"))
+                 .alias("twa_value")))
 
 
 # ---------------------------------------------------------------------------
@@ -305,9 +300,9 @@ LATE_WATERMARKS_MIN = (0, 10, 30, 60)
            CAST(COUNT(*) AS BIGINT) AS n_events,
            CAST(SUM(CASE WHEN l.lateness > w.watermark_min * 60
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
-           FLOOR(SUM(CASE WHEN l.lateness > w.watermark_min * 60
-                          THEN 1 ELSE 0 END) * 1e0 / COUNT(*)
-                 * 1e6 + 0.5) / 1e6 AS drop_share,
+           {fround_sql("SUM(CASE WHEN l.lateness > w.watermark_min * 60"
+                       " THEN 1 ELSE 0 END) * 1e0 / COUNT(*)")}
+               AS drop_share,
            CAST(MAX(l.lateness) AS BIGINT) AS max_lateness_sec
     FROM lat l CROSS JOIN wm w
     GROUP BY w.watermark_min
@@ -350,8 +345,7 @@ def late_event_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("watermark_min")
             .agg(F.count("*").alias("n_events"),
                  F.sum(dropped).alias("n_dropped"),
-                 (F.floor(F.sum(dropped) * F.lit(1.0) / F.count("*")
-                          * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
+                 fround(F.sum(dropped) * F.lit(1.0) / F.count("*"))
                  .alias("drop_share"),
                  F.max("lateness").cast("long")
                  .alias("max_lateness_sec")))

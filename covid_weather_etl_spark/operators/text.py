@@ -932,7 +932,6 @@ def _bpe_vocab_oracle() -> str:
 
 
 def _bpe_encode_oracle() -> str:
-    from covid_weather_etl_spark.functions.numeric import fround_sql
     ratio = fround_sql("SUM(k * w_chars) * 1e0 / SUM(k * w_syms)")
     return f"""
     WITH RECURSIVE {_bpe_st_ctes()},
@@ -1730,7 +1729,7 @@ SPAN_L = 8
     )
     SELECT doc_id, n_tokens,
            CAST(COUNT(*) AS BIGINT) AS dup_tokens,
-           FLOOR(COUNT(*) * 1.0 / n_tokens * 1000000.0 + 0.5) / 1000000.0
+           {fround_sql("COUNT(*) * 1.0 / n_tokens")}
                AS dup_fraction
     FROM cov GROUP BY 1, 2
     """,
@@ -1778,8 +1777,7 @@ def exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (cov.groupBy("doc_id", "n_tokens")
             .agg(F.count("*").alias("dup_tokens"))
             .select("doc_id", "n_tokens", "dup_tokens",
-                    (F.floor(frac * 1e6 + F.lit(0.5)) / F.lit(1e6))
-                    .alias("dup_fraction")))
+                    fround(frac).alias("dup_fraction")))
 
 
 # ---------------------------------------------------------------------------
@@ -1819,8 +1817,7 @@ DECON_EVAL_MOD = 7  #: doc_id % MOD == 0 plays the held-out benchmark
         GROUP BY 1, 2, 3
     ), scored AS (
         SELECT lang, source, shared,
-               FLOOR(CAST(shared AS DOUBLE) / total_grams * 1000000.0
-                     + 0.5) / 1000000.0 AS contam
+               {fround_sql("CAST(shared AS DOUBLE) / total_grams")} AS contam
         FROM doc
     )
     SELECT lang, source,
@@ -1828,8 +1825,8 @@ DECON_EVAL_MOD = 7  #: doc_id % MOD == 0 plays the held-out benchmark
            CAST(SUM(CASE WHEN shared > 0 THEN 1 ELSE 0 END) AS BIGINT)
                AS contaminated_docs,
            CAST(SUM(shared) AS BIGINT) AS shared_grams,
-           FLOOR(CAST(SUM(CAST(contam AS DECIMAL(25,6))) AS DOUBLE)
-                 / COUNT(*) * 1000000.0 + 0.5) / 1000000.0
+           {fround_sql("CAST(SUM(CAST(contam AS DECIMAL(25,6))) AS DOUBLE)"
+                       " / COUNT(*)")}
                AS mean_contamination,
            MAX(contam) AS max_contamination
     FROM scored
@@ -1879,9 +1876,7 @@ def benchmark_decontamination(spark: SparkSession,
            .groupBy("doc_id", "lang", "source")
            .agg(F.count("*").alias("total_grams"),
                 F.sum(F.coalesce("hit", F.lit(0))).alias("shared")))
-    contam = (F.floor(F.col("shared").cast("double")
-                      / F.col("total_grams") * 1e6 + F.lit(0.5))
-              / F.lit(1e6))
+    contam = fround(F.col("shared").cast("double") / F.col("total_grams"))
     scored = doc.select("lang", "source", "shared",
                         contam.alias("contam"))
     mean_c = (F.sum(F.col("contam").cast("decimal(25,6)")).cast("double")
@@ -1891,8 +1886,7 @@ def benchmark_decontamination(spark: SparkSession,
                  F.sum((F.col("shared") > 0).cast("int")).cast("long")
                  .alias("contaminated_docs"),
                  F.sum("shared").cast("long").alias("shared_grams"),
-                 (F.floor(mean_c * 1e6 + F.lit(0.5)) / F.lit(1e6))
-                 .alias("mean_contamination"),
+                 fround(mean_c).alias("mean_contamination"),
                  F.max("contam").alias("max_contamination")))
 
 
@@ -1934,8 +1928,8 @@ NOVELTY_N = 5  #: n-gram length for the novelty attribution
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(n_grams) AS BIGINT) AS total_grams,
            CAST(SUM(n_novel) AS BIGINT) AS novel_grams,
-           FLOOR(CAST(SUM(n_novel) AS DOUBLE) / SUM(n_grams)
-                 * 1000000.0 + 0.5) / 1000000.0 AS novelty_rate
+           {fround_sql("CAST(SUM(n_novel) AS DOUBLE) / SUM(n_grams)")}
+               AS novelty_rate
     FROM doc
     GROUP BY source
     """,
@@ -1976,8 +1970,7 @@ def ngram_novelty_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum("n_grams").cast("long").alias("total_grams"),
                  F.sum("n_novel").cast("long").alias("novel_grams"))
             .select("source", "n_docs", "total_grams", "novel_grams",
-                    (F.floor(rate * 1e6 + F.lit(0.5)) / F.lit(1e6))
-                    .alias("novelty_rate")))
+                    fround(rate).alias("novelty_rate")))
 
 
 # ---------------------------------------------------------------------------
@@ -2013,9 +2006,9 @@ _RX_PUNCT = rf"[^A-Za-z0-9{_RX_WS}]"
                 AS BIGINT) AS number_tokens,
            CAST(SUM(len(regexp_extract_all(text, '{_RX_PUNCT}')))
                 AS BIGINT) AS punct_tokens,
-           FLOOR(SUM(len(regexp_extract_all(text, '{_RX_TOKEN}'))) * 1.0
-                 / SUM(len(string_split(text, ' '))) * 1000000.0 + 0.5)
-               / 1000000.0 AS fertility
+           {fround_sql("SUM(len(regexp_extract_all(text, "
+                       f"'{_RX_TOKEN}'))) * 1.0"
+                       " / SUM(len(string_split(text, ' ')))")} AS fertility
     FROM documents
     GROUP BY 1, 2
     """,
@@ -2057,12 +2050,10 @@ def regex_token_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("lang", "source", "n_docs", "ws_tokens",
                     "regex_tokens", "letter_tokens", "number_tokens",
                     "punct_tokens",
-                    (F.floor(fert * 1e6 + F.lit(0.5)) / F.lit(1e6))
-                    .alias("fertility")))
+                    fround(fert).alias("fertility")))
 
 
 def _bpe_fertility_oracle() -> str:
-    from covid_weather_etl_spark.functions.numeric import fround_sql
     fert = fround_sql("SUM(k * w_syms) * 1e0 / SUM(k)")
     cps = fround_sql("SUM(k * w_chars) * 1e0 / SUM(k * w_syms)")
     return f"""
@@ -2745,8 +2736,8 @@ def _distinct_n_oracle() -> str:
     SELECT source, CAST({n} AS BIGINT) AS n,
            CAST(COUNT(*) AS BIGINT) AS total_ngrams,
            CAST(COUNT(DISTINCT gram) AS BIGINT) AS distinct_ngrams,
-           FLOOR(COUNT(DISTINCT gram) * 1e0 / COUNT(*) * 1e6 + 0.5)
-               / 1e6 AS distinct_ratio
+           {fround_sql("COUNT(DISTINCT gram) * 1e0 / COUNT(*)")}
+               AS distinct_ratio
     FROM (
         SELECT d.source, {gram} AS gram
         FROM (SELECT source, string_split(text, ' ') AS t
@@ -2792,9 +2783,8 @@ def distinct_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(n).cast("long").alias("n"),
             F.count("*").alias("total_ngrams"),
             F.countDistinct("gram").alias("distinct_ngrams"),
-            (F.floor(F.countDistinct("gram") * F.lit(1.0)
-                     / F.count("*") * F.lit(1e6) + F.lit(0.5))
-             / F.lit(1e6)).alias("distinct_ratio"))
+            fround(F.countDistinct("gram") * F.lit(1.0)
+                   / F.count("*")).alias("distinct_ratio"))
             .select("source", "n", "total_ngrams", "distinct_ngrams",
                     "distinct_ratio"))
     out = outs[0]
@@ -2830,10 +2820,10 @@ BURST_TOPN = 20
         FROM tc GROUP BY term
     )
     SELECT term, df, cf,
-           FLOOR(cf * 1e0 / n * 1e6 + 0.5) / 1e6 AS mean_rate,
-           FLOOR((sumsq * 1e0 / n - (cf * 1e0 / n) * (cf * 1e0 / n))
-                 / (cf * 1e0 / n) * 1e6 + 0.5) / 1e6 AS dispersion,
-           FLOOR(cf * 1e0 / df * 1e6 + 0.5) / 1e6 AS mean_when_present
+           {fround_sql("cf * 1e0 / n")} AS mean_rate,
+           {fround_sql("(sumsq * 1e0 / n - (cf * 1e0 / n) * (cf * 1e0 / n))"
+                       " / (cf * 1e0 / n)")} AS dispersion,
+           {fround_sql("cf * 1e0 / df")} AS mean_when_present
     FROM term CROSS JOIN nd
     ORDER BY cf DESC, term
     LIMIT {BURST_TOPN}
@@ -2868,16 +2858,15 @@ def term_burstiness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("df"),
                  F.sum("c").alias("cf"),
                  F.sum(F.col("c") * F.col("c")).alias("sumsq")))
-    g6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     m = F.col("cf") * F.lit(1.0) / F.col("n")
     return (term.crossJoin(F.broadcast(nd))
             .select("term",
                     F.col("df").cast("long").alias("df"),
                     F.col("cf").cast("long").alias("cf"),
-                    g6(m).alias("mean_rate"),
-                    g6((F.col("sumsq") * F.lit(1.0) / F.col("n")
-                        - m * m) / m).alias("dispersion"),
-                    g6(F.col("cf") * F.lit(1.0) / F.col("df"))
+                    fround(m).alias("mean_rate"),
+                    fround((F.col("sumsq") * F.lit(1.0) / F.col("n")
+                            - m * m) / m).alias("dispersion"),
+                    fround(F.col("cf") * F.lit(1.0) / F.col("df"))
                     .alias("mean_when_present"))
             .orderBy(F.col("cf").desc(), "term")
             .limit(BURST_TOPN))
@@ -2891,7 +2880,7 @@ def term_burstiness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "source_similarity_matrix",
     survey="ext-quality,A6,J1,F10",
-    oracle="""
+    oracle=f"""
     WITH tc AS (
         SELECT source, array_to_string(t[g.i : g.i + 2], ' ') AS term,
                CAST(COUNT(*) AS BIGINT) AS c
@@ -2906,8 +2895,7 @@ def term_burstiness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tc GROUP BY 1
     ), w AS (
         SELECT tc.source, tc.term,
-               FLOOR(LN(1e0 + tc.c) * LN(ns.n * 1e0 / dfs.df)
-                     * 1e6 + 0.5) / 1e6 AS w
+               {fround_sql("LN(1e0 + tc.c) * LN(ns.n * 1e0 / dfs.df)")} AS w
         FROM tc JOIN dfs ON dfs.term = tc.term CROSS JOIN ns
         WHERE dfs.df < ns.n
     ), norms AS (
@@ -2925,8 +2913,7 @@ def term_burstiness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY 1, 2
     )
     SELECT d.source_1, d.source_2, d.n_shared_terms,
-           FLOOR(d.dot / (SQRT(na.nrm) * SQRT(nb.nrm)) * 1e6 + 0.5)
-               / 1e6 AS cosine
+           {fround_sql("d.dot / (SQRT(na.nrm) * SQRT(nb.nrm))")} AS cosine
     FROM dots d
     JOIN norms na ON na.source = d.source_1
     JOIN norms nb ON nb.source = d.source_2
@@ -2960,13 +2947,12 @@ def source_similarity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
           .groupBy("source", "term").agg(F.count("*").alias("c")))
     ns = tc.agg(F.countDistinct("source").alias("n"))
     dfs = tc.groupBy("term").agg(F.count("*").alias("df"))
-    g6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     w = (tc.join(dfs, "term")
          .crossJoin(F.broadcast(ns))
          .filter(F.col("df") < F.col("n"))
          .select("source", "term",
-                 g6(F.log(F.lit(1.0) + F.col("c"))
-                    * F.log(F.col("n") * F.lit(1.0) / F.col("df")))
+                 fround(F.log(F.lit(1.0) + F.col("c"))
+                        * F.log(F.col("n") * F.lit(1.0) / F.col("df")))
                  .alias("w"))
          .localCheckpoint(eager=False))  # vocab-bounded, reused 3x
     r9 = lambda c: F.round(c, 9).cast("decimal(25,9)")  # noqa: E731
@@ -2988,8 +2974,8 @@ def source_similarity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (dots.join(F.broadcast(na), "source_1")
             .join(F.broadcast(nb), "source_2")
             .select("source_1", "source_2", "n_shared_terms",
-                    g6(F.col("dot")
-                       / (F.sqrt(F.col("na")) * F.sqrt(F.col("nb"))))
+                    fround(F.col("dot")
+                           / (F.sqrt(F.col("na")) * F.sqrt(F.col("nb"))))
                     .alias("cosine")))
 
 

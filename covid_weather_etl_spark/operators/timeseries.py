@@ -25,7 +25,9 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.functions import driver
-from covid_weather_etl_spark.functions.numeric import dsum
+from covid_weather_etl_spark.functions.numeric import (
+    dsum, fround, fround_sql, fround_val,
+)
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
 
@@ -295,8 +297,8 @@ def _kalman_oracle() -> str:
         ) s
     )
     SELECT priority, month, rev, rn,
-           FLOOR(x * 1000000.0 + 0.5) / 1000000.0 AS kalman,
-           FLOOR(gain * 1000000.0 + 0.5) / 1000000.0 AS gain
+           {fround_sql("x")} AS kalman,
+           {fround_sql("gain")} AS gain
     FROM kf
     """
 
@@ -329,7 +331,6 @@ def kalman_level_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
                .agg(dsum("o_totalprice", "rev")))
 
     def smooth(pdf: pd.DataFrame) -> pd.DataFrame:
-        import math
         pdf = pdf.sort_values("month").reset_index(drop=True)
         z = pdf["rev"].to_numpy()
         xs, gs = [], []
@@ -343,10 +344,9 @@ def kalman_level_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
             p = (1.0 - k) * p_prior
             xs.append(x)
             gs.append(k)
-        fr6 = lambda v: math.floor(v * 1e6 + 0.5) / 1e6
         pdf["rn"] = range(1, len(pdf) + 1)
-        pdf["kalman"] = [fr6(v) for v in xs]
-        pdf["gain"] = [fr6(v) for v in gs]
+        pdf["kalman"] = [fround_val(v) for v in xs]
+        pdf["gain"] = [fround_val(v) for v in gs]
         return pdf
 
     schema = ("priority string, month timestamp, rev double, "
@@ -665,7 +665,7 @@ def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "theilsen_mannkendall_trend",
     survey="ext-robust,A9,J1,W1,F9",
-    oracle="""
+    oracle=f"""
     WITH monthly AS (
         SELECT n.n_name,
                (EXTRACT(year FROM o.o_orderdate) - 1995) * 12
@@ -693,7 +693,7 @@ def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT p.n_name,
                CAST(COUNT(*) AS BIGINT) AS n_pairs,
                CAST(SUM(sgn) AS BIGINT) AS s_stat,
-               FLOOR(quantile_cont(slope, 0.5) * 1e6 + 0.5) / 1e6
+               {fround_sql("quantile_cont(slope, 0.5)")}
                    AS theil_sen_slope
         FROM pairs p GROUP BY 1
     ), sized AS (
@@ -702,14 +702,14 @@ def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT pn.n_name, sz.n_months, pn.n_pairs, pn.s_stat,
            pn.theil_sen_slope,
-           FLOOR((CASE
-               WHEN pn.s_stat > 0 THEN (pn.s_stat - 1) / SQRT(
-                   (sz.n_months * (sz.n_months - 1.0)
-                    * (2 * sz.n_months + 5) - t.tie_corr) / 18.0)
-               WHEN pn.s_stat < 0 THEN (pn.s_stat + 1) / SQRT(
-                   (sz.n_months * (sz.n_months - 1.0)
-                    * (2 * sz.n_months + 5) - t.tie_corr) / 18.0)
-               ELSE 0.0 END) * 1e6 + 0.5) / 1e6 AS mk_z
+           {fround_sql("(CASE"
+                       " WHEN pn.s_stat > 0 THEN (pn.s_stat - 1) / SQRT("
+                       " (sz.n_months * (sz.n_months - 1.0)"
+                       " * (2 * sz.n_months + 5) - t.tie_corr) / 18.0)"
+                       " WHEN pn.s_stat < 0 THEN (pn.s_stat + 1) / SQRT("
+                       " (sz.n_months * (sz.n_months - 1.0)"
+                       " * (2 * sz.n_months + 5) - t.tie_corr) / 18.0)"
+                       " ELSE 0.0 END)")} AS mk_z
     FROM per_nation pn
     JOIN sized sz ON pn.n_name = sz.n_name
     JOIN ties t   ON pn.n_name = t.n_name
@@ -760,8 +760,7 @@ def theilsen_mannkendall_trend(spark: SparkSession,
     per_nation = (pairs.groupBy("n_name")
                   .agg(F.count("*").alias("n_pairs"),
                        F.sum("sgn").cast("long").alias("s_stat"),
-                       (F.floor(F.percentile("slope", F.lit(0.5))
-                                * 1e6 + 0.5) / 1e6)
+                       fround(F.percentile("slope", F.lit(0.5)))
                        .alias("theil_sen_slope")))
     c = F.col("c")
     ties = (monthly.groupBy("n_name", "y")
@@ -783,7 +782,7 @@ def theilsen_mannkendall_trend(spark: SparkSession,
                   F.col("n_name") == F.col("t_name"))
             .select("n_name", "n_months", "n_pairs", "s_stat",
                     "theil_sen_slope",
-                    (F.floor(z * 1e6 + 0.5) / 1e6).alias("mk_z")))
+                    fround(z).alias("mk_z")))
 
 
 # ---------------------------------------------------------------------------
@@ -908,10 +907,10 @@ PINBALL_TAUS = (0.1, 0.5, 0.9)
     )
     SELECT n_name, CAST(tau AS DOUBLE) AS tau,
            CAST(COUNT(*) AS BIGINT) AS n_days,
-           FLOOR(CAST(SUM(CAST(GREATEST(tau * (y - q),
-                                        (tau - 1e0) * (y - q))
-                               AS DECIMAL(25,9))) AS DOUBLE)
-                 / COUNT(*) * 1e6 + 5e-1) / 1e6 AS avg_pinball,
+           {fround_sql("CAST(SUM(CAST(GREATEST(tau * (y - q),"
+                       " (tau - 1e0) * (y - q))"
+                       " AS DECIMAL(25,9))) AS DOUBLE)"
+                       " / COUNT(*)")} AS avg_pinball,
            CAST(SUM(CASE WHEN y <= q THEN 1 ELSE 0 END) AS BIGINT)
                AS n_covered
     FROM scored GROUP BY 1, 2
@@ -968,9 +967,8 @@ def pinball_quantile_forecast_eval(spark: SparkSession,
     loss = F.greatest(tau * (y - q), (tau - F.lit(1.0)) * (y - q))
     return (scored.groupBy("n_name", tau.alias("tau"))
             .agg(F.count("*").alias("n_days"),
-                 (F.floor(F.sum(loss.cast("decimal(25,9)"))
-                          .cast("double") / F.count("*")
-                          * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
+                 fround(F.sum(loss.cast("decimal(25,9)"))
+                          .cast("double") / F.count("*"))
                  .alias("avg_pinball"),
                  F.sum(F.when(y <= q, 1).otherwise(0)).cast("bigint")
                  .alias("n_covered")))
@@ -1020,9 +1018,9 @@ def _croston_oracle() -> str:
     SELECT cr.brand,
            CAST(last.n AS BIGINT) AS n_demands,
            cr.day AS last_demand_day,
-           FLOOR(cr.z * 1e6 + 0.5) / 1e6 AS size_ewma,
-           FLOOR(cr.p * 1e6 + 0.5) / 1e6 AS interval_ewma,
-           FLOOR(cr.z / cr.p * 1e6 + 0.5) / 1e6 AS demand_rate
+           {fround_sql("cr.z")} AS size_ewma,
+           {fround_sql("cr.p")} AS interval_ewma,
+           {fround_sql("cr.z / cr.p")} AS demand_rate
     FROM cr JOIN last ON cr.brand = last.brand AND cr.rn = last.n
     """
 
@@ -1062,8 +1060,6 @@ def croston_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
          .agg(F.count("*").alias("d")))
 
     def croston(pdf):
-        import math
-
         import pandas as pd
         pdf = pdf.sort_values("day").reset_index(drop=True)
         days = pdf["day"].to_numpy()
@@ -1073,14 +1069,13 @@ def croston_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             gap = float((days[i] - days[i - 1]).days)
             z = CROSTON_ALPHA * float(dem[i]) + (1.0 - CROSTON_ALPHA) * z
             p = CROSTON_ALPHA * gap + (1.0 - CROSTON_ALPHA) * p
-        fr6 = lambda v: math.floor(v * 1e6 + 0.5) / 1e6
         return pd.DataFrame({
             "brand": [pdf["brand"].iloc[0]],
             "n_demands": [len(pdf)],
             "last_demand_day": [days[-1]],
-            "size_ewma": [fr6(z)],
-            "interval_ewma": [fr6(p)],
-            "demand_rate": [fr6(z / p)],
+            "size_ewma": [fround_val(z)],
+            "interval_ewma": [fround_val(p)],
+            "demand_rate": [fround_val(z / p)],
         })
 
     schema = ("brand string, n_demands bigint, last_demand_day date, "
@@ -1149,7 +1144,7 @@ def _haar_single_task(cur) -> "DataFrame":
             "energy": pd.Series([en for _, _, en in levels],
                                 dtype="float64"),
             "energy_share": pd.Series(
-                [math.floor(en / te * 1e6 + 0.5) / 1e6
+                [fround_val(en / te)
                  for _, _, en in levels], dtype="float64")})
 
     return cur.coalesce(1).mapInPandas(
@@ -1196,7 +1191,7 @@ def _haar_oracle() -> str:
     tot AS (SELECT SUM(energy) AS te FROM lv)
     SELECT level, n_coeffs,
            energy,
-           FLOOR(energy / te * 1e6 + 0.5) / 1e6 AS energy_share
+           {fround_sql("energy / te")} AS energy_share
     FROM lv CROSS JOIN tot
     """)
 
@@ -1265,11 +1260,10 @@ def haar_wavelet_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
         lv = lv.unionByName(o)
     lv = lv.localCheckpoint(eager=False)
     tot = lv.agg(F.sum("energy").alias("te"))
-    g6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     # energy is ALREADY on the integer grid (decimal sum of floored
     # terms) — a further 1e-6 fround would overflow FLOOR's long at
     # sf0.1 energies (x*1e6 > 2^63), so it is emitted as-is
     return (lv.crossJoin(F.broadcast(tot))
             .select("level", "n_coeffs", F.col("energy"),
-                    g6(F.col("energy") / F.col("te"))
+                    fround(F.col("energy") / F.col("te"))
                     .alias("energy_share")))

@@ -32,7 +32,9 @@ from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
-from covid_weather_etl_spark.functions.numeric import dsum_sql, md5_int
+from covid_weather_etl_spark.functions.numeric import (
+    dsum_sql, fround, fround_sql, md5_int,
+)
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
 
@@ -821,8 +823,7 @@ def _zm_oracle() -> str:
     SELECT p.layout, CAST(p.q_start AS DATE) AS q_month,
            p.n_blocks, p.scanned_blocks, p.scanned_rows,
            COALESCE(m.matching_rows, 0) AS matching_rows,
-           FLOOR(p.scanned_blocks * 1e0 / p.n_blocks * 1e6 + 0.5)
-               / 1e6 AS scan_share
+           {fround_sql("p.scanned_blocks * 1e0 / p.n_blocks")} AS scan_share
     FROM probe p LEFT JOIN match m
       ON m.layout = p.layout AND m.q_start = p.q_start
     """
@@ -890,9 +891,8 @@ def zonemap_pruning_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "scanned_blocks", "scanned_rows",
                     F.coalesce(F.col("matching_rows"), F.lit(0))
                     .cast("long").alias("matching_rows"),
-                    (F.floor(F.col("scanned_blocks") * F.lit(1.0)
-                             / F.col("n_blocks") * F.lit(1e6)
-                             + F.lit(0.5)) / F.lit(1e6))
+                    fround(F.col("scanned_blocks") * F.lit(1.0)
+                           / F.col("n_blocks"))
                     .alias("scan_share")))
 
 
@@ -912,14 +912,13 @@ def _enc_oracle() -> str:
     SELECT '{col}' AS col,
            CAST(SUM(c) AS BIGINT) AS n_rows,
            CAST(COUNT(*) AS BIGINT) AS n_distinct,
-           FLOOR(SUM(ent_term) * 1e6 + 0.5) / 1e6 AS entropy_bits,
+           {fround_sql("SUM(ent_term)")} AS entropy_bits,
            CAST(SUM(c) * {width} AS BIGINT) AS plain_bytes,
-           CAST(CAST(CEIL(SUM(c) * CEIL(FLOOR(LN(COUNT(*) + 1)
-                                              / LN(2e0) * 1e9 + 0.5)
-                                        / 1e9)
+           CAST(CAST(CEIL(SUM(c) * CEIL({fround_sql("LN(COUNT(*) + 1)"
+                                                    " / LN(2e0)", 9)})
                           / 8e0) AS BIGINT)
                 + COUNT(*) * {width} AS BIGINT) AS dict_bytes,
-           CAST(CEIL(SUM(c) * (FLOOR(SUM(ent_term) * 1e6 + 0.5) / 1e6)
+           CAST(CEIL(SUM(c) * ({fround_sql("SUM(ent_term)")})
                      / 8e0) AS BIGINT) AS entropy_floor_bytes
     FROM (
         SELECT c, CAST(ROUND(-(c * 1e0 / SUM(c) OVER ())
@@ -967,16 +966,14 @@ def encoding_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
                .agg(F.sum(ent_term).alias("ent"),
                     F.max("n").alias("n_rows"),
                     F.count("*").alias("n_distinct")))
-        eb = F.floor(F.col("ent").cast("double") * F.lit(1e6)
-                     + F.lit(0.5)) / F.lit(1e6)
+        eb = fround(F.col("ent").cast("double"))
         # snap the log ratio to the 1e-9 grid BEFORE the integer-valued
         # CEIL: at exact powers of two (l_returnflag: 3+1=4) a 1-ulp
         # JVM-vs-DuckDB libm divergence would otherwise flip CEIL by a
         # whole bit-per-value (advice r9) — same snap-before-deciding
         # discipline as every other float-derived decision here
-        bits = F.ceil(F.floor(F.log(F.col("n_distinct") + F.lit(1.0))
-                              / ln2 * F.lit(1e9) + F.lit(0.5))
-                      / F.lit(1e9))
+        bits = F.ceil(fround(F.log(F.col("n_distinct") + F.lit(1.0)) / ln2,
+                             9))
         outs.append(ent.select(
             F.lit(col).alias("col"),
             F.col("n_rows").cast("long").alias("n_rows"),

@@ -49,7 +49,10 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
-from covid_weather_etl_spark.functions.numeric import dsum, dsum_sql
+from covid_weather_etl_spark.functions.numeric import (
+    dsum, dsum_sql, fround, fround_sql,
+)
+from covid_weather_etl_spark.operators.dedup import dedup_on_load
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import (
     load_tables, read_parquet, read_parquet_or_none,
@@ -485,19 +488,21 @@ def upsert_gold_stream(stream: DataFrame, gold_dir: str,
     probes only the key columns of gold (column-pruned scan); with
     gold partitioned by the key's natural prefix the probe prunes to
     the partitions the batch touches."""
+    keys = list(key_cols)
+
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch = batch_df.dropDuplicates(list(key_cols))
         # None only on the first batch; a corrupt gold read fails the
         # batch rather than silently appending duplicates.
         gold = read_parquet_or_none(spark, gold_dir)
-        if gold is not None:
-            existing = gold.select(*key_cols).dropDuplicates(list(key_cols))
+        if gold is None:
+            batch = batch_df.dropDuplicates(keys)
+        else:
             # Materialize the anti-join BEFORE the append job: the gold
             # read and the gold append must not share one job, or the
             # scan's file listing could race the write. localCheckpoint
             # is batch-sized (not gold-sized), so it is scale-safe.
-            batch = (batch.join(existing, list(key_cols), "left_anti")
+            batch = (dedup_on_load(batch_df, gold, keys)
                      .localCheckpoint(eager=True))
         batch.write.mode("append").parquet(gold_dir)
 
@@ -648,8 +653,7 @@ def dedup_fold_batch(batch_df: DataFrame, batch_id: int,
     the fold logic is unchanged.
     """
     from covid_weather_etl_spark.functions.textops import shingled_rows
-    from covid_weather_etl_spark.operators.corpus import (
-        CC_SINGLE_TASK_MAX, cc_single_task, star_components)
+    from covid_weather_etl_spark.operators.corpus import star_components
 
     spark = batch_df.sparkSession
     # two exactly-once layers on top of the checkpoint, the
@@ -722,11 +726,7 @@ def dedup_fold_batch(batch_df: DataFrame, batch_id: int,
     else:
         labels = None
         contracted = edges
-    contracted = contracted.localCheckpoint(eager=True)
-    if driver.fits(contracted.count(), CC_SINGLE_TASK_MAX):
-        relabel = cc_single_task(contracted)
-    else:
-        relabel = star_components(contracted, op_name="dedup_fold")
+    relabel = star_components(contracted, op_name="dedup_fold")
     relabel = relabel.localCheckpoint(eager=True)  # consumed twice
 
     # delta = the merged old-label nodes themselves + every node whose
@@ -1180,7 +1180,7 @@ def _ivf_fold_oracle(sf_dir: str) -> str:
     )
     SELECT cb.c_id AS cell,
            CAST(COALESCE(c.n, 0) AS BIGINT) AS n_vectors,
-           FLOOR(COALESCE(c.n, 0) * 1e0 / t.t * 1e6 + 5e-1) / 1e6
+           {fround_sql("COALESCE(c.n, 0) * 1e0 / t.t")}
                AS share
     FROM cb LEFT JOIN counts c ON c.c_id = cb.c_id
     CROSS JOIN tot t
@@ -1212,7 +1212,6 @@ def ivf_fold_state_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     no wide shuffle; the build cost is the fold kernel's O(batch × k)
     per ingest."""
     import os
-    from covid_weather_etl_spark.functions.numeric import fround
     from covid_weather_etl_spark.operators.similarity import (
         ensure_ivf_codebook)
     rows = ensure_ivf_codebook(spark, sf_dir)

@@ -175,18 +175,6 @@ def test_dsir_weights_favor_target_and_respect_quota(spark, docs_pdf):
     pd.testing.assert_frame_equal(got, again)
 
 
-def test_star_contraction_equals_min_label_cc(spark):
-    """Both CC formulations (O(diameter) min-label vs O(log^2 n)
-    large-star/small-star) must produce identical cluster labels —
-    SCALE.md's promise that the scale path is a drop-in."""
-    from covid_weather_etl_spark.queries.registry import all_queries
-    a = (all_queries()["dedup_clusters"].fn(spark, SF_DIR)
-         .toPandas().sort_values("doc_id").reset_index(drop=True))
-    b = (all_queries()["dedup_clusters_star"].fn(spark, SF_DIR)
-         .toPandas().sort_values("doc_id").reset_index(drop=True))
-    assert a.equals(b)
-
-
 def test_weighted_sample_biases_toward_heavy_weights(spark):
     """A-Res sampling must (a) reproduce the exact numpy selection
     with the same md5 uniforms, and (b) over-represent heavy weights:
