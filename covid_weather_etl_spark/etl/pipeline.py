@@ -31,8 +31,11 @@ the transform log and the batch's file and row counts are all narrow
 reads of it. `load` appends the batch's own silver frame to gold with an
 anti-join on the natural key, materialised once, and numbers the new
 rows from per-partition counts, so no step funnels the batch through
-one task. At 100 TB gold would be partitioned by date so the anti-join
-prunes to the incoming date range.
+one task. The batch's `batch_ts` joins silver and the transform log as
+a one-row frame, so a steady batch compiles no new code, and silver and
+quarantine are written in files of `ROWS_PER_FILE` rows, sized from the
+batch's counts. At 100 TB gold would be partitioned by date so the
+anti-join prunes to the incoming date range.
 """
 
 from __future__ import annotations
@@ -162,8 +165,7 @@ def transform(spark: SparkSession, bronze: DataFrame, kind: str,
             .select(
                 F.to_timestamp("date").alias("date"),
                 *[F.col(f).cast("float").alias(f) for f in S.WEATHER_FIELDS],
-                country, "src_file",
-                F.lit(batch_ts).cast("long").alias("batch_ts"))
+                country, "src_file")
         )
     else:
         # last_update/region are dropped (reference etl/transformer.py:42-43)
@@ -171,11 +173,17 @@ def transform(spark: SparkSession, bronze: DataFrame, kind: str,
             F.to_date("date").alias("date"),
             *[F.col(f).cast("int").alias(f) for f in S.COVID_INT_FIELDS],
             F.col("fatality_rate").cast("float").alias("fatality_rate"),
-            country, "src_file",
-            F.lit(batch_ts).cast("long").alias("batch_ts"))
-    tlog = routed.filter("_first").select(
-        F.lit(batch_ts).cast("long").alias("batch_ts"),
-        F.col("src_file").alias("source_file"),
+            country, "src_file")
+    # batch_ts comes from a one-row frame, not a literal: a literal is
+    # compiled into the projection's generated class, so every batch
+    # would compile its projections again. The hint plans the cross
+    # join as a cartesian product; a broadcast would run one more job
+    # for every action over silver or the log (4 a batch).
+    ts = (driver.local_frame(spark, [(batch_ts,)], "batch_ts bigint not null")
+          .hint("shuffle_replicate_nl"))
+    silver = silver.crossJoin(ts)
+    tlog = routed.filter("_first").crossJoin(ts).select(
+        "batch_ts", F.col("src_file").alias("source_file"),
         "status", "n_entries", "n_bad_entries")
     return routed, silver, quarantine, tlog
 
@@ -242,14 +250,27 @@ class BatchResult:
     n_skipped_duplicates: int
 
 
+#: rows per silver or quarantine part file: a batch of up to this many
+#: rows writes one file per zone, not one per cached partition
+ROWS_PER_FILE = 1_000_000
+
+
+def _coalesced(df: DataFrame, rows: int) -> DataFrame:
+    """`df` as ceil(rows / ROWS_PER_FILE) partitions (at least one), for
+    a write that should leave that many files."""
+    return df.coalesce(max(1, -(-rows // ROWS_PER_FILE)))
+
+
 def run_batch(spark: SparkSession, staging_glob: str, lake: Lake, kind: str,
               batch_ts: int) -> BatchResult:
     """One end-to-end batch: bronze → silver/quarantine → gold + logs.
 
-    The file, error-file and good-row counts come from one aggregate
-    over the transform log; gold gets this batch's silver frame, not a
-    re-read of the silver zone, so a retried batch_ts counts only its
-    own rows."""
+    The file, error-file, good-row and quarantined-row counts come from
+    one aggregate over the transform log; the row counts size the
+    silver and quarantine writes to whole files of `ROWS_PER_FILE`
+    rows. Gold gets this batch's silver frame, as it is, not a re-read
+    of the silver zone, so a retried batch_ts counts only its own
+    rows."""
     if not glob.glob(staging_glob.removeprefix("file:")):
         # empty work-list: the reference logs and exits cleanly
         # (tests/test_transformer.py:185-192)
@@ -265,12 +286,14 @@ def run_batch(spark: SparkSession, staging_glob: str, lake: Lake, kind: str,
             F.count("*").alias("n_files"),
             F.sum(is_error.cast("long")).alias("n_err"),
             F.sum(F.when(~is_error, F.col("n_entries"))).alias("n_good"),
+            F.sum(F.when(is_error, F.col("n_entries"))).alias("n_bad"),
         ).first()
         n_files, n_err, n_good = (stats["n_files"], stats["n_err"] or 0,
                                   stats["n_good"] or 0)
-        silver.write.mode("append").parquet(lake.path("silver", kind))
+        _coalesced(silver, n_good).write.mode("append").parquet(
+            lake.path("silver", kind))
         if n_err:
-            quarantine.write.mode("append").parquet(
+            _coalesced(quarantine, stats["n_bad"]).write.mode("append").parquet(
                 lake.path("quarantine", kind))
         tlog.coalesce(1).write.mode("append").parquet(
             lake.path("logs", "transform"))

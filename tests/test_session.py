@@ -36,3 +36,17 @@ def test_get_spark_sizes_the_codegen_cache(spark):
     """The static codegen cache holds the engine's working set; Spark's
     default of 100 classes recompiled every ETL batch."""
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2000"
+
+
+def test_get_spark_sets_the_jit_inlining_budget(spark):
+    """The driver JVM runs with the engine's C2 inlining budget. Read
+    from the live JVM: Spark launches the driver with
+    -XX:+IgnoreUnrecognizedVMOptions, so a misspelt flag would be
+    dropped without an error."""
+    jvm = spark._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName(
+            "com.sun.management.HotSpotDiagnosticMXBean"))
+    live = {f: bean.getVMOption(f).getValue()
+            for f in ("FreqInlineSize", "InlineSmallCode")}
+    assert live == {"FreqInlineSize": "100", "InlineSmallCode": "1000"}
