@@ -147,6 +147,7 @@ def transform(spark: SparkSession, bronze: DataFrame, kind: str,
                     F.row_number().over(per_file.orderBy("_bad")) == 1)
         .withColumn("status", F.when(F.col("n_bad_entries") > 0, "Error")
                     .otherwise("Processed"))
+        # unpersisted by run_batch once the batch is written
         .cache())
     bronze_cols = bronze.columns
     quarantine = routed.filter(F.col("status") == "Error").select(*bronze_cols)

@@ -3,18 +3,45 @@
 Summing doubles is order-dependent (IEEE addition is not associative);
 Spark's shuffle order and DuckDB's parallel aggregation order differ, so
 a naive SUM(double) can differ in the last bits between the engine and
-its oracle. Two strategies, mirrored exactly in the oracle SQL:
+its oracle. The rule: an exact sum casts each addend to DECIMAL(p,s) and
+adds the decimals. Decimal addition is exact and associative, so the
+total is bit-identical in any order, and partial sums stay map-side
+combinable. The final cast back to DOUBLE is one deterministic rounding.
+This module is the only spelling of that rule; the DECIMAL type is an
+argument, chosen by the data:
 
-- ``dsum``: route the sum through DECIMAL. Decimal addition is exact and
-  associative, so the total is bit-identical no matter the order; the
-  final cast back to DOUBLE is a single deterministic rounding. Right
-  for money-like columns (2-decimal data) and any bounded-scale values.
-- ``exact_avg``: avg as exact-sum / count — one deterministic division —
-  instead of the engines' internal running-mean accumulators.
-- ``r6``: round to 6 decimals, for genuinely order-dependent statistics
-  (stddev, interpolated percentiles, windowed means over long frames)
-  where last-ulp noise is unavoidable; 6 decimals is far above the noise
-  floor and far below data resolution.
+- ``decimal(25,6)`` (``DEC``, the default): money and other values on a
+  grid of 1e-6 or coarser (2dp money, 6dp-rounded terms);
+- ``decimal(18,2)`` / ``decimal(25,2)``: values known to be exact 2dp
+  money, where a product of two such decimals is itself exact;
+- ``decimal(38,6)``: second-order sums (products of ~1e6 values) that
+  outgrow 25 digits;
+- ``decimal(p,9)``, ``decimal(25,12)``, ``decimal(25,18)``: terms
+  rounded to 1e-9, logs and reciprocals that need the fractional digits;
+- ``decimal(p,0)``: integer-valued terms (rank sums, counts);
+- ``decimal(38,0)``: the grid sum's integer counts (below).
+
+The kernel forms, each with its SQL twin (``*_sql``, text that DuckDB
+oracles and ``spark.sql`` both run):
+
+- ``dsum(col, dec)``: the exact sum as DOUBLE;
+- ``decimal_sum(col, dec)``: the same sum kept DECIMAL, for totals that
+  are compared, windowed (``.over(w)``) or combined as decimals;
+- ``decimal_dot(a, b, dec)``: the exact sum of products of two DECIMAL
+  casts (a second moment of exact 2dp values), kept DECIMAL;
+- ``exact_avg(col)``: the exact ``DEC`` sum divided by the count, one
+  deterministic division instead of the engines' running means (a
+  mean of another type is ``dsum(col, dec) / COUNT``).
+
+Domain of the DOUBLE forms: a total whose unscaled integer
+(``|total|·10^s``) stays under 2^53. Spark rounds DECIMAL→DOUBLE once,
+correctly; DuckDB converts the unscaled integer to a double and then
+divides by ``10^s``, which rounds twice once that integer passes 2^53.
+
+``r6`` rounds to 6 decimals, for genuinely order-dependent statistics
+(stddev, interpolated percentiles, windowed means over long frames)
+where last-ulp noise is unavoidable; 6 decimals is far above the noise
+floor and far below data resolution.
 
 The portable integer hash ``md5_int`` follows the same twin rule: Spark
 ``conv(substring(md5(x), 1, k), 16, 10)`` equals DuckDB
@@ -51,8 +78,12 @@ serves an oracle and a fragment that both engines run.
 Domain: finite doubles with ``|x|·10^s < 2^63``, because Spark's
 ``FLOOR`` returns BIGINT (DuckDB's returns DOUBLE; inside that bound
 both hold the same integral value). NULL passes through the Column and
-SQL twins as NULL. Never spell the snap or the grid sum out elsewhere;
-``tests/test_numeric.py`` fails on an inline copy.
+SQL twins as NULL. Never spell an exact sum, the snap or the grid sum
+out elsewhere; ``tests/test_numeric.py`` fails on an inline copy, on a
+local DECIMAL type alias, and on a DECIMAL term bound to a name that a
+SUM then reads (pass the double term to ``dsum`` instead). A site that
+is deliberately not the kernel says ``not the kernel: <why>`` beside
+it, for example a DECIMAL column whose products are summed too.
 
 Scale note: DECIMAL(25,6) sums hold ~10^19 — at 100 TB (~10^11 rows of
 ~10^5-magnitude values) this still fits with headroom, and decimal
@@ -66,39 +97,64 @@ import math
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: decimal type used for exact accumulation; mirrored in oracle SQL text.
+#: default DECIMAL type for exact accumulation (see the module docstring).
 DEC = "decimal(25,6)"
 
 
-def dsum(col: Column | str, alias: str | None = None) -> Column:
-    """Exact order-independent sum of a double column via DECIMAL."""
-    c = F.col(col) if isinstance(col, str) else col
-    out = F.sum(c.cast(DEC)).cast("double")
-    return out.alias(alias) if alias else out
+def _col(col: Column | str) -> Column:
+    return F.col(col) if isinstance(col, str) else col
 
 
-def dsum_sql(expr: str) -> str:
-    """Oracle-side twin of ``dsum``."""
-    return f"CAST(SUM(CAST(({expr}) AS DECIMAL(25,6))) AS DOUBLE)"
+def decimal_sum(col: Column | str, dec: str = DEC) -> Column:
+    """Exact order-independent sum, kept as ``dec``."""
+    return F.sum(_col(col).cast(dec))
 
 
-def exact_avg(col: Column | str, alias: str | None = None) -> Column:
-    """Order-independent mean: exact decimal sum / count."""
-    c = F.col(col) if isinstance(col, str) else col
-    out = F.sum(c.cast(DEC)).cast("double") / F.count(c)
-    return out.alias(alias) if alias else out
+def decimal_sum_sql(expr: str, dec: str = DEC) -> str:
+    """SQL text twin of ``decimal_sum``."""
+    return f"SUM(CAST(({expr}) AS {dec.upper()}))"
+
+
+def dsum(col: Column | str, dec: str = DEC) -> Column:
+    """Exact order-independent sum of a double column, as DOUBLE."""
+    return decimal_sum(col, dec).cast("double")
+
+
+def dsum_sql(expr: str, dec: str = DEC) -> str:
+    """SQL text twin of ``dsum``."""
+    return f"CAST({decimal_sum_sql(expr, dec)} AS DOUBLE)"
+
+
+def decimal_dot(a: Column | str, b: Column | str, dec: str,
+                dec_b: str | None = None) -> Column:
+    """Exact ``Σ a·b`` of two DECIMAL casts (``dec_b`` defaults to
+    ``dec``), kept DECIMAL: the product of two exact decimals is exact,
+    unlike a decimal cast of the double product."""
+    return F.sum(_col(a).cast(dec) * _col(b).cast(dec_b or dec))
+
+
+def decimal_dot_sql(a: str, b: str, dec: str,
+                    dec_b: str | None = None) -> str:
+    """SQL text twin of ``decimal_dot``."""
+    return (f"SUM(CAST(({a}) AS {dec.upper()})"
+            f" * CAST(({b}) AS {(dec_b or dec).upper()}))")
+
+
+def exact_avg(col: Column | str) -> Column:
+    """Order-independent mean: exact ``DEC`` sum / count."""
+    c = _col(col)
+    return dsum(c) / F.count(c)
 
 
 def exact_avg_sql(expr: str) -> str:
-    return (f"CAST(SUM(CAST(({expr}) AS DECIMAL(25,6))) AS DOUBLE)"
-            f" / COUNT({expr})")
+    """SQL text twin of ``exact_avg``."""
+    return f"{dsum_sql(expr)} / COUNT({expr})"
 
 
 def md5_int(col: Column | str, hex_chars: int) -> Column:
     """Portable integer hash: the first ``hex_chars`` hex digits of
     md5(col) as a long in ``[0, 16^hex_chars)``."""
-    c = F.col(col) if isinstance(col, str) else col
-    return (F.conv(F.substring(F.md5(c.cast("binary")), 1, hex_chars),
+    return (F.conv(F.substring(F.md5(_col(col).cast("binary")), 1, hex_chars),
                    16, 10).cast("long"))
 
 

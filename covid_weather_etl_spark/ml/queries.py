@@ -54,18 +54,13 @@ from pyspark.sql import types as T
 
 from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.numeric import (
-    cramer_sql, dsum, fround, fround_sql, fround_val, grid_sum,
-    grid_sum_sql, md5_int,
+    cramer_sql, decimal_dot, decimal_dot_sql, dsum, dsum_sql, fround,
+    fround_sql, fround_val, grid_sum, grid_sum_sql, md5_int,
 )
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
 
 EPOCH = "1970-01-01"
-
-#: exact decimal type for 2-decimal money values — casts of clean
-#: money doubles are exact in both engines (data resolution 0.01 is
-#: far above ulp), so products/sums built from it are bit-deterministic.
-M2 = "decimal(18,2)"
 
 # Shared series: daily order revenue per nation (the analog of the
 # reference's per-country daily weather series). x = days since epoch
@@ -75,7 +70,7 @@ _NATION_DAILY_SQL = f"""
         SELECT n.n_name,
                CAST(o.o_orderdate AS DATE) AS d,
                datediff('day', DATE '{EPOCH}', CAST(o.o_orderdate AS DATE)) AS x,
-               CAST(SUM(CAST(o.o_totalprice AS DECIMAL(25,6))) AS DOUBLE) AS y
+               {dsum_sql("o.o_totalprice")} AS y
         FROM orders o
         JOIN customer c ON o.o_custkey = c.c_custkey
         JOIN nation n   ON c.c_nationkey = n.n_nationkey
@@ -95,7 +90,7 @@ def nation_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(t["nation"]),
               F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name", F.to_date("o_orderdate").alias("d"))
-        .agg(dsum("o_totalprice", "y"))
+        .agg(dsum("o_totalprice").alias("y"))
         .withColumn("x", F.datediff("d", F.lit(EPOCH)))
     )
 
@@ -114,10 +109,10 @@ def nation_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                COUNT(*) AS n,
                SUM(x) AS sx,
                SUM(x * x) AS sxx,
-               CAST(SUM(CAST(y AS DECIMAL(18,2))) AS DOUBLE) AS sy,
-               CAST(SUM(CAST(y AS DECIMAL(18,2)) * CAST(x AS DECIMAL(8,0)))
-                    AS DOUBLE) AS sxy,
-               CAST(SUM(CAST(y AS DECIMAL(18,2)) * CAST(y AS DECIMAL(18,2)))
+               {dsum_sql("y", "decimal(18,2)")} AS sy,
+               CAST({decimal_dot_sql("y", "x", "decimal(18,2)",
+                                     "decimal(8,0)")} AS DOUBLE) AS sxy,
+               CAST({decimal_dot_sql("y", "y", "decimal(18,2)")}
                     AS DOUBLE) AS syy
         FROM nation_daily GROUP BY 1
     )
@@ -139,18 +134,18 @@ def ols_trend_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine map-side — the plan a 1000-executor cluster wants."""
     daily = nation_daily(spark, sf_dir)
     # y is an exact-2-decimal money value: its DECIMAL(18,2) cast is
-    # exact in both engines, and every second moment is then an exact
-    # decimal PRODUCT-of-decimals sum — never a cast of a messy double
-    # product, whose 6th-decimal rounding is engine-dependent.
-    yd = F.col("y").cast(M2)
-    xd = F.col("x").cast("decimal(8,0)")
+    # exact in both engines (data resolution 0.01 is far above ulp),
+    # and every second moment is then an exact decimal PRODUCT-of-
+    # decimals sum — never a cast of a messy double product, whose
+    # 6th-decimal rounding is engine-dependent.
     sums = daily.groupBy("n_name").agg(
         F.count("*").alias("n"),
         F.sum("x").alias("sx"),
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(yd).cast("double").alias("sy"),
-        F.sum(yd * xd).cast("double").alias("sxy"),
-        F.sum(yd * yd).cast("double").alias("syy"),
+        dsum("y", "decimal(18,2)").alias("sy"),
+        decimal_dot("y", "x", "decimal(18,2)", "decimal(8,0)")
+        .cast("double").alias("sxy"),
+        decimal_dot("y", "y", "decimal(18,2)").cast("double").alias("syy"),
     )
     n, sx, sxx = F.col("n"), F.col("sx"), F.col("sxx")
     sy, sxy, syy = F.col("sy"), F.col("sxy"), F.col("syy")
@@ -191,17 +186,18 @@ _SPLIT_SQL = f"""
     {_SPLIT_SQL}
     SELECT n_name,
            COUNT(*) AS n_test,
-           {fround_sql("CAST(SUM(CAST(ABS(e) AS DECIMAL(18,2))) AS DOUBLE)"
-                       " / COUNT(*)")} AS mae,
-           {fround_sql("SQRT(CAST(SUM(CAST(e AS DECIMAL(18,2))"
-                       " * CAST(e AS DECIMAL(18,2))) AS DOUBLE)"
-                       " / COUNT(*))")} AS rmse,
-           {fround_sql("1.0 - CAST(SUM(CAST(e AS DECIMAL(18,2))"
-                       " * CAST(e AS DECIMAL(18,2))) AS DOUBLE)"
-                       " / (CAST(SUM(CAST(y AS DECIMAL(18,2))"
-                       " * CAST(y AS DECIMAL(18,2))) AS DOUBLE)"
-                       "    - POWER(CAST(SUM(CAST(y AS DECIMAL(18,2)))"
-                       " AS DOUBLE), 2) / COUNT(*))")} AS r2
+           {fround_sql(dsum_sql("ABS(e)", "decimal(18,2)")
+                       + " / COUNT(*)")} AS mae,
+           {fround_sql("SQRT(CAST("
+                       + decimal_dot_sql("e", "e", "decimal(18,2)")
+                       + " AS DOUBLE) / COUNT(*))")} AS rmse,
+           {fround_sql("1.0 - CAST("
+                       + decimal_dot_sql("e", "e", "decimal(18,2)")
+                       + " AS DOUBLE) / (CAST("
+                       + decimal_dot_sql("y", "y", "decimal(18,2)")
+                       + " AS DOUBLE) - POWER("
+                       + dsum_sql("y", "decimal(18,2)")
+                       + ", 2) / COUNT(*))")} AS r2
     FROM test GROUP BY 1
     """,
 )
@@ -226,15 +222,13 @@ def persistence_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("e", F.col("y") - F.col("y_prev")))
     # e = difference of exact-2-decimal values → itself clean 2-decimal;
     # second moments as exact decimal products (see ols_trend_per_group).
-    ed, yd = F.col("e").cast(M2), F.col("y").cast(M2)
-    sse = F.sum(ed * ed).cast("double")
-    syy = F.sum(yd * yd).cast("double")
-    sy = F.sum(yd).cast("double")
+    sse = decimal_dot("e", "e", "decimal(18,2)").cast("double")
+    syy = decimal_dot("y", "y", "decimal(18,2)").cast("double")
+    sy = dsum("y", "decimal(18,2)")
     n = F.count("*")
     return test.groupBy("n_name").agg(
         n.alias("n_test"),
-        fround(F.sum(F.abs(F.col("e")).cast(M2)).cast("double") / n)
-        .alias("mae"),
+        fround(dsum(F.abs(F.col("e")), "decimal(18,2)") / n).alias("mae"),
         fround(F.sqrt(sse / n)).alias("rmse"),
         fround(F.lit(1.0) - sse / (syy - F.pow(sy, F.lit(2)) / n))
         .alias("r2"),
@@ -255,8 +249,8 @@ def persistence_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats AS (
         SELECT n_name,
                COUNT(*) AS n_train,
-               CAST(SUM(CAST(y AS DECIMAL(18,2))) AS DOUBLE) AS sy,
-               CAST(SUM(CAST(y AS DECIMAL(18,2)) * CAST(y AS DECIMAL(18,2)))
+               {dsum_sql("y", "decimal(18,2)")} AS sy,
+               CAST({decimal_dot_sql("y", "y", "decimal(18,2)")}
                     AS DOUBLE) AS syy
         FROM ranked WHERE rn <= CAST(FLOOR(n_total * 0.8) AS BIGINT)
         GROUP BY 1
@@ -285,12 +279,12 @@ def standard_scaler_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").over(wp).alias("n_total"),
     )
     cut = F.floor(F.col("n_total") * 0.8).cast("long")
-    yd = F.col("y").cast(M2)
     stats = (ranked.filter(F.col("rn") <= cut)
              .groupBy("n_name")
              .agg(F.count("*").alias("n_train"),
-                  F.sum(yd).cast("double").alias("sy"),
-                  F.sum(yd * yd).cast("double").alias("syy")))
+                  dsum("y", "decimal(18,2)").alias("sy"),
+                  decimal_dot("y", "y", "decimal(18,2)")
+                  .cast("double").alias("syy")))
     mu = F.col("sy") / F.col("n_train")
     sigma = F.sqrt((F.col("syy") - F.col("sy") * F.col("sy") / F.col("n_train"))
                    / (F.col("n_train") - 1))
@@ -316,11 +310,8 @@ _AR_A = [["n", "s1", "s2", "s3"],
          ["s3", "s13", "s23", "s33"]]
 _AR_B = ["sy", "s1y", "s2y", "s3y"]
 
-#: exact accumulator for the Gram sums: second-order products of
-#: ~1e6-scale daily revenues reach ~1e13 per row / ~1e17 per group —
-#: DECIMAL(38,6) holds 1e32 with headroom and stays map-combinable.
-_D38 = "CAST(SUM(CAST(({e}) AS DECIMAL(38,6))) AS DOUBLE)"
-
+#: The first-order sums accumulate as DECIMAL(38,6): it holds 1e32, far
+#: above a group's ~1e6-scale daily revenues, and stays map-combinable.
 #: PRODUCT terms accumulate as exact centi-unit integers
 #: (``grid_sum_sql(e, 2)``), not as a double→DECIMAL(p,6) cast.
 #: Reason (measured at sf0.001: 61 of 350 Gram sums off in the last
@@ -358,11 +349,11 @@ def _ar_design_sql(src: str) -> str:
 
 
 def _ar_sums_sql(design_src: str) -> str:
-    d = _D38.format
+    d = {c: dsum_sql(c, "decimal(38,6)") for c in ("y1", "y2", "y3", "y")}
     return f"""
     SELECT n_name, CAST(COUNT(*) AS DOUBLE) AS n,
-           {d(e='y1')} AS s1, {d(e='y2')} AS s2, {d(e='y3')} AS s3,
-           {d(e='y')} AS sy,
+           {d['y1']} AS s1, {d['y2']} AS s2, {d['y3']} AS s3,
+           {d['y']} AS sy,
            {grid_sum_sql('y1 * y1', 2)} AS s11,
            {grid_sum_sql('y1 * y2', 2)} AS s12,
            {grid_sum_sql('y1 * y3', 2)} AS s13,
@@ -1366,7 +1357,7 @@ def nation_daily_exog(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(t["nation"]),
               F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name", F.to_date("o_orderdate").alias("d"))
-        .agg(dsum("o_totalprice", "y"),
+        .agg(dsum("o_totalprice").alias("y"),
              F.count("*").alias("n_orders"),
              F.avg((F.col("o_orderpriority") == "1-URGENT")
                    .cast("double")).alias("urgent_share"))
@@ -2031,10 +2022,9 @@ def _hw_oracle() -> str:
     agg AS (
         SELECT n_name, n_train,
                CAST(COUNT(*) AS INT) AS n_test,
-               CAST(SUM(CAST(ABS(y - fc) AS DECIMAL(38,6)))
-                    AS DOUBLE) AS sae,
+               {dsum_sql('ABS(y - fc)', 'decimal(38,6)')} AS sae,
                {grid_sum_sql('(y - fc) * (y - fc)', 4)} AS sse,
-               CAST(SUM(CAST(y AS DECIMAL(25,6))) AS DOUBLE) AS sy,
+               {dsum_sql('y')} AS sy,
                {grid_sum_sql('y * y', 4)} AS syy
         FROM joined GROUP BY n_name, n_train
     )
@@ -2084,11 +2074,9 @@ def holt_winters_forecast_eval(spark: SparkSession,
     # decimal path.
     agg = (rows.groupBy("n_name", "n_train")
            .agg(F.count("*").cast("int").alias("n_test"),
-                F.sum(F.abs(err).cast("decimal(38,6)")).cast("double")
-                .alias("sae"),
+                dsum(F.abs(err), "decimal(38,6)").alias("sae"),
                 grid_sum(err * err, 4).alias("sse"),
-                F.sum(F.col("y").cast("decimal(25,6)")).cast("double")
-                .alias("sy"),
+                dsum("y").alias("sy"),
                 grid_sum(F.col("y") * F.col("y"), 4).alias("syy")))
     sst = F.col("syy") - F.col("sy") * F.col("sy") / F.col("n_test")
     return (agg.select(
@@ -2235,7 +2223,7 @@ MASE_SEASON = 7
     ),
     scal AS (
         SELECT n_name,
-               CAST(SUM(CAST(ABS(y - y_prev) AS DECIMAL(18,2))) AS DOUBLE)
+               {dsum_sql("ABS(y - y_prev)", "decimal(18,2)")}
                  / COUNT(*) AS s
         FROM ranked
         WHERE rn <= CAST(FLOOR(n_total * 0.8) AS BIGINT)
@@ -2250,11 +2238,11 @@ MASE_SEASON = 7
     )
     SELECT t.n_name,
            COUNT(*) AS n_test,
-           {fround_sql("CAST(SUM(CAST(ABS(e) AS DECIMAL(18,2))) AS DOUBLE)"
-                       " / COUNT(*)")} AS mae_snaive,
+           {fround_sql(dsum_sql("ABS(e)", "decimal(18,2)")
+                       + " / COUNT(*)")} AS mae_snaive,
            {fround_sql("s")} AS naive_scale,
-           {fround_sql("(CAST(SUM(CAST(ABS(e) AS DECIMAL(18,2))) AS DOUBLE)"
-                       " / COUNT(*)) / s")} AS mase
+           {fround_sql("(" + dsum_sql("ABS(e)", "decimal(18,2)")
+                       + " / COUNT(*)) / s")} AS mase
     FROM test t JOIN scal USING (n_name)
     GROUP BY t.n_name, s
     """,
@@ -2289,13 +2277,12 @@ def mase_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     scal = (ranked
             .filter((F.col("rn") <= cut) & F.col("y_prev").isNotNull())
             .groupBy("n_name")
-            .agg((F.sum(F.abs(F.col("y") - F.col("y_prev")).cast(M2))
-                  .cast("double") / F.count("*")).alias("s")))
+            .agg((dsum(F.abs(F.col("y") - F.col("y_prev")), "decimal(18,2)")
+                  / F.count("*")).alias("s")))
     test = (ranked
             .filter((F.col("rn") > cut) & F.col("y_lag7").isNotNull())
             .withColumn("e", F.col("y") - F.col("y_lag7")))
-    mae = (F.sum(F.abs(F.col("e")).cast(M2)).cast("double")
-           / F.count("*"))
+    mae = dsum(F.abs(F.col("e")), "decimal(18,2)") / F.count("*")
     return (test.groupBy("n_name")
             .agg(F.count("*").alias("n_test"), mae.alias("mae_raw"))
             .join(scal, "n_name")

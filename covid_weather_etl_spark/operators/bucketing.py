@@ -135,7 +135,7 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucketed_join(spark, sf_dir)
         .groupBy("o_orderstatus")
         .agg(F.count("*").alias("n_items"),
-             dsum("l_extendedprice", "revenue"))
+             dsum("l_extendedprice").alias("revenue"))
     )
 
 
@@ -188,7 +188,7 @@ def salted_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                   & (fact["salt"] == other["salt"]))
             .groupBy("o_orderpriority")
             .agg(F.count("*").alias("n_items"),
-                 dsum("l_extendedprice", "revenue")))
+                 dsum("l_extendedprice").alias("revenue")))
 
 
 #: hash-bucket count for the shard-skew audit (a stand-in for the

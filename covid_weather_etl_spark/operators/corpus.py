@@ -43,7 +43,7 @@ from pyspark.sql.window import Window as W
 from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
 from covid_weather_etl_spark.functions.numeric import (
-    fround, fround_sql, fround_val, md5_int,
+    decimal_sum, fround, fround_sql, fround_val, md5_int,
 )
 from covid_weather_etl_spark.functions.textops import ngrams, shingled_rows
 from covid_weather_etl_spark.operators import text as TX
@@ -1289,7 +1289,7 @@ def star_components(pairs: DataFrame,
         # decimal accumulator: a long sum of 64-bit hashes overflows
         # under ANSI mode; decimal(38,0) is exact and order-independent
         row = E.agg(F.count("*").alias("n"),
-                    F.sum(F.xxhash64("a", "b").cast("decimal(38,0)"))
+                    decimal_sum(F.xxhash64("a", "b"), "decimal(38,0)")
                     .alias("h")).first()
         return (row.n, row.h)
 
@@ -2113,6 +2113,7 @@ def cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT sc.source,
                CAST(FLOOR((sc.c * 1e0 / st.ts)
                           * LN((sc.c * 1e0 / st.ts)
+                          -- not the kernel: a snapped column, summed below
                                / (gc.g * 1e0 / gt.tg)) * 1e12 + 0.5)
                     AS DECIMAL(38,0)) AS u
         FROM sc
@@ -2155,6 +2156,7 @@ def domain_mix_kl_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     gt = gc.agg(F.sum("g").alias("tg"))
     p = F.col("c") * F.lit(1.0) / F.col("ts")
     q = F.col("g") * F.lit(1.0) / F.col("tg")
+    # not the kernel: a snapped column, summed per source below
     u = F.floor(p * F.log(p / q) * F.lit(1e12) + F.lit(0.5)) \
          .cast("decimal(38,0)")
     terms = (sc.join(F.broadcast(st), "source")

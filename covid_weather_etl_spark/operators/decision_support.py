@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.functions.numeric import (
-    dsum, dsum_sql, fround, fround_sql,
+    DEC, decimal_sum, decimal_sum_sql, dsum, dsum_sql, fround, fround_sql,
 )
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
@@ -142,8 +142,7 @@ def small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
              .drop("p_partkey"))
     thr = (lines.groupBy("l_partkey")
            .agg((F.lit(Q17_FRACTION)
-                 * (F.sum(F.col("l_quantity").cast("decimal(25,6)"))
-                    .cast("double") / F.count("*"))).alias("qty_cut"))
+                 * (dsum("l_quantity") / F.count("*"))).alias("qty_cut"))
            .withColumnRenamed("l_partkey", "t_partkey"))
     return (lines
             .join(F.broadcast(thr), F.col("l_partkey") == F.col("t_partkey"))
@@ -162,7 +161,7 @@ def small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN orders o   ON c.c_custkey = o.o_custkey
     JOIN lineitem l ON o.o_orderkey = l.l_orderkey
     GROUP BY 1, 2, 3, 4, 5
-    HAVING SUM(CAST(l.l_quantity AS DECIMAL(25,6))) > {Q18_MIN_QTY}
+    HAVING {decimal_sum_sql("l.l_quantity")} > {Q18_MIN_QTY}
     """,
 )
 def large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -179,8 +178,7 @@ def large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ("customer", "orders", "lineitem"))
     hot = (t["lineitem"]
            .groupBy("l_orderkey")
-           .agg(F.sum(F.col("l_quantity").cast("decimal(25,6)"))
-                .alias("qty_dec"))
+           .agg(decimal_sum("l_quantity").alias("qty_dec"))
            .filter(F.col("qty_dec") > Q18_MIN_QTY)
            .select("l_orderkey", F.col("qty_dec").cast("double")
                    .alias("total_qty")))
@@ -311,8 +309,7 @@ def prospect_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ("customer", "orders"))
     cust = t["customer"]
     cut = (cust.filter(F.col("c_acctbal") > 0.0)
-           .agg((F.sum(F.col("c_acctbal").cast("decimal(25,6)"))
-                 .cast("double") / F.count("*")).alias("cut")))
+           .agg((dsum("c_acctbal") / F.count("*")).alias("cut")))
     rich = (cust.crossJoin(F.broadcast(cut))
             .filter(F.col("c_acctbal") > F.col("cut")))
     never_ordered = rich.join(
@@ -321,7 +318,7 @@ def prospect_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (never_ordered
             .groupBy(F.expr("right(c_name, 2)").alias("code"))
             .agg(F.count("*").alias("numcust"),
-                 dsum("c_acctbal", "totacctbal")))
+                 dsum("c_acctbal").alias("totacctbal")))
 
 
 @register(
@@ -330,7 +327,7 @@ def prospect_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH rev AS (
         SELECT n.n_name, c.c_custkey,
-               SUM(CAST(o.o_totalprice AS DECIMAL(25,6))) AS r
+               {decimal_sum_sql("o.o_totalprice")} AS r
         FROM orders o
         JOIN customer c ON o.o_custkey = c.c_custkey
         JOIN nation n   ON c.c_nationkey = n.n_nationkey
@@ -369,8 +366,7 @@ def gini_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
            .join(F.broadcast(t["nation"]),
                  F.col("c_nationkey") == F.col("n_nationkey"))
            .groupBy("n_name", "c_custkey")
-           .agg(F.sum(F.col("o_totalprice").cast("decimal(25,6)"))
-                .alias("r")))
+           .agg(decimal_sum("o_totalprice").alias("r")))
     w = W.partitionBy("n_name").orderBy("r", "c_custkey")
     ranked = rev.withColumn("i", F.row_number().over(w).cast("long"))
     n = F.count("*")
@@ -399,12 +395,11 @@ def gini_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM rev GROUP BY 1
     ), terms AS (
         SELECT rev.n_name, tot.n_suppliers,
-               CAST(ROUND(POWER(rev.r / tot.t, 2) * 10000.0, 9)
-                    AS DECIMAL(20,9)) AS term9
+               ROUND(POWER(rev.r / tot.t, 2) * 10000.0, 9) AS term9
         FROM rev JOIN tot ON rev.n_name = tot.n_name
     )
     SELECT n_name, n_suppliers,
-           {fround_sql("CAST(SUM(term9) AS DOUBLE)")} AS hhi
+           {fround_sql(dsum_sql("term9", "decimal(20,9)"))} AS hhi
     FROM terms GROUP BY n_name, n_suppliers
     """,
 )
@@ -425,16 +420,15 @@ def hhi_supplier_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
            .join(F.broadcast(t["nation"]),
                  F.col("s_nationkey") == F.col("n_nationkey"))
            .groupBy("n_name", "l_suppkey")
-           .agg(dsum("l_extendedprice", "r")))
+           .agg(dsum("l_extendedprice").alias("r")))
     tot = (rev.groupBy(F.col("n_name").alias("t_name"))
-           .agg(dsum("r", "t"), F.count("*").alias("n_suppliers")))
+           .agg(dsum("r").alias("t"), F.count("*").alias("n_suppliers")))
     terms = (rev.join(F.broadcast(tot), F.col("n_name") == F.col("t_name"))
              .select("n_name", "n_suppliers",
                      F.round(F.pow(F.col("r") / F.col("t"), 2)
-                             * 10000.0, 9)
-                     .cast("decimal(20,9)").alias("term9")))
+                             * 10000.0, 9).alias("term9")))
     return (terms.groupBy("n_name", "n_suppliers")
-            .agg(fround(F.sum("term9").cast("double")).alias("hhi")))
+            .agg(fround(dsum("term9", "decimal(20,9)")).alias("hhi")))
 
 
 # ---------------------------------------------------------------------------
@@ -451,8 +445,7 @@ ABC_A_CUT, ABC_B_CUT = 80, 95
     oracle=f"""
     WITH rev AS (
         SELECT l_partkey AS pk,
-               SUM(CAST(l_extendedprice * (1 - l_discount)
-                        AS DECIMAL(25,6))) AS r
+               {decimal_sum_sql("l_extendedprice * (1 - l_discount)")} AS r
         FROM lineitem GROUP BY 1
     ), tot AS (
         SELECT SUM(r) AS t FROM rev
@@ -511,9 +504,8 @@ def abc_pareto_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ("lineitem",))
     rev = (t["lineitem"]
            .groupBy(F.col("l_partkey").alias("pk"))
-           .agg(F.sum((F.col("l_extendedprice")
-                       * (1 - F.col("l_discount")))
-                      .cast("decimal(25,6)")).alias("r")))
+           .agg(decimal_sum(F.col("l_extendedprice")
+                            * (1 - F.col("l_discount"))).alias("r")))
     # part-count-sized; checkpointed so the fact is scanned ONCE for
     # both the in-band prefix and the band-sum/offset branches
     banded = (rev.withColumn(
@@ -529,8 +521,7 @@ def abc_pareto_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets = (a.join(F.broadcast(b), F.col("b.band") > F.col("a.band"),
                       "left")
                .groupBy(F.col("a.band").alias("band"))
-               .agg(F.coalesce(F.sum("b.bs"),
-                               F.lit(0).cast("decimal(25,6)"))
+               .agg(F.coalesce(F.sum("b.bs"), F.lit(0).cast(DEC))
                     .alias("off")))
     tot = band_sums.agg(F.sum("bs").alias("t"))
     cum = (in_band.join(F.broadcast(offsets), "band")

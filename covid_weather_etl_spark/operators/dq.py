@@ -22,7 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from covid_weather_etl_spark.functions.numeric import fround, fround_sql
+from covid_weather_etl_spark.functions.numeric import (
+    decimal_sum, decimal_sum_sql, fround, fround_sql,
+)
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
 
@@ -453,9 +455,9 @@ L_DIV_BAND = 1000.0
         FROM sv GROUP BY 1, 2
     ), grp AS (
         SELECT g.c_nationkey, g.c_mktsegment, g.l, g.n,
-               SUM(CAST(ROUND(-(s.k * 1e0 / g.n)
-                              * LN(s.k * 1e0 / g.n), 9)
-                        AS DECIMAL(25,9))) AS ent
+               {decimal_sum_sql("ROUND(-(s.k * 1e0 / g.n)"
+                                " * LN(s.k * 1e0 / g.n), 9)",
+                                "decimal(25,9)")} AS ent
         FROM sv s
         JOIN gn g ON s.c_nationkey = g.c_nationkey
                  AND s.c_mktsegment = g.c_mktsegment
@@ -497,10 +499,10 @@ def l_diversity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     gn = (sv.groupBy("c_nationkey", "c_mktsegment")
           .agg(F.count("*").alias("l"), F.sum("k").alias("n")))
     p = F.col("k") * F.lit(1.0) / F.col("n")
-    term = F.round(-p * F.log(p), 9).cast("decimal(25,9)")
+    ent = decimal_sum(F.round(-p * F.log(p), 9), "decimal(25,9)")
     grp = (sv.join(gn, ["c_nationkey", "c_mktsegment"])
            .groupBy("c_nationkey", "c_mktsegment", "l", "n")
-           .agg(F.sum(term).alias("ent")))
+           .agg(ent.alias("ent")))
     return (grp.groupBy("l")
             .agg(F.count("*").alias("n_groups"),
                  F.sum("n").cast("long").alias("n_rows"),

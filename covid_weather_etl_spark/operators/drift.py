@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.numeric import (
-    fround, fround_sql, md5_int,
+    decimal_sum, dsum, dsum_sql, fround, fround_sql, md5_int,
 )
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
@@ -324,9 +324,8 @@ def mutual_information_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH s AS (
         SELECT event_type AS grp,
                CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE) AS sx,
-               CAST(SUM(CAST(ROUND(value * value, 6) AS DECIMAL(25,6)))
-                    AS DOUBLE) AS sxx
+               {dsum_sql("value")} AS sx,
+               {dsum_sql("ROUND(value * value, 6)")} AS sxx
         FROM events
         WHERE event_type IN ('{KS_A}', '{KS_B}') AND value IS NOT NULL
         GROUP BY 1
@@ -363,15 +362,14 @@ def welch_ttest_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     one scan, a 2-row shuffle, O(1) driver math; this is the pattern
     every moment-based test reduces to at 100 TB."""
     t = load_tables(spark, sf_dir, ("events",))
-    dec = lambda c: c.cast("decimal(25,6)")  # noqa: E731
     s = (t["events"]
          .filter(F.col("event_type").isin(KS_A, KS_B)
                  & F.col("value").isNotNull())
          .groupBy(F.col("event_type").alias("grp"))
          .agg(F.count("*").alias("n"),
-              F.sum(dec(F.col("value"))).cast("double").alias("sx"),
-              F.sum(dec(F.round(F.col("value") * F.col("value"), 6)))
-              .cast("double").alias("sxx")))
+              dsum("value").alias("sx"),
+              dsum(F.round(F.col("value") * F.col("value"), 6))
+              .alias("sxx")))
     pick = lambda g, e: F.max(F.when(F.col("grp") == g, e))  # noqa: E731
     mean = F.col("sx") / F.col("n")
     var = (F.col("sxx") - F.col("sx") * F.col("sx") / F.col("n")) \
@@ -411,7 +409,7 @@ def _fr_mi_sql(feat: str) -> str:
     return f"""
         SELECT '{feat}' AS feature,
                CAST(COUNT(DISTINCT x) AS BIGINT) AS n_levels,
-               ROUND(CAST(SUM(term) AS DOUBLE), 6) AS mi_nats
+               ROUND({dsum_sql("term", "decimal(28,9)")}, 6) AS mi_nats
         FROM (
             WITH j AS (
                 SELECT {x} AS x,
@@ -425,9 +423,9 @@ def _fr_mi_sql(feat: str) -> str:
                my AS (SELECT y, SUM(n_xy) AS n_y FROM cells GROUP BY 1),
                tt AS (SELECT SUM(n_xy) AS n FROM cells)
             SELECT cells.x,
-                   CAST(ROUND((n_xy * 1.0 / n)
-                        * LN((n_xy * 1.0 * n) / (1.0 * n_x * n_y)), 9)
-                        AS DECIMAL(28,9)) AS term
+                   ROUND((n_xy * 1.0 / n)
+                         * LN((n_xy * 1.0 * n) / (1.0 * n_x * n_y)), 9)
+                       AS term
             FROM cells JOIN mx USING (x) JOIN my USING (y) CROSS JOIN tt
         )
     """
@@ -505,14 +503,13 @@ def feature_relevance_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     term = F.round(
         (F.col("n_xy") * 1.0 / F.col("n"))
         * F.log((F.col("n_xy") * 1.0 * F.col("n"))
-                / (1.0 * F.col("n_x") * F.col("n_y"))), 9) \
-        .cast("decimal(28,9)")
+                / (1.0 * F.col("n_x") * F.col("n_y"))), 9)
     mis = (cells.join(F.broadcast(mx), ["feature", "x"])
            .join(F.broadcast(my), ["feature", "y"])
            .join(F.broadcast(tt), "feature")
            .groupBy("feature")
            .agg(F.countDistinct("x").alias("n_levels"),
-                F.round(F.sum(term).cast("double"), 6).alias("mi_nats"))
+                F.round(dsum(term, "decimal(28,9)"), 6).alias("mi_nats"))
            .localCheckpoint(eager=False))  # 4 rows; both triangular sides
     p, q = mis.alias("p"), mis.alias("q")
     ahead = ((F.col("q.mi_nats") > F.col("p.mi_nats"))
@@ -540,14 +537,15 @@ CUPED_SPLIT = "2024-01-16"
     WITH per_user AS (
         SELECT user_id,
                CAST({fround_sql(
-                 f"CAST(SUM(CASE WHEN ts < TIMESTAMP '{CUPED_SPLIT}'"
-                 " THEN CAST(value AS DECIMAL(25,6)) END) AS DOUBLE)"
-                 f" / COUNT(CASE WHEN ts < TIMESTAMP '{CUPED_SPLIT}'"
+                 dsum_sql(f"CASE WHEN ts < TIMESTAMP '{CUPED_SPLIT}'"
+                          " THEN value END")
+                 + f" / COUNT(CASE WHEN ts < TIMESTAMP '{CUPED_SPLIT}'"
                  " THEN 1 END)")} AS DECIMAL(14,6)) AS x,
+               -- not the kernel: x and y feed SUM(x * y) as decimals too
                CAST({fround_sql(
-                 f"CAST(SUM(CASE WHEN ts >= TIMESTAMP '{CUPED_SPLIT}'"
-                 " THEN CAST(value AS DECIMAL(25,6)) END) AS DOUBLE)"
-                 f" / COUNT(CASE WHEN ts >= TIMESTAMP '{CUPED_SPLIT}'"
+                 dsum_sql(f"CASE WHEN ts >= TIMESTAMP '{CUPED_SPLIT}'"
+                          " THEN value END")
+                 + f" / COUNT(CASE WHEN ts >= TIMESTAMP '{CUPED_SPLIT}'"
                  " THEN 1 END)")} AS DECIMAL(14,6)) AS y
         FROM events GROUP BY user_id
         HAVING COUNT(CASE WHEN ts < TIMESTAMP '{CUPED_SPLIT}' THEN 1 END) > 0
@@ -592,12 +590,14 @@ def cuped_adjusted_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ("events",))
     pre = F.col("ts") < CUPED_SPLIT
     post = F.col("ts") >= CUPED_SPLIT
-    val = F.col("value").cast("decimal(25,6)")
+    # not the kernel: x and y feed SUM(x * y) as decimals too
     per_user = (t["events"]
                 .groupBy("user_id")
-                .agg(F.sum(F.when(pre, val)).alias("pre_sum"),
+                .agg(decimal_sum(F.when(pre, F.col("value")))
+                     .alias("pre_sum"),
                      F.count(F.when(pre, 1)).alias("pre_cnt"),
-                     F.sum(F.when(post, val)).alias("post_sum"),
+                     decimal_sum(F.when(post, F.col("value")))
+                     .alias("post_sum"),
                      F.count(F.when(post, 1)).alias("post_cnt"))
                 .filter((F.col("pre_cnt") > 0) & (F.col("post_cnt") > 0))
                 .select(
@@ -641,8 +641,7 @@ DID_TREAT_MOD = 2
         SELECT (user_id % {DID_TREAT_MOD} = 1)              AS treated,
                (ts >= TIMESTAMP '{CUPED_SPLIT}')            AS post,
                CAST(COUNT(*) AS BIGINT)                     AS n,
-               CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE)
-                   / COUNT(*)                               AS m
+               {dsum_sql("value")} / COUNT(*) AS m
         FROM events GROUP BY 1, 2
     )
     SELECT
@@ -687,8 +686,7 @@ def did_revenue_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
                       .alias("treated"),
                       (F.col("ts") >= CUPED_SPLIT).alias("post"))
              .agg(F.count("*").alias("n"),
-                  (F.sum(F.col("value").cast("decimal(25,6)"))
-                   .cast("double") / F.count("*")).alias("m")))
+                  (dsum("value") / F.count("*")).alias("m")))
 
     def cell(col: str, tr: bool, po: bool):
         return F.max(F.when((F.col("treated") == tr)
@@ -719,6 +717,8 @@ _OPE_PI_SQL = ("CASE event_type "
                + " ".join(f"WHEN '{a}' THEN {p}"
                           for a, p in sorted(OPE_TARGET.items()))
                + " ELSE 0.0 END")
+#: the exact sums of the 9dp IPS terms, as oracle SQL
+_OPE_SUMS = {c: dsum_sql(c, "decimal(25,9)") for c in ("wv9", "w9", "ww9")}
 
 
 @register(
@@ -737,18 +737,16 @@ _OPE_PI_SQL = ("CASE event_type "
         JOIN prop ON e.event_type = prop.act
         CROSS JOIN n
     ), terms AS (
-        SELECT CAST(ROUND(w * v, 9) AS DECIMAL(25,9)) AS wv9,
-               CAST(ROUND(w, 9)     AS DECIMAL(25,9)) AS w9,
-               CAST(ROUND(w * w, 9) AS DECIMAL(25,9)) AS ww9
+        SELECT ROUND(w * v, 9) AS wv9, ROUND(w, 9) AS w9,
+               ROUND(w * w, 9) AS ww9
         FROM weighted
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n_logged,
-           {fround_sql("CAST(SUM(wv9) AS DOUBLE) / COUNT(*)")}
-               AS ips_value,
-           {fround_sql("CAST(SUM(wv9) AS DOUBLE) / CAST(SUM(w9) AS DOUBLE)")}
+           {fround_sql(_OPE_SUMS["wv9"] + " / COUNT(*)")} AS ips_value,
+           {fround_sql(_OPE_SUMS["wv9"] + " / " + _OPE_SUMS["w9"])}
                AS snips_value,
-           {fround_sql("CAST(SUM(w9) AS DOUBLE) * CAST(SUM(w9) AS DOUBLE)"
-                       " / CAST(SUM(ww9) AS DOUBLE)")}
+           {fround_sql(_OPE_SUMS["w9"] + " * " + _OPE_SUMS["w9"]
+                       + " / " + _OPE_SUMS["ww9"])}
                AS effective_sample_size
     FROM terms
     """,
@@ -786,13 +784,10 @@ def ips_offpolicy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = (t["events"]
              .join(F.broadcast(prop), F.col("event_type") == F.col("a"))
              .crossJoin(F.broadcast(n_total))
-             .select(F.round(w * F.col("value"), 9)
-                     .cast("decimal(25,9)").alias("wv9"),
-                     F.round(w, 9).cast("decimal(25,9)").alias("w9"),
-                     F.round(w * w, 9).cast("decimal(25,9)").alias("ww9")))
-    swv = F.sum("wv9").cast("double")
-    sw = F.sum("w9").cast("double")
-    sww = F.sum("ww9").cast("double")
+             .select(F.round(w * F.col("value"), 9).alias("wv9"),
+                     F.round(w, 9).alias("w9"),
+                     F.round(w * w, 9).alias("ww9")))
+    swv, sw, sww = (dsum(c, "decimal(25,9)") for c in ("wv9", "w9", "ww9"))
     cnt = F.count("*")
     return terms.agg(
         cnt.alias("n_logged"),
@@ -982,7 +977,6 @@ def _nation_welch_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast dim joins, then scalar algebra; consumed by both
     multiple-testing procedures below."""
     t = load_tables(spark, sf_dir, ("orders", "customer", "nation"))
-    dec = lambda c: c.cast("decimal(25,6)")  # noqa: E731
     s = (t["orders"]
          .join(F.broadcast(t["customer"]
                            .select("c_custkey", "c_nationkey")),
@@ -992,11 +986,9 @@ def _nation_welch_z(spark: SparkSession, sf_dir: str) -> DataFrame:
                F.col("c_nationkey") == F.col("n_nationkey"))
          .groupBy("n_name")
          .agg(F.count("*").alias("n"),
-              F.sum(dec(F.col("o_totalprice"))).cast("double")
-              .alias("sx"),
-              F.sum(dec(F.round(F.col("o_totalprice")
-                                * F.col("o_totalprice"), 6)))
-              .cast("double").alias("sxx")))
+              dsum("o_totalprice").alias("sx"),
+              dsum(F.round(F.col("o_totalprice") * F.col("o_totalprice"), 6))
+              .alias("sxx")))
     g = s.agg(F.sum("n").alias("n_g"), F.sum("sx").alias("sx_g"),
               F.sum("sxx").alias("sxx_g"))
     mean_a = F.col("sx") / F.col("n")
@@ -1023,10 +1015,8 @@ _NATION_Z_CTES = f"""
     s AS (
         SELECT n.n_name,
                CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6)))
-                    AS DOUBLE) AS sx,
-               CAST(SUM(CAST(ROUND(o_totalprice * o_totalprice, 6)
-                             AS DECIMAL(25,6))) AS DOUBLE) AS sxx
+               {dsum_sql("o_totalprice")} AS sx,
+               {dsum_sql("ROUND(o_totalprice * o_totalprice, 6)")} AS sxx
         FROM orders
         JOIN customer ON o_custkey = c_custkey
         JOIN nation n ON c_nationkey = n.n_nationkey
@@ -1126,10 +1116,8 @@ def _holm_oracle() -> str:
     WITH s AS (
         SELECT n.n_name,
                CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6)))
-                    AS DOUBLE) AS sx,
-               CAST(SUM(CAST(ROUND(o_totalprice * o_totalprice, 6)
-                             AS DECIMAL(25,6))) AS DOUBLE) AS sxx
+               {dsum_sql("o_totalprice")} AS sx,
+               {dsum_sql("ROUND(o_totalprice * o_totalprice, 6)")} AS sxx
         FROM orders
         JOIN customer ON o_custkey = c_custkey
         JOIN nation n ON c_nationkey = n.n_nationkey

@@ -27,7 +27,8 @@ from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.numeric import (
-    fround, fround_sql, fround_val,
+    decimal_sum, decimal_sum_sql, dsum, dsum_sql, fround, fround_sql,
+    fround_val, grid_sum_sql,
 )
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
@@ -240,8 +241,7 @@ MTA_WINDOW_HOURS = 24
     )
     SELECT event_type,
            COUNT(*) AS n_credited_touches,
-           ROUND(CAST(SUM(CAST(ROUND(credit, 6) AS DECIMAL(25,6)))
-                      AS DOUBLE), 4) AS total_credit
+           ROUND({dsum_sql("ROUND(credit, 6)")}, 4) AS total_credit
     FROM credited
     GROUP BY 1
     """,
@@ -280,8 +280,7 @@ def multi_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (pairs.select("event_type", F.round(credit, 6).alias("credit"))
             .groupBy("event_type")
             .agg(F.count("*").alias("n_credited_touches"),
-                 F.round(F.sum(F.col("credit").cast("decimal(25,6)"))
-                         .cast("double"), 4).alias("total_credit")))
+                 F.round(dsum("credit"), 4).alias("total_credit")))
 
 
 @register(
@@ -414,6 +413,98 @@ def _surv_at_risk(rows) -> list[tuple[int, int, int, int]]:
     return out
 
 
+#: The signup→purchase risk table both survival oracles start from:
+#: one row per observation day with events d, censorings c and the
+#: at-risk count n.
+_SURV_RISK_SQL = """
+    WITH su AS (
+        SELECT user_id, MIN(ts) AS s FROM events
+        WHERE event_type = 'signup' GROUP BY 1
+    ), fp AS (
+        SELECT e.user_id, MIN(e.ts) AS p
+        FROM events e JOIN su ON e.user_id = su.user_id
+        WHERE e.event_type = 'purchase' AND e.ts >= su.s
+        GROUP BY 1
+    ), study AS (SELECT MAX(ts) AS study_end FROM events),
+    obs AS (
+        SELECT su.user_id,
+               CASE WHEN fp.p IS NOT NULL
+                    THEN CAST((epoch_us(fp.p) - epoch_us(su.s))
+                              // 86400000000 AS BIGINT)
+                    ELSE CAST((epoch_us(study_end) - epoch_us(su.s))
+                              // 86400000000 AS BIGINT)
+               END AS day,
+               CASE WHEN fp.p IS NOT NULL THEN 1 ELSE 0 END AS is_event
+        FROM su LEFT JOIN fp ON su.user_id = fp.user_id
+        CROSS JOIN study
+    ), day_tab AS (
+        SELECT day,
+               CAST(SUM(is_event) AS BIGINT) AS d,
+               CAST(SUM(1 - is_event) AS BIGINT) AS c
+        FROM obs GROUP BY day
+    ), tot AS (SELECT CAST(SUM(d + c) AS BIGINT) AS n_total FROM day_tab),
+    at_risk AS (
+        SELECT a.day, a.d, a.c,
+               n_total - COALESCE(SUM(b.d + b.c), 0) AS n
+        FROM day_tab a CROSS JOIN tot
+        LEFT JOIN day_tab b ON b.day < a.day
+        GROUP BY a.day, a.d, a.c, n_total
+    )"""
+
+
+def _surv_day_tab(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The day-grain (day, d, c) table both survival estimators read:
+    per signup cohort member, whole days from signup to the first
+    post-signup purchase (an event) or to the end of observation
+    (censored). Durations are exact integer microseconds floored to
+    days; the events scan collapses to two user-keyed MIN aggregates,
+    and everything after is horizon-bounded."""
+    t = load_tables(spark, sf_dir, ("events",))
+    ev = t["events"]
+    su = (ev.filter(F.col("event_type") == "signup")
+          .groupBy("user_id").agg(F.min("ts").alias("s")))
+    fp = (ev.filter(F.col("event_type") == "purchase")
+          .join(su, "user_id")
+          .filter(F.col("ts") >= F.col("s"))
+          .groupBy("user_id").agg(F.min("ts").alias("p")))
+    study = ev.agg(F.max("ts").alias("study_end"))
+    end_day = ((F.unix_micros("study_end") - F.unix_micros("s"))
+               / F.lit(86400000000)).cast("bigint")
+    ev_day = ((F.unix_micros("p") - F.unix_micros("s"))
+              / F.lit(86400000000)).cast("bigint")
+    obs = (su.join(fp, "user_id", "left")
+           .crossJoin(F.broadcast(study))
+           .select(F.when(F.col("p").isNotNull(), ev_day)
+                   .otherwise(end_day).alias("day"),
+                   F.when(F.col("p").isNotNull(), 1).otherwise(0)
+                   .alias("is_event")))
+    return (obs.groupBy("day")
+            .agg(F.sum("is_event").alias("d"),
+                 F.sum(1 - F.col("is_event")).alias("c"))
+            .localCheckpoint(eager=False))  # horizon-sized; reused 3×
+
+
+def _surv_risk_frame(day_tab: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(ra, rb): the at-risk table n(day_a) = n_total − Σ_{day_b <
+    day_a} (d_b + c_b) from a triangular join (no global window),
+    aliased for the estimators' second triangular join."""
+    tot = day_tab.agg(F.sum(F.col("d") + F.col("c")).alias("n_total"))
+    a, b = day_tab.alias("a"), day_tab.alias("b")
+    at_risk = (a.crossJoin(F.broadcast(tot))
+               .join(F.broadcast(b), F.col("b.day") < F.col("a.day"), "left")
+               .groupBy(F.col("a.day").alias("day"),
+                        F.col("a.d").alias("d"),
+                        F.col("a.c").alias("c"),
+                        F.col("n_total"))
+               .agg((F.col("n_total")
+                     - F.coalesce(F.sum(F.col("b.d") + F.col("b.c")),
+                                  F.lit(0))).alias("n"))
+               .drop("n_total")
+               .localCheckpoint(eager=False))  # reused as both join sides
+    ra, rb = at_risk.alias("ra"), at_risk.alias("rb")
+    return ra, rb
+
+
 def _km_from_day_tab(spark: SparkSession, rows) -> DataFrame:
     """kaplan_meier_conversion's post-day_tab algebra resolved on the
     driver (callers gate on SURV_COLLECT_MAX) — replaces the two
@@ -472,46 +563,12 @@ def _na_from_day_tab(spark: SparkSession, rows) -> DataFrame:
 @register(
     "kaplan_meier_conversion",
     survey="ext-events,A6,J1,W1",
-    oracle="""
-    WITH su AS (
-        SELECT user_id, MIN(ts) AS s FROM events
-        WHERE event_type = 'signup' GROUP BY 1
-    ), fp AS (
-        SELECT e.user_id, MIN(e.ts) AS p
-        FROM events e JOIN su ON e.user_id = su.user_id
-        WHERE e.event_type = 'purchase' AND e.ts >= su.s
-        GROUP BY 1
-    ), study AS (SELECT MAX(ts) AS study_end FROM events),
-    obs AS (
-        SELECT su.user_id,
-               CASE WHEN fp.p IS NOT NULL
-                    THEN CAST((epoch_us(fp.p) - epoch_us(su.s))
-                              // 86400000000 AS BIGINT)
-                    ELSE CAST((epoch_us(study_end) - epoch_us(su.s))
-                              // 86400000000 AS BIGINT)
-               END AS day,
-               CASE WHEN fp.p IS NOT NULL THEN 1 ELSE 0 END AS is_event
-        FROM su LEFT JOIN fp ON su.user_id = fp.user_id
-        CROSS JOIN study
-    ), day_tab AS (
-        SELECT day,
-               CAST(SUM(is_event) AS BIGINT) AS d,
-               CAST(SUM(1 - is_event) AS BIGINT) AS c
-        FROM obs GROUP BY day
-    ), tot AS (SELECT CAST(SUM(d + c) AS BIGINT) AS n_total FROM day_tab),
-    at_risk AS (
-        SELECT a.day, a.d, a.c,
-               n_total - COALESCE(SUM(b.d + b.c), 0) AS n
-        FROM day_tab a CROSS JOIN tot
-        LEFT JOIN day_tab b ON b.day < a.day
-        GROUP BY a.day, a.d, a.c, n_total
-    ), surv AS (
+    oracle=f"""{_SURV_RISK_SQL}, surv AS (
         SELECT a.day, a.d, a.c, a.n,
                MAX(CASE WHEN b.d >= b.n THEN 1 ELSE 0 END) AS hit_zero,
-               SUM(CASE WHEN b.d > 0 AND b.d < b.n
-                        THEN CAST(ROUND(LN(1.0 - b.d * 1.0 / b.n), 9)
-                                  AS DECIMAL(25,9))
-                        ELSE CAST(0 AS DECIMAL(25,9)) END) AS logsum
+               {decimal_sum_sql("CASE WHEN b.d > 0 AND b.d < b.n"
+                                " THEN ROUND(LN(1.0 - b.d * 1.0 / b.n), 9)"
+                                " ELSE 0 END", "decimal(25,9)")} AS logsum
         FROM at_risk a JOIN at_risk b ON b.day <= a.day
         GROUP BY a.day, a.d, a.c, a.n
     )
@@ -543,53 +600,18 @@ def kaplan_meier_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     survival to exactly 0 via a flag, not ln(0). Scale: events scan →
     two user-keyed aggregates; everything after is horizon-bounded.
     The oracle mirrors the same algebra in SQL."""
-    t = load_tables(spark, sf_dir, ("events",))
-    ev = t["events"]
-    su = (ev.filter(F.col("event_type") == "signup")
-          .groupBy("user_id").agg(F.min("ts").alias("s")))
-    fp = (ev.filter(F.col("event_type") == "purchase")
-          .join(su, "user_id")
-          .filter(F.col("ts") >= F.col("s"))
-          .groupBy("user_id").agg(F.min("ts").alias("p")))
-    study = ev.agg(F.max("ts").alias("study_end"))
-    end_day = ((F.unix_micros("study_end") - F.unix_micros("s"))
-               / F.lit(86400000000)).cast("bigint")
-    ev_day = ((F.unix_micros("p") - F.unix_micros("s"))
-              / F.lit(86400000000)).cast("bigint")
-    obs = (su.join(fp, "user_id", "left")
-           .crossJoin(F.broadcast(study))
-           .select(F.when(F.col("p").isNotNull(), ev_day)
-                   .otherwise(end_day).alias("day"),
-                   F.when(F.col("p").isNotNull(), 1).otherwise(0)
-                   .alias("is_event")))
-    day_tab = (obs.groupBy("day")
-               .agg(F.sum("is_event").alias("d"),
-                    F.sum(1 - F.col("is_event")).alias("c"))
-               .localCheckpoint(eager=False))  # horizon-sized; reused 3×
+    day_tab = _surv_day_tab(spark, sf_dir)
     # driver resolution (r13): the risk table is horizon-bounded —
     # resolve at-risk counts + the log-space product on the driver
     # (see _km_from_day_tab).
     tab = driver.bounded_collect(day_tab, SURV_COLLECT_MAX)
     if tab is not None:
         return _km_from_day_tab(spark, tab)
-    tot = day_tab.agg(F.sum(F.col("d") + F.col("c")).alias("n_total"))
-    a, b = day_tab.alias("a"), day_tab.alias("b")
-    at_risk = (a.crossJoin(F.broadcast(tot))
-               .join(F.broadcast(b), F.col("b.day") < F.col("a.day"), "left")
-               .groupBy(F.col("a.day").alias("day"),
-                        F.col("a.d").alias("d"),
-                        F.col("a.c").alias("c"),
-                        F.col("n_total"))
-               .agg((F.col("n_total")
-                     - F.coalesce(F.sum(F.col("b.d") + F.col("b.c")),
-                                  F.lit(0))).alias("n"))
-               .drop("n_total")
-               .localCheckpoint(eager=False))  # reused as both join sides
-    ra, rb = at_risk.alias("ra"), at_risk.alias("rb")
+    ra, rb = _surv_risk_frame(day_tab)
     frac = F.col("rb.d") * 1.0 / F.col("rb.n")
     term = (F.when((F.col("rb.d") > 0) & (F.col("rb.d") < F.col("rb.n")),
-                   F.round(F.log(1.0 - frac), 9).cast("decimal(25,9)"))
-            .otherwise(F.lit(0).cast("decimal(25,9)")))
+                   F.round(F.log(1.0 - frac), 9))
+            .otherwise(F.lit(0)))
     surv = (ra.join(F.broadcast(rb), F.col("rb.day") <= F.col("ra.day"))
             .groupBy(F.col("ra.day").alias("day"),
                      F.col("ra.d").alias("n_events"),
@@ -597,7 +619,7 @@ def kaplan_meier_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("ra.n").alias("n_at_risk"))
             .agg(F.max(F.when(F.col("rb.d") >= F.col("rb.n"), 1)
                        .otherwise(0)).alias("hit_zero"),
-                 F.sum(term).alias("logsum")))
+                 decimal_sum(term, "decimal(25,9)").alias("logsum")))
     return surv.select(
         F.col("day").cast("bigint").alias("day"),
         F.col("n_at_risk").cast("bigint").alias("n_at_risk"),
@@ -934,15 +956,14 @@ DECAY_HALF_LIFE_DAYS = 30.0
         SELECT MAX(ts) AS t_max FROM events
     ), weighted AS (
         SELECT e.user_id,
-               CAST(e.value * EXP(-LN(2e0) / {DECAY_HALF_LIFE_DAYS!r}
-                    * ((epoch_us(a.t_max) - epoch_us(e.ts)) / 86400e6))
-                    AS DECIMAL(25,6)) AS term
+               e.value * EXP(-LN(2e0) / {DECAY_HALF_LIFE_DAYS!r}
+                   * ((epoch_us(a.t_max) - epoch_us(e.ts)) / 86400e6))
+                   AS term
         FROM events e CROSS JOIN anchor a
     )
     SELECT user_id,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           {fround_sql("CAST(SUM(term) AS DOUBLE)")}
-               AS decayed_score
+           {fround_sql(dsum_sql("term"))} AS decayed_score
     FROM weighted GROUP BY user_id
     """,
 )
@@ -973,14 +994,13 @@ def time_decay_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.lit(86400e6))
     term = (F.col("value")
             * F.exp(F.lit(-0.6931471805599453 / DECAY_HALF_LIFE_DAYS)
-                    * age_days)).cast("decimal(25,6)")
+                    * age_days))
     return (t["events"]
             .crossJoin(F.broadcast(anchor))
             .select("user_id", term.alias("term"))
             .groupBy("user_id")
             .agg(F.count("*").alias("n_events"),
-                 fround(F.sum("term").cast("double"))
-                 .alias("decayed_score")))
+                 fround(dsum("term")).alias("decayed_score")))
 
 
 #: minimum reward margin for a preference pair to be emitted.
@@ -1066,45 +1086,12 @@ def dpo_pair_construction(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "nelson_aalen_hazard",
     survey="ext-events,A6,J1,W1,F10",
-    oracle=f"""
-    WITH su AS (
-        SELECT user_id, MIN(ts) AS s FROM events
-        WHERE event_type = 'signup' GROUP BY 1
-    ), fp AS (
-        SELECT e.user_id, MIN(e.ts) AS p
-        FROM events e JOIN su ON e.user_id = su.user_id
-        WHERE e.event_type = 'purchase' AND e.ts >= su.s
-        GROUP BY 1
-    ), study AS (SELECT MAX(ts) AS study_end FROM events),
-    obs AS (
-        SELECT su.user_id,
-               CASE WHEN fp.p IS NOT NULL
-                    THEN CAST((epoch_us(fp.p) - epoch_us(su.s))
-                              // 86400000000 AS BIGINT)
-                    ELSE CAST((epoch_us(study_end) - epoch_us(su.s))
-                              // 86400000000 AS BIGINT)
-               END AS day,
-               CASE WHEN fp.p IS NOT NULL THEN 1 ELSE 0 END AS is_event
-        FROM su LEFT JOIN fp ON su.user_id = fp.user_id
-        CROSS JOIN study
-    ), day_tab AS (
-        SELECT day,
-               CAST(SUM(is_event) AS BIGINT) AS d,
-               CAST(SUM(1 - is_event) AS BIGINT) AS c
-        FROM obs GROUP BY day
-    ), tot AS (SELECT CAST(SUM(d + c) AS BIGINT) AS n_total FROM day_tab),
-    at_risk AS (
-        SELECT a.day, a.d, a.c,
-               n_total - COALESCE(SUM(b.d + b.c), 0) AS n
-        FROM day_tab a CROSS JOIN tot
-        LEFT JOIN day_tab b ON b.day < a.day
-        GROUP BY a.day, a.d, a.c, n_total
-    ), haz AS (
+    oracle=f"""{_SURV_RISK_SQL}, haz AS (
         SELECT a.day, a.d, a.c, a.n,
-               SUM(CAST(ROUND(b.d * 1e0 / b.n, 9)
-                        AS DECIMAL(25,9))) AS h,
-               SUM(CAST(ROUND(b.d * 1e0 / (b.n * 1e0 * b.n), 9)
-                        AS DECIMAL(25,9))) AS v
+               {decimal_sum_sql("ROUND(b.d * 1e0 / b.n, 9)",
+                                "decimal(25,9)")} AS h,
+               {decimal_sum_sql("ROUND(b.d * 1e0 / (b.n * 1e0 * b.n), 9)",
+                                "decimal(25,9)")} AS v
         FROM at_risk a JOIN at_risk b ON b.day <= a.day
         GROUP BY a.day, a.d, a.c, a.n
     )
@@ -1134,60 +1121,23 @@ def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     events scan collapses to two user-keyed MIN aggregates; everything
     after is horizon-bounded (≤ observation days rows), so the
     triangular joins are broadcast-sized at any corpus scale."""
-    t = load_tables(spark, sf_dir, ("events",))
-    ev = t["events"]
-    su = (ev.filter(F.col("event_type") == "signup")
-          .groupBy("user_id").agg(F.min("ts").alias("s")))
-    fp = (ev.filter(F.col("event_type") == "purchase")
-          .join(su, "user_id")
-          .filter(F.col("ts") >= F.col("s"))
-          .groupBy("user_id").agg(F.min("ts").alias("p")))
-    study = ev.agg(F.max("ts").alias("study_end"))
-    end_day = ((F.unix_micros("study_end") - F.unix_micros("s"))
-               / F.lit(86400000000)).cast("bigint")
-    ev_day = ((F.unix_micros("p") - F.unix_micros("s"))
-              / F.lit(86400000000)).cast("bigint")
-    obs = (su.join(fp, "user_id", "left")
-           .crossJoin(F.broadcast(study))
-           .select(F.when(F.col("p").isNotNull(), ev_day)
-                   .otherwise(end_day).alias("day"),
-                   F.when(F.col("p").isNotNull(), 1).otherwise(0)
-                   .alias("is_event")))
-    day_tab = (obs.groupBy("day")
-               .agg(F.sum("is_event").alias("d"),
-                    F.sum(1 - F.col("is_event")).alias("c"))
-               .localCheckpoint(eager=False))  # horizon-sized; reused 3x
+    day_tab = _surv_day_tab(spark, sf_dir)
     # driver resolution (r13): same gate/discipline as
     # kaplan_meier_conversion above (see _na_from_day_tab).
     tab = driver.bounded_collect(day_tab, SURV_COLLECT_MAX)
     if tab is not None:
         return _na_from_day_tab(spark, tab)
-    tot = day_tab.agg(F.sum(F.col("d") + F.col("c")).alias("n_total"))
-    a, b = day_tab.alias("a"), day_tab.alias("b")
-    at_risk = (a.crossJoin(F.broadcast(tot))
-               .join(F.broadcast(b), F.col("b.day") < F.col("a.day"),
-                     "left")
-               .groupBy(F.col("a.day").alias("day"),
-                        F.col("a.d").alias("d"),
-                        F.col("a.c").alias("c"),
-                        F.col("n_total"))
-               .agg((F.col("n_total")
-                     - F.coalesce(F.sum(F.col("b.d") + F.col("b.c")),
-                                  F.lit(0))).alias("n"))
-               .drop("n_total")
-               .localCheckpoint(eager=False))  # reused as both join sides
-    ra, rb = at_risk.alias("ra"), at_risk.alias("rb")
-    hterm = (F.round(F.col("rb.d") * F.lit(1.0) / F.col("rb.n"), 9)
-             .cast("decimal(25,9)"))
-    vterm = (F.round(F.col("rb.d") * F.lit(1.0)
-                     / (F.col("rb.n") * F.lit(1.0) * F.col("rb.n")), 9)
-             .cast("decimal(25,9)"))
+    ra, rb = _surv_risk_frame(day_tab)
+    hterm = F.round(F.col("rb.d") * F.lit(1.0) / F.col("rb.n"), 9)
+    vterm = F.round(F.col("rb.d") * F.lit(1.0)
+                    / (F.col("rb.n") * F.lit(1.0) * F.col("rb.n")), 9)
     haz = (ra.join(F.broadcast(rb), F.col("rb.day") <= F.col("ra.day"))
            .groupBy(F.col("ra.day").alias("day"),
                     F.col("ra.d").alias("n_events"),
                     F.col("ra.c").alias("n_censored"),
                     F.col("ra.n").alias("n_at_risk"))
-           .agg(F.sum(hterm).alias("h"), F.sum(vterm).alias("v")))
+           .agg(decimal_sum(hterm, "decimal(25,9)").alias("h"),
+                decimal_sum(vterm, "decimal(25,9)").alias("v")))
     return haz.select(
         F.col("day").cast("long").alias("day"),
         F.col("n_at_risk").cast("long").alias("n_at_risk"),
@@ -1293,11 +1243,12 @@ def _bt_round_sql(pairs: str, pi: str, wins: str, k_items: str) -> str:
     summed, pi' = W_i/denom snapped to 1e-6, then normalized to sum
     to the item count and snapped again — so every round starts from
     grid numbers on both engines."""
+    # not the kernel: an integer count, n_ij·1e9 scaled before the divide
+    denom = ("CAST(SUM(CAST(FLOOR(p.n_ij * 1e9 / (pa.pi + pb.pi) + 5e-1)"
+             " AS DECIMAL(25,0))) AS DOUBLE)")
     raw = f"""
         SELECT w.item,
-               {fround_sql("w.n_wins * 1e0 / CAST(SUM(CAST(FLOOR("
-                           "p.n_ij * 1e9 / (pa.pi + pb.pi) + 5e-1) "
-                           "AS DECIMAL(25,0))) AS DOUBLE) * 1e9")} AS pr
+               {fround_sql(f"w.n_wins * 1e0 / {denom} * 1e9")} AS pr
         FROM {wins} w
         JOIN {pairs} p ON p.i = w.item
         JOIN {pi} pa ON pa.item = p.i
@@ -1309,17 +1260,16 @@ def _bt_round_sql(pairs: str, pi: str, wins: str, k_items: str) -> str:
                {fround_sql("r.pr * (SELECT n FROM " + k_items + ") / "
                            "t.tot")} AS pi
         FROM ({raw}) r
-        CROSS JOIN (SELECT CAST(SUM(CAST(FLOOR(pr * 1e6 + 5e-1)
-                         AS DECIMAL(25,0))) AS DOUBLE) / 1e6 AS tot
+        CROSS JOIN (SELECT {grid_sum_sql("pr", 6)} AS tot
                     FROM ({raw})) t
     """
 
 
 def _bt_oracle_sql() -> str:
-    base = """
+    base = f"""
     totals AS (
         SELECT user_id, event_type,
-               SUM(CAST(value AS DECIMAL(25,6))) AS tot
+               {decimal_sum_sql("value")} AS tot
         FROM events WHERE value IS NOT NULL
         GROUP BY 1, 2
     ),
@@ -1392,8 +1342,7 @@ def bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ("events",))
     totals = (t["events"].filter(F.col("value").isNotNull())
               .groupBy("user_id", "event_type")
-              .agg(F.sum(F.col("value").cast("decimal(25,6)"))
-                   .alias("tot"))
+              .agg(decimal_sum("value").alias("tot"))
               # (user, type)-sized; checkpointed so the events scan +
               # aggregate runs ONCE for both sides of the duel join
               .localCheckpoint(eager=False))

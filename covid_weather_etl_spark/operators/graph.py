@@ -48,17 +48,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.functions import driver
-from covid_weather_etl_spark.functions.numeric import fround, fround_sql
+from covid_weather_etl_spark.functions.numeric import (
+    decimal_sum, decimal_sum_sql, dsum, dsum_sql, fround, fround_sql,
+)
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
 
 DAMPING = 0.85
 PR_ROUNDS = 10   # hard cap; the tol-based early exit usually fires first
 PR_TOL = 1e-4    # L1 threshold on the extrapolated sequence's delta
-_DEC = "decimal(18,15)"  # exact accumulator for rank mass (ranks ≤ 1); 18
-# digits keeps Spark decimals in the compact-long fast path (38,30 was
-# ~2× slower byte-array math) while 15 fractional digits hold every
-# per-node mass sum far below the 1e-12 numpy-parity band
 
 #: rounds executed by the most recent pagerank() call (for tests: the
 #: numpy twin must run the identical number of rounds for bit-parity)
@@ -133,8 +131,13 @@ def pagerank(edges: DataFrame, rounds: int = PR_ROUNDS,
         contrib = (e.join(hint(prev.select("node", "rank")),
                           F.col("src") == F.col("node"))
                    .groupBy("dst")
-                   .agg(F.sum((F.col("frac") * F.col("rank")).cast(_DEC))
-                        .cast("double").alias("mass")))
+                   # rank mass (ranks ≤ 1) sums as DECIMAL(18,15): 18
+                   # digits keep Spark decimals in the compact-long fast
+                   # path (38,30 was ~2× slower byte-array math) while
+                   # 15 fractional digits hold every per-node mass sum
+                   # far below the 1e-12 numpy-parity band
+                   .agg(dsum(F.col("frac") * F.col("rank"), "decimal(18,15)")
+                        .alias("mass")))
         # contrib is node-count-sized like the rank frame — broadcast
         # it into the state update too, so a round's ONLY shuffle is
         # the groupBy(dst) aggregate (the left join would otherwise
@@ -174,8 +177,8 @@ def pagerank(edges: DataFrame, rounds: int = PR_ROUNDS,
         if tol is not None and i >= 1:
             # DECIMAL-exact L1 so the stopping round (hence the result)
             # is independent of partitioning / accumulation order
-            delta = (state.agg(F.sum(F.col("dterm").cast(_DEC))
-                               .cast("double").alias("d")).first()["d"])
+            delta = (state.agg(dsum("dterm", "decimal(18,15)").alias("d"))
+                     .first()["d"])
             if delta is not None and delta < tol:
                 break
     e.unpersist()
@@ -208,8 +211,7 @@ _PR_ORACLE = f"""
         (WITH cur AS (SELECT * FROM pr),
          mass AS (
             SELECT e.dst AS node,
-                   CAST(SUM(CAST(e.frac * c.rank AS DECIMAL(18,15)))
-                        AS DOUBLE) AS m
+                   {dsum_sql("e.frac * c.rank", "decimal(18,15)")} AS m
             FROM e JOIN cur c ON e.src = c.node
             GROUP BY 1
          ),
@@ -225,7 +227,8 @@ _PR_ORACLE = f"""
          )
          SELECT it, node, rank, est,
                 (previt >= 1 AND
-                 CAST(SUM(CAST(ABS(est - est_prev) AS DECIMAL(18,15)))
+                 CAST({decimal_sum_sql("ABS(est - est_prev)",
+                                       "decimal(18,15)")}
                       OVER () AS DOUBLE) < {PR_TOL})
          FROM nxt
          WHERE it <= {PR_ROUNDS} AND NOT (SELECT bool_or(stop) FROM cur)
@@ -755,8 +758,8 @@ AA_TOP = 20
         SELECT z, CAST(COUNT(*) AS BIGINT) AS d FROM und GROUP BY 1
     ), cand AS (
         SELECT a.x AS pa, b.x AS pb,
-               SUM(CAST(ROUND(1.0 / LN(deg.d), 9) AS DECIMAL(20,9)))
-                 AS s,
+               {decimal_sum_sql("ROUND(1.0 / LN(deg.d), 9)",
+                                "decimal(20,9)")} AS s,
                CAST(COUNT(*) AS BIGINT) AS n_common
         FROM und a
         JOIN und b ON a.z = b.z AND a.x < b.x
@@ -808,14 +811,14 @@ def adamic_adar_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     )).alias("p")).select("p.z", "p.x"))
     deg = (und.groupBy("z").agg(F.count("*").alias("d"))
            .select(F.col("z").alias("dz"), "d"))
-    term = F.round(1.0 / F.log(F.col("d")), 9).cast("decimal(20,9)")
+    term = F.round(1.0 / F.log(F.col("d")), 9)
     ua, ub = und.alias("ua"), und.alias("ub")
     cand = (ua.join(ub, (F.col("ua.z") == F.col("ub.z"))
                     & (F.col("ua.x") < F.col("ub.x")))
             .join(F.broadcast(deg), F.col("dz") == F.col("ua.z"))
             .groupBy(F.col("ua.x").alias("pa"),
                      F.col("ub.x").alias("pb"))
-            .agg(F.sum(term).alias("s"),
+            .agg(decimal_sum(term, "decimal(20,9)").alias("s"),
                  F.count("*").alias("n_common")))
     return (cand.join(e, ["pa", "pb"], "left_anti")
             .orderBy(F.col("s").desc(), "pa", "pb")

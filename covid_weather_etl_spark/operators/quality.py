@@ -31,7 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from covid_weather_etl_spark.functions.numeric import fround, fround_sql
+from covid_weather_etl_spark.functions.numeric import (
+    dsum, dsum_sql, fround, fround_sql,
+)
 from covid_weather_etl_spark.functions.textops import bigram_pairs, ngrams
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
@@ -322,11 +324,13 @@ def bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
           .select("doc_id", toks.alias("tk"))
           .select("doc_id", F.explode(ngrams("tk", 2)).alias("bigram"))
           .withColumn("prefix", F.split("bigram", " ")[0]))
-    # cached: the bigram-vocabulary frame (Zipf-bounded, model-sized)
-    # is used twice — broadcast into the scoring join AND folded into
-    # the prefix counts below; without the cache each use re-runs the
-    # corpus-sized explode+aggregate.
-    bgc = bg.groupBy("bigram").agg(F.count("*").alias("cbg")).cache()
+    # checkpointed: the bigram-vocabulary frame (Zipf-bounded,
+    # model-sized) is used twice — broadcast into the scoring join AND
+    # folded into the prefix counts below; without it each use re-runs
+    # the corpus-sized explode+aggregate. A local checkpoint, not
+    # .cache(): the returned plan would pin a cache entry nobody frees.
+    bgc = (bg.groupBy("bigram").agg(F.count("*").alias("cbg"))
+           .localCheckpoint(eager=False))
     # prefix counts FOLD OUT of the bigram counts (Σ over bigrams that
     # share a prefix) — aggregating the vocabulary-sized bgc instead of
     # re-running the corpus-sized explode a second time
@@ -367,10 +371,9 @@ def bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_distinct_chars,
-           {fround_sql("-CAST(SUM(CAST("
-                       "(cnt / CAST(n_chars AS DOUBLE))"
-                       " * log2(cnt / CAST(n_chars AS DOUBLE))"
-                       " AS DECIMAL(25,12))) AS DOUBLE)")}
+           {fround_sql("-" + dsum_sql("(cnt / CAST(n_chars AS DOUBLE))"
+                                      " * log2(cnt / CAST(n_chars AS DOUBLE))",
+                                      "decimal(25,12)"))}
                AS char_entropy_bits
     FROM freq
     GROUP BY doc_id, n_chars
@@ -408,10 +411,9 @@ def char_entropy_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     freq = chars.groupBy("doc_id", "n_chars", "ch").agg(
         F.count("*").alias("cnt"))
     p = F.col("cnt") / F.col("n_chars").cast("double")
-    term = (p * F.log2(p)).cast("decimal(25,12)")
     return (freq.groupBy("doc_id", "n_chars")
             .agg(F.count("*").alias("n_distinct_chars"),
-                 fround(-F.sum(term).cast("double"))
+                 fround(-dsum(p * F.log2(p), "decimal(25,12)"))
                  .alias("char_entropy_bits"))
             .select("doc_id", "n_distinct_chars", "char_entropy_bits"))
 
@@ -592,6 +594,7 @@ _AVG_NEG_LP_SQL = fround_sql("-CAST(SUM(k * lp) AS DOUBLE) / SUM(k)")
     ),
     terms AS (
         SELECT e.source, e.k,
+               -- not the kernel: k-weighted, summed as SUM(k * lp)
                CAST({fround_sql("LN((COALESCE(c12.c12, 0) + 1e0)"
                                 " / (COALESCE(c1.c1, 0) + vv.v))")}
                     AS DECIMAL(25,6)) AS lp
@@ -646,6 +649,7 @@ def ngram_perplexity_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
           .agg((F.countDistinct("tkn") + 1).alias("v")))
     ev = (big.filter(F.col("is_eval"))
           .groupBy("source", "w1", "w2").agg(F.count("*").alias("k")))
+    # not the kernel: k-weighted, summed as SUM(k * lp)
     lp = fround(F.log((F.coalesce(F.col("c12"), F.lit(0)) + F.lit(1.0))
                       / (F.coalesce(F.col("c1"), F.lit(0))
                          + F.col("v")))) \
@@ -711,6 +715,7 @@ KN_DISCOUNT = 0.75
     terms AS (
         SELECT e.source, e.k,
                CASE WHEN ctx.c1 IS NULL THEN 1 ELSE 0 END AS oov_ctx,
+               -- not the kernel: k-weighted, summed as SUM(k * lp)
                CAST({fround_sql(
                    "LN(CASE WHEN ctx.c1 IS NULL THEN"
                    " (COALESCE(bw.n1b, 0) + 1e0) / (nbv.nb + nbv.v)"
@@ -789,6 +794,7 @@ def kneser_ney_bigram_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("c1")
             + ((d * F.col("n1f")) / F.col("c1")) * pc)
     p = F.when(F.col("c1").isNull(), pc).otherwise(seen)
+    # not the kernel: k-weighted, summed as SUM(k * lp)
     lp = fround(F.log(p)).cast("decimal(25,6)")
     oov = F.when(F.col("c1").isNull(), 1).otherwise(0)
     terms = (ev.join(c12, ["w1", "w2"], "left")

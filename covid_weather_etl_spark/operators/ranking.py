@@ -25,7 +25,8 @@ from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.numeric import (
-    fround, fround_sql, fround_val,
+    decimal_sum, decimal_sum_sql, dsum, dsum_sql, fround, fround_sql,
+    fround_val,
 )
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
@@ -120,8 +121,8 @@ def exact_auc_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter((F.col("n_pos") > 0) & (F.col("n_neg") > 0))
             .groupBy("n_pos", "n_neg")
             .agg(F.round(
-                F.sum((F.col("pos") * (2 * neg_below + F.col("neg")))
-                      .cast("decimal(25,0)")).cast("double")
+                dsum(F.col("pos") * (2 * neg_below + F.col("neg")),
+                     "decimal(25,0)")
                 / (2.0 * F.col("n_pos") * F.col("n_neg")), 6)
                 .alias("auc"))
             .select("n_pos", "n_neg", "auc"))
@@ -229,7 +230,7 @@ def _spearman_from_cells(spark: SparkSession, rows):
 @register(
     "spearman_correlation",
     survey="ext-rank,A14,A6,W1",
-    oracle="""
+    oracle=f"""
     WITH t AS (
         SELECT n_chars AS a,
                CAST(len(string_split(text, ' ')) AS BIGINT) AS b
@@ -248,16 +249,11 @@ def _spearman_from_cells(spark: SparkSession, rows):
         FROM t JOIN ra ON t.a = ra.a JOIN rb ON t.b = rb.b
     ), sums AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(CAST(rka * 2 AS DECIMAL(25,0))) AS DOUBLE) / 2
-                   AS sa,
-               CAST(SUM(CAST(rkb * 2 AS DECIMAL(25,0))) AS DOUBLE) / 2
-                   AS sb,
-               CAST(SUM(CAST(rka * rkb * 4 AS DECIMAL(30,0))) AS DOUBLE)
-                   / 4 AS sab,
-               CAST(SUM(CAST(rka * rka * 4 AS DECIMAL(30,0))) AS DOUBLE)
-                   / 4 AS saa,
-               CAST(SUM(CAST(rkb * rkb * 4 AS DECIMAL(30,0))) AS DOUBLE)
-                   / 4 AS sbb
+               {dsum_sql("rka * 2", "decimal(25,0)")} / 2 AS sa,
+               {dsum_sql("rkb * 2", "decimal(25,0)")} / 2 AS sb,
+               {dsum_sql("rka * rkb * 4", "decimal(30,0)")} / 4 AS sab,
+               {dsum_sql("rka * rka * 4", "decimal(30,0)")} / 4 AS saa,
+               {dsum_sql("rkb * rkb * 4", "decimal(30,0)")} / 4 AS sbb
         FROM ranked
     )
     SELECT n,
@@ -299,17 +295,14 @@ def spearman_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = (base
               .join(F.broadcast(rank_table(base, "a")), "a")
               .join(F.broadcast(rank_table(base, "b")), "b"))
-    dec0 = lambda c, p: c.cast(f"decimal({p},0)")  # noqa: E731
+    a, b = F.col("rk2_a"), F.col("rk2_b")
     sums = ranked.agg(
         F.count("*").alias("n"),
-        (F.sum(dec0(F.col("rk2_a"), 25)).cast("double") / 2).alias("sa"),
-        (F.sum(dec0(F.col("rk2_b"), 25)).cast("double") / 2).alias("sb"),
-        (F.sum(dec0(F.col("rk2_a") * F.col("rk2_b"), 30)).cast("double")
-         / 4).alias("sab"),
-        (F.sum(dec0(F.col("rk2_a") * F.col("rk2_a"), 30)).cast("double")
-         / 4).alias("saa"),
-        (F.sum(dec0(F.col("rk2_b") * F.col("rk2_b"), 30)).cast("double")
-         / 4).alias("sbb"))
+        (dsum(a, "decimal(25,0)") / 2).alias("sa"),
+        (dsum(b, "decimal(25,0)") / 2).alias("sb"),
+        (dsum(a * b, "decimal(30,0)") / 4).alias("sab"),
+        (dsum(a * a, "decimal(30,0)") / 4).alias("saa"),
+        (dsum(b * b, "decimal(30,0)") / 4).alias("sbb"))
     n = F.col("n")
     rho = ((n * F.col("sab") - F.col("sa") * F.col("sb"))
            / (F.sqrt(n * F.col("saa") - F.col("sa") * F.col("sa"))
@@ -605,10 +598,10 @@ def _wm_from_bands(li: DataFrame, rows) -> DataFrame:
 @register(
     "weighted_median_price",
     survey="ext-rank,A11,A6,W1",
-    oracle="""
+    oracle=f"""
     WITH g AS (
         SELECT l_returnflag, l_extendedprice,
-               SUM(CAST(l_quantity AS DECIMAL(25,6))) AS w
+               {decimal_sum_sql("l_quantity")} AS w
         FROM lineitem GROUP BY 1, 2
     ), c AS (
         SELECT l_returnflag, l_extendedprice, w,
@@ -651,6 +644,7 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast — band width tunes pass-2 size exactly like the rank
     refinement's bracket."""
     t = load_tables(spark, sf_dir, ("lineitem",))
+    # not the kernel: qd feeds band and window sums kept DECIMAL
     li = t["lineitem"].select(
         "l_returnflag", "l_extendedprice",
         F.col("l_quantity").cast("decimal(25,6)").alias("qd"),
@@ -726,8 +720,8 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM d
     )
     SELECT n_pos, n_neg,
-           ROUND(CAST(SUM(CAST(ROUND(pos * tp * 1.0 / (n_pos * pp), 9)
-                              AS DECIMAL(20,9))) AS DOUBLE), 6) AS ap
+           ROUND({dsum_sql("ROUND(pos * tp * 1.0 / (n_pos * pp), 9)",
+                           "decimal(20,9)")}, 6) AS ap
     FROM c CROSS JOIN tot
     WHERE n_pos > 0 AND pos > 0
     GROUP BY n_pos, n_neg
@@ -787,13 +781,12 @@ def exact_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = d.agg(F.sum("pos").alias("n_pos"), F.sum("neg").alias("n_neg"))
     tp = F.col("tp_in") + F.col("apos")
     pp = F.col("pp_in") + F.col("aall")
-    term = (F.round(F.col("pos") * tp * 1.0 / (F.col("n_pos") * pp), 9)
-            .cast("decimal(20,9)"))
+    term = F.round(F.col("pos") * tp * 1.0 / (F.col("n_pos") * pp), 9)
     return (in_blk.join(F.broadcast(above), "blk")
             .crossJoin(F.broadcast(tot))
             .filter((F.col("n_pos") > 0) & (F.col("pos") > 0))
             .groupBy("n_pos", "n_neg")
-            .agg(F.round(F.sum(term).cast("double"), 6).alias("ap"))
+            .agg(F.round(dsum(term, "decimal(20,9)"), 6).alias("ap"))
             .select("n_pos", "n_neg", "ap"))
 
 
@@ -807,12 +800,11 @@ NDCG_K = 10
     oracle=f"""
     WITH rel AS (
         SELECT o.o_custkey AS c, l.l_partkey AS p,
-               CAST(SUM(CAST(l.l_quantity AS DECIMAL(18,2)))
-                    AS DOUBLE) AS rel
+               {dsum_sql("l.l_quantity", "decimal(18,2)")} AS rel
         FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
         GROUP BY 1, 2
     ), pop AS (
-        SELECT p, CAST(SUM(CAST(rel AS DECIMAL(18,2))) AS DOUBLE) AS pop
+        SELECT p, {dsum_sql("rel", "decimal(18,2)")} AS pop
         FROM rel GROUP BY 1
     ), pred AS (
         SELECT rel.c, rel.rel,
@@ -825,22 +817,21 @@ NDCG_K = 10
                                   ORDER BY rel DESC, rel.p) AS pos
         FROM rel
     ), dcg AS (
-        SELECT c, SUM(CAST(ROUND(rel / LOG2(pos + 1), 9)
-                           AS DECIMAL(25,9))) AS dcg
+        SELECT c, {decimal_sum_sql("ROUND(rel / LOG2(pos + 1), 9)",
+                                   "decimal(25,9)")} AS dcg
         FROM pred WHERE pos <= {NDCG_K} GROUP BY 1
     ), idcg AS (
-        SELECT c, SUM(CAST(ROUND(rel / LOG2(pos + 1), 9)
-                           AS DECIMAL(25,9))) AS idcg
+        SELECT c, {decimal_sum_sql("ROUND(rel / LOG2(pos + 1), 9)",
+                                   "decimal(25,9)")} AS idcg
         FROM ideal WHERE pos <= {NDCG_K} GROUP BY 1
     ), per_cust AS (
         SELECT dcg.c,
-               CAST(ROUND(CAST(dcg.dcg AS DOUBLE)
-                          / CAST(idcg.idcg AS DOUBLE), 9)
-                    AS DECIMAL(20,9)) AS ndcg
+               ROUND(CAST(dcg.dcg AS DOUBLE)
+                     / CAST(idcg.idcg AS DOUBLE), 9) AS ndcg
         FROM dcg JOIN idcg ON dcg.c = idcg.c
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n_customers,
-           {fround_sql("CAST(SUM(ndcg) AS DOUBLE) / COUNT(*)")}
+           {fround_sql(dsum_sql("ndcg", "decimal(20,9)") + " / COUNT(*)")}
              AS mean_ndcg
     FROM per_cust
     """,
@@ -870,31 +861,29 @@ def ndcg_popularity_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
            .join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
            .groupBy(F.col("o_custkey").alias("c"),
                     F.col("l_partkey").alias("p"))
-           .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-                .cast("double").alias("rel"))
+           .agg(dsum("l_quantity", "decimal(18,2)").alias("rel"))
            .localCheckpoint(eager=False))   # reused: pop + pred + ideal
     pop = (rel.groupBy("p")
-           .agg(F.sum(F.col("rel").cast("decimal(18,2)"))
-                .cast("double").alias("pop")))
+           .agg(dsum("rel", "decimal(18,2)").alias("pop")))
     w_pred = W.partitionBy("c").orderBy(F.col("pop").desc(), "p")
     w_ideal = W.partitionBy("c").orderBy(F.col("rel").desc(), "p")
-    term = lambda: (F.round(F.col("rel") / F.log2(F.col("pos") + 1), 9)
-                    .cast("decimal(25,9)"))
+    term = decimal_sum(F.round(F.col("rel") / F.log2(F.col("pos") + 1), 9),
+                       "decimal(25,9)")
     dcg = (rel.join(F.broadcast(pop), "p")
            .select("c", "rel", F.row_number().over(w_pred).alias("pos"))
            .filter(F.col("pos") <= NDCG_K)
-           .groupBy("c").agg(F.sum(term()).alias("dcg")))
+           .groupBy("c").agg(term.alias("dcg")))
     idcg = (rel.select("c", "rel",
                        F.row_number().over(w_ideal).alias("pos"))
             .filter(F.col("pos") <= NDCG_K)
-            .groupBy("c").agg(F.sum(term()).alias("idcg")))
+            .groupBy("c").agg(term.alias("idcg")))
     per_cust = (dcg.join(idcg, "c")
                 .select(F.round(F.col("dcg").cast("double")
                                 / F.col("idcg").cast("double"), 9)
-                        .cast("decimal(20,9)").alias("ndcg")))
+                        .alias("ndcg")))
     return (per_cust.agg(
         F.count("*").alias("n_customers"),
-        fround(F.sum("ndcg").cast("double") / F.count("*"))
+        fround(dsum("ndcg", "decimal(20,9)") / F.count("*"))
         .alias("mean_ndcg")))
 
 
@@ -986,12 +975,11 @@ RBO_REPORT_DEPTHS = (10, 25, 50)
     oracle=f"""
     WITH rev AS (
         SELECT l_partkey AS pk,
-               SUM(CAST(l_extendedprice * (1 - l_discount)
-                        AS DECIMAL(25,6))) AS v
+               {decimal_sum_sql("l_extendedprice * (1 - l_discount)")} AS v
         FROM lineitem GROUP BY 1
     ), qty AS (
         SELECT l_partkey AS pk,
-               SUM(CAST(l_quantity AS DECIMAL(25,6))) AS v
+               {decimal_sum_sql("l_quantity")} AS v
         FROM lineitem GROUP BY 1
     ), la AS (
         SELECT pk, CAST(ROW_NUMBER() OVER (ORDER BY v DESC, pk) AS BIGINT)
@@ -1013,14 +1001,14 @@ RBO_REPORT_DEPTHS = (10, 25, 50)
         GROUP BY d.d
     ), terms AS (
         SELECT d, o,
-               CAST(ROUND((1e0 - {RBO_P!r}) * POW({RBO_P!r}, d - 1)
-                          * o / d, 9) AS DECIMAL(25,9)) AS term
+               ROUND((1e0 - {RBO_P!r}) * POW({RBO_P!r}, d - 1) * o / d, 9)
+                   AS term
         FROM od
     )
     SELECT a.d AS depth,
            a.o AS n_overlap,
            {fround_sql("a.o * 1e0 / a.d")} AS agreement,
-           {fround_sql("CAST(SUM(b.term) AS DOUBLE)")}
+           {fround_sql(dsum_sql("b.term", "decimal(25,9)"))}
                AS rbo_truncated
     FROM terms a JOIN terms b ON b.d <= a.d
     WHERE a.d IN ({", ".join(str(d) for d in RBO_REPORT_DEPTHS)})
@@ -1066,12 +1054,10 @@ def rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                      .alias(rank_name)))
 
     rev = (li.groupBy(F.col("l_partkey").alias("pk"))
-           .agg(F.sum((F.col("l_extendedprice")
-                       * (1 - F.col("l_discount")))
-                      .cast("decimal(25,6)")).alias("v")))
+           .agg(decimal_sum(F.col("l_extendedprice")
+                            * (1 - F.col("l_discount"))).alias("v")))
     qty = (li.groupBy(F.col("l_partkey").alias("pk"))
-           .agg(F.sum(F.col("l_quantity").cast("decimal(25,6)"))
-                .alias("v")))
+           .agg(decimal_sum("l_quantity").alias("v")))
     # single-task collapse (r12): the two heads are ≤RBO_DEPTH rows by
     # construction — run all post-head algebra in one kernel task
     # (kernel-vs-loop pinned in tests).
@@ -1093,7 +1079,7 @@ def rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
           .groupBy("d").agg(F.count("pk").alias("o"))
           .localCheckpoint(eager=False))  # depth-bounded, reused 2x
     term = F.round((1.0 - RBO_P) * F.pow(F.lit(RBO_P), F.col("d") - 1)
-                   * F.col("o") / F.col("d"), 9).cast("decimal(25,9)")
+                   * F.col("o") / F.col("d"), 9)
     terms = od.select("d", "o", term.alias("term"))
     a, b = terms.alias("a"), terms.alias("b")
     return (a.join(F.broadcast(b), F.col("b.d") <= F.col("a.d"))
@@ -1102,7 +1088,7 @@ def rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("a.o").alias("n_overlap"))
             .agg(fround(F.col("n_overlap") * F.lit(1.0) / F.col("depth"))
                  .alias("agreement"),
-                 fround(F.sum("b.term").cast("double"))
+                 fround(dsum("b.term", "decimal(25,9)"))
                  .alias("rbo_truncated"))
             .select("depth", F.col("n_overlap").cast("long")
                     .alias("n_overlap"), "agreement", "rbo_truncated"))

@@ -126,7 +126,7 @@ def join_chain_3way(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(t["region"]), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("r_name")
         .agg(F.count("*").alias("n_suppliers"),
-             exact_avg("s_acctbal", "avg_acctbal"))
+             exact_avg("s_acctbal").alias("avg_acctbal"))
     )
 
 
@@ -158,7 +158,8 @@ def join_chain_4way_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name")
         .agg(F.count("*").alias("n_lineitems"),
-             dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
+             dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+             .alias("revenue"))
     )
 
 
@@ -346,7 +347,7 @@ def orders_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.year("o_orderdate").alias("order_year"),
                  F.month("o_orderdate").alias("order_month"))
         .agg(F.count("*").alias("n_orders"),
-             dsum("o_totalprice", "total_price"))
+             dsum("o_totalprice").alias("total_price"))
     )
 
 
@@ -423,7 +424,7 @@ def summary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = F.col("l_quantity")
     return t["lineitem"].agg(
         F.count(q).alias("n"),
-        exact_avg(q, "mean_qty"),
+        exact_avg(q).alias("mean_qty"),
         F.round(F.stddev_samp(q), 6).alias("std_qty"),
         F.min(q).alias("min_qty"),
         F.round(F.percentile(q, F.lit(0.25)), 6).alias("p25"),
@@ -607,7 +608,7 @@ def json_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.get_json_object("props", "$.k").cast("bigint").alias("k"),
                 "value")
         .groupBy("k")
-        .agg(F.count("*").alias("n"), dsum("value", "value_sum"))
+        .agg(F.count("*").alias("n"), dsum("value").alias("value_sum"))
     )
 
 
@@ -760,7 +761,7 @@ def rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.rollup("n_name", "o_orderpriority")
         .agg(
             F.grouping_id().cast("bigint").alias("lvl"),
-            dsum("o_totalprice", "revenue"),
+            dsum("o_totalprice").alias("revenue"),
             F.count("*").alias("n_orders"),
         )
         .select("n_name", "o_orderpriority", "lvl", "revenue", "n_orders")
@@ -827,7 +828,7 @@ def cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cube("o_orderstatus", "o_orderpriority")
         .agg(
             F.grouping_id().cast("bigint").alias("lvl"),
-            dsum("o_totalprice", "revenue"),
+            dsum("o_totalprice").alias("revenue"),
             F.count("*").alias("n_orders"),
         )
         .select("o_orderstatus", "o_orderpriority", "lvl", "revenue", "n_orders")
@@ -891,8 +892,8 @@ def local_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.col("n_regionkey") == F.col("r_regionkey"))
             .filter(F.col("r_name") == Q5_REGION)
             .groupBy("n_name")
-            .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")),
-                      "revenue")))
+            .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+                 .alias("revenue")))
 
 
 @register(
@@ -931,7 +932,7 @@ def grouping_sets_margins(spark: SparkSession, sf_dir: str) -> DataFrame:
                             "n_name", "o_orderpriority")
         .agg(
             F.grouping_id().cast("bigint").alias("lvl"),
-            dsum("o_totalprice", "revenue"),
+            dsum("o_totalprice").alias("revenue"),
             F.count("*").alias("n_orders"),
         )
         .select("n_name", "o_orderpriority", "lvl", "revenue", "n_orders")
@@ -1023,10 +1024,10 @@ def pricing_summary_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
         t["lineitem"]
         .filter(F.col("l_shipdate") <= F.lit(Q1_SHIP_CUTOFF).cast("date"))
         .groupBy("l_returnflag", "l_linestatus")
-        .agg(dsum("l_quantity", "sum_qty"),
-             dsum("l_extendedprice", "sum_base_price"),
-             dsum(disc, "sum_disc_price"),
-             dsum(disc * (1 + F.col("l_tax")), "sum_charge"),
+        .agg(dsum("l_quantity").alias("sum_qty"),
+             dsum("l_extendedprice").alias("sum_base_price"),
+             dsum(disc).alias("sum_disc_price"),
+             dsum(disc * (1 + F.col("l_tax"))).alias("sum_charge"),
              F.round(exact_avg("l_quantity"), 6).alias("avg_qty"),
              F.round(exact_avg("l_extendedprice"), 6).alias("avg_price"),
              F.round(exact_avg("l_discount"), 6).alias("avg_disc"),
@@ -1084,7 +1085,7 @@ def returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(F.broadcast(t["nation"]),
                   F.col("c_nationkey") == F.col("n_nationkey"))
             .groupBy("c_custkey", "c_name", "n_name", "c_acctbal")
-            .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")),
-                      "revenue"))
+            .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+                 .alias("revenue"))
             .orderBy(F.col("revenue").desc(), "c_custkey")
             .limit(Q10_TOP))

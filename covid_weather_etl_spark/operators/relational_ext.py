@@ -23,7 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from covid_weather_etl_spark.functions.numeric import dsum, dsum_sql, md5_int
+from covid_weather_etl_spark.functions.numeric import (
+    decimal_sum, decimal_sum_sql, dsum, dsum_sql, md5_int,
+)
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
 
@@ -106,17 +108,16 @@ def lapsed_buyers_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DuckDB — identical text proves the SQL surface, and the customer-mean
 # comparison goes through exact DECIMAL so the predicate can't flip on
 # last-ulp float noise.
-_ABOVE_MEAN_SQL = """
+_ABOVE_MEAN_SQL = f"""
 SELECT o.o_orderkey, o.o_custkey, o.o_totalprice
-FROM {orders} o
+FROM {{orders}} o
 WHERE o.o_totalprice > 1.5 * (
-    SELECT CAST(SUM(CAST(i.o_totalprice AS DECIMAL(25,6))) AS DOUBLE)
-           / COUNT(*)
-    FROM {orders} i
+    SELECT {dsum_sql("i.o_totalprice")} / COUNT(*)
+    FROM {{orders}} i
     WHERE i.o_custkey = o.o_custkey
 )
 AND NOT EXISTS (
-    SELECT 1 FROM {orders} x
+    SELECT 1 FROM {{orders}} x
     WHERE x.o_custkey = o.o_custkey
       AND x.o_orderstatus = 'P'
 )
@@ -195,7 +196,7 @@ def decile_rank_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.col("c_nationkey") == F.col("n_nationkey"))
            .join(t["orders"], F.col("o_custkey") == F.col("c_custkey"))
            .groupBy("c_custkey", "n_name")
-           .agg(dsum("o_totalprice", "revenue")))
+           .agg(dsum("o_totalprice").alias("revenue")))
     w = (W.partitionBy("n_name")
          .orderBy(F.col("revenue").desc(), F.col("c_custkey")))
     r = rev.select(
@@ -219,7 +220,7 @@ def decile_rank_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="ext-window,A7,W4",
     oracle="""
     SELECT n_name, day_num, daily_rev,
-           CAST(SUM(CAST(daily_rev AS DECIMAL(25,6))) OVER (
+           CAST({wsum} OVER (
                 PARTITION BY n_name ORDER BY day_num
                 RANGE BETWEEN 29 PRECEDING AND CURRENT ROW
            ) AS DOUBLE) AS trailing_30d_rev
@@ -233,7 +234,8 @@ def decile_rank_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         JOIN nation   ON c_nationkey = n_nationkey
         GROUP BY n_name, day_num
     )
-    """.format(rev=dsum_sql("o_totalprice")),
+    """.format(rev=dsum_sql("o_totalprice"),
+               wsum=decimal_sum_sql("daily_rev")),
 )
 def range_frame_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Value-based RANGE window frame (vs the reference's row-count
@@ -252,11 +254,10 @@ def range_frame_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
              .groupBy("n_name",
                       F.datediff(F.to_date("o_orderdate"),
                                  F.lit("1970-01-01")).alias("day_num"))
-             .agg(dsum("o_totalprice", "daily_rev")))
+             .agg(dsum("o_totalprice").alias("daily_rev")))
     w = (W.partitionBy("n_name").orderBy("day_num")
          .rangeBetween(-29, W.currentRow))
-    trailing = (F.sum(F.col("daily_rev").cast("decimal(25,6)")).over(w)
-                .cast("double"))
+    trailing = decimal_sum("daily_rev").over(w).cast("double")
     return daily.select("n_name", "day_num", "daily_rev",
                         trailing.alias("trailing_30d_rev"))
 

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from covid_weather_etl_spark.functions.numeric import dsum, dsum_sql
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
 
@@ -188,8 +189,7 @@ def scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT h.segment,
            CAST(EXTRACT(year FROM o.o_orderdate) AS BIGINT) AS order_year,
            COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(25,6))) AS DOUBLE)
-               AS revenue
+           {dsum_sql("o.o_totalprice")} AS revenue
     FROM orders o
     JOIN hist h ON o.o_custkey = h.c_custkey
                AND h.valid_from <= CAST(o.o_orderdate AS DATE)
@@ -228,5 +228,4 @@ def scd2_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("segment",
                      F.year("o_orderdate").cast("long").alias("order_year"))
             .agg(F.count("*").alias("n_orders"),
-                 F.sum(F.col("o_totalprice").cast("decimal(25,6)"))
-                  .cast("double").alias("revenue")))
+                 dsum("o_totalprice").alias("revenue")))

@@ -30,7 +30,8 @@ from pyspark.sql import types as T
 from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
 from covid_weather_etl_spark.functions.numeric import (
-    fround, fround_sql, fround_val, md5_int,
+    decimal_sum, decimal_sum_sql, dsum, dsum_sql, fround, fround_sql,
+    fround_val, md5_int,
 )
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import (
@@ -1317,8 +1318,7 @@ def embedding_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT label, pos,
            COUNT(*) AS n_vecs,
-           {fround_sql("CAST(SUM(CAST(val AS DECIMAL(25,6))) AS DOUBLE)"
-                       " / COUNT(*)")} AS mean_val,
+           {fround_sql(dsum_sql("val") + " / COUNT(*)")} AS mean_val,
            MIN(val) AS min_val,
            MAX(val) AS max_val
     FROM dims
@@ -1347,8 +1347,7 @@ def embedding_dim_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     dims = (spread(t["embeddings"], "vec_id")
             .select("label", F.posexplode("embedding").alias("pos", "val_f"))
             .select("label", "pos", F.col("val_f").cast("double").alias("val")))
-    mean = (F.sum(F.col("val").cast("decimal(25,6)")).cast("double")
-            / F.count("*"))
+    mean = dsum("val") / F.count("*")
     return (dims.groupBy("label", "pos")
             .agg(F.count("*").alias("n_vecs"),
                  fround(mean).alias("mean_val"),
@@ -1484,19 +1483,17 @@ _RP_SIGN_SQL = (
         CROSS JOIN (SELECT unnest(range({RP_K})) AS j) jj
     ), cells AS (
         SELECT vec_id, j,
-               CAST(SUM(CAST(ROUND(val * s * {1.0 / RP_K ** 0.5}, 9)
-                             AS DECIMAL(25,9))) AS DOUBLE) AS pj
+               {dsum_sql(f"ROUND(val * s * {1.0 / RP_K ** 0.5}, 9)",
+                         "decimal(25,9)")} AS pj
         FROM ex JOIN signs ON ex.i = signs.i
         GROUP BY 1, 2
     ), pn AS (
         SELECT vec_id,
-               CAST(SUM(CAST(ROUND(pj * pj, 9) AS DECIMAL(25,9)))
-                    AS DOUBLE) AS proj_sq
+               {dsum_sql("ROUND(pj * pj, 9)", "decimal(25,9)")} AS proj_sq
         FROM cells GROUP BY 1
     ), onorm AS (
         SELECT vec_id, ANY_VALUE(label) AS label,
-               CAST(SUM(CAST(ROUND(val * val, 9) AS DECIMAL(25,9)))
-                    AS DOUBLE) AS orig_sq
+               {dsum_sql("ROUND(val * val, 9)", "decimal(25,9)")} AS orig_sq
         FROM ex GROUP BY 1
     )
     SELECT o.vec_id, o.label,
@@ -1540,18 +1537,17 @@ def random_projection_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
           .select("vec_id", "label",
                   F.posexplode("embedding").alias("i", "val"))
           .withColumn("val", F.col("val").cast("double")))
-    dec = lambda c: F.round(c, 9).cast("decimal(25,9)")  # noqa: E731
     cells = (ex.join(F.broadcast(sign_df), "i")
              .groupBy("vec_id", "j")
-             .agg(F.sum(dec(F.col("val") * F.col("s") * scale))
-                  .cast("double").alias("pj")))
+             .agg(dsum(F.round(F.col("val") * F.col("s") * scale, 9),
+                       "decimal(25,9)").alias("pj")))
     pn = (cells.groupBy("vec_id")
-          .agg(F.sum(dec(F.col("pj") * F.col("pj")))
-               .cast("double").alias("proj_sq")))
+          .agg(dsum(F.round(F.col("pj") * F.col("pj"), 9), "decimal(25,9)")
+               .alias("proj_sq")))
     onorm = (ex.groupBy("vec_id")
              .agg(F.first("label").alias("label"),
-                  F.sum(dec(F.col("val") * F.col("val")))
-                  .cast("double").alias("orig_sq")))
+                  dsum(F.round(F.col("val") * F.col("val"), 9),
+                       "decimal(25,9)").alias("orig_sq")))
     return (onorm.join(pn, "vec_id")
             .select("vec_id", "label",
                     F.round("orig_sq", 6).alias("orig_sq_norm"),
@@ -1623,19 +1619,18 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "embedding_gram_matrix",
     survey="LLM-sim,A14,A6,U1",
-    oracle="""
+    oracle=f"""
     WITH idx AS (SELECT unnest(range(1, 65)) AS k),
     cells AS (
         SELECT i.k AS i, j.k AS j,
-               CAST(ROUND(CAST(e.embedding[i.k] AS DOUBLE)
-                          * CAST(e.embedding[j.k] AS DOUBLE), 12)
-                    AS DECIMAL(30,12)) AS p
+               ROUND(CAST(e.embedding[i.k] AS DOUBLE)
+                     * CAST(e.embedding[j.k] AS DOUBLE), 12) AS p
         FROM embeddings e
         CROSS JOIN idx i
         JOIN idx j ON j.k >= i.k
     )
     SELECT CAST(i AS INT) AS i, CAST(j AS INT) AS j,
-           CAST(SUM(p) AS DOUBLE) AS gram
+           {dsum_sql("p", "decimal(30,12)")} AS gram
     FROM cells GROUP BY 1, 2
     """,
 )
@@ -1668,13 +1663,12 @@ def embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
           .select("vec_id", (F.col("k") + 1).alias("k"), "e")
           .localCheckpoint(eager=False))   # both sides of the self-join
     a, b = ev.alias("a"), ev.alias("b")
-    p = (F.round(F.col("a.e") * F.col("b.e"), 12)
-         .cast("decimal(30,12)"))
+    p = F.round(F.col("a.e") * F.col("b.e"), 12)
     return (a.join(b, (F.col("a.vec_id") == F.col("b.vec_id"))
                    & (F.col("a.k") <= F.col("b.k")))
             .groupBy(F.col("a.k").cast("int").alias("i"),
                      F.col("b.k").cast("int").alias("j"))
-            .agg(F.sum(p).cast("double").alias("gram")))
+            .agg(dsum(p, "decimal(30,12)").alias("gram")))
 
 
 #: fixed power-iteration rounds for the PCA top component — both the
@@ -1711,6 +1705,8 @@ def _pca_power_solve(M: dict, d: int) -> tuple:
     v = [0.0] * d
     v[k0] = 1.0
     for _ in range(PCA_POWER_ROUNDS):
+        # not the kernel: the grid sums below stay exact Python ints
+        # (the oracle's DECIMAL(38,0)); 1e-12 terms pass 2^63
         w = [sum(math.floor(A[i][j] * v[j] * 1e12 + 0.5)
                  for j in range(d)) / 1e12 for i in range(d)]
         s2 = sum(math.floor(wi * wi * 1e9 + 0.5) for wi in w) / 1e9
@@ -1784,12 +1780,14 @@ def _pca_oracle() -> str:
         (WITH cur AS (SELECT * FROM it),
          w AS (
             SELECT a.i AS k,
+                   -- not the kernel: PCA grid sums, 1e-12 terms pass 2^63
                    CAST(SUM(CAST(FLOOR(a.aij * c.v * 1e12 + 0.5)
                                  AS DECIMAL(38,0))) AS DOUBLE) / 1e12 AS w
             FROM afull a JOIN cur c ON a.j = c.k
             GROUP BY 1
          ),
          nrm AS (
+            -- not the kernel: PCA grid sums, 1e-12 terms pass 2^63
             SELECT SQRT(CAST(SUM(CAST(FLOOR(w * w * 1e9 + 0.5)
                                       AS DECIMAL(38,0)))
                              AS DOUBLE) / 1e9) AS s
@@ -1805,16 +1803,19 @@ def _pca_oracle() -> str:
         FROM fin ORDER BY ABS(v) DESC, k ASC LIMIT 1
     ),
     ray AS (
+        -- not the kernel: PCA grid sums, 1e-12 terms pass 2^63
         SELECT CAST(SUM(CAST(FLOOR((c1.v * a.aij) * c2.v * 1e12 + 0.5)
                              AS DECIMAL(38,0))) AS DOUBLE) / 1e12 AS num
         FROM afull a JOIN fin c1 ON c1.k = a.i JOIN fin c2 ON c2.k = a.j
     ),
     den AS (
+        -- not the kernel: PCA grid sums, 1e-12 terms pass 2^63
         SELECT CAST(SUM(CAST(FLOOR(v * v * 1e12 + 0.5)
                              AS DECIMAL(38,0))) AS DOUBLE) / 1e12 AS den
         FROM fin
     ),
     trd AS (
+        -- not the kernel: PCA grid sums, 1e-12 terms pass 2^63
         SELECT CAST(SUM(CAST(FLOOR(aij * 1e6 + 0.5) AS DECIMAL(38,0)))
                     AS DOUBLE) / 1e6 AS tr
         FROM ah WHERE i = j
@@ -1877,8 +1878,8 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     gp_rows = (a.join(b, (F.col("a.vec_id") == F.col("b.vec_id"))
                       & (F.col("a.k") <= F.col("b.k")))
                .groupBy(F.col("a.k").alias("i"), F.col("b.k").alias("j"))
-               .agg(F.sum((F.col("a.u") * F.col("b.u"))
-                          .cast("decimal(38,0)")).alias("gp"))
+               .agg(decimal_sum(F.col("a.u") * F.col("b.u"), "decimal(38,0)")
+                    .alias("gp"))
                .collect())                 # model-sized: 2 080 cells
     d = len(su)
     M = {}
@@ -2804,18 +2805,20 @@ def _cluster_purity_oracle() -> str:
         SELECT label, CAST(SUM(n) AS BIGINT) AS n_l FROM ncl GROUP BY 1
     ), tot AS (SELECT CAST(SUM(n) AS BIGINT) AS nn FROM ncl),
     mi AS (
-        SELECT SUM(CAST(ROUND((ncl.n * 1e0 / tot.nn)
-                   * LN(tot.nn * 1e0 * ncl.n / (nc.n_c * 1e0 * nl.n_l)),
-                   9) AS DECIMAL(25,9))) AS mi
+        SELECT {decimal_sum_sql(
+                    "ROUND((ncl.n * 1e0 / tot.nn) * LN(tot.nn * 1e0 * ncl.n"
+                    " / (nc.n_c * 1e0 * nl.n_l)), 9)", "decimal(25,9)")} AS mi
         FROM ncl JOIN nc ON nc.cell = ncl.cell
         JOIN nl ON nl.label = ncl.label CROSS JOIN tot
     ), hc AS (
-        SELECT SUM(CAST(ROUND(-(n_c * 1e0 / tot.nn)
-                   * LN(n_c * 1e0 / tot.nn), 9) AS DECIMAL(25,9))) AS h
+        SELECT {decimal_sum_sql(
+                    "ROUND(-(n_c * 1e0 / tot.nn) * LN(n_c * 1e0 / tot.nn), 9)",
+                    "decimal(25,9)")} AS h
         FROM nc CROSS JOIN tot
     ), hl AS (
-        SELECT SUM(CAST(ROUND(-(n_l * 1e0 / tot.nn)
-                   * LN(n_l * 1e0 / tot.nn), 9) AS DECIMAL(25,9))) AS h
+        SELECT {decimal_sum_sql(
+                    "ROUND(-(n_l * 1e0 / tot.nn) * LN(n_l * 1e0 / tot.nn), 9)",
+                    "decimal(25,9)")} AS h
         FROM nl CROSS JOIN tot
     ), maj AS (
         SELECT cell, MAX(ROW(n, -label)) AS m,
@@ -2954,16 +2957,16 @@ def cluster_purity_nmi_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     nc = ncl.groupBy("cell").agg(F.sum("n").alias("n_c"))
     nl = ncl.groupBy("label").agg(F.sum("n").alias("n_l"))
     tot = ncl.agg(F.sum("n").alias("nn"))
-    r9 = lambda c: F.round(c, 9).cast("decimal(25,9)")  # noqa: E731
     mi = (ncl.join(nc, "cell").join(nl, "label")
           .crossJoin(F.broadcast(tot))
-          .agg(F.sum(r9((F.col("n") * F.lit(1.0) / F.col("nn"))
-                        * F.log(F.col("nn") * F.lit(1.0) * F.col("n")
-                                / (F.col("n_c") * F.lit(1.0)
-                                   * F.col("n_l"))))).alias("mi")))
-    ent = lambda cnt: F.sum(r9(  # noqa: E731
+          .agg(decimal_sum(
+              F.round((F.col("n") * F.lit(1.0) / F.col("nn"))
+                      * F.log(F.col("nn") * F.lit(1.0) * F.col("n")
+                              / (F.col("n_c") * F.lit(1.0) * F.col("n_l"))),
+                      9), "decimal(25,9)").alias("mi")))
+    ent = lambda cnt: decimal_sum(F.round(  # noqa: E731
         -(F.col(cnt) * F.lit(1.0) / F.col("nn"))
-        * F.log(F.col(cnt) * F.lit(1.0) / F.col("nn"))))
+        * F.log(F.col(cnt) * F.lit(1.0) / F.col("nn")), 9), "decimal(25,9)")
     hc = nc.crossJoin(F.broadcast(tot)).agg(ent("n_c").alias("h"))
     hl = nl.crossJoin(F.broadcast(tot)).agg(ent("n_l").alias("h"))
     maj = (ncl.groupBy("cell")

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.numeric import (
-    fround, fround_sql, md5_int,
+    dsum, dsum_sql, fround, fround_sql, grid_sum, grid_sum_sql, md5_int,
 )
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables, spread
@@ -158,7 +158,7 @@ def iqr_outlier_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "chi2_independence",
     survey="ext-stats,A6,A14,J1",
-    oracle="""
+    oracle=f"""
     WITH obs AS (
         SELECT c_mktsegment AS seg, n_name AS nat, COUNT(*) AS o
         FROM customer JOIN nation ON c_nationkey = n_nationkey
@@ -167,15 +167,14 @@ def iqr_outlier_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ct AS (SELECT nat, SUM(o) AS c FROM obs GROUP BY 1),
     tot AS (SELECT SUM(o) AS n FROM obs),
     terms AS (
-        SELECT CAST(ROUND(POWER(obs.o - (rt.r * ct.c * 1.0 / tot.n), 2)
-                          / (rt.r * ct.c * 1.0 / tot.n), 9)
-                    AS DECIMAL(28,9)) AS term
+        SELECT ROUND(POWER(obs.o - (rt.r * ct.c * 1.0 / tot.n), 2)
+                     / (rt.r * ct.c * 1.0 / tot.n), 9) AS term
         FROM obs JOIN rt USING (seg) JOIN ct USING (nat) CROSS JOIN tot
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n_cells,
            CAST((SELECT COUNT(*) FROM rt) - 1 AS BIGINT)
                * CAST((SELECT COUNT(*) FROM ct) - 1 AS BIGINT) AS dof,
-           ROUND(CAST(SUM(term) AS DOUBLE), 6) AS chi2
+           ROUND({dsum_sql("term", "decimal(28,9)")}, 6) AS chi2
     FROM terms
     """,
 )
@@ -201,8 +200,7 @@ def chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ct = obs.groupBy("nat").agg(F.sum("o").alias("c"))
     tot = obs.agg(F.sum("o").alias("n"))
     e = F.col("r") * F.col("c") * 1.0 / F.col("n")
-    term = (F.round(F.pow(F.col("o") - e, F.lit(2)) / e, 9)
-            .cast("decimal(28,9)"))
+    term = F.round(F.pow(F.col("o") - e, F.lit(2)) / e, 9)
     terms = (obs.join(F.broadcast(rt), "seg")
              .join(F.broadcast(ct), "nat")
              .crossJoin(F.broadcast(tot))
@@ -210,7 +208,8 @@ def chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_r = rt.agg(F.count("*").alias("nr"))
     n_c = ct.agg(F.count("*").alias("nc"))
     return (terms.agg(F.count("*").alias("n_cells"),
-                      F.round(F.sum("term").cast("double"), 6).alias("chi2"))
+                      F.round(dsum("term", "decimal(28,9)"), 6)
+                      .alias("chi2"))
             .crossJoin(F.broadcast(n_r)).crossJoin(F.broadcast(n_c))
             .select("n_cells",
                     ((F.col("nr") - 1) * (F.col("nc") - 1)).cast("long")
@@ -285,11 +284,10 @@ TE_SMOOTHING = 10.0  # pseudo-count weight toward the global mean
         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     ), per_cat AS (
         SELECT segment, COUNT(*) AS n,
-               CAST(SUM(CAST(y AS DECIMAL(25,6))) AS DOUBLE) AS sy
+               {dsum_sql("y")} AS sy
         FROM joined GROUP BY 1
     ), gl AS (
-        SELECT CAST(SUM(CAST(y AS DECIMAL(25,6))) AS DOUBLE)
-               / COUNT(*) AS gmean
+        SELECT {dsum_sql("y")} / COUNT(*) AS gmean
         FROM joined
     )
     SELECT p.segment, p.n AS n_orders,
@@ -321,11 +319,8 @@ def target_encoding_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
               .select(F.col("c_mktsegment").alias("segment"),
                       F.col("o_totalprice").alias("y")))
     per_cat = (joined.groupBy("segment")
-               .agg(F.count("*").alias("n"),
-                    F.sum(F.col("y").cast("decimal(25,6)"))
-                     .cast("double").alias("sy")))
-    gl = joined.agg((F.sum(F.col("y").cast("decimal(25,6)")).cast("double")
-                     / F.count("*")).alias("gmean"))
+               .agg(F.count("*").alias("n"), dsum("y").alias("sy")))
+    gl = joined.agg((dsum("y") / F.count("*")).alias("gmean"))
     return (per_cat.crossJoin(F.broadcast(gl))
             .select("segment", F.col("n").alias("n_orders"),
                     F.round(F.col("sy") / F.col("n"), 6).alias("raw_mean"),
@@ -644,8 +639,7 @@ def _pois_case_sql(u: str) -> str:
     oracle=f"""
     WITH daily AS (
         SELECT CAST(o_orderdate AS DATE) AS day,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(25,2))) AS DOUBLE)
-                   AS rev
+               {dsum_sql("o_totalprice", "decimal(25,2)")} AS rev
         FROM orders GROUP BY 1
     ), reps AS (
         SELECT d.day, d.rev, b.b,
@@ -658,8 +652,7 @@ def _pois_case_sql(u: str) -> str:
         SELECT b, {_pois_case_sql('u')} AS w, rev FROM reps
     ), means AS (
         SELECT b,
-               CAST(SUM(CAST(ROUND(w * rev, 2) AS DECIMAL(25,2)))
-                    AS DOUBLE)
+               {dsum_sql("ROUND(w * rev, 2)", "decimal(25,2)")}
                / SUM(w) AS m
         FROM weighted GROUP BY b HAVING SUM(w) > 0
     ), base AS (
@@ -699,8 +692,7 @@ def bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ("orders",))
     daily = (spread(t["orders"])
              .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-             .agg(F.sum(F.col("o_totalprice").cast("decimal(25,2)"))
-                  .cast("double").alias("rev"))
+             .agg(dsum("o_totalprice", "decimal(25,2)").alias("rev"))
              .localCheckpoint(eager=False))  # reused: base stats + reps
     base = daily.agg(F.count("*").alias("n_days"),
                      F.round(F.avg("rev"), 6).alias("mean_revenue"))
@@ -714,8 +706,8 @@ def bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     means = (daily.select("day", "rev", bs)
              .select("b", w.alias("w"), "rev")
              .groupBy("b")
-             .agg((F.sum(F.round(F.col("w") * F.col("rev"), 2)
-                         .cast("decimal(25,2)")).cast("double")
+             .agg((dsum(F.round(F.col("w") * F.col("rev"), 2),
+                        "decimal(25,2)")
                    / F.sum("w")).alias("m"),
                   F.sum("w").alias("tw"))
              .filter(F.col("tw") > 0))
@@ -809,6 +801,7 @@ ECE_BINS = 10
     ), mm AS (
         SELECT MIN(score) AS lo, MAX(score) AS hi FROM scored
     ), conf AS (
+        -- not the kernel: the DECIMAL confidence also picks the bin
         SELECT CAST(ROUND((score - lo) * 1.0 / (hi - lo), 6)
                     AS DECIMAL(10,6)) AS c, y
         FROM scored CROSS JOIN mm
@@ -824,6 +817,7 @@ ECE_BINS = 10
                {fround_sql("CAST(sc AS DOUBLE) / n_rows")}
                  AS avg_conf,
                {fround_sql("n_pos * 1.0 / n_rows")} AS frac_pos,
+               -- not the kernel: weighted, summed as SUM(n_rows * gap9)
                CAST(ROUND(ABS(CAST(sc AS DOUBLE) / n_rows
                               - n_pos * 1.0 / n_rows), 9)
                     AS DECIMAL(20,9)) AS gap9
@@ -862,6 +856,7 @@ def calibration_ece_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                       (F.size(F.split("text", " ")) > ISO_TOK_CUT)
                       .cast("int").alias("y")))
     mm = scored.agg(F.min("score").alias("lo"), F.max("score").alias("hi"))
+    # not the kernel: the DECIMAL confidence also picks the bin
     conf = (scored.crossJoin(F.broadcast(mm))
             .select(F.round((F.col("score") - F.col("lo")) * 1.0
                             / (F.col("hi") - F.col("lo")), 6)
@@ -874,6 +869,7 @@ def calibration_ece_report(spark: SparkSession, sf_dir: str) -> DataFrame:
              F.sum("y").alias("n_pos")))
     avg_conf = fround(F.col("sc").cast("double") / F.col("n_rows"))
     frac_pos = fround(F.col("n_pos") * 1.0 / F.col("n_rows"))
+    # not the kernel: weighted, summed as SUM(n_rows * gap9)
     gap9 = (F.round(F.abs(F.col("sc").cast("double") / F.col("n_rows")
                           - F.col("n_pos") * 1.0 / F.col("n_rows")), 9)
             .cast("decimal(20,9)"))
@@ -932,12 +928,11 @@ WOE_BAD_CUT = 0.05
         FROM counts CROSS JOIN tot
     ), terms AS (
         SELECT bin, n_bad, n_good, woe,
-               CAST(ROUND((n_bad * 1.0 / b - n_good * 1.0 / g) * woe, 9)
-                    AS DECIMAL(20,9)) AS term9
+               ROUND((n_bad * 1.0 / b - n_good * 1.0 / g) * woe, 9) AS term9
         FROM woe CROSS JOIN tot
     )
     , ivagg AS (
-        SELECT {fround_sql("CAST(SUM(term9) AS DOUBLE)")} AS iv
+        SELECT {fround_sql(dsum_sql("term9", "decimal(20,9)"))} AS iv
         FROM terms
     )
     SELECT bin, n_bad, n_good, woe, iv
@@ -996,10 +991,9 @@ def woe_iv_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
               .select("bin", "n_bad", "n_good", woe.alias("woe"),
                       F.round((F.col("n_bad") * 1.0 / F.col("b")
                                - F.col("n_good") * 1.0 / F.col("g"))
-                              * woe, 9)
-                      .cast("decimal(20,9)").alias("term9")))
+                              * woe, 9).alias("term9")))
     scored = scored.localCheckpoint(eager=False)  # 4 rows; reused twice
-    ivf = scored.agg(fround(F.sum("term9").cast("double")).alias("iv"))
+    ivf = scored.agg(fround(dsum("term9", "decimal(20,9)")).alias("iv"))
     return (scored.crossJoin(F.broadcast(ivf))
             .select("bin", "n_bad", "n_good", "woe", "iv"))
 
@@ -1010,6 +1004,17 @@ def woe_iv_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: L2 penalty added to every diagonal entry of the Gram matrix.
 RIDGE_LAMBDA = 1.0
+
+#: The sufficient statistics besides the count n, as (row term, name):
+#: one DECIMAL(38,6) exact sum each, the same terms in the Spark plan
+#: and the oracle.
+_RIDGE_SUMS = (("l_quantity", "sq"), ("l_discount", "sd"),
+               ("l_extendedprice", "sy"),
+               ("l_quantity * l_quantity", "sqq"),
+               ("l_quantity * l_discount", "sqd"),
+               ("l_discount * l_discount", "sdd"),
+               ("l_quantity * l_extendedprice", "sqy"),
+               ("l_discount * l_extendedprice", "sdy"))
 
 #: Shared 3x3 Cramer's-rule solve over the 9 sufficient statistics.
 #: The SAME expression text runs on both engines (Spark SQL and
@@ -1040,26 +1045,11 @@ _RIDGE_SOLVE_SQL = f"""
 @register(
     "ridge_normal_equations",
     survey="ext-ml,U2,A1,A4",
-    oracle=("""
-    WITH sums AS (
-        SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sq,
-               CAST(SUM(CAST(l_discount AS DECIMAL(38,6))) AS DOUBLE) AS sd,
-               CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6)))
-                    AS DOUBLE) AS sy,
-               CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(38,6)))
-                    AS DOUBLE) AS sqq,
-               CAST(SUM(CAST(l_quantity * l_discount AS DECIMAL(38,6)))
-                    AS DOUBLE) AS sqd,
-               CAST(SUM(CAST(l_discount * l_discount AS DECIMAL(38,6)))
-                    AS DOUBLE) AS sdd,
-               CAST(SUM(CAST(l_quantity * l_extendedprice
-                             AS DECIMAL(38,6))) AS DOUBLE) AS sqy,
-               CAST(SUM(CAST(l_discount * l_extendedprice
-                             AS DECIMAL(38,6))) AS DOUBLE) AS sdy
-        FROM lineitem
-    )
-    """ + _RIDGE_SOLVE_SQL).format(lam=float(RIDGE_LAMBDA)),
+    oracle=("WITH sums AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n, "
+            + ", ".join(f"{dsum_sql(e, 'decimal(38,6)')} AS {a}"
+                        for e, a in _RIDGE_SUMS)
+            + " FROM lineitem)" + _RIDGE_SOLVE_SQL
+            ).format(lam=float(RIDGE_LAMBDA)),
 )
 def ridge_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ridge regression of line price on (quantity, discount) solved
@@ -1084,18 +1074,9 @@ def ridge_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     Semantic pin: tests/test_applied_stats.py checks the coefficients
     against numpy's explicit (X'X + lambda*I)^-1 X'y on the same rows."""
     t = load_tables(spark, sf_dir, ("lineitem",))
-    dec = "decimal(38,6)"
-    q, d, y = F.col("l_quantity"), F.col("l_discount"), \
-        F.col("l_extendedprice")
-
-    def s(col, alias):
-        return F.sum(col.cast(dec)).cast("double").alias(alias)
-
     sums = t["lineitem"].agg(
         F.count("*").cast("double").alias("n"),
-        s(q, "sq"), s(d, "sd"), s(y, "sy"),
-        s(q * q, "sqq"), s(q * d, "sqd"), s(d * d, "sdd"),
-        s(q * y, "sqy"), s(d * y, "sdy"))
+        *[dsum(F.expr(e), "decimal(38,6)").alias(a) for e, a in _RIDGE_SUMS])
     sums.createOrReplaceTempView("sums")
     return spark.sql(_RIDGE_SOLVE_SQL.format(lam=float(RIDGE_LAMBDA)))
 
@@ -1110,14 +1091,14 @@ def ridge_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT l_returnflag,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
-           {fround_sql("CAST(SUM(CAST(l_extendedprice AS DECIMAL(25,6)))"
-                       " AS DOUBLE) / COUNT(*)")}
+           {fround_sql(dsum_sql("l_extendedprice") + " / COUNT(*)")}
                AS arith_mean,
-           {fround_sql("EXP(CAST(SUM(CAST(LN(l_extendedprice)"
-                       " AS DECIMAL(25,12))) AS DOUBLE)"
-                       " / COUNT(*))")} AS geom_mean,
-           {fround_sql("COUNT(*) / CAST(SUM(CAST(1e0 / l_extendedprice"
-                       " AS DECIMAL(25,18))) AS DOUBLE)")} AS harm_mean
+           {fround_sql("EXP(" + dsum_sql("LN(l_extendedprice)",
+                                         "decimal(25,12)")
+                       + " / COUNT(*))")} AS geom_mean,
+           {fround_sql("COUNT(*) / " + dsum_sql("1e0 / l_extendedprice",
+                                                "decimal(25,18)"))}
+               AS harm_mean
     FROM lineitem
     WHERE l_extendedprice > 0
     GROUP BY l_returnflag
@@ -1147,14 +1128,12 @@ def pythagorean_means_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(x > 0)
             .groupBy("l_returnflag")
             .agg(F.count("*").alias("n_rows"),
-                 fround(F.sum(x.cast("decimal(25,6)")).cast("double")
-                        / F.count("*")).alias("arith_mean"),
-                 fround(F.exp(F.sum(F.log(x).cast("decimal(25,12)"))
-                              .cast("double") / F.count("*")))
-                 .alias("geom_mean"),
+                 fround(dsum(x) / F.count("*")).alias("arith_mean"),
+                 fround(F.exp(dsum(F.log(x), "decimal(25,12)")
+                              / F.count("*"))).alias("geom_mean"),
                  fround(F.count("*")
-                        / F.sum((F.lit(1.0) / x).cast("decimal(25,18)"))
-                        .cast("double")).alias("harm_mean")))
+                        / dsum(F.lit(1.0) / x, "decimal(25,18)"))
+                 .alias("harm_mean")))
 
 
 #: blocking-key length band width (characters) for the ER blocking eval.
@@ -1308,10 +1287,8 @@ NEYMAN_BUDGET = 1000
     WITH s AS (
         SELECT n_name,
                CAST(COUNT(*) AS BIGINT) AS n_rows,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6)))
-                    AS DOUBLE) AS sx,
-               CAST(SUM(CAST(o_totalprice * o_totalprice
-                             AS DECIMAL(25,6))) AS DOUBLE) AS sxx
+               {dsum_sql("o_totalprice")} AS sx,
+               {dsum_sql("o_totalprice * o_totalprice")} AS sxx
         FROM orders
         JOIN customer ON o_custkey = c_custkey
         JOIN nation ON c_nationkey = n_nationkey
@@ -1323,8 +1300,7 @@ NEYMAN_BUDGET = 1000
         FROM s
     ), tot AS (
         SELECT CAST(SUM(n_rows) AS BIGINT) AS n_total,
-               CAST(SUM(CAST(FLOOR(n_rows * sd * 1e6 + 0.5)
-                             AS DECIMAL(25,0))) AS DOUBLE) / 1e6 AS w
+               {grid_sum_sql("n_rows * sd", 6)} AS w
         FROM st
     )
     SELECT st.n_name, st.n_rows, st.sd AS stratum_sd,
@@ -1365,10 +1341,9 @@ def neyman_allocation_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
                F.col("c_nationkey") == F.col("n_nationkey"))
          .groupBy("n_name")
          .agg(F.count("*").alias("n_rows"),
-              F.sum(F.col("o_totalprice").cast("decimal(25,6)"))
-              .cast("double").alias("sx"),
-              F.sum((F.col("o_totalprice") * F.col("o_totalprice"))
-                    .cast("decimal(25,6)")).cast("double").alias("sxx")))
+              dsum("o_totalprice").alias("sx"),
+              dsum(F.col("o_totalprice") * F.col("o_totalprice"))
+              .alias("sxx")))
     st = s.select(
         "n_name", "n_rows",
         fround(F.sqrt((F.col("sxx") - (F.col("sx") / F.col("n_rows"))
@@ -1376,9 +1351,7 @@ def neyman_allocation_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = st.localCheckpoint(eager=False)  # ~25 rows, reused as both sides
     tot = st.agg(
         F.sum("n_rows").cast("long").alias("n_total"),
-        (F.sum(F.floor(F.col("n_rows") * F.col("sd") * F.lit(1e6)
-                       + F.lit(0.5)).cast("decimal(25,0)"))
-         .cast("double") / F.lit(1e6)).alias("w"))
+        grid_sum(F.col("n_rows") * F.col("sd"), 6).alias("w"))
     return (st.crossJoin(F.broadcast(tot))
             .select("n_name",
                     F.col("n_rows").cast("long").alias("n_rows"),
@@ -1416,25 +1389,17 @@ _GINI_LABEL = "CASE WHEN l_discount > 0.05 THEN 1 ELSE 0 END"
 
 
 def _gini_oracle() -> str:
+    wg = grid_sum_sql("(nv * 1e0 / nt) * (1e0 - (n1 * 1e0 / nv)"
+                      " * (n1 * 1e0 / nv) - ((nv - n1) * 1e0 / nv)"
+                      " * ((nv - n1) * 1e0 / nv))", 9)
     parts = []
     for name, _spark_expr, expr in GINI_FEATURES:
         parts.append(f"""
     SELECT '{name}' AS feature,
            CAST(COUNT(*) AS BIGINT) AS n_values,
            {fround_sql("MAX(parent)")} AS parent_gini,
-           {fround_sql("CAST(SUM(CAST(FLOOR((nv * 1e0 / nt)"
-                       " * (1e0 - (n1 * 1e0 / nv) * (n1 * 1e0 / nv)"
-                       " - ((nv - n1) * 1e0 / nv)"
-                       " * ((nv - n1) * 1e0 / nv)) * 1e9 + 0.5)"
-                       " AS DECIMAL(25,0))) AS DOUBLE) / 1e9")}
-               AS weighted_gini,
-           {fround_sql("(MAX(parent)"
-                       " - CAST(SUM(CAST(FLOOR((nv * 1e0 / nt)"
-                       " * (1e0 - (n1 * 1e0 / nv) * (n1 * 1e0 / nv)"
-                       " - ((nv - n1) * 1e0 / nv)"
-                       " * ((nv - n1) * 1e0 / nv)) * 1e9 + 0.5)"
-                       " AS DECIMAL(25,0))) AS DOUBLE) / 1e9)")}
-               AS gini_gain
+           {fround_sql(wg)} AS weighted_gini,
+           {fround_sql(f"(MAX(parent) - {wg})")} AS gini_gain
     FROM (
         SELECT v, CAST(COUNT(*) AS BIGINT) AS nv,
                CAST(SUM(y) AS BIGINT) AS n1,
@@ -1491,13 +1456,11 @@ def gini_split_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.sum("n1").alias("t1"))
         p1 = F.col("n1") * F.lit(1.0) / F.col("nv")
         p0 = (F.col("nv") - F.col("n1")) * F.lit(1.0) / F.col("nv")
-        term = F.floor((F.col("nv") * F.lit(1.0) / F.col("nt"))
-                       * (F.lit(1.0) - p1 * p1 - p0 * p0)
-                       * F.lit(1e9) + F.lit(0.5)).cast("decimal(25,0)")
         q1 = F.col("t1") * F.lit(1.0) / F.col("nt")
         q0 = (F.col("nt") - F.col("t1")) * F.lit(1.0) / F.col("nt")
         parent = F.lit(1.0) - q1 * q1 - q0 * q0
-        wg = F.sum(term).cast("double") / F.lit(1e9)
+        wg = grid_sum((F.col("nv") * F.lit(1.0) / F.col("nt"))
+                      * (F.lit(1.0) - p1 * p1 - p0 * p0), 9)
         outs.append(per_v.crossJoin(F.broadcast(tot)).agg(
             F.lit(name).alias("feature"),
             F.count("*").alias("n_values"),

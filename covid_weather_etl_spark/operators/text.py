@@ -1255,6 +1255,7 @@ NB_TEST_MOD = 5
         FROM doc_toks WHERE doc_id % {NB_TEST_MOD} = 0 GROUP BY 1, 2, 3
     ), scored AS (
         SELECT tk.doc_id, tk.lang_true, c.lang AS cls,
+               -- not the kernel: a count-weighted sum of DECIMAL terms
                SUM(tk.k * CAST(ROUND(LN((COALESCE(ct.cnt, 0) + 1.0)
                                         / (tc.t_c + vv.v)), 9)
                                AS DECIMAL(25,9))) AS s_tok
@@ -1329,6 +1330,7 @@ def naive_bayes_lang_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
           .agg(F.count("*").alias("k")))
     cls = tr_docs.select(F.col("lang").alias("cls"))
     cond = ct.select(F.col("lang").alias("cls"), "tok", "cnt")
+    # not the kernel: a count-weighted sum of DECIMAL terms
     term = (F.round(F.log((F.coalesce("cnt", F.lit(0)) + 1.0)
                           / (F.col("t_c") + F.col("v"))), 9)
             .cast("decimal(25,9)"))
@@ -1369,6 +1371,7 @@ def naive_bayes_lang_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM tc p
     ), pts AS (
         SELECT CAST(ROUND(LN(rk), 9) AS DECIMAL(15,9)) AS x,
+               -- not the kernel: x and y also feed SUM(x * y)
                CAST(ROUND(LN(cnt), 9) AS DECIMAL(15,9)) AS y
         FROM ranked
     ), s AS (
@@ -1421,6 +1424,7 @@ def zipf_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
               .groupBy(F.col("p.tok").alias("tok"),
                        F.col("p.cnt").alias("cnt"))
               .agg((F.count(F.col("q.tok")) + 1).alias("rk")))
+    # not the kernel: x and y also feed SUM(x * y)
     pts = ranked.select(
         F.round(F.log("rk"), 9).cast("decimal(15,9)").alias("x"),
         F.round(F.log("cnt"), 9).cast("decimal(15,9)").alias("y"))
@@ -1825,8 +1829,7 @@ DECON_EVAL_MOD = 7  #: doc_id % MOD == 0 plays the held-out benchmark
            CAST(SUM(CASE WHEN shared > 0 THEN 1 ELSE 0 END) AS BIGINT)
                AS contaminated_docs,
            CAST(SUM(shared) AS BIGINT) AS shared_grams,
-           {fround_sql("CAST(SUM(CAST(contam AS DECIMAL(25,6))) AS DOUBLE)"
-                       " / COUNT(*)")}
+           {fround_sql(dsum_sql("contam") + " / COUNT(*)")}
                AS mean_contamination,
            MAX(contam) AS max_contamination
     FROM scored
@@ -1879,8 +1882,7 @@ def benchmark_decontamination(spark: SparkSession,
     contam = fround(F.col("shared").cast("double") / F.col("total_grams"))
     scored = doc.select("lang", "source", "shared",
                         contam.alias("contam"))
-    mean_c = (F.sum(F.col("contam").cast("decimal(25,6)")).cast("double")
-              / F.count("*"))
+    mean_c = dsum("contam") / F.count("*")
     return (scored.groupBy("lang", "source")
             .agg(F.count("*").cast("long").alias("n_docs"),
                  F.sum((F.col("shared") > 0).cast("int")).cast("long")
@@ -2241,6 +2243,7 @@ def prefix_cache_reuse_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     terms AS (
         SELECT s.source, s.k,
+               -- not the kernel: k-weighted, summed as SUM(k * v)
                CAST({fround_sql("LEAST(c12.c12 * 1e0 / c1.c1, "
                                 "uni.cu * 1e0 / nn.n)")}
                     AS DECIMAL(25,6)) AS v
@@ -2295,6 +2298,7 @@ def speculative_decoding_acceptance(spark: SparkSession,
               .agg(F.count("*").alias("cu"))
     n_total = toks.agg(F.count("*").alias("n"))
     srcb = big.groupBy("source", "w1", "w2").agg(F.count("*").alias("k"))
+    # not the kernel: k-weighted, summed as SUM(k * v)
     v = fround(F.least(F.col("c12") * F.lit(1.0) / F.col("c1"),
                        F.col("cu") * F.lit(1.0) / F.col("n"))) \
         .cast("decimal(25,6)")
@@ -2356,6 +2360,7 @@ HEAPS_CHECKPOINTS = 10
     lp AS (
         SELECT p, n_tokens, vocab,
                CAST(ROUND(LN(n_tokens), 9) AS DECIMAL(15,9)) AS x,
+               -- not the kernel: x and y also feed SUM(x * y)
                CAST(ROUND(LN(vocab), 9) AS DECIMAL(15,9)) AS y
         FROM pts
     ),
@@ -2421,6 +2426,7 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = (firsts.crossJoin(F.broadcast(cps))
              .filter(F.col("first_doc") <= F.col("thr"))
              .groupBy("p").agg(F.count("*").alias("vocab")))
+    # not the kernel: x and y also feed SUM(x * y)
     pts = (n_tok.join(vocab, "p")
            .select("p",
                    F.col("n_tokens").cast("long").alias("n_tokens"),
@@ -2900,14 +2906,12 @@ def term_burstiness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE dfs.df < ns.n
     ), norms AS (
         SELECT source,
-               CAST(SUM(CAST(ROUND(w * w, 9) AS DECIMAL(25,9)))
-                    AS DOUBLE) AS nrm
+               {dsum_sql("ROUND(w * w, 9)", "decimal(25,9)")} AS nrm
         FROM w GROUP BY 1
     ), dots AS (
         SELECT a.source AS source_1, b.source AS source_2,
                CAST(COUNT(*) AS BIGINT) AS n_shared_terms,
-               CAST(SUM(CAST(ROUND(a.w * b.w, 9) AS DECIMAL(25,9)))
-                    AS DOUBLE) AS dot
+               {dsum_sql("ROUND(a.w * b.w, 9)", "decimal(25,9)")} AS dot
         FROM w a JOIN w b
           ON a.term = b.term AND a.source < b.source
         GROUP BY 1, 2
@@ -2955,9 +2959,8 @@ def source_similarity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                         * F.log(F.col("n") * F.lit(1.0) / F.col("df")))
                  .alias("w"))
          .localCheckpoint(eager=False))  # vocab-bounded, reused 3x
-    r9 = lambda c: F.round(c, 9).cast("decimal(25,9)")  # noqa: E731
     norms = (w.groupBy("source")
-             .agg(F.sum(r9(F.col("w") * F.col("w"))).cast("double")
+             .agg(dsum(F.round(F.col("w") * F.col("w"), 9), "decimal(25,9)")
                   .alias("nrm")))
     a, b = w.alias("a"), w.alias("b")
     dots = (a.join(b, (F.col("a.term") == F.col("b.term"))
@@ -2965,8 +2968,8 @@ def source_similarity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("a.source").alias("source_1"),
                      F.col("b.source").alias("source_2"))
             .agg(F.count("*").alias("n_shared_terms"),
-                 F.sum(r9(F.col("a.w") * F.col("b.w"))).cast("double")
-                 .alias("dot")))
+                 dsum(F.round(F.col("a.w") * F.col("b.w"), 9),
+                      "decimal(25,9)").alias("dot")))
     na = norms.withColumnRenamed("source", "source_1") \
         .withColumnRenamed("nrm", "na")
     nb = norms.withColumnRenamed("source", "source_2") \

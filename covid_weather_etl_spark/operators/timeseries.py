@@ -26,7 +26,8 @@ from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.numeric import (
-    dsum, fround, fround_sql, fround_val,
+    decimal_dot_sql, decimal_sum, decimal_sum_sql, dsum, dsum_sql, fround,
+    fround_sql, fround_val, grid_sum, grid_sum_sql,
 )
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
@@ -42,7 +43,7 @@ PERIOD = 7  # weekly seasonality for the daily order-revenue series
     WITH daily AS (
         SELECT n.n_name,
                CAST(o.o_orderdate AS DATE) AS d,
-               CAST(SUM(CAST(o.o_totalprice AS DECIMAL(25,6))) AS DOUBLE) AS y
+               {dsum_sql("o.o_totalprice")} AS y
         FROM orders o
         JOIN customer c ON o.o_custkey = c.c_custkey
         JOIN nation n   ON c.c_nationkey = n.n_nationkey
@@ -87,7 +88,7 @@ def seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
              .join(F.broadcast(t["nation"]),
                    F.col("c_nationkey") == F.col("n_nationkey"))
              .groupBy("n_name", F.to_date("o_orderdate").alias("d"))
-             .agg(dsum("o_totalprice", "y")))
+             .agg(dsum("o_totalprice").alias("y")))
     w = W.partitionBy("n_name").orderBy("d").rowsBetween(-half, half)
     with_trend = daily.select(
         "n_name", "d", "y",
@@ -209,7 +210,7 @@ ALPHA = 0.3  # EWMA smoothing factor; literal mirrored in the oracle SQL
         FROM m JOIN e ON m.priority = e.priority AND m.rn = e.rn + 1
     )
     SELECT priority, month, rev, rn, ROUND(ewma, 6) AS ewma FROM e
-    """.format(rev="CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS DOUBLE)"),
+    """.format(rev=dsum_sql("o_totalprice")),
 )
 def ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially-weighted moving average over the monthly revenue
@@ -232,7 +233,7 @@ def ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     monthly = (t["orders"]
                .groupBy(F.col("o_orderpriority").alias("priority"),
                         F.date_trunc("month", "o_orderdate").alias("month"))
-               .agg(dsum("o_totalprice", "rev")))
+               .agg(dsum("o_totalprice").alias("rev")))
 
     def smooth(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("month").reset_index(drop=True)
@@ -263,7 +264,7 @@ KAL_Q, KAL_R, KAL_P0 = 0.1, 1.0, 1.0
 
 def _kalman_oracle() -> str:
     q, r, p0 = repr(KAL_Q), repr(KAL_R), repr(KAL_P0)
-    rev = "CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS DOUBLE)"
+    rev = dsum_sql("o_totalprice")
     return f"""
     WITH RECURSIVE m AS (
         SELECT o_orderpriority AS priority,
@@ -328,7 +329,7 @@ def kalman_level_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     monthly = (t["orders"]
                .groupBy(F.col("o_orderpriority").alias("priority"),
                         F.date_trunc("month", "o_orderdate").alias("month"))
-               .agg(dsum("o_totalprice", "rev")))
+               .agg(dsum("o_totalprice").alias("rev")))
 
     def smooth(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("month").reset_index(drop=True)
@@ -445,7 +446,7 @@ MEDIAN_WINDOW = 7  # trailing rows for the robust rolling median
     WITH daily AS (
         SELECT n.n_name,
                CAST(o.o_orderdate AS DATE) AS d,
-               CAST(SUM(CAST(o.o_totalprice AS DECIMAL(25,6))) AS DOUBLE) AS y
+               {dsum_sql("o.o_totalprice")} AS y
         FROM orders o
         JOIN customer c ON o.o_custkey = c.c_custkey
         JOIN nation n   ON c.c_nationkey = n.n_nationkey
@@ -497,7 +498,7 @@ MAD_CUTOFF = 3.5
     oracle=f"""
     WITH daily AS (
         SELECT n.n_name, CAST(o.o_orderdate AS DATE) AS d,
-               CAST(SUM(CAST(o.o_totalprice AS DECIMAL(25,6))) AS DOUBLE) AS y
+               {dsum_sql("o.o_totalprice")} AS y
         FROM orders o
         JOIN customer c ON o.o_custkey = c.c_custkey
         JOIN nation n   ON c.c_nationkey = n.n_nationkey
@@ -580,7 +581,8 @@ ACF_MAX_LAG = 7
     oracle=f"""
     WITH daily AS (
         SELECT CAST(o_orderdate AS DATE) AS d,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
+               -- not the kernel: the daily DECIMAL total also feeds x - xbar
+               CAST({decimal_sum_sql("o_totalprice", "decimal(18,2)")}
                     AS DECIMAL(18,2)) AS x
         FROM orders GROUP BY 1
     ), stats AS (
@@ -592,13 +594,13 @@ ACF_MAX_LAG = 7
         SELECT d, CAST(x - xbar AS DECIMAL(16,6)) AS e
         FROM daily CROSS JOIN stats
     ), den AS (
-        SELECT SUM(CAST(e AS DECIMAL(19,6)) * CAST(e AS DECIMAL(19,6)))
-          AS s_ee FROM dev
+        SELECT {decimal_dot_sql("e", "e", "decimal(19,6)")} AS s_ee
+        FROM dev
     ), lags AS (SELECT unnest(range(1, {ACF_MAX_LAG} + 1)) AS lag)
     SELECT lags.lag,
            CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           ROUND(CAST(SUM(CAST(a.e AS DECIMAL(19,6))
-                          * CAST(b.e AS DECIMAL(19,6))) AS DOUBLE)
+           ROUND(CAST({decimal_dot_sql("a.e", "b.e", "decimal(19,6)")}
+                      AS DOUBLE)
                  / CAST(MAX(den.s_ee) AS DOUBLE), 6) AS acf
     FROM lags
     JOIN dev a ON TRUE
@@ -630,15 +632,17 @@ def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan collapses to the day grain in one map-combinable shuffle and
     everything after is calendar-sized."""
     t = load_tables(spark, sf_dir, ("orders",))
+    # not the kernel: the daily DECIMAL total also feeds x - xbar
     daily = (t["orders"]
              .groupBy(F.col("o_orderdate").cast("date").alias("d"))
-             .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+             .agg(decimal_sum("o_totalprice", "decimal(18,2)")
                   .cast("decimal(18,2)").alias("x"))
              .localCheckpoint(eager=False))  # day-grain; reused 4x
     stats = daily.agg(
         F.count("*").alias("n"),
         F.round(F.sum("x").cast("double") / F.count("*"), 6)
          .cast("decimal(16,6)").alias("xbar"))
+    # not the kernel: e feeds SUM(a.e * b.e) as a decimal
     dev = (daily.crossJoin(F.broadcast(stats))
            .select("d", (F.col("x") - F.col("xbar"))
                    .cast("decimal(16,6)").alias("e"))
@@ -670,8 +674,7 @@ def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT n.n_name,
                (EXTRACT(year FROM o.o_orderdate) - 1995) * 12
                  + EXTRACT(month FROM o.o_orderdate) AS mx,
-               CAST(SUM(CAST(o.o_totalprice AS DECIMAL(25,6))) AS DOUBLE)
-                   AS y
+               {dsum_sql("o.o_totalprice")} AS y
         FROM orders o
         JOIN customer c ON o.o_custkey = c.c_custkey
         JOIN nation n   ON c.c_nationkey = n.n_nationkey
@@ -743,7 +746,7 @@ def theilsen_mannkendall_trend(spark: SparkSession,
                .groupBy("n_name",
                         ((F.year("o_orderdate") - 1995) * 12
                          + F.month("o_orderdate")).alias("mx"))
-               .agg(dsum("o_totalprice", "y"))
+               .agg(dsum("o_totalprice").alias("y"))
                .localCheckpoint(eager=False))  # reused by pairs/ties/size
     a = monthly.select(F.col("n_name").alias("ln"),
                        F.col("mx").alias("ax"), F.col("y").alias("ay"))
@@ -792,11 +795,10 @@ def theilsen_mannkendall_trend(spark: SparkSession,
 @register(
     "date_spine_fill",
     survey="ext-warehouse,W1,W9,J4,P10",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
         SELECT n.n_name, CAST(o.o_orderdate AS DATE) AS d,
-               CAST(SUM(CAST(o.o_totalprice AS DECIMAL(25,6))) AS DOUBLE)
-                   AS y
+               {dsum_sql("o.o_totalprice")} AS y
         FROM orders o
         JOIN customer c ON o.o_custkey = c.c_custkey
         JOIN nation n   ON c.c_nationkey = n.n_nationkey
@@ -844,7 +846,7 @@ def date_spine_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
              .join(F.broadcast(t["nation"]),
                    F.col("c_nationkey") == F.col("n_nationkey"))
              .groupBy("n_name", F.to_date("o_orderdate").alias("d"))
-             .agg(dsum("o_totalprice", "y")))
+             .agg(dsum("o_totalprice").alias("y")))
     bounds = (daily.groupBy(F.col("n_name").alias("s_name"))
               .agg(F.min("d").alias("lo"), F.max("d").alias("hi")))
     spine = bounds.select(
@@ -879,8 +881,7 @@ PINBALL_TAUS = (0.1, 0.5, 0.9)
     oracle=f"""
     WITH daily AS (
         SELECT n.n_name, CAST(o.o_orderdate AS DATE) AS d,
-               CAST(SUM(CAST(o.o_totalprice AS DECIMAL(25,6))) AS DOUBLE)
-                   AS y
+               {dsum_sql("o.o_totalprice")} AS y
         FROM orders o
         JOIN customer c ON o.o_custkey = c.c_custkey
         JOIN nation n   ON c.c_nationkey = n.n_nationkey
@@ -907,10 +908,9 @@ PINBALL_TAUS = (0.1, 0.5, 0.9)
     )
     SELECT n_name, CAST(tau AS DOUBLE) AS tau,
            CAST(COUNT(*) AS BIGINT) AS n_days,
-           {fround_sql("CAST(SUM(CAST(GREATEST(tau * (y - q),"
-                       " (tau - 1e0) * (y - q))"
-                       " AS DECIMAL(25,9))) AS DOUBLE)"
-                       " / COUNT(*)")} AS avg_pinball,
+           {fround_sql(dsum_sql("GREATEST(tau * (y - q),"
+                                " (tau - 1e0) * (y - q))", "decimal(25,9)")
+                       + " / COUNT(*)")} AS avg_pinball,
            CAST(SUM(CASE WHEN y <= q THEN 1 ELSE 0 END) AS BIGINT)
                AS n_covered
     FROM scored GROUP BY 1, 2
@@ -947,7 +947,7 @@ def pinball_quantile_forecast_eval(spark: SparkSession,
              .join(F.broadcast(t["nation"]),
                    F.col("c_nationkey") == F.col("n_nationkey"))
              .groupBy("n_name", F.to_date("o_orderdate").alias("d"))
-             .agg(dsum("o_totalprice", "y")))
+             .agg(dsum("o_totalprice").alias("y")))
     w = (W.partitionBy("n_name").orderBy("d")
          .rowsBetween(-PINBALL_LOOKBACK, -1))
     fc = (daily
@@ -967,8 +967,7 @@ def pinball_quantile_forecast_eval(spark: SparkSession,
     loss = F.greatest(tau * (y - q), (tau - F.lit(1.0)) * (y - q))
     return (scored.groupBy("n_name", tau.alias("tau"))
             .agg(F.count("*").alias("n_days"),
-                 fround(F.sum(loss.cast("decimal(25,9)"))
-                          .cast("double") / F.count("*"))
+                 fround(dsum(loss, "decimal(25,9)") / F.count("*"))
                  .alias("avg_pinball"),
                  F.sum(F.when(y <= q, 1).otherwise(0)).cast("bigint")
                  .alias("n_covered")))
@@ -1153,7 +1152,7 @@ def _haar_single_task(cur) -> "DataFrame":
 
 
 def _haar_oracle() -> str:
-    rev = "CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) AS DOUBLE)"
+    rev = dsum_sql("o_totalprice")
     ctes = [f"""
     d0 AS (
         SELECT g.i AS idx, COALESCE(m.rev, 0e0) AS x
@@ -1183,8 +1182,7 @@ def _haar_oracle() -> str:
     levels = " UNION ALL ".join(
         f"""SELECT CAST({lv} AS BIGINT) AS level,
                CAST(COUNT(*) AS BIGINT) AS n_coeffs,
-               CAST(SUM(CAST(FLOOR(d * d + 0.5) AS DECIMAL(25,0)))
-                    AS DOUBLE) AS energy
+               {grid_sum_sql("d * d", 0)} AS energy
         FROM a{lv}""" for lv in range(1, HAAR_LEVELS + 1))
     return ("WITH " + ", ".join(c.strip() for c in ctes) + f"""
     , lv AS ({levels}),
@@ -1228,7 +1226,7 @@ def haar_wavelet_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (t["orders"].crossJoin(F.broadcast(first))
              .groupBy(F.datediff(F.col("o_orderdate").cast("date"),
                                  F.col("d0")).cast("long").alias("idx"))
-             .agg(dsum("o_totalprice", "rev")))
+             .agg(dsum("o_totalprice").alias("rev")))
     grid = spark.range(HAAR_N).select(F.col("id").alias("idx"))
     cur = (grid.join(daily, "idx", "left")
            .select("idx", F.coalesce(F.col("rev"), F.lit(0.0))
@@ -1251,9 +1249,7 @@ def haar_wavelet_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
         out_parts.append(nxt.agg(
             F.lit(lv).cast("long").alias("level"),
             F.count("*").alias("n_coeffs"),
-            F.sum(F.floor(F.col("d") * F.col("d") + F.lit(0.5))
-                  .cast("decimal(25,0)")).cast("double")
-            .alias("energy")))
+            grid_sum(F.col("d") * F.col("d"), 0).alias("energy")))
         cur = nxt.select("idx", "x")
     lv = out_parts[0]
     for o in out_parts[1:]:

@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.functions.numeric import (
-    dsum, dsum_sql, fround, fround_sql,
+    decimal_sum, decimal_sum_sql, dsum, dsum_sql, fround, fround_sql,
 )
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
@@ -123,8 +123,8 @@ def forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
                     & (d < F.lit(f"{Q6_YEAR + 1}-01-01"))
                     & F.col("l_discount").between(Q6_DISC_LO, Q6_DISC_HI)
                     & (F.col("l_quantity") < Q6_QTY_MAX))
-            .agg(dsum(F.col("l_extendedprice") * F.col("l_discount"),
-                      "revenue_delta"),
+            .agg(dsum(F.col("l_extendedprice") * F.col("l_discount"))
+                 .alias("revenue_delta"),
                  F.count("*").alias("n_lines")))
 
 
@@ -188,7 +188,7 @@ def volume_shipping_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("supp_nation", "cust_nation",
                      F.year("l_shipdate").cast("int").alias("l_year"))
             .agg(dsum(F.col("l_extendedprice")
-                      * (F.lit(1) - F.col("l_discount")), "revenue")))
+                      * (F.lit(1) - F.col("l_discount"))).alias("revenue")))
 
 
 @register(
@@ -197,8 +197,7 @@ def volume_shipping_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH all_sales AS (
         SELECT CAST(EXTRACT(YEAR FROM o.o_orderdate) AS INT) AS o_year,
-               CAST(l.l_extendedprice * (1 - l.l_discount)
-                    AS DECIMAL(25,6)) AS volume,
+               l.l_extendedprice * (1 - l.l_discount) AS volume,
                n1.n_name AS supp_nation
         FROM lineitem l
         JOIN part p     ON p.p_partkey = l.l_partkey
@@ -212,9 +211,9 @@ def volume_shipping_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT o_year,
            {fround_sql(
-               "CAST(SUM(CASE WHEN supp_nation = '" + Q8_NATION + "' "
-               "THEN volume ELSE CAST(0 AS DECIMAL(25,6)) END) AS DOUBLE)"
-               " / CAST(SUM(volume) AS DOUBLE)")} AS mkt_share
+               dsum_sql(f"CASE WHEN supp_nation = '{Q8_NATION}'"
+                        " THEN volume ELSE 0 END")
+               + " / " + dsum_sql("volume"))} AS mkt_share
     FROM all_sales GROUP BY o_year
     """,
 )
@@ -247,9 +246,7 @@ def national_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_name").alias("supp_nation"))),
                 F.col("s_nationkey") == F.col("sn_key"))
             .select("s_suppkey", "supp_nation"))
-    dec = "decimal(25,6)"
-    vol = (F.col("l_extendedprice")
-           * (F.lit(1) - F.col("l_discount"))).cast(dec)
+    vol = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
     sales = (t["lineitem"]
              .select("l_orderkey", "l_partkey", "l_suppkey",
                      "l_extendedprice", "l_discount")
@@ -264,13 +261,11 @@ def national_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.col("o_custkey") == F.col("c_custkey"))
              .select(F.year("o_orderdate").cast("int").alias("o_year"),
                      vol.alias("volume"), "supp_nation"))
-    zero = F.lit(0).cast(dec)
     return (sales.groupBy("o_year")
             .agg(fround(
-                F.sum(F.when(F.col("supp_nation") == Q8_NATION,
-                             F.col("volume")).otherwise(zero))
-                .cast("double")
-                / F.sum("volume").cast("double")).alias("mkt_share")))
+                dsum(F.when(F.col("supp_nation") == Q8_NATION,
+                            F.col("volume")).otherwise(0))
+                / dsum("volume")).alias("mkt_share")))
 
 
 @register(
@@ -329,7 +324,7 @@ def product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.col("l_orderkey") == F.col("o_orderkey"))
             .groupBy("nation",
                      F.year("o_orderdate").cast("int").alias("o_year"))
-            .agg(dsum(profit, "sum_profit")))
+            .agg(dsum(profit).alias("sum_profit")))
 
 
 @register(
@@ -382,11 +377,11 @@ def late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="ext-dss,J1,A3,A5",
     oracle=f"""
     SELECT {fround_sql(
-        "100.0 * CAST(SUM(CASE WHEN p.p_type = '" + Q14_TYPE + "' THEN "
-        "CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(25,6)) "
-        "ELSE CAST(0 AS DECIMAL(25,6)) END) AS DOUBLE) / "
-        "CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) "
-        "AS DECIMAL(25,6))) AS DOUBLE)")} AS promo_revenue_pct
+        "100.0 * "
+        + dsum_sql(f"CASE WHEN p.p_type = '{Q14_TYPE}'"
+                   " THEN l.l_extendedprice * (1 - l.l_discount) ELSE 0 END")
+        + " / " + dsum_sql("l.l_extendedprice * (1 - l.l_discount)")
+    )} AS promo_revenue_pct
     FROM lineitem l
     JOIN part p ON p.p_partkey = l.l_partkey
     WHERE CAST(l.l_shipdate AS DATE) >= DATE '{Q14_MONTH_LO}'
@@ -403,10 +398,7 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     date-partitioned layout to ~1/84th of files before any join."""
     t = load_tables(spark, sf_dir, ("lineitem", "part"))
     d = F.to_date("l_shipdate")
-    dec = "decimal(25,6)"
-    vol = (F.col("l_extendedprice")
-           * (F.lit(1) - F.col("l_discount"))).cast(dec)
-    zero = F.lit(0).cast(dec)
+    vol = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
     return (t["lineitem"]
             .filter((d >= F.lit(Q14_MONTH_LO)) & (d < F.lit(Q14_MONTH_HI)))
             .select("l_partkey", "l_extendedprice", "l_discount")
@@ -414,9 +406,8 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.col("l_partkey") == F.col("p_partkey"))
             .agg(fround(
                 F.lit(100.0)
-                * F.sum(F.when(F.col("p_type") == Q14_TYPE, vol)
-                        .otherwise(zero)).cast("double")
-                / F.sum(vol).cast("double")).alias("promo_revenue_pct")))
+                * dsum(F.when(F.col("p_type") == Q14_TYPE, vol).otherwise(0))
+                / dsum(vol)).alias("promo_revenue_pct")))
 
 
 @register(
@@ -425,8 +416,8 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH revenue AS (
         SELECT l_suppkey AS supplier_no,
-               SUM(CAST(l_extendedprice * (1 - l_discount)
-                        AS DECIMAL(25,6))) AS total_revenue
+               {decimal_sum_sql("l_extendedprice * (1 - l_discount)")}
+                   AS total_revenue
         FROM lineitem
         WHERE CAST(l_shipdate AS DATE) >= DATE '{Q15_LO}'
           AND CAST(l_shipdate AS DATE) <  DATE '{Q15_HI}'
@@ -453,12 +444,11 @@ def top_supplier_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast, done."""
     t = load_tables(spark, sf_dir, ("lineitem", "supplier"))
     d = F.to_date("l_shipdate")
-    dec = "decimal(25,6)"
     rev = (t["lineitem"]
            .filter((d >= F.lit(Q15_LO)) & (d < F.lit(Q15_HI)))
            .groupBy(F.col("l_suppkey").alias("supplier_no"))
-           .agg(F.sum((F.col("l_extendedprice")
-                       * (F.lit(1) - F.col("l_discount"))).cast(dec))
+           .agg(decimal_sum(F.col("l_extendedprice")
+                            * (F.lit(1) - F.col("l_discount")))
                 .alias("rev_dec")))
     top = rev.agg(F.max("rev_dec").alias("max_rev"))
     return (rev.join(F.broadcast(top),
@@ -517,7 +507,7 @@ def disjunctive_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.col("l_partkey") == F.col("p_partkey"))
             .filter(arm)
             .agg(dsum(F.col("l_extendedprice")
-                      * (F.lit(1) - F.col("l_discount")), "revenue"),
+                      * (F.lit(1) - F.col("l_discount"))).alias("revenue"),
                  F.count("*").alias("n_lines")))
 
 
@@ -527,7 +517,7 @@ def disjunctive_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH spend AS (
         SELECT l.l_partkey, l.l_suppkey,
-               SUM(CAST(l.l_extendedprice AS DECIMAL(25,6))) AS spend_dec
+               {decimal_sum_sql("l.l_extendedprice")} AS spend_dec
         FROM lineitem l
         JOIN part p ON p.p_partkey = l.l_partkey
         WHERE p.p_type = '{Q2_TYPE}' AND p.p_size <= {Q2_SIZE_MAX}
@@ -569,8 +559,7 @@ def cheapest_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
              .join(F.broadcast(family),
                    F.col("l_partkey") == F.col("p_partkey"))
              .groupBy("l_partkey", "l_suppkey")
-             .agg(F.sum(F.col("l_extendedprice").cast("decimal(25,6)"))
-                  .alias("spend_dec")))
+             .agg(decimal_sum("l_extendedprice").alias("spend_dec")))
     min_spend = F.min("spend_dec").over(W.partitionBy("l_partkey"))
     return (spend
             .withColumn("min_spend", min_spend)

@@ -33,7 +33,8 @@ from pyspark.sql import functions as F
 from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
 from covid_weather_etl_spark.functions.numeric import (
-    dsum_sql, fround, fround_sql, md5_int,
+    DEC, decimal_sum, decimal_sum_sql, dsum, dsum_sql, fround, fround_sql,
+    md5_int,
 )
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
@@ -78,15 +79,14 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (df.select(month, "o_totalprice")
                 .groupBy("month")
                 .agg(F.count("*").alias("cnt"),
-                     F.sum(F.col("o_totalprice").cast("decimal(25,6)"))
-                      .alias("rev_dec"),
+                     decimal_sum("o_totalprice").alias("rev_dec"),
                      F.max("o_totalprice").alias("mx")))
 
     base = partial(t["orders"].filter(F.col("o_orderdate") < CUTOFF))
     delta = partial(t["orders"].filter(F.col("o_orderdate") >= CUTOFF))
 
     b, d = base.alias("b"), delta.alias("d")
-    zero = F.lit(0).cast("decimal(25,6)")
+    zero = F.lit(0).cast(DEC)
     merged = (b.join(d, "month", "full_outer")
               .select(
                   "month",
@@ -340,7 +340,7 @@ BASKET_MIN_CO = 2
         FROM base
     )
     SELECT r_score, f_score, m_score, COUNT(*) AS n_customers,
-           CAST(SUM(CAST(money AS DECIMAL(25,6))) AS DOUBLE) AS total_revenue
+           {dsum_sql("money")} AS total_revenue
     FROM (
         SELECT CASE WHEN rec <= re1 THEN 4 WHEN rec <= re2 THEN 3
                     WHEN rec <= re3 THEN 2 ELSE 1 END AS r_score,
@@ -370,14 +370,12 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows anywhere — scoring is a scalar-cutoff CASE, which is what
     keeps RFM embarrassingly parallel at 100 TB (swap exact percentile
     for approx_percentile and nothing else changes)."""
-    from covid_weather_etl_spark.functions.numeric import DEC, dsum
-
     t = load_tables(spark, sf_dir, ("orders",))
     o = t["orders"]
     cust = (o.groupBy("o_custkey")
             .agg(F.max("o_orderdate").alias("last_dt"),
                  F.count("*").alias("freq"),
-                 dsum("o_totalprice", "money")))
+                 dsum("o_totalprice").alias("money")))
     maxd = o.agg(F.max("o_orderdate").alias("d"))
     base = (cust.crossJoin(F.broadcast(maxd))
             .select("o_custkey",
@@ -403,8 +401,7 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
                     m.alias("m_score"), "money")
             .groupBy("r_score", "f_score", "m_score")
             .agg(F.count("*").alias("n_customers"),
-                 F.sum(F.col("money").cast(DEC)).cast("double")
-                  .alias("total_revenue")))
+                 dsum("money").alias("total_revenue")))
 
 
 @register(
@@ -907,23 +904,24 @@ ENC_COLUMNS = (("l_returnflag", 1), ("l_linestatus", 1),
 
 def _enc_oracle() -> str:
     parts = []
+    ent = decimal_sum_sql("ent_term", "decimal(25,9)")
     for col, width in ENC_COLUMNS:
         parts.append(f"""
     SELECT '{col}' AS col,
            CAST(SUM(c) AS BIGINT) AS n_rows,
            CAST(COUNT(*) AS BIGINT) AS n_distinct,
-           {fround_sql("SUM(ent_term)")} AS entropy_bits,
+           {fround_sql(ent)} AS entropy_bits,
            CAST(SUM(c) * {width} AS BIGINT) AS plain_bytes,
            CAST(CAST(CEIL(SUM(c) * CEIL({fround_sql("LN(COUNT(*) + 1)"
                                                     " / LN(2e0)", 9)})
                           / 8e0) AS BIGINT)
                 + COUNT(*) * {width} AS BIGINT) AS dict_bytes,
-           CAST(CEIL(SUM(c) * ({fround_sql("SUM(ent_term)")})
+           CAST(CEIL(SUM(c) * ({fround_sql(ent)})
                      / 8e0) AS BIGINT) AS entropy_floor_bytes
     FROM (
-        SELECT c, CAST(ROUND(-(c * 1e0 / SUM(c) OVER ())
-                             * LN(c * 1e0 / SUM(c) OVER ()) / LN(2e0),
-                             9) AS DECIMAL(25,9)) AS ent_term
+        SELECT c, ROUND(-(c * 1e0 / SUM(c) OVER ())
+                        * LN(c * 1e0 / SUM(c) OVER ()) / LN(2e0),
+                        9) AS ent_term
         FROM (SELECT CAST(COUNT(*) AS BIGINT) AS c
               FROM lineitem GROUP BY {col}) h
     ) e""")
@@ -961,9 +959,9 @@ def encoding_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         h = li.groupBy(col).agg(F.count("*").alias("c"))
         tot = h.agg(F.sum("c").alias("n"))
         p = F.col("c") * F.lit(1.0) / F.col("n")
-        ent_term = F.round(-p * F.log(p) / ln2, 9).cast("decimal(25,9)")
+        ent_term = F.round(-p * F.log(p) / ln2, 9)
         ent = (h.crossJoin(F.broadcast(tot))
-               .agg(F.sum(ent_term).alias("ent"),
+               .agg(decimal_sum(ent_term, "decimal(25,9)").alias("ent"),
                     F.max("n").alias("n_rows"),
                     F.count("*").alias("n_distinct")))
         eb = fround(F.col("ent").cast("double"))

@@ -26,7 +26,10 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from covid_weather_etl_spark.functions import driver
-from covid_weather_etl_spark.functions.numeric import exact_avg_sql
+from covid_weather_etl_spark.functions.numeric import (
+    DEC, decimal_dot, decimal_dot_sql, decimal_sum, decimal_sum_sql, dsum,
+    dsum_sql, exact_avg_sql,
+)
 from covid_weather_etl_spark.queries.registry import register
 from covid_weather_etl_spark.sources.catalog import load_tables
 
@@ -92,24 +95,24 @@ def first_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: rolling_features' exact window sums Σx, Σx² of 2dp prices
+_SX = decimal_sum_sql("o_totalprice", "decimal(12,2)")
+_SXX = decimal_dot_sql("o_totalprice", "o_totalprice", "decimal(12,2)")
+
+
 @register(
     "rolling_features",
     survey="W4",
     oracle=f"""
     SELECT o_custkey, o_orderkey,
            CASE WHEN count(o_totalprice) OVER w3 >= 3
-                THEN ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2)))
-                                OVER w3 AS DOUBLE) / 3.0, 6)
+                THEN ROUND(CAST({_SX} OVER w3 AS DOUBLE) / 3.0, 6)
            END AS roll_mean_3,
            CASE WHEN count(o_totalprice) OVER w3 >= 3
                 THEN ROUND(sqrt(CAST(
-                    3 * CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))
-                                 * CAST(o_totalprice AS DECIMAL(12,2)))
-                             OVER w3 AS DECIMAL(20,4))
-                    - CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2)))
-                           OVER w3 AS DECIMAL(14,2))
-                      * CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2)))
-                             OVER w3 AS DECIMAL(14,2))
+                    3 * CAST({_SXX} OVER w3 AS DECIMAL(20,4))
+                    - CAST({_SX} OVER w3 AS DECIMAL(14,2))
+                      * CAST({_SX} OVER w3 AS DECIMAL(14,2))
                     AS DOUBLE) / 6.0), 6)
            END AS roll_std_3,
            CASE WHEN count(o_totalprice) OVER w3 >= 3
@@ -117,8 +120,7 @@ def first_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
            CASE WHEN count(o_totalprice) OVER w3 >= 3
                 THEN max(o_totalprice) OVER w3 END AS roll_max_3,
            CASE WHEN count(o_totalprice) OVER w7 >= 7
-                THEN ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2)))
-                                OVER w7 AS DOUBLE) / 7.0, 6)
+                THEN ROUND(CAST({_SX} OVER w7 AS DOUBLE) / 7.0, 6)
            END AS roll_mean_7
     FROM orders
     WINDOW
@@ -145,19 +147,19 @@ def rolling_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_cols = ["o_custkey", "o_orderkey"]
     df = t["orders"]
     p = F.col("o_totalprice")
-    pd_ = p.cast("decimal(12,2)")
+    sx = decimal_sum(p, "decimal(12,2)")
 
     def guarded(agg: Column, w, size: int) -> Column:
         return F.when(F.count(p).over(w) >= size, agg)
 
     w3 = _series_window().rowsBetween(-3, -1)
     w7 = _series_window().rowsBetween(-7, -1)
-    sx3 = F.sum(pd_).over(w3).cast("decimal(14,2)")
-    sxx3 = F.sum(pd_ * pd_).over(w3).cast("decimal(20,4)")
+    sx3 = sx.over(w3).cast("decimal(14,2)")
+    sxx3 = decimal_dot(p, p, "decimal(12,2)").over(w3).cast("decimal(20,4)")
     var_num = (F.lit(3) * sxx3 - sx3 * sx3).cast("double")
-    mean3 = F.round(F.sum(pd_).over(w3).cast("double") / 3.0, 6)
+    mean3 = F.round(sx.over(w3).cast("double") / 3.0, 6)
     std3 = F.round(F.sqrt(var_num / 6.0), 6)
-    mean7 = F.round(F.sum(pd_).over(w7).cast("double") / 7.0, 6)
+    mean7 = F.round(sx.over(w7).cast("double") / 7.0, 6)
     return df.select(
         *out_cols,
         guarded(mean3, w3, 3).alias("roll_mean_3"),
@@ -343,7 +345,7 @@ def yoy_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.year("o_orderdate").isin(1996, 1997, 1998))
         .groupBy(F.year("o_orderdate").alias("year"),
                  F.month("o_orderdate").alias("month"))
-        .agg(exact_avg("o_totalprice", "avg_price"))
+        .agg(exact_avg("o_totalprice").alias("avg_price"))
     )
 
 
@@ -352,7 +354,7 @@ def yoy_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="W1,A6",
     oracle=f"""
     SELECT o_custkey, o_orderkey,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(25,6))) OVER
+           CAST({decimal_sum_sql("o_totalprice")} OVER
              (PARTITION BY o_custkey ORDER BY {_SERIES_ORDER_SQL}
               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS cum_spend
     FROM orders
@@ -366,8 +368,8 @@ def running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = _series_window().rowsBetween(W.unboundedPreceding, W.currentRow)
     return t["orders"].select(
         "o_custkey", "o_orderkey",
-        F.sum(F.col("o_totalprice").cast("decimal(25,6)")).over(w)
-         .cast("double").alias("cum_spend"),
+        decimal_sum("o_totalprice").over(w).cast("double")
+        .alias("cum_spend"),
     )
 
 
@@ -440,7 +442,7 @@ def label_encode_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="W1,A6",
     oracle=f"""
     SELECT o_custkey, o_orderkey,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(25,6))) OVER
+           CAST({decimal_sum_sql("o_totalprice")} OVER
              (PARTITION BY o_custkey ORDER BY {_SERIES_ORDER_SQL}
               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS cum_spend
     FROM orders
@@ -466,7 +468,7 @@ def skew_resilient_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     granularity (year → month → day) tunes max-task size."""
     t = load_tables(spark, sf_dir, ("orders",))
     blk = F.year("o_orderdate").alias("blk")
-    dec = F.col("o_totalprice").cast("decimal(25,6)")
+    tot = decimal_sum("o_totalprice")
 
     w_in = (W.partitionBy("o_custkey", "blk")
             .orderBy(F.col("o_orderdate"), F.col("o_orderkey"))
@@ -474,13 +476,13 @@ def skew_resilient_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     in_block = (t["orders"]
                 .select("o_custkey", "o_orderkey", "o_orderdate",
                         "o_totalprice", blk)
-                .withColumn("cum_in_blk", F.sum(dec).over(w_in)))
+                .withColumn("cum_in_blk", tot.over(w_in)))
 
     w_off = (W.partitionBy("o_custkey").orderBy("blk")
              .rowsBetween(W.unboundedPreceding, -1))
     offsets = (t["orders"]
                .groupBy("o_custkey", blk)
-               .agg(F.sum(dec).alias("blk_sum"))
+               .agg(tot.alias("blk_sum"))
                .withColumn("offset", F.sum("blk_sum").over(w_off))
                .select("o_custkey", "blk", "offset"))
 
@@ -489,7 +491,7 @@ def skew_resilient_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "o_custkey", "o_orderkey",
                 (F.col("cum_in_blk")
-                 + F.coalesce(F.col("offset"), F.lit(0).cast("decimal(25,6)")))
+                 + F.coalesce(F.col("offset"), F.lit(0).cast(DEC)))
                 .cast("double").alias("cum_spend")))
 
 
@@ -541,11 +543,10 @@ def topk_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "longest_increase_streak",
     survey="ext-window,W1,W3,A8",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
         SELECT n.n_name, CAST(o.o_orderdate AS DATE) AS d,
-               CAST(SUM(CAST(o.o_totalprice AS DECIMAL(25,6)))
-                    AS DOUBLE) AS y
+               {dsum_sql("o.o_totalprice")} AS y
         FROM orders o
         JOIN customer c ON o.o_custkey = c.c_custkey
         JOIN nation n   ON c.c_nationkey = n.n_nationkey
@@ -599,8 +600,7 @@ def longest_increase_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
              .join(F.broadcast(t["nation"]),
                    F.col("c_nationkey") == F.col("n_nationkey"))
              .groupBy("n_name", F.col("o_orderdate").cast("date").alias("d"))
-             .agg(F.sum(F.col("o_totalprice").cast("decimal(25,6)"))
-                  .cast("double").alias("y")))
+             .agg(dsum("o_totalprice").alias("y")))
     w = W.partitionBy("n_name").orderBy("d")
     flagged = daily.select(
         "n_name", "d",

@@ -21,10 +21,6 @@ def physical_plan(df: DataFrame) -> str:
         df._jdf.queryExecution(), "formatted")
 
 
-def count_occurrences(df: DataFrame, pattern: str) -> int:
-    return len(re.findall(pattern, physical_plan(df)))
-
-
 def _node_ids(df: DataFrame, node_pattern: str) -> set[str]:
     """Unique node ids matching the pattern in the formatted plan.
 

@@ -85,12 +85,6 @@ COVID_NATURAL_KEY = ["date", "country", "confirmed", "deaths", "recovered"]
 # Lineage / metadata tables — database/schema.py:9-65, as append-only logs
 # ---------------------------------------------------------------------------
 
-COUNTRY_SCHEMA = T.StructType([
-    T.StructField("id", T.LongType(), False),
-    T.StructField("code", T.StringType(), False),
-    T.StructField("name", T.StringType(), False),
-])
-
 #: the reference's 3-country dimension (data/countries.py:1-5)
 COUNTRIES = [(1, "MDA", "Moldova"), (2, "DEU", "Germany"), (3, "ITA", "Italy")]
 

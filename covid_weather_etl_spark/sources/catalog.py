@@ -41,11 +41,6 @@ TABLES = (
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-#: small dimension tables that should always broadcast in joins —
-#: the analog of the reference's 3-row country / 2-row api dims
-#: (reference `data/countries.py:1-5`).
-DIM_TABLES = ("region", "nation", "customer", "supplier", "part")
-
 
 #: session confs whose values change the schema parquet inference
 #: returns; their values are part of every schema-cache key.

@@ -50,7 +50,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from covid_weather_etl_spark.functions import driver
 from covid_weather_etl_spark.functions.artifacts import artifact_path, ensure
 from covid_weather_etl_spark.functions.numeric import (
-    dsum, dsum_sql, fround, fround_sql,
+    DEC, decimal_sum, dsum, dsum_sql, fround, fround_sql,
 )
 from covid_weather_etl_spark.operators.dedup import dedup_on_load
 from covid_weather_etl_spark.queries.registry import register
@@ -113,7 +113,7 @@ def tumbling_counts_stream(events: DataFrame,
             .withWatermark("ts", WATERMARK)
             .groupBy(F.window("ts", window), "event_type")
             .agg(F.count("*").alias("n_events"),
-                 dsum("value", "sum_value"))
+                 dsum("value").alias("sum_value"))
             .select(F.col("window.start").alias("w_start"),
                     F.col("window.end").alias("w_end"),
                     "event_type", "n_events", "sum_value"))
@@ -383,7 +383,7 @@ def tumbling_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (t["events"]
             .groupBy(F.window("ts", "1 hour"), "event_type")
             .agg(F.count("*").alias("n_events"),
-                 dsum("value", "sum_value"))
+                 dsum("value").alias("sum_value"))
             .select(F.col("window.start").alias("w_start"),
                     F.col("window.end").alias("w_end"),
                     "event_type", "n_events", "sum_value"))
@@ -465,7 +465,7 @@ def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (t["events"]
             .groupBy(F.session_window("ts", GAP), "user_id")
             .agg(F.count("*").alias("n_events"),
-                 dsum("value", "sum_value"))
+                 dsum("value").alias("sum_value"))
             .select("user_id",
                     F.col("session_window.start").alias("s_start"),
                     F.col("session_window.end").alias("s_end"),
@@ -517,10 +517,6 @@ def upsert_gold_stream(stream: DataFrame, gold_dir: str,
 # streaming incremental rollup maintenance (the MV-refresh twin)
 # ---------------------------------------------------------------------------
 
-#: exact accumulator for the maintained rollup state — DECIMAL survives
-#: any number of partial merges bit-identically (see functions/numeric).
-_ROLLUP_DEC = "decimal(25,6)"
-
 
 def rollup_refresh_stream(stream: DataFrame, rollup_dir: str,
                           checkpoint_dir: str):
@@ -542,18 +538,19 @@ def rollup_refresh_stream(stream: DataFrame, rollup_dir: str,
     the touched keys' partitions (partition the state by day)."""
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        # the state stays an exact DECIMAL sum, which survives any
+        # number of partial merges bit-identically
         part = (batch_df
                 .groupBy(F.to_date("ts").alias("day"), "event_type")
                 .agg(F.count("*").alias("n_events"),
-                     F.sum(F.col("value").cast(_ROLLUP_DEC))
-                      .alias("sum_dec")))
+                     decimal_sum("value").alias("sum_dec")))
         old = read_parquet_or_none(spark, rollup_dir)
         if (old is not None
                 and old.agg(F.max("batch_hwm")).first()[0] >= batch_id):
             return  # replayed batch — already folded in
         if old is not None:
             b, d = old.alias("b"), part.alias("d")
-            zero = F.lit(0).cast(_ROLLUP_DEC)
+            zero = F.lit(0).cast(DEC)
             part = (b.join(d, ["day", "event_type"], "full_outer")
                     .select(
                         "day", "event_type",
@@ -1306,15 +1303,14 @@ def drift_reference(events: DataFrame) -> DataFrame:
     """Static per-type reference moments from the pre-cutoff slice:
     exact DECIMAL sums on the 2dp value grid (the welch_ttest_ab
     discipline) so mean/sd are partitioning-independent."""
-    dec = lambda c: c.cast("decimal(25,6)")  # noqa: E731
     return (events
             .filter(F.col("ts") < F.lit(DRIFT_CUTOFF).cast("timestamp"))
             .filter(F.col("value").isNotNull())
             .groupBy("event_type")
             .agg(F.count("*").alias("ref_n"),
-                 F.sum(dec(F.col("value"))).cast("double").alias("sx"),
-                 F.sum(dec(F.round(F.col("value") * F.col("value"), 6)))
-                 .cast("double").alias("sxx"))
+                 dsum("value").alias("sx"),
+                 dsum(F.round(F.col("value") * F.col("value"), 6))
+                 .alias("sxx"))
             .select("event_type",
                     "ref_n",
                     (F.col("sx") / F.col("ref_n")).alias("ref_mean"),
@@ -1342,13 +1338,11 @@ def _drift_select(win: DataFrame, ref: DataFrame) -> DataFrame:
 
 def _drift_windows(cur: DataFrame, ref: DataFrame) -> DataFrame:
     """Shared window-vs-reference comparison (batch and stream arms)."""
-    dec = lambda c: c.cast("decimal(25,6)")  # noqa: E731
     win = (cur
            .filter(F.col("ts") >= F.lit(DRIFT_CUTOFF).cast("timestamp"))
            .filter(F.col("value").isNotNull())
            .groupBy(F.window("ts", "1 day"), "event_type")
-           .agg(F.count("*").alias("n_events"),
-                F.sum(dec(F.col("value"))).cast("double").alias("wsx")))
+           .agg(F.count("*").alias("n_events"), dsum("value").alias("wsx")))
     return _drift_select(win, ref)
 
 
@@ -1368,13 +1362,9 @@ def drift_monitor_stream(events: DataFrame, ref: DataFrame) -> DataFrame:
     WITH ref AS (
         SELECT event_type,
                CAST(COUNT(*) AS BIGINT) AS ref_n,
-               CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE)
-                   / COUNT(*) AS ref_mean,
-               SQRT((CAST(SUM(CAST(ROUND(value * value, 6)
-                                   AS DECIMAL(25,6))) AS DOUBLE)
-                     - CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE)
-                       * CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE)
-                       / COUNT(*))
+               {dsum_sql("value")} / COUNT(*) AS ref_mean,
+               SQRT(({dsum_sql("ROUND(value * value, 6)")}
+                     - {dsum_sql("value")} * {dsum_sql("value")} / COUNT(*))
                     / (COUNT(*) - 1)) AS ref_sd
         FROM events
         WHERE ts < TIMESTAMP '{DRIFT_CUTOFF}' AND value IS NOT NULL
@@ -1383,7 +1373,7 @@ def drift_monitor_stream(events: DataFrame, ref: DataFrame) -> DataFrame:
         SELECT time_bucket(INTERVAL '1 day', ts) AS w_start,
                event_type,
                CAST(COUNT(*) AS BIGINT) AS n_events,
-               CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE) AS wsx
+               {dsum_sql("value")} AS wsx
         FROM events
         WHERE ts >= TIMESTAMP '{DRIFT_CUTOFF}' AND value IS NOT NULL
         GROUP BY 1, 2
@@ -1421,13 +1411,12 @@ def drift_monitor_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     the windows. The stream arm keeps drift_reference (the reference
     is frozen state there, not recomputed per batch)."""
     t = load_tables(spark, sf_dir, ("events",))
-    dec = lambda c: c.cast("decimal(25,6)")  # noqa: E731
     per = (t["events"]
            .filter(F.col("value").isNotNull())
            .groupBy(F.window("ts", "1 day"), "event_type")
            .agg(F.count("*").alias("n_events"),
-                F.sum(dec(F.col("value"))).alias("sx_d"),
-                F.sum(dec(F.round(F.col("value") * F.col("value"), 6)))
+                decimal_sum("value").alias("sx_d"),
+                decimal_sum(F.round(F.col("value") * F.col("value"), 6))
                 .alias("sxx_d"))
            .localCheckpoint(eager=True))      # days×types-sized
     cutoff = F.lit(DRIFT_CUTOFF).cast("timestamp")

@@ -1,10 +1,14 @@
 """Physical-plan assertions — the properties that make plans survive a
 100 TB scale-up, pinned as tests: no global (unpartitioned) windows
 anywhere in the registry, dimension joins broadcast, filters reach the
-parquet scan, and projections prune the read schema.
+parquet scan, projections prune the read schema, and no query leaves a
+cached plan behind.
 """
 
 from __future__ import annotations
+
+import ast
+import pathlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -148,3 +152,73 @@ def test_incremental_ingest_has_no_cartesian(spark):
     plan = I.physical_plan(df)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+
+
+def test_bigram_score_leaves_no_cache(spark):
+    """A query's returned plan must not pin a cache entry: the caller
+    has nothing to unpersist. bigram_logprob_score reads its bigram
+    vocabulary twice through a local checkpoint instead."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    QUERIES["bigram_logprob_score"].fn(spark, SF_DIR).collect()
+    assert cache.isEmpty()
+
+
+#: a .cache() whose frame another function unpersists says who, on its
+#: line or the line above
+_HANDED_OFF = "unpersisted by"
+
+
+def _owned(fn):
+    """The nodes of a function body, without those of nested defs."""
+    stack = list(fn.body)
+    while stack:
+        node = stack.pop()
+        yield node
+        stack += [c for c in ast.iter_child_nodes(node)
+                  if not isinstance(c, (ast.FunctionDef, ast.Lambda,
+                                        ast.AsyncFunctionDef))]
+
+
+def _unpaired_caches(root: pathlib.Path) -> list[str]:
+    """Every ``.cache()`` in a function with no ``unpersist``."""
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        lines = src.split("\n")
+        for fn in ast.walk(ast.parse(src)):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            nodes = list(_owned(fn))
+            if any(isinstance(n, ast.Attribute) and n.attr == "unpersist"
+                   for n in nodes):
+                continue
+            for n in nodes:
+                if (isinstance(n, ast.Call)
+                        and isinstance(n.func, ast.Attribute)
+                        and n.func.attr == "cache"):
+                    ln = n.func.end_lineno
+                    if _HANDED_OFF not in "\n".join(lines[ln - 2:ln]):
+                        hits.append(f"{path.relative_to(root)}:{ln}")
+    return hits
+
+
+def test_every_engine_cache_is_unpersisted():
+    import covid_weather_etl_spark
+    root = pathlib.Path(covid_weather_etl_spark.__file__).parent
+    assert _unpaired_caches(root) == []
+
+
+@pytest.mark.parametrize("src, flagged", [
+    ("def f(df):\n    return df.cache()", True),
+    ("def f(df):\n    c = df.cache()\n    n = c.count()\n    return n", True),
+    ("def f(df):\n    c = df.cache()\n    n = c.count()\n"
+     "    c.unpersist()\n    return n", False),
+    ("def f(df):\n    # unpersisted by g\n    return df.cache()", False),
+    ("def f(df):\n    def g():\n        return df.cache()\n"
+     "    df.unpersist()\n    return g", True),
+    ("def f(df):\n    return df.localCheckpoint(eager=False)", False),
+])
+def test_unpaired_cache_lint_shapes(tmp_path, src, flagged):
+    (tmp_path / "mod.py").write_text(src + "\n")
+    assert bool(_unpaired_caches(tmp_path)) is flagged
